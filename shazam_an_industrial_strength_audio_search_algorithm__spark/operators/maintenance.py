@@ -611,7 +611,7 @@ def compact(
             if tomb is not None:
                 # buckets whose BASE postings lost docs: probe the base
                 # generation's doc_terms (layer buckets are in already)
-                base_dt = base._scan_map("doc_terms", snap["buckets"], None,
+                base_dt = base._scan_map("doc_terms", snap["buckets"],
                                          strict=True)
                 if base_dt is not None:
                     affected.update(

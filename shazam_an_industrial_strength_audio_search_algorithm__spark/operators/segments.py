@@ -59,7 +59,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -136,6 +136,17 @@ BLOCK_CORE_SCHEMA = T.StructType(
         T.StructField("max_tfnorm", T.DoubleType()),
         T.StructField("payload", T.BinaryType()),
     ]
+)
+
+# the segments parquet as written: the encoder's block rows with the
+# term's df after the term, ``bucket`` last as the partition column.
+# The writer selects in this order and the reader scans with this
+# schema, so opening a generation infers nothing from parquet footers.
+SEGMENT_SCHEMA = T.StructType(
+    BLOCK_CORE_SCHEMA.fields[1:2]
+    + [T.StructField("df", T.LongType())]
+    + BLOCK_CORE_SCHEMA.fields[2:]
+    + BLOCK_CORE_SCHEMA.fields[:1]
 )
 
 DT_COLS = ["term", "doc_id", "tf", "positions", "doc_len"]
@@ -472,8 +483,7 @@ def build_buckets_batch(
         )
     )
     out = blocks.join(term_df, ["bucket", "term"]).select(
-        "bucket", "term", "df", "salt", "block_seq", "doc_id_lo",
-        "doc_id_hi", "n_docs", "max_tf", "min_dl", "max_tfnorm", "payload",
+        *SEGMENT_SCHEMA.fieldNames()
     )
     # per-bucket block counts ride the write job as an Observation
     # (one count_if per bucket) instead of a read-back aggregation
@@ -968,11 +978,28 @@ def _decode_partition(it, with_positions: bool = False,
 
 @dataclass
 class SegmentIndex:
-    """Reader over a committed snapshot of the index."""
+    """Reader over a committed snapshot of the index.
+
+    A committed snapshot never changes, so its read state is built once
+    per instance, on first use, and lives as long as the instance:
+
+    - one scan per kind (segments, doc_terms) over every bucket of
+      every generation — the bucket dirs are listed once, and the
+      segments scan carries ``SEGMENT_SCHEMA`` instead of inferring it
+      from parquet footers (a job per generation root); a bucket list
+      narrows it to a static partition filter;
+    - on layered snapshots, the tombstones as sorted
+      ``(doc_id, tomb_seq)`` arrays and their one Spark broadcast.
+
+    Reopen (``SegmentIndex.open``) to read a newer snapshot."""
 
     spark: SparkSession
     index_dir: str
     snapshot: dict
+    _scans: dict = field(default_factory=dict, init=False, repr=False,
+                         compare=False)
+    _tomb: dict = field(default_factory=dict, init=False, repr=False,
+                        compare=False)
 
     @classmethod
     def open(cls, spark: SparkSession, index_dir: str,
@@ -1014,11 +1041,7 @@ class SegmentIndex:
 
     def _empty(self, kind: str) -> DataFrame:
         if kind == "segments":
-            schema = T.StructType(
-                [T.StructField("df", T.LongType())]
-                + [f for f in BLOCK_CORE_SCHEMA.fields if f.name != "bucket"]
-                + [T.StructField("bucket", T.IntegerType())]
-            )
+            schema = SEGMENT_SCHEMA
         else:
             fields = [
                 T.StructField("term", T.StringType()),
@@ -1037,14 +1060,13 @@ class SegmentIndex:
         return self.spark.createDataFrame([], schema)
 
     def _scan_map(self, kind: str, bmap: dict,
-                  buckets: list[int] | None,
                   strict: bool = False) -> DataFrame | None:
         """One generation map's bucket paths → a single DataFrame (or
         None if nothing exists). ``basePath`` parquet scans keep
         ``bucket`` a REAL partition column (``bucket=K`` dirs) —
-        statically path-pruned when a bucket list is given, and
-        eligible for dynamic partition pruning when joined against a
-        broadcast query-term side (``blocks_for_query_terms``). After
+        statically pruned by a bucket filter, and eligible for dynamic
+        partition pruning when joined against a broadcast query-term
+        side (``blocks_for_query_terms``, ``wand_topk``). After
         updates, different buckets live in different generations;
         grouping by generation root keeps one scan per generation.
 
@@ -1052,9 +1074,8 @@ class SegmentIndex:
         the map — a base snapshot must name every bucket, and silently
         skipping one would truncate query results; layer maps are
         sparse by design."""
-        bs = list(range(self.n_buckets)) if buckets is None else list(buckets)
         by_root: dict[str, list[str]] = {}
-        for b in bs:
+        for b in range(self.n_buckets):
             if strict and str(b) not in bmap:
                 raise KeyError(
                     f"snapshot v{self.version} bucket map is missing "
@@ -1067,8 +1088,11 @@ class SegmentIndex:
             if os.path.exists(path):
                 root = os.path.dirname(path)
                 by_root.setdefault(root, []).append(path)
+        reader = self.spark.read
+        if kind == "segments":
+            reader = reader.schema(SEGMENT_SCHEMA)
         dfs = [
-            self.spark.read.option("basePath", root).parquet(*paths)
+            reader.option("basePath", root).parquet(*paths)
             for root, paths in sorted(by_root.items())
         ]
         if not dfs:
@@ -1078,29 +1102,39 @@ class SegmentIndex:
             out = out.unionByName(d)
         return out
 
-    def _read_buckets(self, kind: str, buckets: list[int] | None) -> DataFrame:
-        """Base generation + (if present) delta layers. Layered reads
-        carry a ``gen_seq`` int column (base = 0, layer i = i+1) so
-        downstream tombstone resolution knows which rows a delete
-        supersedes; non-layered reads keep the historical schema
-        (no ``gen_seq``) untouched."""
-        base = self._scan_map(kind, self.snapshot["buckets"], buckets,
-                              strict=True)
+    def _scan(self, kind: str) -> DataFrame:
+        """Every bucket of the base generation + (if present) delta
+        layers, built once per instance. Layered reads carry a
+        ``gen_seq`` int column (base = 0, layer i = i+1) so downstream
+        tombstone resolution knows which rows a delete supersedes;
+        non-layered reads keep the historical schema (no
+        ``gen_seq``) untouched."""
+        if kind in self._scans:
+            return self._scans[kind]
+        base = self._scan_map(kind, self.snapshot["buckets"], strict=True)
         if not self.has_deltas:
-            return base if base is not None else self._empty(kind)
-        parts = []
-        if base is not None:
-            parts.append(base.withColumn("gen_seq", F.lit(0)))
-        for i, layer in enumerate(self.layers):
-            piece = self._scan_map(kind, layer.get("buckets", {}), buckets)
-            if piece is not None:
-                parts.append(piece.withColumn("gen_seq", F.lit(i + 1)))
-        if not parts:
-            return self._empty(kind).withColumn("gen_seq", F.lit(0))
-        out = parts[0]
-        for d in parts[1:]:
-            out = out.unionByName(d)
+            out = base if base is not None else self._empty(kind)
+        else:
+            parts = []
+            if base is not None:
+                parts.append(base.withColumn("gen_seq", F.lit(0)))
+            for i, layer in enumerate(self.layers):
+                piece = self._scan_map(kind, layer.get("buckets", {}))
+                if piece is not None:
+                    parts.append(piece.withColumn("gen_seq", F.lit(i + 1)))
+            if not parts:
+                parts = [self._empty(kind).withColumn("gen_seq", F.lit(0))]
+            out = parts[0]
+            for d in parts[1:]:
+                out = out.unionByName(d)
+        self._scans[kind] = out
         return out
+
+    def _read_buckets(self, kind: str, buckets: list[int] | None) -> DataFrame:
+        out = self._scan(kind)
+        if buckets is None:
+            return out
+        return out.filter(F.col("bucket").isin([int(b) for b in buckets]))
 
     def segments(self, buckets: list[int] | None = None) -> DataFrame:
         return self._read_buckets("segments", buckets)
@@ -1127,6 +1161,39 @@ class SegmentIndex:
         for d in parts[1:]:
             out = out.unionByName(d)
         return out
+
+    def tombstone_arrays(self) -> tuple[np.ndarray, np.ndarray] | None:
+        """The newest tombstone per doc as sorted ``(doc_id, tomb_seq)``
+        int64 arrays, or None when nothing is tombstoned. One job, on
+        first use."""
+        if "arrays" not in self._tomb:
+            arrays = None
+            tomb = self.tombstones()
+            if tomb is not None:
+                tp = (
+                    tomb.groupBy("doc_id")
+                    .agg(F.max("gen_seq").alias("tomb_seq"))
+                    .toPandas()
+                )
+                if len(tp):
+                    tp = tp.sort_values("doc_id")
+                    arrays = (tp["doc_id"].to_numpy(np.int64),
+                              tp["tomb_seq"].to_numpy(np.int64))
+            self._tomb["arrays"] = arrays
+        return self._tomb["arrays"]
+
+    def tombstone_broadcast(self):
+        """``tombstone_arrays()`` as this instance's one Spark
+        broadcast (None when nothing is tombstoned): it ships once per
+        executor instead of once per task, and every query on the
+        snapshot reuses it."""
+        if "broadcast" not in self._tomb:
+            arrays = self.tombstone_arrays()
+            self._tomb["broadcast"] = (
+                None if arrays is None
+                else self.spark.sparkContext.broadcast(arrays)
+            )
+        return self._tomb["broadcast"]
 
     def doc_lens(self) -> DataFrame:
         """(doc_id, doc_len) of the ALIVE corpus. Non-layered: one

@@ -15,11 +15,18 @@ interval, and the loop stops as soon as the running top-k floor
 beats the best remaining interval bound — blocks in skipped
 intervals are never decoded.
 
-Execution shape: candidate blocks (compressed payloads + bounds, no
-decoding) shuffle once, grouped per query; the interval loop runs in
-``applyInPandas``. Queries are the small axis (the reference's nj=32
-splits); the heavy axis — posting volume — is touched only through
-bound-gated decodes.
+Execution shape: a request's critical path is the block scan and the
+kernel, nothing else. The query side is ONE broadcast — query terms
+(one partition; queries are the small axis, the reference's nj=32
+splits) grouped to (bucket, term, group) → query ids without an
+exchange — which the block scan joins on (bucket, term) and which
+dynamic partition pruning reuses to skip untouched buckets. Candidate
+blocks (compressed payloads + bounds, no decoding) then shuffle once,
+by group, into the ``applyInPandas`` interval loop. The snapshot's
+scan and tombstone broadcast are per-``SegmentIndex`` state, built on
+first use. A single query is 3 Spark jobs (broadcast build, scan +
+shuffle, kernel) and one exchange; the heavy axis — posting volume —
+is touched only through bound-gated decodes.
 
 Bounds are recomputed from stored raw stats (max_tf, min_dl) under
 the CURRENT snapshot's avgdl, so pruning stays safe after incremental
@@ -52,6 +59,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
     SegmentIndex,
+    bucket_col,
 )
 
 RESULT_SCHEMA = T.StructType(
@@ -379,58 +387,49 @@ def wand_topk(
     # pruning never changes a result; it just loses sharpness as
     # layers pile up — CompactionPolicy restores peak speed, it no
     # longer gates servability. The tombstone set is delta-sized by
-    # policy; it ships to the kernel via task closure, capped so an
-    # un-compacted pipeline fails loudly instead of shipping an
-    # unbounded set.
-    tomb_np: tuple[np.ndarray, np.ndarray] | None = None
-    if index.has_deltas:
-        tomb_df = index.tombstones()
-        if tomb_df is not None:
-            cap = int(os.environ.get("SPARK_GRAFT_WAND_TOMB_CAP",
-                                     2_000_000))
-            tmax = tomb_df.groupBy("doc_id").agg(
-                F.max("gen_seq").alias("tomb_seq")
-            )
-            tp = tmax.toPandas()
-            if len(tp) > cap:
-                raise ValueError(
-                    f"layered snapshot carries {len(tp):,} tombstoned "
-                    f"docs (> cap {cap:,}) — run maintenance.compact() "
-                    "or raise SPARK_GRAFT_WAND_TOMB_CAP"
-                )
-            if len(tp):
-                tp = tp.sort_values("doc_id")
-                tomb_np = (tp["doc_id"].to_numpy(np.int64),
-                           tp["tomb_seq"].to_numpy(np.int64))
-    # ship the tombstone arrays as a Spark BROADCAST, not closure
-    # capture: a closure serializes into EVERY task (n_grp copies per
-    # job — 128+ at scale × up to ~30 MB at the cap), a broadcast
-    # ships once per executor and is torrent-distributed
-    tomb_bc = (index.spark.sparkContext.broadcast(tomb_np)
-               if tomb_np is not None else None)
+    # policy and ships to the kernel as the snapshot's one broadcast,
+    # capped so an un-compacted pipeline fails loudly instead of
+    # shipping an unbounded set.
     layered = index.has_deltas
-    qt = query_terms(queries, id_col, text_col)
-    # collect-free: bucket partitions prune dynamically from the
-    # broadcast term side; no term list ever reaches the driver
-    block_cols = [
-        "term", "df", "salt", "block_seq", "doc_id_lo", "doc_id_hi",
-        "max_tf", "min_dl", "payload",
-    ] + (["gen_seq"] if layered else [])
-    blocks = index.blocks_for_query_terms(qt).select(*block_cols)
+    tomb_bc = None
+    if layered:
+        tomb = index.tombstone_arrays()
+        cap = int(os.environ.get("SPARK_GRAFT_WAND_TOMB_CAP", 2_000_000))
+        if tomb is not None and tomb[0].size > cap:
+            raise ValueError(
+                f"layered snapshot carries {tomb[0].size:,} tombstoned "
+                f"docs (> cap {cap:,}) — run maintenance.compact() "
+                "or raise SPARK_GRAFT_WAND_TOMB_CAP"
+            )
+        tomb_bc = index.tombstone_broadcast()
     # pin parallelism: the per-query loop is CPU-bound Python/numpy —
     # don't let AQE coalesce the (small-bytes) shuffle under the core
     # count and serialize it
     n_part = int(index.spark.conf.get("spark.sql.shuffle.partitions"))
     n_grp = int(n_groups) if n_groups else max(n_part, index.n_buckets)
-    qg = qt.withColumn(
-        "grp", F.pmod(F.xxhash64(F.col("query_id")), F.lit(n_grp)).cast("int")
+    # the query side, ONE broadcast: a row per (bucket, term, group)
+    # with that group's query ids — the block join fans out per
+    # GROUP, never per query. The query terms sit in one partition
+    # (queries are the small axis), so the group-by needs no exchange.
+    qside = (
+        query_terms(queries, id_col, text_col).coalesce(1)
+        # a selective predicate on the build side is what makes
+        # Spark's DPP planner prune the bucket partitions from this
+        # same broadcast — no term list ever reaches the driver
+        .filter(F.col("term") != "")
+        .withColumn("bucket", bucket_col(F.col("term"), index.n_buckets))
+        .withColumn("grp", F.pmod(F.xxhash64(F.col("query_id")),
+                                  F.lit(n_grp)).cast("int"))
+        .groupBy("bucket", "term", "grp")
+        .agg(F.collect_list("query_id").alias("qids"))
     )
-    # one row per (group, term) with that group's query ids — the
-    # block join fans out per GROUP, never per query
-    gt = qg.groupBy("grp", "term").agg(
-        F.collect_list("query_id").alias("qids")
+    block_cols = [
+        "bucket", "term", "df", "salt", "block_seq", "doc_id_lo",
+        "doc_id_hi", "max_tf", "min_dl", "payload",
+    ] + (["gen_seq"] if layered else [])
+    per_group = index.segments().select(*block_cols).join(
+        F.broadcast(qside), ["bucket", "term"]
     )
-    per_group = blocks.join(F.broadcast(gt), "term")
     n_docs, avgdl = index.n_docs, index.avgdl
     score_name = "score_micro" if micro else "score"
     schema = T.StructType(
@@ -442,7 +441,7 @@ def wand_topk(
         ]
     )
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):
         tomb_local = tomb_bc.value if tomb_bc is not None else None
         terms: dict[str, list[_Term]] = {}
         q2t: dict[str, list[str]] = {}

@@ -270,6 +270,51 @@ def test_wand_layered_tombstone_cap(spark, layered, monkeypatch):
         wand_topk(idx, _queries(spark, final), k=K)
 
 
+def test_wand_layered_reuses_one_tombstone_broadcast(spark, layered,
+                                                    monkeypatch):
+    """The tombstone arrays are per-snapshot state: every WAND call on
+    one index instance ships the SAME broadcast (no per-call
+    broadcast leak), and the results do not depend on the call."""
+    d, final = layered
+    sc = spark.sparkContext
+    made = []
+    real = sc.broadcast
+
+    def recording(value):
+        bc = real(value)
+        made.append(bc._jbroadcast.id())  # noqa: SLF001
+        return bc
+
+    monkeypatch.setattr(sc, "broadcast", recording)
+    idx = SegmentIndex.open(spark, d)
+    q = _queries(spark, final)
+    first = wand_topk(idx, q, k=K).orderBy("query_id", "rank").collect()
+    second = wand_topk(idx, q, k=K).orderBy("query_id", "rank").collect()
+    assert first == second
+    bc_id = idx.tombstone_broadcast()._jbroadcast.id()  # noqa: SLF001
+    assert made == [bc_id]
+
+
+def test_segments_scan_schema_matches_footers(spark, layered, rebuilt):
+    """The reader's explicit segments schema is exactly what Spark
+    infers from the writer's parquet footers — on a fresh build and on
+    a delta layer — so the reader cannot drift from the writer."""
+    for d in (rebuilt, layered[0]):
+        snap = read_snapshot(d)
+        idx = SegmentIndex.open(spark, d)
+        maps = [snap["buckets"]] + [
+            layer["buckets"] for layer in snap.get("layers") or []
+        ]
+        roots = {
+            os.path.dirname(f"{d}/{entry['segments']}")
+            for bmap in maps for entry in bmap.values()
+        }
+        assert roots
+        for root in roots:
+            inferred = spark.read.option("basePath", root).parquet(root)
+            assert idx.segments().drop("gen_seq").schema == inferred.schema
+
+
 def test_rebuild_mode_refuses_layered(spark, layered, corpus80):
     d, _ = layered
     with pytest.raises(ValueError, match="compact"):

@@ -115,12 +115,26 @@ def test_local_peaks_single_exchange(spark):
     assert count_shuffles(df) == 1, audit(df)
 
 
+def _assert_wand_plan(df):
+    """Batched WAND's shape: the one query-side broadcast
+    ((bucket, term, grp) → qids) joins the block scan, its bucket
+    partitions prune dynamically from that same broadcast, and the
+    only shuffle is the repartition by group — payload volume scales
+    with groups, not batch size."""
+    a = audit(df)
+    assert a["broadcast_join"], a
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "dynamicpruning" in plan.lower(), (
+        "bucket partition pruning must be planned dynamically from the "
+        "broadcast query side"
+    )
+    # the query-term group-by reads one partition (no exchange) and
+    # the blocks are not spread: NOT one exchange per query
+    assert a["shuffles"] <= 1, a
+
+
 def test_wand_batched_plan(spark, corpus_df, tmp_path):
-    """Batched WAND: the per-(group, term) query map joins the block
-    side as a BROADCAST (blocks never replicate per query), and the
-    only shuffles are the block spread + the repartition by group —
-    the shape whose payload volume scales with groups, not batch
-    size."""
+    """Batched WAND on a fresh single-generation index."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
         with_doc_id,
     )
@@ -140,12 +154,47 @@ def test_wand_batched_plan(spark, corpus_df, tmp_path):
         [("q1", "vector scan filter"), ("q2", "scan batch stream")],
         "query_id string, text string",
     )
-    df = wand_topk(idx, qs, k=3)
-    a = audit(df)
-    assert a["broadcast_join"], a
-    # bounded: query tokenize/explode + tiny (grp,term) agg + block
-    # spread + repartition-by-group; NOT one exchange per query
-    assert a["shuffles"] <= 4, a
+    _assert_wand_plan(wand_topk(idx, qs, k=3))
+
+
+def test_wand_batched_plan_layered(spark, corpus_pdf, tmp_path):
+    """The same shape on a layered (merge-on-read) snapshot: the
+    tombstones ride a broadcast variable, not the plan, so the delta
+    layer adds no exchange."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
+        with_doc_id,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
+        apply_updates,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
+        SegmentIndex,
+        build_segment_index,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
+        wand_topk,
+    )
+
+    d = str(tmp_path / "wandplan_layered")
+    build_segment_index(
+        spark, with_doc_id(spark.createDataFrame(corpus_pdf.iloc[:40])), d,
+        n_buckets=4, hot_df=8, block_size=16,
+    )
+    apply_updates(
+        spark, d,
+        add_corpus=spark.createDataFrame(corpus_pdf.iloc[40:45]),
+        delete_keys=spark.createDataFrame(
+            corpus_pdf.iloc[[3]][["repo", "path", "commit"]]
+        ),
+        mode="delta",
+    )
+    idx = SegmentIndex.open(spark, d)
+    assert idx.has_deltas and idx.tombstone_arrays() is not None
+    qs = spark.createDataFrame(
+        [("q1", "vector scan filter"), ("q2", "scan batch stream")],
+        "query_id string, text string",
+    )
+    _assert_wand_plan(wand_topk(idx, qs, k=3))
 
 
 def test_ivf_assign_is_narrow(spark):
