@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.bm25 import (
     B,
     K1,
-    score_col,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.tokenize import (
     DUCKDB_TOKENS_SQL,
@@ -28,6 +27,17 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.token
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
     InvertedIndex,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
+    bm25_scores,
+    bm25_topk,
+    db2qry,
+    decide,
+    decide_compat,
+    global_rank,
+    per_query_thresholds,
+    query_terms,
+    rank_scores,
 )
 
 # ---------------------------------------------------------------------------
@@ -252,10 +262,6 @@ def q_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate generation: per (query, doc) count of distinct matched
     query terms (↔ searchLUT_v2's Counter, _Shazam_.py:494-506)."""
     idx = docs_index(spark, sf_dir)
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
-        query_terms,
-    )
-
     qt = query_terms(queries_df(spark))
     return (
         idx.doc_terms.join(F.broadcast(qt), "term")
@@ -272,50 +278,12 @@ GROUP BY qt.query_id, tf.doc_id
 """
 
 
-def _bm25_micro_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, doc_id, score_micro, matched_terms) — BM25 with
-    per-term contributions rounded to integer micro-units before the
-    sum (order-independent ⇒ hash-stable)."""
-    idx = docs_index(spark, sf_dir)
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
-        query_terms,
-    )
-
-    qt = query_terms(queries_df(spark))
-    qt_stats = idx.term_stats.join(F.broadcast(qt.select("term").distinct()), "term")
-    matched = idx.doc_terms.join(F.broadcast(qt), "term")
-    # one exchange for score-sum AND every downstream per-query window
-    # (guide §2.4): hashing candidates by query_id alone satisfies
-    # groupBy(query_id, doc_id) and Window.partitionBy(query_id), so
-    # consumers (top-k, decide, stats) rank with no second shuffle
-    scored = matched.join(F.broadcast(qt_stats), "term").repartition(
-        F.col("query_id")
-    ).withColumn(
-        "contrib_micro",
-        F.round(
-            score_col(F.col("tf"), F.col("df"), F.col("doc_len"),
-                      idx.n_docs, idx.avgdl) * F.lit(1_000_000.0)
-        ).cast("long"),
-    )
-    return scored.groupBy("query_id", "doc_id").agg(
-        F.sum("contrib_micro").alias("score_micro"),
-        F.count(F.lit(1)).cast("long").alias("matched_terms"),
-    )
-
-
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: BM25 top-k per query, deterministic tie-break
     (score DESC, doc_id ASC) — the whole reference query pipeline
     (SURVEY §3.2) as one plan."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("doc_id").asc()
-    )
-    return (
-        _bm25_micro_scores(spark, sf_dir)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOPK_K)
-        .select("query_id", "rank", "doc_id", "score_micro", "matched_terms")
-    )
+    return bm25_topk(docs_index(spark, sf_dir), queries_df(spark), TOPK_K,
+                     micro=True)
 
 
 _BM25_MICRO_CTES = f"""
@@ -356,11 +324,8 @@ def q_match_or_nil(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's decision row per query: matched doc above
     threshold or NULL (Nil), + second-best (Matching.py:120-148)."""
     threshold_micro = 2_000_000  # score > 2.0
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("doc_id").asc()
-    )
-    ranked = _bm25_micro_scores(spark, sf_dir).withColumn(
-        "rank", F.row_number().over(w)
+    ranked = rank_scores(
+        bm25_scores(docs_index(spark, sf_dir), queries_df(spark), micro=True)
     )
     agg = ranked.groupBy("query_id").agg(
         F.max(F.when(F.col("rank") == 1, F.col("doc_id"))).alias("top1_doc"),
@@ -409,17 +374,14 @@ def q_match_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-compat decision (first-above-threshold in
     candidate-count order, Matching.py:120-139) — the promised W3
     compat mode, vs q_match_or_nil's engine-mode global best."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
-        decide_compat,
-    )
-
     # tracked persist: decide_compat consumes the scored-candidates
     # frame from FOUR plan branches (cand ranking, first-match scan,
     # second-best, candidate count); exchange reuse dedupes the
     # shuffle but the aggregation above it re-ran per branch
     release_caches()
     scores = _persist_tracked(
-        _bm25_micro_scores(spark, sf_dir).select(
+        bm25_scores(docs_index(spark, sf_dir), queries_df(spark),
+                    micro=True).select(
             "query_id", "doc_id",
             F.col("score_micro").alias("score"), "matched_terms",
         )
@@ -485,23 +447,25 @@ LEFT JOIN n USING (query_id)
 """
 
 
+def _top1_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, query_id, score_micro): each query's best candidate,
+    kept only when it scores above 2.0 — the matched half of the
+    "doc or Nil" decision that the db2qry and stats reports read."""
+    scores = bm25_scores(docs_index(spark, sf_dir), queries_df(spark),
+                         micro=True)
+    return (
+        rank_scores(scores, k=1)
+        .filter(F.col("score_micro") > 2_000_000)
+        .select("doc_id", "query_id", "score_micro")
+    )
+
+
 def q_db2qry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's inverted match report (db2qry multimap,
     Combine.py:68-86): per matched doc, its matched queries sorted +
     counted."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
-        db2qry,
-    )
-
-    threshold_micro = 2_000_000
-    w_q = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("doc_id").asc()
-    )
-    decisions = (
-        _bm25_micro_scores(spark, sf_dir)
-        .withColumn("rn", F.row_number().over(w_q))
-        .filter((F.col("rn") == 1) & (F.col("score_micro") > threshold_micro))
-        .select("query_id", F.col("doc_id").alias("matched_doc_id"))
+    decisions = _top1_matches(spark, sf_dir).select(
+        "query_id", F.col("doc_id").alias("matched_doc_id")
     )
     return db2qry(decisions)
 
@@ -532,20 +496,10 @@ def q_match_classed(spark: SparkSession, sf_dir: str) -> DataFrame:
     here ``per_query_thresholds`` builds the tiny (query_id,
     threshold) dim frame (≤5 tokens → 2.0, else 3.0, in micro units)
     and ``decide`` broadcast-joins it in place of the scalar."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
-        decide,
-        per_query_thresholds,
-    )
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("doc_id").asc()
-    )
-    cand = (
-        _bm25_micro_scores(spark, sf_dir)
-        .withColumn("rank", F.row_number().over(w))
-        .select("query_id", "rank", "doc_id",
-                F.col("score_micro").alias("score"))
-    )
+    cand = rank_scores(
+        bm25_scores(docs_index(spark, sf_dir), queries_df(spark), micro=True)
+    ).select("query_id", "rank", "doc_id",
+             F.col("score_micro").alias("score"))
     thr = per_query_thresholds(
         queries_df(spark), short_threshold=2_000_000,
         long_threshold=3_000_000, max_short_tokens=5,
@@ -609,11 +563,6 @@ def q_match_classed_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, two physical plans — so the classed "doc or Nil" record
     is provably identical whether the engine scored every candidate
     or pruned most of them."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
-        decide,
-        per_query_thresholds,
-        query_terms,
-    )
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
         wand_topk,
     )
@@ -645,6 +594,18 @@ def q_match_classed_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ranked_in_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, query_id, score_micro, rank_in_doc): each matched doc's
+    queries ranked by score desc — the per-doc half of the stats
+    report, shared by both of its physical plans."""
+    w_doc = Window.partitionBy("doc_id").orderBy(
+        F.col("score_micro").desc(), F.col("query_id").asc()
+    )
+    return _top1_matches(spark, sf_dir).withColumn(
+        "rank_in_doc", F.row_number().over(w_doc).cast("long")
+    )
+
+
 def q_match_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The GetStats report (SURVEY §2.1 S5, §2.5 W5,
     ``GetStats.py:55-81``): per matched doc, its matched queries
@@ -661,28 +622,11 @@ def q_match_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``q_match_stats_dist`` — the same report through the distributed
     ``global_rank`` operator (range shuffle + offset cumsum), one
     oracle / two physical plans."""
-    threshold_micro = 2_000_000
-    w_q = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("doc_id").asc()
-    )
-    top1 = (
-        _bm25_micro_scores(spark, sf_dir)
-        .withColumn("rn", F.row_number().over(w_q))
-        .filter((F.col("rn") == 1) & (F.col("score_micro") > threshold_micro))
-        .select("query_id", "doc_id", "score_micro")
-    )
-    w_doc = Window.partitionBy("doc_id").orderBy(
-        F.col("score_micro").desc(), F.col("query_id").asc()
-    )
     w_glob = Window.orderBy(
         F.col("score_micro").desc(), F.col("query_id").asc()
     )
-    return top1.select(
-        "doc_id",
-        "query_id",
-        "score_micro",
-        F.row_number().over(w_doc).cast("long").alias("rank_in_doc"),
-        F.row_number().over(w_glob).cast("long").alias("rank_global"),
+    return _ranked_in_doc(spark, sf_dir).withColumn(
+        "rank_global", F.row_number().over(w_glob).cast("long")
     )
 
 
@@ -695,29 +639,8 @@ def q_match_stats_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole report; the per-doc ``rank_in_doc`` window stays partitioned
     by doc_id (already distributed). Same oracle as ``match_stats`` —
     one truth, two physical plans."""
-    from .operators.topk import global_rank
-
-    threshold_micro = 2_000_000
-    w_q = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("doc_id").asc()
-    )
-    top1 = (
-        _bm25_micro_scores(spark, sf_dir)
-        .withColumn("rn", F.row_number().over(w_q))
-        .filter((F.col("rn") == 1) & (F.col("score_micro") > threshold_micro))
-        .select("query_id", "doc_id", "score_micro")
-    )
-    w_doc = Window.partitionBy("doc_id").orderBy(
-        F.col("score_micro").desc(), F.col("query_id").asc()
-    )
-    ranked_in_doc = top1.select(
-        "doc_id",
-        "query_id",
-        "score_micro",
-        F.row_number().over(w_doc).cast("long").alias("rank_in_doc"),
-    )
     return global_rank(
-        ranked_in_doc,
+        _ranked_in_doc(spark, sf_dir),
         [F.col("score_micro").desc(), F.col("query_id").asc()],
         rank_col="rank_global",
     ).select("doc_id", "query_id", "score_micro", "rank_in_doc",

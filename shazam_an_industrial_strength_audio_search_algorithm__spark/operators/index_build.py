@@ -266,6 +266,11 @@ class InvertedIndex:
     @classmethod
     def build(cls, corpus: DataFrame, id_col: str = "doc_id",
               text_col: str = "content", cache: bool = True) -> "InvertedIndex":
+        """Precondition: ``id_col`` is unique per corpus row. With
+        ``cache=True``, (N, avgdl) come from a distinct over the
+        postings' (doc_id, doc_len), so two rows sharing an id and a
+        length would count as one doc and silently disagree with
+        ``corpus_stats``."""
         from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
             spread_input,
         )
@@ -296,3 +301,16 @@ class InvertedIndex:
         else:
             n, avgdl = corpus_stats(corpus, text_col)
         return cls(doc_terms=dt, term_stats=term_stats(dt), n_docs=n, avgdl=avgdl)
+
+    def postings_for_query_terms(self, qt: DataFrame) -> DataFrame:
+        """(term, doc_id, tf, doc_len, df) for every distinct term in
+        ``qt`` — the same shape ``SegmentIndex.postings_for_query_terms``
+        returns, so both index kinds feed ``topk.bm25_scores``. The
+        query's df stats are tiny and broadcast into the postings
+        scan."""
+        stats = self.term_stats.join(
+            F.broadcast(qt.select("term").distinct()), "term"
+        )
+        return self.doc_terms.join(F.broadcast(stats), "term").select(
+            "term", "doc_id", "tf", "doc_len", "df"
+        )

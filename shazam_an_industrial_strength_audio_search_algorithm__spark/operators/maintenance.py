@@ -117,7 +117,8 @@ def apply_updates(
     tf[, positions], doc_len) for EXACTLY the deduped ``add_corpus``
     rows — skips the update's tokenizer pass entirely (the caller
     guarantees correspondence; used when an in-memory index over the
-    same docs already holds them).
+    same docs already holds them). Passing it without ``add_corpus``
+    raises ``ValueError``.
 
     ``auto_compact``: a ``CompactionPolicy`` — after this update
     commits, ``maybe_compact`` runs under it, so a continuously
@@ -127,6 +128,11 @@ def apply_updates(
     """
     if mode not in ("rebuild", "delta"):
         raise ValueError(f"mode must be 'rebuild' or 'delta', got {mode!r}")
+    if add_doc_terms is not None and add_corpus is None:
+        raise ValueError(
+            "add_doc_terms are the postings of add_corpus's rows — "
+            "pass add_corpus with them"
+        )
     base = SegmentIndex.open(spark, index_dir)
     if mode == "rebuild" and base.has_deltas:
         raise ValueError(

@@ -71,7 +71,6 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.bm25 
     B,
     K1,
     idf_py,
-    score_col,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec import (
     decode_block,
@@ -641,6 +640,10 @@ def build_segment_index(
     """
     import time as _time
 
+    if corpus is None and doc_terms_df is None:
+        raise ValueError(
+            "build_segment_index needs a corpus or a doc_terms_df"
+        )
     timings: dict[str, float] = {}
     if resume:
         gen = _resumable_build_gen(index_dir)
@@ -1217,20 +1220,25 @@ class SegmentIndex:
         out = parts[0]
         for d in parts[1:]:
             out = out.unionByName(d)
+        return self._drop_tombstoned(out).drop("gen_seq")
+
+    def _drop_tombstoned(self, rows: DataFrame) -> DataFrame:
+        """``rows`` (doc_id, gen_seq, ...) minus those superseded by a
+        newer tombstone: the newest tombstone per doc broadcasts in and
+        a row survives when ``gen_seq >= tomb_seq`` (or the doc has no
+        tombstone)."""
         tomb = self.tombstones()
-        if tomb is not None:
-            tmax = tomb.groupBy("doc_id").agg(
-                F.max("gen_seq").alias("tomb_seq")
+        if tomb is None:
+            return rows
+        tmax = tomb.groupBy("doc_id").agg(F.max("gen_seq").alias("tomb_seq"))
+        return (
+            rows.join(F.broadcast(tmax), "doc_id", "left")
+            .filter(
+                F.col("tomb_seq").isNull()
+                | (F.col("gen_seq") >= F.col("tomb_seq"))
             )
-            out = (
-                out.join(F.broadcast(tmax), "doc_id", "left")
-                .filter(
-                    F.col("tomb_seq").isNull()
-                    | (F.col("gen_seq") >= F.col("tomb_seq"))
-                )
-                .drop("tomb_seq")
-            )
-        return out.drop("gen_seq")
+            .drop("tomb_seq")
+        )
 
     def blocks_for_terms(self, terms: list[str]) -> DataFrame:
         """Bucket-pruned + term-predicate-pushed block scan — the
@@ -1350,19 +1358,7 @@ class SegmentIndex:
         the tombstone set is delta-sized, so the broadcast is small;
         a long-uncompacted index should compact rather than grow it.
         Output schema matches the non-layered decode (no gen_seq)."""
-        tomb = self.tombstones()
-        if tomb is not None:
-            tmax = tomb.groupBy("doc_id").agg(
-                F.max("gen_seq").alias("tomb_seq")
-            )
-            decoded = (
-                decoded.join(F.broadcast(tmax), "doc_id", "left")
-                .filter(
-                    F.col("tomb_seq").isNull()
-                    | (F.col("gen_seq") >= F.col("tomb_seq"))
-                )
-                .drop("tomb_seq")
-            )
+        decoded = self._drop_tombstoned(decoded)
         if not recompute_df or "df" not in decoded.columns:
             # compaction re-derives df from the merged postings, and
             # the exploded-positions reader drops df entirely —
@@ -1486,20 +1482,20 @@ def segment_topk(
     micro: bool = False,
     scratch_check: bool = True,
 ) -> DataFrame:
-    """BM25 top-k over the persisted segment index.
+    """BM25 top-k over the persisted segment index: this IS
+    ``operators/topk.bm25_topk`` over ``index``, behind the scratch
+    guard below.
 
     Plan: query terms (tiny, broadcast — NEVER collected to the
     driver) ⋈ block scan (bucket partitions dynamically pruned from
-    the broadcast side) → ``mapInPandas`` varint decode → score
-    (doc_len inline, no norms join) → groupBy(query, doc) sum →
-    row_number ≤ k. Semantics identical to operators/topk.bm25_topk
-    (tests/test_segments.py).
+    the broadcast side) → ``mapInPandas`` varint decode → the spine's
+    score (doc_len inline, no norms join) → groupBy(query, doc) sum →
+    row_number ≤ k.
 
     ``micro=True`` switches to exact integer micro-unit scoring
-    (round each per-term contribution to 1e-6 BEFORE the sum — the
-    fold-order-independent convention every oracle-gated path
-    shares): output column becomes ``score_micro`` (long) and rank is
-    long, matching the driver-gate schema.
+    (``bm25_topk``'s unit switch): output column becomes
+    ``score_micro`` (long) and rank is long, matching the driver-gate
+    schema.
 
     ``scratch_check`` (round-5 item 8): the un-pruned path
     materializes ~(postings × queries-per-term) candidate rows
@@ -1512,14 +1508,16 @@ def segment_topk(
     pass False to skip.
     """
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
+        bm25_topk,
         query_terms,
     )
 
-    qt = query_terms(queries, id_col, text_col)
     if scratch_check:
         budget = _scratch_budget_bytes(index.spark)
         if budget is not None:
-            est = estimate_brute_materialization(index, qt)
+            est = estimate_brute_materialization(
+                index, query_terms(queries, id_col, text_col)
+            )
             if est["bytes"] > budget:
                 raise RuntimeError(
                     f"brute top-k would materialize ~{est['rows']:,} "
@@ -1531,56 +1529,7 @@ def segment_topk(
                     "SPARK_GRAFT_SCRATCH_BUDGET_BYTES / pass "
                     "scratch_check=False to force."
                 )
-    postings = index.postings_for_query_terms(qt)
-    term_score = score_col(F.col("tf"), F.col("df"), F.col("doc_len"),
-                           index.n_docs, index.avgdl)
-    # ONE exchange for score-sum AND rank window (guide §2.4): hash
-    # the candidate rows by query_id alone — that distribution
-    # satisfies both groupBy(query_id, doc_id) (subset clustering) and
-    # Window.partitionBy(query_id), so the post-agg re-shuffle the
-    # default plan inserts before the window disappears. Map-side
-    # partial agg collapsed ~nothing here anyway (a (query, doc)
-    # pair's rows arrive term-major, one term per map partition).
-    candidates = postings.join(F.broadcast(qt), "term").repartition(
-        F.col("query_id")
-    )
-    if micro:
-        contrib = F.round(term_score * F.lit(1_000_000.0)).cast("long")
-        scored = (
-            candidates
-            .withColumn("contrib_micro", contrib)
-            .groupBy("query_id", "doc_id")
-            .agg(
-                F.sum("contrib_micro").alias("score_micro"),
-                F.count(F.lit(1)).cast("long").alias("matched_terms"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score_micro").desc(), F.col("doc_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score_micro",
-                    "matched_terms")
-        )
-    scored = (
-        candidates
-        .withColumn("term_score", term_score)
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum("term_score").alias("score"),
-            F.count(F.lit(1)).alias("matched_terms"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score", "matched_terms")
-    )
+    return bm25_topk(index, queries, k, id_col, text_col, micro)
 
 
 def drop_index(index_dir: str) -> None:

@@ -1,4 +1,4 @@
-"""BM25 top-k query execution — engine v1 (DataFrame plan).
+"""BM25 scoring and ranking — the engine's one score-and-rank spine.
 
 Reference parity (SURVEY §3.2): the reference answers a query by
 (1) fingerprinting it (``Matching.py:103-105``), (2) candidate
@@ -7,19 +7,23 @@ generation = posting-list union-with-counts (``searchLUT_v2``,
 (``count_number_match``, ``_Shazam_.py:309-351``), (4) threshold
 "doc or Nil" with second-best tracking (``Matching.py:120-148``).
 
-Here steps 2+3 fuse into one dataflow: query terms join the postings
-on ``term`` (the ``keys() & keys()`` semi-join, ``_Shazam_.py:414``),
-BM25 replaces histogram voting, and top-k/threshold/second-best are
-window functions.
+Here steps 2+3 fuse into the engine's one score-and-rank spine, used
+by both index kinds and every brute-force consumer: ``bm25_scores``
+joins the index's ``postings_for_query_terms`` (term, doc_id, tf,
+doc_len, df) to the broadcast query terms, hashes the candidates by
+``query_id`` (the single exchange), scores each term with
+``score_col`` (``micro=True``: rounded to integer 1e-6 units before
+the sum) and sums per (query_id, doc_id). ``rank_scores`` adds the
+(score DESC, doc_id ASC) rank, cut at k; ``bm25_topk`` is the two
+together. BM25 replaces histogram voting; threshold and second-best
+are window functions over the same exchange.
 
 Physical plan (the part that must survive 100×): the query side is
-tiny — BOTH auxiliary joins are explicit ``broadcast()``s, so the
-only wide dependency is the final ``groupBy(query_id, doc_id)``
-score-sum over matched postings. ``doc_terms`` is scanned once, with
-the term-membership filter applied as a broadcast hash join (≈ the
-reference's "touch only LUT entries for the query's keys" index
-access path, SURVEY §4). No sort of the full postings ever happens:
-top-k is ``row_number`` + filter → ``TakeOrderedAndProject``-shaped.
+tiny and every auxiliary join is an explicit ``broadcast()``, so the
+candidate rows cross one exchange only — the ``query_id`` hash, which
+satisfies both ``groupBy(query_id, doc_id)`` and every per-query
+window downstream (top-k, decide, stats). No sort of the full
+postings ever happens: top-k is ``row_number`` + filter.
 """
 
 from __future__ import annotations
@@ -32,9 +36,6 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.bm25 
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.tokenize import (
     tokens_col,
-)
-from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
-    InvertedIndex,
 )
 
 
@@ -51,49 +52,64 @@ def query_terms(queries: DataFrame, id_col: str = "query_id",
     )
 
 
-def bm25_scores(index: InvertedIndex, queries: DataFrame,
-                id_col: str = "query_id", text_col: str = "text") -> DataFrame:
-    """(query_id, doc_id, score, matched_terms) for every candidate.
+def bm25_scores(index, queries: DataFrame, id_col: str = "query_id",
+                text_col: str = "text", micro: bool = False) -> DataFrame:
+    """(query_id, doc_id, score | score_micro, matched_terms) for every
+    candidate of ``index`` (an ``InvertedIndex`` or a ``SegmentIndex``).
 
     ``matched_terms`` ↔ the reference's ``num_matches`` candidate
-    count / ``num_union`` (``Matching.py:128``).
+    count / ``num_union`` (``Matching.py:128``). ``micro=True`` scores
+    in integer micro-units: each per-term contribution is rounded to
+    1e-6 BEFORE the sum, so the total is independent of fold order.
     """
     qt = query_terms(queries, id_col, text_col)
-    # df stats for just the query's terms — tiny; broadcast back in.
-    qt_stats = index.term_stats.join(
-        F.broadcast(qt.select("term").distinct()), "term"
-    )
-    matched = index.doc_terms.join(F.broadcast(qt), "term")
-    # one exchange serves the score-sum AND every downstream
-    # per-query window (guide §2.4): hash by query_id alone — it
-    # satisfies groupBy(query_id, doc_id) and Window(query_id)
-    scored = matched.join(F.broadcast(qt_stats), "term").repartition(
-        F.col("query_id")
-    ).withColumn(
-        "term_score",
-        score_col(F.col("tf"), F.col("df"), F.col("doc_len"),
-                  index.n_docs, index.avgdl),
-    )
-    return scored.groupBy("query_id", "doc_id").agg(
-        F.sum("term_score").alias("score"),
-        F.count(F.lit(1)).alias("matched_terms"),
-    )
-
-
-def bm25_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
-              id_col: str = "query_id", text_col: str = "text") -> DataFrame:
-    """(query_id, rank, doc_id, score, matched_terms), rank 1..k with
-    the deterministic tie-break (score DESC, doc_id ASC) — SURVEY §2.5
-    W2's explicit replacement for Counter insertion order."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
+    # one exchange serves the score-sum AND every downstream per-query
+    # window (guide §2.4): hash by query_id alone — it satisfies
+    # groupBy(query_id, doc_id) and Window(query_id). Map-side partial
+    # agg would collapse ~nothing anyway (a (query, doc) pair's rows
+    # arrive term-major, one term per map partition).
+    candidates = index.postings_for_query_terms(qt).join(
+        F.broadcast(qt), "term"
+    ).repartition(F.col("query_id"))
+    contrib = score_col(F.col("tf"), F.col("df"), F.col("doc_len"),
+                        index.n_docs, index.avgdl)
+    if micro:
+        contrib = F.round(contrib * F.lit(1_000_000.0)).cast("long")
     return (
-        bm25_scores(index, queries, id_col, text_col)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score", "matched_terms")
+        candidates.withColumn("contrib", contrib)
+        .groupBy("query_id", "doc_id")
+        .agg(
+            F.sum("contrib").alias("score_micro" if micro else "score"),
+            F.count(F.lit(1)).alias("matched_terms"),
+        )
     )
+
+
+def rank_scores(scores: DataFrame, k: int | None = None) -> DataFrame:
+    """``scores`` plus ``rank`` per query under the deterministic
+    tie-break (score DESC, doc_id ASC) — SURVEY §2.5 W2's explicit
+    replacement for Counter insertion order. The score column is
+    ``score_micro`` when present, else ``score``. With ``k``, only
+    ranks 1..k are kept."""
+    score = "score_micro" if "score_micro" in scores.columns else "score"
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("doc_id").asc()
+    )
+    ranked = scores.withColumn("rank", F.row_number().over(w))
+    return ranked if k is None else ranked.filter(F.col("rank") <= k)
+
+
+def bm25_topk(index, queries: DataFrame, k: int = 10,
+              id_col: str = "query_id", text_col: str = "text",
+              micro: bool = False) -> DataFrame:
+    """(query_id, rank, doc_id, score, matched_terms), rank 1..k;
+    ``micro=True`` gives the driver-gate schema (query_id, rank long,
+    doc_id, score_micro, matched_terms)."""
+    rank = F.col("rank").cast("long") if micro else F.col("rank")
+    return rank_scores(
+        bm25_scores(index, queries, id_col, text_col, micro), k
+    ).select("query_id", rank.alias("rank"), "doc_id",
+             "score_micro" if micro else "score", "matched_terms")
 
 
 def per_query_thresholds(queries: DataFrame,

@@ -4,6 +4,8 @@ column pruning, broadcast of the query side, bounded shuffle counts."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -40,45 +42,97 @@ def test_bm25_query_side_is_broadcast(spark):
     assert has_broadcast_join(df)
 
 
-def test_segment_query_plan(spark, corpus_df, tmp_path):
-    """Segment top-k (collect-free path): bucket partitions prune
-    DYNAMICALLY from the broadcast query-term side (no driver-side
-    term collect); the query side broadcasts; shuffle count stays
-    bounded (decode spread + score agg + window — no accidental extra
-    exchanges). The driver-known-terms path (blocks_for_terms) keeps
-    static parquet predicate pushdown — asserted separately."""
+@pytest.fixture(scope="module")
+def seg_index(spark, corpus_df, tmp_path_factory):
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
         with_doc_id,
     )
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
         SegmentIndex,
         build_segment_index,
+    )
+
+    d = str(tmp_path_factory.mktemp("planidx"))
+    build_segment_index(spark, with_doc_id(corpus_df), d, n_buckets=4,
+                        hot_df=8, block_size=16)
+    return SegmentIndex.open(spark, d)
+
+
+def test_segment_query_plan(spark, seg_index):
+    """Segment top-k (collect-free path): bucket partitions prune
+    DYNAMICALLY from the broadcast query-term side (no driver-side
+    term collect); the query side broadcasts; shuffle count stays
+    bounded (decode spread + score agg + window — no accidental extra
+    exchanges). The driver-known-terms path (blocks_for_terms) keeps
+    static parquet predicate pushdown — asserted separately."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
         segment_topk,
     )
 
-    d = str(tmp_path / "planidx")
-    build_segment_index(spark, with_doc_id(corpus_df), d, n_buckets=4,
-                        hot_df=8, block_size=16)
-    idx = SegmentIndex.open(spark, d)
     q = spark.createDataFrame(
         [("q0", "tok0001 tok0002 uniq00003doc")], "query_id string, text string"
     )
-    df = segment_topk(idx, q, k=5)
+    df = segment_topk(seg_index, q, k=5)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), (
         "bucket partition pruning must be planned dynamically from the "
         "broadcast term side"
     )
     assert has_broadcast_join(df)
-    # heavy-side: decode-spread repartition + score groupBy + rank
-    # window; plus up to 2 KB-sized dim-side exchanges (query-term
-    # distinct feeding the DPP broadcast) — bounded, not data-scaled
-    assert count_shuffles(df) <= 5, count_shuffles(df)
+    # heavy-side: decode-spread repartition + the one query_id
+    # exchange (score groupBy + rank window share it); plus up to 2
+    # KB-sized dim-side exchanges (query-term distinct feeding the DPP
+    # broadcast) — bounded, not data-scaled
+    assert count_shuffles(df) <= 4, count_shuffles(df)
     # static path: term predicate reaches the parquet scan
-    blocks = idx.blocks_for_terms(["tok0001", "tok0002"])
+    blocks = seg_index.blocks_for_terms(["tok0001", "tok0002"])
     assert any("term" in f for f in pushed_filters(blocks)), (
         pushed_filters(blocks)
     )
+
+
+# every brute-force BM25 consumer rides the one score-and-rank spine
+# (operators/topk.py): exactly one query_id hash exchange serves the
+# score-sum and every per-query window. The bounds pin each plan's
+# total exchange count at shuffle_partitions=4 (the others are
+# term-side and index-build exchanges); none may rise.
+SPINE_SHUFFLE_BOUNDS = {
+    "q_bm25_topk": 5,
+    "q_match_or_nil": 5,
+    "q_match_compat": 10,
+    "q_db2qry": 7,
+    "q_match_classed": 7,
+    "q_match_stats": 7,
+    "q_bm25_segment": 4,
+    "segment_topk_double": 4,
+    "segment_topk_micro": 4,
+}
+_QUERY_ID_EXCHANGE = re.compile(
+    r"Arguments: hashpartitioning\(query_id#\d+, \d+\), REPARTITION_BY_COL"
+)
+
+
+@pytest.mark.parametrize("name", list(SPINE_SHUFFLE_BOUNDS))
+def test_bm25_spine_plans(spark, seg_index, queries_df, name):
+    from shazam_an_industrial_strength_audio_search_algorithm__spark import api
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
+        segment_topk,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.plans.audit import (
+        plan_string,
+    )
+
+    # a tracked persist left by an earlier query would substitute its
+    # cached plan (and that plan's exchanges) into this one
+    api.release_caches()
+    if name.startswith("segment_topk"):
+        df = segment_topk(seg_index, queries_df, k=5,
+                          micro=name.endswith("micro"))
+    else:
+        df = getattr(api, name)(spark, SF)
+    plan = plan_string(df)
+    assert len(_QUERY_ID_EXCHANGE.findall(plan)) == 1, plan
+    assert count_shuffles(df) <= SPINE_SHUFFLE_BOUNDS[name], audit(df)
 
 
 def test_doc_len_is_narrow(spark):

@@ -2,12 +2,15 @@
 build fed ``doc_terms_df`` and an update fed ``add_doc_terms`` must
 produce byte-identical segments and identical snapshot stats to the
 tokenize paths — the frames are the same postings, so everything
-downstream (encode, df, salts, block bounds) must not move."""
+downstream (encode, df, salts, block bounds) must not move. Both
+seams reject a call that leaves nothing to index before writing."""
 
 from __future__ import annotations
 
 import json
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
@@ -76,3 +79,24 @@ def test_add_doc_terms_update_identical(spark, corpus_df, tmp_path):
     build_and_update(d_tok, pretokenized=False)
     build_and_update(d_pre, pretokenized=True)
     assert _seg_fingerprint(spark, d_pre) == _seg_fingerprint(spark, d_tok)
+
+
+def test_build_without_input_raises_before_any_write(spark, tmp_path):
+    d = tmp_path / "noinput"
+    with pytest.raises(ValueError, match="corpus or a doc_terms_df"):
+        build_segment_index(spark, None, str(d), n_buckets=2,
+                            block_size=16)
+    assert not d.exists()
+
+
+def test_add_doc_terms_without_add_corpus_raises(spark, corpus_df,
+                                                 tmp_path):
+    corpus = with_doc_id(corpus_df).limit(10)
+    d = str(tmp_path / "nocorpus")
+    build_segment_index(spark, corpus, d, n_buckets=2, hot_df=8,
+                        block_size=16)
+    with pytest.raises(ValueError, match="pass add_corpus"):
+        apply_updates(spark, d, mode="delta",
+                      add_doc_terms=build_doc_terms(corpus))
+    assert SegmentIndex.open(spark, d).version == 1
+    assert sorted(os.listdir(f"{d}/manifests")) == ["init"]

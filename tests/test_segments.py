@@ -54,21 +54,38 @@ def test_build_commits_snapshot_and_manifests(built, index_dir):
         assert m["n_postings"] > 0
 
 
-def test_segment_topk_equals_dataframe_engine(spark, built, index_dir, queries_df):
+SCHEMAS = {
+    False: "struct<query_id:string,rank:int,doc_id:bigint,score:double,"
+           "matched_terms:bigint>",
+    True: "struct<query_id:string,rank:bigint,doc_id:bigint,"
+          "score_micro:bigint,matched_terms:bigint>",
+}
+
+
+def test_segment_topk_equals_dataframe_engine(spark, built, index_dir,
+                                              queries_df):
+    """Both index kinds through the one spine, in both score units:
+    same rows, same output schema."""
     corpus, _ = built
     seg = SegmentIndex.open(spark, index_dir)
-    got = segment_topk(seg, queries_df, k=K).orderBy("query_id", "rank").collect()
-    want = (
-        bm25_topk(InvertedIndex.build(corpus), queries_df, k=K)
-        .orderBy("query_id", "rank")
-        .collect()
-    )
-    assert len(got) == len(want)
-    for g, w in zip(got, want):
-        assert (g["query_id"], g["rank"], g["doc_id"]) == (
-            w["query_id"], w["rank"], w["doc_id"],
-        )
-        assert math.isclose(g["score"], w["score"], rel_tol=1e-9)
+    v1 = InvertedIndex.build(corpus)
+    for micro in (False, True):
+        got_df = segment_topk(seg, queries_df, k=K, micro=micro)
+        want_df = bm25_topk(v1, queries_df, k=K, micro=micro)
+        assert got_df.schema.simpleString() == SCHEMAS[micro]
+        assert want_df.schema.simpleString() == SCHEMAS[micro]
+        got = got_df.orderBy("query_id", "rank").collect()
+        want = want_df.orderBy("query_id", "rank").collect()
+        assert len(got) == len(want)
+        if micro:
+            # integer units: exact equality, row for row
+            assert got == want
+            continue
+        for g, w in zip(got, want):
+            assert (g["query_id"], g["rank"], g["doc_id"]) == (
+                w["query_id"], w["rank"], w["doc_id"],
+            )
+            assert math.isclose(g["score"], w["score"], rel_tol=1e-9)
 
 
 def test_blocks_are_salted_ordered_disjoint(spark, built, index_dir):
