@@ -53,11 +53,11 @@ def main_setup(spark):
     spark.sparkContext.setJobDescription("setup: docs_segment_index")
     timed("docs_segment_index", lambda: api.docs_segment_index(spark, SF_DIR), out)
     spark.sparkContext.setJobDescription("setup: ivf_persist")
-    timed("ivf_persist", lambda: api._ensure_ivf_disk(spark, SF_DIR), out)
+    timed("ivf_persist", lambda: api.ivf_disk_dir(spark, SF_DIR), out)
     spark.sparkContext.setJobDescription("setup: ivf_disk_query")
     timed("ivf_disk_query", lambda: api.q_ann_ivf_disk(spark, SF_DIR).collect(), out)
     spark.sparkContext.setJobDescription("setup: lsh_persist")
-    timed("lsh_persist", lambda: api._ensure_lsh_disk(spark, SF_DIR), out)
+    timed("lsh_persist", lambda: api.lsh_disk_dir(spark, SF_DIR), out)
     spark.sparkContext.setJobDescription("setup: lsh_disk_query")
     timed("lsh_disk_query", lambda: api.q_ann_lsh_disk(spark, SF_DIR).collect(), out)
     spark.sparkContext.setJobDescription("setup: ivf_delta")

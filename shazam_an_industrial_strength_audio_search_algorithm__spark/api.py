@@ -25,8 +25,36 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.token
     DUCKDB_TOKENS_SQL,
     tokens_col,
 )
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.dedup import (
+    embedding_neardup_blocked,
+    exact_dup_groups,
+    minhash_lsh_pairs,
+    near_dup_clusters,
+    ngram_jaccard_pairs,
+    sha60_term_hash,
+    simhash_pairs,
+)
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
     InvertedIndex,
+    build_doc_terms,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
+    SegmentIndex,
+    build_segment_index,
+    segment_topk,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
+    cosine_topk,
+    duckdb_ivf_topk_sql,
+    duckdb_lsh_topk_sql,
+    ivf_persist,
+    ivf_topk,
+    ivf_topk_persisted,
+    ivf_upsert,
+    lsh_persist,
+    lsh_topk,
+    lsh_topk_persisted,
+    lsh_upsert,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
     bm25_scores,
@@ -38,6 +66,9 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk 
     per_query_thresholds,
     query_terms,
     rank_scores,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+    OWNER,
 )
 
 # ---------------------------------------------------------------------------
@@ -58,109 +89,43 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-_INDEX_CACHE: dict[str, InvertedIndex] = {}
-_SEG_CACHE: dict[str, str] = {}
-
-# ---- cache hygiene (round-4 verdict item 5) -------------------------
-# Composed queries persist an intermediate (the WAND/BM25 top-k feeds
-# both the candidate gate and the final join — without an
-# InMemoryRelation Spark executes the coarse subtree twice). The
-# returned DataFrame is LAZY, so the cache must outlive the function
-# (the driver's action happens later) — it is therefore TRACKED and
-# released at the next composed query's entry, via release_caches(),
-# or at interpreter exit; at most one generation of tracked caches is
-# ever live. Temp layout dirs (segment index / IVF / LSH / stream)
-# are likewise registered and removed at exit.
-_TRACKED_PERSISTS: list[DataFrame] = []
-_TMP_DIRS: list[str] = []
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    _TRACKED_PERSISTS.append(df.persist())
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist every tracked intermediate from previously returned
-    composed queries. Called automatically on entry to each composed
-    query; callable any time after the caller's action completes."""
-    while _TRACKED_PERSISTS:
-        try:
-            _TRACKED_PERSISTS.pop().unpersist(blocking=False)
-        except Exception:  # session already stopped — nothing to free
-            pass
-
-
-def _mk_tmpdir(prefix: str) -> str:
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    _TMP_DIRS.append(d)
-    return d
-
-
-def _cleanup_at_exit() -> None:
-    import shutil
-
-    release_caches()
-    while _TMP_DIRS:
-        shutil.rmtree(_TMP_DIRS.pop(), ignore_errors=True)
-
-
-import atexit as _atexit  # noqa: E402
-
-_atexit.register(_cleanup_at_exit)
-# ---------------------------------------------------------------------
-
-
-def docs_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
-    """Build (once per sf_dir per process) the v1 index over the
-    driver's ``documents`` table (doc_id, text, lang, source,
-    n_chars)."""
-    if sf_dir not in _INDEX_CACHE:
-        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        _INDEX_CACHE[sf_dir] = InvertedIndex.build(
-            docs, id_col="doc_id", text_col="text"
-        )
-    return _INDEX_CACHE[sf_dir]
-
-
-def docs_segment_index(spark: SparkSession, sf_dir: str):
-    """Build (once per sf_dir per process) the PERSISTED segment index
-    over ``documents`` — exposes the varint-block/bucket/snapshot path
-    through the driver gate."""
-
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
-        SegmentIndex,
-        build_segment_index,
+def _documents_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``documents`` in the segment builders' corpus schema."""
+    return load(spark, sf_dir, "documents").select(
+        F.lit("corpus").alias("repo"),
+        F.col("doc_id").cast("string").alias("path"),
+        F.lit("c0").alias("commit"),
+        F.lit("txt").alias("lang"),
+        F.col("text").alias("content"),
+        F.col("doc_id"),
     )
 
-    if sf_dir not in _SEG_CACHE:
-        docs = load(spark, sf_dir, "documents").select(
-            F.lit("corpus").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.lit("c0").alias("commit"),
-            F.lit("txt").alias("lang"),
-            F.col("text").alias("content"),
-            F.col("doc_id"),
-        )
-        d = _mk_tmpdir("driver_segidx_")
-        # store_positions=True: the SAME persisted index serves both
-        # BM25 (bm25_segment) and positional verification
-        # (positional_segment) — positions ride in a trailing payload
-        # section the BM25 decode path skips.
-        # When the v1 index over the same corpus is already built (the
-        # battery builds it first), its cached doc_terms feed phase A
-        # directly — the identical postings without a second
-        # positions-UDF tokenize pass over the documents table
-        dtf = (_INDEX_CACHE[sf_dir].doc_terms
-               if sf_dir in _INDEX_CACHE else None)
-        build_segment_index(spark, docs, d, n_buckets=4, hot_df=64,
-                            block_size=64, id_col="doc_id",
-                            text_col="content", store_positions=True,
-                            doc_terms_df=dtf)
-        _SEG_CACHE[sf_dir] = d
-    return SegmentIndex.open(spark, _SEG_CACHE[sf_dir])
+
+@OWNER.fixture
+def docs_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
+    """The v1 index over the driver's ``documents`` table (doc_id,
+    text, lang, source, n_chars)."""
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    return InvertedIndex.build(docs, id_col="doc_id", text_col="text")
+
+
+@OWNER.fixture
+def docs_segment_index(spark: SparkSession, sf_dir: str):
+    """The PERSISTED segment index over ``documents`` — exposes the
+    varint-block/bucket/snapshot path through the driver gate."""
+    d = OWNER.tmpdir("driver_segidx_")
+    # store_positions=True: the SAME persisted index serves both
+    # BM25 (bm25_segment) and positional verification
+    # (positional_segment) — positions ride in a trailing payload
+    # section the BM25 decode path skips. The v1 index's postings
+    # (with positions) feed phase A directly: the identical postings
+    # without a second positions-UDF tokenize pass over the corpus
+    build_segment_index(spark, _documents_corpus(spark, sf_dir), d,
+                        n_buckets=4, hot_df=64, block_size=64,
+                        id_col="doc_id", text_col="content",
+                        store_positions=True,
+                        doc_terms_df=docs_index(spark, sf_dir).doc_terms)
+    return SegmentIndex.open(spark, d)
 
 
 def queries_df(spark: SparkSession) -> DataFrame:
@@ -370,16 +335,16 @@ FROM qv LEFT JOIN agg USING (query_id)
 """
 
 
+@OWNER.query()
 def q_match_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-compat decision (first-above-threshold in
     candidate-count order, Matching.py:120-139) — the promised W3
     compat mode, vs q_match_or_nil's engine-mode global best."""
-    # tracked persist: decide_compat consumes the scored-candidates
-    # frame from FOUR plan branches (cand ranking, first-match scan,
+    # persisted: decide_compat consumes the scored-candidates frame
+    # from FOUR plan branches (cand ranking, first-match scan,
     # second-best, candidate count); exchange reuse dedupes the
     # shuffle but the aggregation above it re-ran per branch
-    release_caches()
-    scores = _persist_tracked(
+    scores = OWNER.persist(
         bm25_scores(docs_index(spark, sf_dir), queries_df(spark),
                     micro=True).select(
             "query_id", "doc_id",
@@ -766,6 +731,7 @@ FROM r WHERE rn = 1
 """
 
 
+@OWNER.query()
 def q_search_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's FULL two-phase lifecycle in one plan
     (SURVEY §4 'cheap filter first, expensive verify second';
@@ -778,10 +744,8 @@ def q_search_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         positional_verify,
     )
 
-    # tracked persist: topk feeds BOTH the candidate gate and the
-    # final join (see release_caches); released at next composed query
-    release_caches()
-    topk = _persist_tracked(q_bm25_topk(spark, sf_dir))
+    # persisted: topk feeds BOTH the candidate gate and the final join
+    topk = OWNER.persist(q_bm25_topk(spark, sf_dir))
     idx = docs_index(spark, sf_dir)
     cand_docs = topk.select("doc_id").distinct()
     postings = idx.doc_terms.join(F.broadcast(cand_docs), "doc_id",
@@ -795,6 +759,7 @@ def q_search_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@OWNER.query()
 def q_search_verified_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full two-phase lifecycle (``Matching.py:120-131``) on the
     PERSISTED index — the composition that matters at 100 TB: WAND
@@ -810,10 +775,8 @@ def q_search_verified_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_term_positions,
     )
 
-    # tracked persist: topk feeds BOTH the candidate gate and the
-    # final join (see release_caches); released at next composed query
-    release_caches()
-    topk = _persist_tracked(q_wand_topk(spark, sf_dir).select(
+    # persisted: topk feeds BOTH the candidate gate and the final join
+    topk = OWNER.persist(q_wand_topk(spark, sf_dir).select(
         "query_id", "rank", "doc_id", "score_micro"
     ))
     idx = docs_segment_index(spark, sf_dir)
@@ -879,10 +842,6 @@ def q_bm25_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment index (buckets, salting, snapshots) → decode → BM25 —
     must hash-match the same DuckDB oracle as the in-memory engine
     (Q_BM25_TOPK_SQL): one oracle, two physical plans."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
-        segment_topk,
-    )
-
     idx = docs_segment_index(spark, sf_dir)
     return segment_topk(idx, queries_df(spark), k=TOPK_K, micro=True)
 
@@ -910,13 +869,11 @@ def q_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAYERED_SEG_CACHE: dict[str, str] = {}
-
-
+@OWNER.fixture
 def docs_layered_segment_index(spark: SparkSession, sf_dir: str):
     """A merge-on-read twin of ``docs_segment_index`` whose ALIVE
     corpus is exactly the ``documents`` table, reached through real
-    delta layers (built once per sf_dir per process):
+    delta layers:
 
     - base build: one-in-seven docs (doc_id % 7 == 3) hold stale
       placeholder text seeded with flagship-query terms, one-in-seven
@@ -936,84 +893,57 @@ def docs_layered_segment_index(spark: SparkSession, sf_dir: str):
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
         apply_updates,
     )
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
-        SegmentIndex,
-        build_segment_index,
+    docs = _documents_corpus(spark, sf_dir)
+    mod7 = F.pmod(F.col("doc_id"), F.lit(7))
+    stale = ("hash join merge sort window spark stale placeholder "
+             "revision pending overwrite")
+    base = docs.filter(mod7 != 6).withColumn(
+        "content",
+        F.when(mod7 == 3, F.lit(stale)).otherwise(F.col("content")),
     )
-
-    if sf_dir not in _LAYERED_SEG_CACHE:
-        docs = load(spark, sf_dir, "documents").select(
-            F.lit("corpus").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.lit("c0").alias("commit"),
-            F.lit("txt").alias("lang"),
-            F.col("text").alias("content"),
-            F.col("doc_id"),
-        )
-        mod7 = F.pmod(F.col("doc_id"), F.lit(7))
-        stale = ("hash join merge sort window spark stale placeholder "
-                 "revision pending overwrite")
-        base = docs.filter(mod7 != 6).withColumn(
-            "content",
-            F.when(mod7 == 3, F.lit(stale)).otherwise(F.col("content")),
-        )
-        ghosts = docs.filter(F.pmod(F.col("doc_id"), F.lit(13)) == 5).select(
-            F.lit("ghost").alias("repo"),
-            F.col("path"),
-            F.lit("c0").alias("commit"),
-            F.lit("txt").alias("lang"),
-            F.lit("customer order line value table ghost filler entry")
-            .alias("content"),
-            (F.col("doc_id") + F.lit(1 << 40)).alias("doc_id"),
-        )
-        d = _mk_tmpdir("driver_layeredidx_")
-        # tokenize only what differs from the documents table: the v1
-        # index (built first by the battery) already holds postings
-        # for every unmodified doc, so the base build composes them
-        # with a fresh tokenize of just the stale/ghost rows (both
-        # constant 10-token texts), and the u2 delta IS the v1
-        # postings for its doc_ids — the fixture's content equals the
-        # documents table there by construction
-        from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
-            build_doc_terms,
-        )
-
-        v1 = _INDEX_CACHE.get(sf_dir)
-        base_dtf = u2_dtf = None
-        if v1 is not None:
-            keep = v1.doc_terms.filter(
-                (F.pmod(F.col("doc_id"), F.lit(7)) != 3)
-                & (F.pmod(F.col("doc_id"), F.lit(7)) != 6)
-            ).select("doc_id", "term", "tf", "doc_len")
-            changed = build_doc_terms(
-                base.filter(mod7 == 3).unionByName(ghosts),
-                id_col="doc_id", text_col="content", with_positions=False,
-            ).select("doc_id", "term", "tf", "doc_len")
-            base_dtf = keep.unionByName(changed)
-            u2_dtf = v1.doc_terms.filter(
-                (F.pmod(F.col("doc_id"), F.lit(7)) == 3)
-                | (F.pmod(F.col("doc_id"), F.lit(7)) == 6)
-            ).select("doc_id", "term", "tf", "doc_len")
-        build_segment_index(
-            spark, base.unionByName(ghosts), d, n_buckets=4, hot_df=64,
-            block_size=64, id_col="doc_id", text_col="content",
-            doc_terms_df=base_dtf,
-        )
-        apply_updates(
-            spark, d,
-            add_corpus=docs.filter((mod7 == 3) | (mod7 == 6)),
-            mode="delta", explicit_ids=True,
-            # the batch keys are distinct documents-table doc_ids by
-            # construction — skip the strict-mode uniqueness probe job
-            assume_unique=True,
-            add_doc_terms=u2_dtf,
-        )
-        apply_updates(
-            spark, d, delete_keys=ghosts.select("doc_id"),
-            mode="delta", explicit_ids=True,
-        )
-        _LAYERED_SEG_CACHE[sf_dir] = d
-    return SegmentIndex.open(spark, _LAYERED_SEG_CACHE[sf_dir])
+    ghosts = docs.filter(F.pmod(F.col("doc_id"), F.lit(13)) == 5).select(
+        F.lit("ghost").alias("repo"),
+        F.col("path"),
+        F.lit("c0").alias("commit"),
+        F.lit("txt").alias("lang"),
+        F.lit("customer order line value table ghost filler entry")
+        .alias("content"),
+        (F.col("doc_id") + F.lit(1 << 40)).alias("doc_id"),
+    )
+    d = OWNER.tmpdir("driver_layeredidx_")
+    # tokenize only what differs from the documents table: the v1
+    # index holds postings for every unmodified doc, so the base
+    # build composes them with a fresh tokenize of just the
+    # stale/ghost rows (both constant 10-token texts), and the u2
+    # delta IS the v1 postings for its doc_ids — the fixture's
+    # content equals the documents table there by construction
+    v1 = docs_index(spark, sf_dir).doc_terms.select(
+        "doc_id", "term", "tf", "doc_len"
+    )
+    changed = build_doc_terms(
+        base.filter(mod7 == 3).unionByName(ghosts),
+        id_col="doc_id", text_col="content", with_positions=False,
+    ).select("doc_id", "term", "tf", "doc_len")
+    build_segment_index(
+        spark, base.unionByName(ghosts), d, n_buckets=4, hot_df=64,
+        block_size=64, id_col="doc_id", text_col="content",
+        doc_terms_df=v1.filter((mod7 != 3) & (mod7 != 6))
+        .unionByName(changed),
+    )
+    apply_updates(
+        spark, d,
+        add_corpus=docs.filter((mod7 == 3) | (mod7 == 6)),
+        mode="delta", explicit_ids=True,
+        # the batch keys are distinct documents-table doc_ids by
+        # construction — skip the strict-mode uniqueness probe job
+        assume_unique=True,
+        add_doc_terms=v1.filter((mod7 == 3) | (mod7 == 6)),
+    )
+    apply_updates(
+        spark, d, delete_keys=ghosts.select("doc_id"),
+        mode="delta", explicit_ids=True,
+    )
+    return SegmentIndex.open(spark, d)
 
 
 def q_wand_layered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1045,7 +975,27 @@ def q_wand_layered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_MATCH_CACHE: dict[str, str] = {}
+@OWNER.fixture
+def _stream_match_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Replay the flagship queries as a two-file stream over the
+    segment index; returns the committed results dir."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.streaming.match import (
+        stream_match,
+    )
+
+    base = OWNER.tmpdir("driver_stream_")
+    qdir, odir, cdir = f"{base}/queries", f"{base}/out", f"{base}/ckpt"
+    qs = queries_df(spark)
+    half = [qid for qid, _ in FLAGSHIP_QUERIES[:2]]
+    qs.filter(F.col("query_id").isin(half)).coalesce(1)\
+        .write.mode("append").parquet(qdir)
+    qs.filter(~F.col("query_id").isin(half)).coalesce(1)\
+        .write.mode("append").parquet(qdir)
+    q = stream_match(spark, qdir, docs_segment_index(spark, sf_dir).index_dir,
+                     odir, cdir, k=TOPK_K, max_files_per_trigger=1,
+                     micro=True)
+    q.awaitTermination()
+    return odir
 
 
 def q_stream_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1061,26 +1011,10 @@ def q_stream_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from shazam_an_industrial_strength_audio_search_algorithm__spark.streaming.match import (
         read_match_results,
-        stream_match,
     )
 
-    if sf_dir not in _STREAM_MATCH_CACHE:
-        docs_segment_index(spark, sf_dir)  # ensure the snapshot exists
-        base = _mk_tmpdir("driver_stream_")
-        qdir, odir, cdir = (f"{base}/queries", f"{base}/out",
-                            f"{base}/ckpt")
-        qs = queries_df(spark)
-        half = [qid for qid, _ in FLAGSHIP_QUERIES[:2]]
-        qs.filter(F.col("query_id").isin(half)).coalesce(1)\
-            .write.mode("append").parquet(qdir)
-        qs.filter(~F.col("query_id").isin(half)).coalesce(1)\
-            .write.mode("append").parquet(qdir)
-        q = stream_match(spark, qdir, _SEG_CACHE[sf_dir], odir, cdir,
-                         k=TOPK_K, max_files_per_trigger=1, micro=True)
-        q.awaitTermination()
-        _STREAM_MATCH_CACHE[sf_dir] = odir
     return read_match_results(
-        spark, _STREAM_MATCH_CACHE[sf_dir], micro=True
+        spark, _stream_match_dir(spark, sf_dir), micro=True
     ).select(
         "query_id",
         F.col("rank").cast("long").alias("rank"),
@@ -1109,7 +1043,9 @@ WHERE len({_D_TOKS}) = 0
 """
 
 
-_BATCH_MATCH_CACHE: dict[str, str] = {}
+@OWNER.fixture
+def _batch_match_dir(spark: SparkSession, sf_dir: str) -> str:
+    return OWNER.tmpdir("driver_batchmatch_")
 
 
 def q_batch_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1129,11 +1065,9 @@ def q_batch_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_match_resumable,
     )
 
-    idx = docs_segment_index(spark, sf_dir)
-    if sf_dir not in _BATCH_MATCH_CACHE:
-        _BATCH_MATCH_CACHE[sf_dir] = _mk_tmpdir("driver_batchmatch_")
     res = batch_match_resumable(
-        idx, queries_df(spark), _BATCH_MATCH_CACHE[sf_dir],
+        docs_segment_index(spark, sf_dir), queries_df(spark),
+        _batch_match_dir(spark, sf_dir),
         k=TOPK_K, n_groups=4, mode="wand", micro=True,
     )
     return res.select(
@@ -1723,10 +1657,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dup groups over a 40-char prefix key (the raw documents
     are all distinct — the prefix creates deterministic collisions in
     both engines, exercising the same groupBy-digest plan)."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.dedup import (
-        exact_dup_groups,
-    )
-
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", F.substring("text", 1, 40).alias("text")
     )
@@ -1752,16 +1682,13 @@ HAVING count(*) > 1
 """
 
 
+@OWNER.query()
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Jaccard ≥ 0.8 near-dup pairs — the classic near-dup
     operating point, exercising the AllPairs prefix+length-filtered
     candidate path (threshold ≥ 0.5 dispatch in
     ``ngram_jaccard_pairs``); the oracle recomputes the unfiltered
     all-pairs truth, so the gate asserts the pruning lost nothing."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     return ngram_jaccard_pairs(docs, n=3, threshold=0.8)
 
@@ -1798,6 +1725,7 @@ Q_NGRAM_JACCARD_SQL = _NGRAM_JACCARD_SQL_T.replace("__T_MICRO__", "800000")
 Q_MINHASH_LSH_SQL = _NGRAM_JACCARD_SQL_T.replace("__T_MICRO__", "800000")
 
 
+@OWNER.query()
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clustering: connected components over the
     exact-Jaccard ≥ 0.8 pair graph, cluster_id = min doc_id, plus the
@@ -1806,11 +1734,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation (O(diameter) rounds of join+groupBy); the oracle is a
     DuckDB recursive CTE over the same pair query — two completely
     different fixpoint engines, one answer."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.dedup import (
-        near_dup_clusters,
-        ngram_jaccard_pairs,
-    )
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = ngram_jaccard_pairs(docs, n=3, threshold=0.8)
     return near_dup_clusters(pairs).select(
@@ -1841,6 +1764,7 @@ FROM reach GROUP BY s
 """
 
 
+@OWNER.query()
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs with candidate-gated exact
     verification. The driver-facing columns are the EXACT values
@@ -1859,27 +1783,19 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs are invisible BY DESIGN (measured: two J≈0.13 pairs at
     sf0.1 escape all 16 bands) — same parameter-vs-guarantee
     alignment as SimHash's chunk count."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     return minhash_lsh_pairs(docs, threshold=0.8).select(
         "doc_a", "doc_b", "n_common", "jaccard_micro"
     )
 
 
+@OWNER.query()
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs at the published 64-bit operating point
     (hamming ≤ 3; 4-chunk pigeonhole blocking gives complete recall).
     Term hashes use the sha256-prefix variant so the ENTIRE signature
     computation is reproducible in DuckDB — full value oracle, not a
     rows-only check."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.dedup import (
-        sha60_term_hash,
-        simhash_pairs,
-    )
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     return simhash_pairs(docs, max_hamming=3, term_hash=sha60_term_hash)
 
@@ -1932,10 +1848,6 @@ def q_emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute fold plan, pinned in tests/test_dedup.py; the brute plan
     costs 26 s on sf0.1's 2 k vectors, the blocked one ~2 s).
     """
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.dedup import (
-        embedding_neardup_blocked,
-    )
-
     emb = load(spark, sf_dir, "embeddings")
     return embedding_neardup_blocked(emb, id_col="vec_id", threshold=0.40)
 
@@ -1978,10 +1890,6 @@ def _query_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        cosine_topk,
-    )
-
     emb = load(spark, sf_dir, "embeddings")
     return cosine_topk(emb, _query_vecs(spark, sf_dir), k=10)
 
@@ -2028,21 +1936,8 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlines the SAME seeded hyperplanes as float literals and
     reproduces bucketing → multi-probe → candidate join → exact
     re-score → top-k (similarity.duckdb_lsh_topk_sql)."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        lsh_topk,
-    )
-
     emb = load(spark, sf_dir, "embeddings")
     return lsh_topk(emb, _query_vecs(spark, sf_dir), k=10)
-
-
-def _ann_lsh_sql() -> str:
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        duckdb_lsh_topk_sql,
-    )
-
-    # driver embeddings tables are dim=64 at every sf
-    return duckdb_lsh_topk_sql(dim=64, k=10)
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2050,23 +1945,25 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sha256-prefix id hash → SQL-expressible), nearest-cell
     assignment, n_probe-cell probing, exact re-score. Full value
     oracle recomputes the identical centroids/assignment in DuckDB."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        ivf_topk,
-    )
-
     emb = load(spark, sf_dir, "embeddings")
     return ivf_topk(emb, _query_vecs(spark, sf_dir), k=10)
 
 
-def _ann_ivf_sql() -> str:
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        duckdb_ivf_topk_sql,
-    )
+@OWNER.fixture
+def ivf_disk_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The persisted cell-partitioned IVF layout over ``embeddings``."""
+    d = OWNER.tmpdir("driver_ivfidx_")
+    ivf_persist(load(spark, sf_dir, "embeddings"), d)
+    return d
 
-    return duckdb_ivf_topk_sql(dim=64, k=10)
 
-
-_IVF_DISK_CACHE: dict[str, str] = {}
+@OWNER.fixture
+def lsh_disk_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The persisted bucket-partitioned sign-LSH layout over
+    ``embeddings``."""
+    d = OWNER.tmpdir("driver_lshidx_")
+    lsh_persist(load(spark, sf_dir, "embeddings"), d)
+    return d
 
 
 def q_ann_ivf_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2074,31 +1971,9 @@ def q_ann_ivf_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune vector partitions via dynamic partition pruning. Same value
     oracle as the in-memory ``ann_ivf`` — one oracle, two physical
     plans (scan-side pruning vs in-memory assignment)."""
-
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        ivf_persist,
-        ivf_topk_persisted,
-    )
-
     return ivf_topk_persisted(
-        spark, _ensure_ivf_disk(spark, sf_dir),
-        _query_vecs(spark, sf_dir), k=10
+        spark, ivf_disk_dir(spark, sf_dir), _query_vecs(spark, sf_dir), k=10
     )
-
-
-def _ensure_ivf_disk(spark: SparkSession, sf_dir: str) -> str:
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        ivf_persist,
-    )
-
-    if sf_dir not in _IVF_DISK_CACHE:
-        d = _mk_tmpdir("driver_ivfidx_")
-        ivf_persist(load(spark, sf_dir, "embeddings"), d)
-        _IVF_DISK_CACHE[sf_dir] = d
-    return _IVF_DISK_CACHE[sf_dir]
-
-
-_LSH_DISK_CACHE: dict[str, str] = {}
 
 
 def q_ann_lsh_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2107,31 +1982,56 @@ def q_ann_lsh_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of re-bucketing the corpus per batch. Same value oracle
     as the in-memory ``ann_lsh`` — one oracle, two physical plans
     (scan-side pruning vs on-the-fly bucketing)."""
-
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        lsh_persist,
-        lsh_topk_persisted,
-    )
-
     return lsh_topk_persisted(
-        spark, _ensure_lsh_disk(spark, sf_dir),
-        _query_vecs(spark, sf_dir), k=10
+        spark, lsh_disk_dir(spark, sf_dir), _query_vecs(spark, sf_dir), k=10
     )
 
 
-def _ensure_lsh_disk(spark: SparkSession, sf_dir: str) -> str:
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        lsh_persist,
+def _upserted_copy(spark: SparkSession, sf_dir: str, base_dir: str,
+                   upsert, prefix: str) -> str:
+    """A file-level copy of a persisted vector layout with the
+    deterministic delta batch upserted: every ``vec_id % 97 == 0``
+    re-added with its vector reversed, every other ``vec_id % 101 ==
+    0`` deleted. The delta twin MUTATES its layout, so it copies the
+    _disk twin's base instead of paying a second Spark build."""
+    import shutil
+
+    emb = load(spark, sf_dir, "embeddings")
+    d = OWNER.tmpdir(prefix)
+    shutil.copytree(base_dir, d, dirs_exist_ok=True)
+    upsert(
+        spark, d,
+        add=emb.filter(F.col("vec_id") % 97 == 0)
+        .withColumn("embedding", F.reverse("embedding")),
+        delete_ids=emb.filter(
+            (F.col("vec_id") % 101 == 0) & (F.col("vec_id") % 97 != 0)
+        ).select("vec_id"),
+    )
+    return d
+
+
+def _delta_query_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_query_vecs`` over the post-upsert logical set (vec_id 0 is
+    in the upsert set, so its query vector is the reversed one)."""
+    emb = load(spark, sf_dir, "embeddings")
+    return emb.filter(F.col("vec_id") < 3).select(
+        F.concat(F.lit("v"), F.col("vec_id")).alias("query_id"),
+        F.when(F.col("vec_id") % 97 == 0, F.reverse("embedding"))
+        .otherwise(F.col("embedding"))
+        .alias("qvec"),
     )
 
-    if sf_dir not in _LSH_DISK_CACHE:
-        d = _mk_tmpdir("driver_lshidx_")
-        lsh_persist(load(spark, sf_dir, "embeddings"), d)
-        _LSH_DISK_CACHE[sf_dir] = d
-    return _LSH_DISK_CACHE[sf_dir]
+
+@OWNER.fixture
+def ivf_delta_dir(spark: SparkSession, sf_dir: str) -> str:
+    return _upserted_copy(spark, sf_dir, ivf_disk_dir(spark, sf_dir),
+                          ivf_upsert, "driver_ivfdelta_")
 
 
-_IVF_DELTA_CACHE: dict[str, str] = {}
+@OWNER.fixture
+def lsh_delta_dir(spark: SparkSession, sf_dir: str) -> str:
+    return _upserted_copy(spark, sf_dir, lsh_disk_dir(spark, sf_dir),
+                          lsh_upsert, "driver_lshdelta_")
 
 
 def q_ann_ivf_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2143,40 +2043,8 @@ def q_ann_ivf_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     and queries the post-upsert logical set — value-checking both the
     generation/tombstone supersession rule and the frozen-quantizer
     maintenance contract."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        ivf_topk_persisted,
-        ivf_upsert,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_DELTA_CACHE:
-        import shutil as _shutil
-
-        # share the _disk twin's persisted base (round-5 item 7): the
-        # delta twin MUTATES its layout (upsert), so it gets a cheap
-        # file-level copy of the already-built base instead of a second
-        # Spark build — battery_setup stops paying the layout's FS
-        # metadata twice
-        d = _mk_tmpdir("driver_ivfdelta_")
-        _shutil.copytree(_ensure_ivf_disk(spark, sf_dir), d,
-                         dirs_exist_ok=True)
-        adds = emb.filter(F.col("vec_id") % 97 == 0).withColumn(
-            "embedding", F.reverse("embedding")
-        )
-        dels = (
-            emb.filter(
-                (F.col("vec_id") % 101 == 0) & (F.col("vec_id") % 97 != 0)
-            ).select("vec_id")
-        )
-        ivf_upsert(spark, d, add=adds, delete_ids=dels)
-        _IVF_DELTA_CACHE[sf_dir] = d
-    qs = emb.filter(F.col("vec_id") < 3).select(
-        F.concat(F.lit("v"), F.col("vec_id")).alias("query_id"),
-        F.when(F.col("vec_id") % 97 == 0, F.reverse("embedding"))
-        .otherwise(F.col("embedding"))
-        .alias("qvec"),
-    )
-    return ivf_topk_persisted(spark, _IVF_DELTA_CACHE[sf_dir], qs, k=10)
+    return ivf_topk_persisted(spark, ivf_delta_dir(spark, sf_dir),
+                              _delta_query_vecs(spark, sf_dir), k=10)
 
 
 _DELTA_LOGICAL_SELECT = (
@@ -2188,19 +2056,6 @@ _DELTA_LOGICAL_SELECT = (
     "  FROM embeddings\n"
     "  WHERE NOT (vec_id % 101 = 0 AND vec_id % 97 <> 0)"
 )
-
-
-def _ann_ivf_delta_sql() -> str:
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        duckdb_ivf_topk_sql,
-    )
-
-    return duckdb_ivf_topk_sql(
-        dim=64, k=10, logical_select=_DELTA_LOGICAL_SELECT
-    )
-
-
-_LSH_DELTA_CACHE: dict[str, str] = {}
 
 
 def q_ann_lsh_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2215,49 +2070,8 @@ def q_ann_lsh_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the post-upsert LOGICAL set expressed directly in SQL, so
     the generation/tombstone supersession rule is value-checked
     end-to-end, not just row-counted."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        lsh_topk_persisted,
-        lsh_upsert,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    if sf_dir not in _LSH_DELTA_CACHE:
-        import shutil as _shutil
-
-        # share the _disk twin's persisted base (round-5 item 7) —
-        # see q_ann_ivf_delta
-        d = _mk_tmpdir("driver_lshdelta_")
-        _shutil.copytree(_ensure_lsh_disk(spark, sf_dir), d,
-                         dirs_exist_ok=True)
-        adds = emb.filter(F.col("vec_id") % 97 == 0).withColumn(
-            "embedding", F.reverse("embedding")
-        )
-        dels = (
-            emb.filter(
-                (F.col("vec_id") % 101 == 0) & (F.col("vec_id") % 97 != 0)
-            ).select("vec_id")
-        )
-        lsh_upsert(spark, d, add=adds, delete_ids=dels)
-        _LSH_DELTA_CACHE[sf_dir] = d
-    # queries come from the post-upsert logical set (vec_id 0 is in
-    # the upsert set, so its query vector is the reversed one)
-    qs = emb.filter(F.col("vec_id") < 3).select(
-        F.concat(F.lit("v"), F.col("vec_id")).alias("query_id"),
-        F.when(F.col("vec_id") % 97 == 0, F.reverse("embedding"))
-        .otherwise(F.col("embedding"))
-        .alias("qvec"),
-    )
-    return lsh_topk_persisted(spark, _LSH_DELTA_CACHE[sf_dir], qs, k=10)
-
-
-def _ann_lsh_delta_sql() -> str:
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        duckdb_lsh_topk_sql,
-    )
-
-    return duckdb_lsh_topk_sql(
-        dim=64, k=10, base_select=_DELTA_LOGICAL_SELECT
-    )
+    return lsh_topk_persisted(spark, lsh_delta_dir(spark, sf_dir),
+                              _delta_query_vecs(spark, sf_dir), k=10)
 
 
 # ---------------------------------------------------------------------------
@@ -2470,13 +2284,12 @@ def q_positional_verify_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
 
 
+@OWNER.query()
 def q_search_verified_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """the two-phase search lifecycle on the v1 index AND on
-    WAND + segment decode, one labelled union / one oracle. (The
-    second constructor's release_caches() drops the first's tracked
-    persist — the first plan then recomputes its top-k subtree at
-    collect time; correctness is unaffected and per-plan latency is
-    benched separately.)"""
+    WAND + segment decode, one labelled union / one oracle. Both legs
+    run in this row's owner scope, so each keeps its top-k persist
+    until the union's action."""
     return _plan_union([
         ("v1", q_search_verified(spark, sf_dir)),
         ("segment", q_search_verified_segment(spark, sf_dir)),
@@ -2650,11 +2463,15 @@ ORACLE_SQL: dict[str, str] = {
     "emb_neardup": Q_EMB_NEARDUP_SQL,
     "ann_cosine": Q_ANN_COSINE_SQL,
     # labelled unions: in-memory bucketing/assignment + persisted
-    # DPP-pruned layout probes
-    "ann_lsh": _plan_union_sql(_ann_lsh_sql(), ("mem", "disk")),
-    "ann_ivf": _plan_union_sql(_ann_ivf_sql(), ("mem", "disk")),
-    "ann_lsh_delta": _ann_lsh_delta_sql(),
-    "ann_ivf_delta": _ann_ivf_delta_sql(),
+    # DPP-pruned layout probes (driver embeddings are dim=64 at every sf)
+    "ann_lsh": _plan_union_sql(duckdb_lsh_topk_sql(dim=64, k=10),
+                               ("mem", "disk")),
+    "ann_ivf": _plan_union_sql(duckdb_ivf_topk_sql(dim=64, k=10),
+                               ("mem", "disk")),
+    "ann_lsh_delta": duckdb_lsh_topk_sql(
+        dim=64, k=10, base_select=_DELTA_LOGICAL_SELECT),
+    "ann_ivf_delta": duckdb_ivf_topk_sql(
+        dim=64, k=10, logical_select=_DELTA_LOGICAL_SELECT),
     "media_meta": Q_MEDIA_META_SQL,
     "media_frames": Q_MEDIA_FRAMES_SQL,
     "media_decode": Q_MEDIA_DECODE_SQL,

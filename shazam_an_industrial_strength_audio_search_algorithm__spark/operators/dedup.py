@@ -31,12 +31,16 @@ import os
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.tokenize import (
     tokens_col,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+    OWNER,
 )
 
 # MinHash parameters: affine permutations h_i(x) = (a_i*x + b_i) mod p
@@ -224,13 +228,12 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     join. threshold == 0 likewise means every co-shingled pair."""
     # the shingle frame feeds df-count, ranking, and both verify
     # branches — persist so the regex tokenizer runs once, not 5×.
-    # MEMORY_ONLY on purpose: the returned frame is lazy so this
-    # function can never unpersist; memory-only blocks are LRU-evicted
-    # under pressure (degrading to recompute), where MEMORY_AND_DISK
-    # blocks would accumulate on executor disks for the session's life
-    from pyspark import StorageLevel
-
-    sh = shingles(df, id_col, text_col, n).persist(StorageLevel.MEMORY_ONLY)
+    # The returned frame is lazy, so the persist is registered with
+    # the session owner, which releases it with the query. MEMORY_ONLY:
+    # blocks are LRU-evicted under pressure (degrading to recompute)
+    # instead of spilling to executor disks
+    sh = OWNER.persist(shingles(df, id_col, text_col, n),
+                       StorageLevel.MEMORY_ONLY)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     if threshold < 0.5:
         a = sh.alias("a")
@@ -374,19 +377,18 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
 
     Output: (doc_a, doc_b, est_jaccard_micro[, jaccard_micro])."""
     rows_per_band = num_perm // bands
-    from pyspark import StorageLevel
-
     # ONE tokenize+shingle pass and ONE signature-UDF pass for the
     # whole pipeline: sh feeds the signature build AND the exact
     # verify (previously a third full shingle pass); sigs feeds the
     # banding AND both sides of the estimate join (exchange reuse
     # deduplicated the shuffle but re-ran the 64-perm UDF above it per
-    # consumer). MEMORY_ONLY for the same reason as ngram_jaccard's
-    # shingle persist: LRU-evictable, lazily recomputable.
-    sh = shingles(df, id_col, text_col, n).persist(StorageLevel.MEMORY_ONLY)
-    sigs = minhash_signatures(
+    # consumer). Owner-registered and MEMORY_ONLY, like
+    # ngram_jaccard's shingle persist.
+    sh = OWNER.persist(shingles(df, id_col, text_col, n),
+                       StorageLevel.MEMORY_ONLY)
+    sigs = OWNER.persist(minhash_signatures(
         df, id_col, text_col, n, num_perm, seed, shingle_df=sh
-    ).persist(StorageLevel.MEMORY_ONLY)
+    ), StorageLevel.MEMORY_ONLY)
     banded = sigs.select(
         "doc_id",
         F.posexplode(
@@ -547,14 +549,14 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
             return shifted
         return shifted.bitwiseAND(F.lit((1 << w) - 1))
 
-    from pyspark import StorageLevel
-
     # both sides of the chunk self-join consume sigs: exchange reuse
     # dedupes the underlying shuffle but the bit-fold UDF above it
-    # would re-run per side — persist so it folds once (MEMORY_ONLY:
-    # LRU-evictable, lazily recomputable)
-    sigs = simhash_signatures(df, id_col, text_col, term_hash=term_hash)\
-        .persist(StorageLevel.MEMORY_ONLY)
+    # would re-run per side — persist so it folds once (owner-
+    # registered, MEMORY_ONLY: LRU-evictable, lazily recomputable)
+    sigs = OWNER.persist(
+        simhash_signatures(df, id_col, text_col, term_hash=term_hash),
+        StorageLevel.MEMORY_ONLY,
+    )
     chunked = sigs.select(
         "doc_id", "simhash",
         F.posexplode(

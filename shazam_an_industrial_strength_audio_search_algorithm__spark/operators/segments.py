@@ -425,6 +425,12 @@ def build_buckets_batch(
     (4) df attaches to the BLOCK rows (≈ postings/block_size rows —
     far cheaper than windowing df over raw postings); (5) write
     partitionBy(bucket), overwriting only the touched partitions.
+
+    Each manifest's ``n_terms`` and ``n_postings`` come from the input
+    ``term_df`` (its (bucket, term) rows and Σdf), not from the written
+    blocks; only ``n_blocks`` is counted from the write. So a manifest
+    records what the encoder was given, and does not by itself witness
+    that the encoder wrote every posting.
     """
     if not buckets:
         return

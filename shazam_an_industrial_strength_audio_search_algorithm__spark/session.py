@@ -9,8 +9,14 @@ the Spark default of 200.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
+from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
@@ -153,3 +159,83 @@ def get_spark(
 
 
 _WARMED: set[str] = set()
+
+
+class ResourceOwner:
+    """The one owner of what outlives a call in this process: memoized
+    fixtures, persisted DataFrames and temp dirs.
+
+    A persist made while a fixture builds lives as long as the
+    fixture; any other belongs to the current query. A query returns
+    a lazy frame that may read its persists until its action, so they
+    are released on entry to the next outermost ``query()`` scope (a
+    query nested in another, one leg of a plan union, shares its
+    scope) or by ``release()``. ``close()`` drops everything; it runs
+    at interpreter exit."""
+
+    def __init__(self) -> None:
+        self._fixtures: dict = {}
+        self._fixture_persists: list = []
+        self.query_persists: list = []
+        self.tmpdirs: list[str] = []
+        self._building = self._depth = 0
+
+    def persist(self, df, level=StorageLevel.MEMORY_AND_DISK_DESER):
+        df.persist(level)
+        (self._fixture_persists if self._building
+         else self.query_persists).append(df)
+        return df
+
+    def tmpdir(self, prefix: str) -> str:
+        self.tmpdirs.append(tempfile.mkdtemp(prefix=prefix))
+        return self.tmpdirs[-1]
+
+    def fixture(self, build):
+        """Decorator: ``build(*args)`` runs once per args; its result
+        is kept until ``close()``."""
+
+        @functools.wraps(build)
+        def get(*args):
+            key = (build, *args)
+            if key not in self._fixtures:
+                self._building += 1
+                try:
+                    self._fixtures[key] = build(*args)
+                finally:
+                    self._building -= 1
+            return self._fixtures[key]
+
+        return get
+
+    @contextmanager
+    def query(self):
+        """One query's scope; also a decorator, ``@OWNER.query()``."""
+        if not self._depth:
+            self.release()
+        self._depth += 1
+        try:
+            yield
+        finally:
+            self._depth -= 1
+
+    def release(self) -> None:
+        _unpersist_all(self.query_persists)
+
+    def close(self) -> None:
+        self.release()
+        _unpersist_all(self._fixture_persists)
+        self._fixtures.clear()
+        while self.tmpdirs:
+            shutil.rmtree(self.tmpdirs.pop(), ignore_errors=True)
+
+
+def _unpersist_all(dfs: list) -> None:
+    while dfs:
+        try:
+            dfs.pop().unpersist(blocking=False)
+        except Exception:  # session already stopped — nothing to free
+            pass
+
+
+OWNER = ResourceOwner()
+atexit.register(OWNER.close)

@@ -4,6 +4,8 @@ DuckDB — row count, column names, and values (order-insensitive)."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pandas as pd
 import pytest
@@ -15,6 +17,16 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
+
+
+def _persisted_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: SLF001
+
+
+@pytest.fixture(scope="module", autouse=True)
+def persisted_before(spark) -> set[int]:
+    """RDD ids persisted before this module's battery runs."""
+    return _persisted_rdd_ids(spark)
 
 
 @pytest.fixture(scope="module")
@@ -60,6 +72,10 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 @pytest.mark.parametrize("name", sorted(entrymod.queries().keys()))
 def test_query_matches_oracle(spark, ddb, name):
+    _assert_matches_oracle(spark, ddb, name)
+
+
+def _assert_matches_oracle(spark, ddb, name):
     fn = entrymod.queries()[name]
     sql = entrymod.oracle_sql().get(name)
     got = _normalize(fn(spark, SF_DIR).toPandas())
@@ -90,3 +106,20 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert {"query_id", "rank", "doc_id"} <= set(df.columns)
+
+
+def test_close_releases_battery_state(spark, ddb, persisted_before):
+    """After every registry row: ``OWNER.close()`` unpersists every RDD
+    the battery persisted and removes every registry temp dir, and a
+    fixture-backed row run FIRST on the fresh owner (no v1 index
+    built yet) still equals its oracle."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+        OWNER,
+    )
+
+    dirs = OWNER.tmpdirs
+    assert dirs
+    OWNER.close()
+    assert _persisted_rdd_ids(spark) - persisted_before == set()
+    assert [d for d in dirs if os.path.exists(d)] == []
+    _assert_matches_oracle(spark, ddb, "wand_layered")

@@ -121,10 +121,13 @@ def test_bm25_spine_plans(spark, seg_index, queries_df, name):
     from shazam_an_industrial_strength_audio_search_algorithm__spark.plans.audit import (
         plan_string,
     )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+        OWNER,
+    )
 
-    # a tracked persist left by an earlier query would substitute its
-    # cached plan (and that plan's exchanges) into this one
-    api.release_caches()
+    # a persist left by an earlier query would substitute its cached
+    # plan (and that plan's exchanges) into this one
+    OWNER.release()
     if name.startswith("segment_topk"):
         df = segment_topk(seg_index, queries_df, k=5,
                           micro=name.endswith("micro"))
@@ -378,18 +381,21 @@ def test_match_stats_dist_has_no_unpartitioned_window(spark):
 def test_composed_queries_release_tracked_caches(spark):
     """Cache hygiene (round-4): the composed two-phase queries persist
     their top-k intermediate (it feeds two consumers of a LAZY result,
-    so it must outlive the fn) — but the cache is TRACKED: at most one
+    so it must outlive the fn) — but the persist is owned: at most one
     generation is live, the next composed query releases the previous
-    one, and release_caches() empties the set entirely."""
+    one, and ``OWNER.release()`` empties the set entirely."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark import api
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+        OWNER,
+    )
 
     jsc = spark.sparkContext._jsc  # noqa: SLF001
-    # warm-up: first call constructs the per-sf_dir index caches
-    # (deliberately long-lived, _INDEX_CACHE/_SEG_CACHE) — measure the
-    # tracked-persist churn AFTER that steady state is reached
+    # warm-up: first call builds the per-sf_dir fixtures (deliberately
+    # long-lived, memoized on the owner) — measure the per-query
+    # persist churn AFTER that steady state is reached
     api.q_search_verified(spark, SF).collect()
     api.q_search_verified_segment(spark, SF).collect()
-    api.release_caches()
+    OWNER.release()
     n0 = jsc.getPersistentRDDs().size()
     api.q_search_verified(spark, SF).collect()
     n1 = jsc.getPersistentRDDs().size()
@@ -397,10 +403,28 @@ def test_composed_queries_release_tracked_caches(spark):
     # the next composed query releases the previous generation first
     api.q_search_verified_segment(spark, SF).collect()
     assert jsc.getPersistentRDDs().size() <= n0 + 1
-    api.release_caches()
+    OWNER.release()
     assert jsc.getPersistentRDDs().size() <= n0
     # temp layout dirs are registered for exit-time removal
-    assert any("driver_segidx_" in d for d in api._TMP_DIRS)
+    assert any("driver_segidx_" in d for d in OWNER.tmpdirs)
+
+
+def test_plan_union_keeps_both_legs_persists(spark):
+    """A plan-union row releases the previous query's persists ONCE,
+    on entry: building its second leg must not drop the first leg's
+    top-k persist (the v1 leg would recompute it at collect time)."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark import api
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+        OWNER,
+    )
+
+    api.q_search_verified_plans(spark, SF)
+    held = list(OWNER.query_persists)
+    assert len(held) == 2, held
+    assert all(df.is_cached for df in held)
+    OWNER.release()
+    assert OWNER.query_persists == []
+    assert not any(df.is_cached for df in held)
 
 
 def test_bool_query_prefix_pushdown(spark):
