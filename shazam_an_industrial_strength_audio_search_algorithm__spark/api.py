@@ -112,12 +112,12 @@ def docs_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
 @OWNER.fixture
 def docs_segment_index(spark: SparkSession, sf_dir: str):
     """The PERSISTED segment index over ``documents`` — exposes the
-    varint-block/bucket/snapshot path through the driver gate."""
+    block/bucket/snapshot path through the oracle-checked battery."""
     d = OWNER.tmpdir("driver_segidx_")
     # store_positions=True: the SAME persisted index serves both
     # BM25 (bm25_segment) and positional verification
-    # (positional_segment) — positions ride in a trailing payload
-    # section the BM25 decode path skips. The v1 index's postings
+    # (positional_segment) — positions are a doc_terms column that
+    # only the positional reads select. The v1 index's postings
     # (with positions) feed phase A directly: the identical postings
     # without a second positions-UDF tokenize pass over the corpus
     build_segment_index(spark, _documents_corpus(spark, sf_dir), d,
@@ -521,7 +521,8 @@ def q_match_classed_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The classed decision through the PRUNED executor: block-max
     WAND top-2 in integer micro mode supplies top1/second, the true
     candidate count comes from a JVM-side count-distinct over the
-    segment posting decode (no scoring, no Python), and
+    segment index's stored doc_terms postings (no scoring, no
+    Python), and
     ``per_query_thresholds`` + ``decide`` apply the reference's
     short/long switch (``conf.py:173-175``). Must hash-match the SAME
     DuckDB oracle as ``match_classed`` (Q_MATCH_CLASSED_SQL): one
@@ -684,10 +685,10 @@ def q_positional_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_positional_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics through the PERSISTED path: positions decoded
-    from the varint block section (store_positions=True) and exploded
-    INSIDE the decode kernel (no array cells through Arrow) — one
-    oracle, two physical plans, like bm25_topk/bm25_segment."""
+    """Same semantics through the PERSISTED path: positions read from
+    the segment index's doc_terms columns (store_positions=True) by a
+    bucket-pruned JVM scan, no Python — one oracle, two physical
+    plans, like bm25_topk/bm25_segment."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.positional import (
         positional_verify,
         query_term_positions,
@@ -765,11 +766,11 @@ def q_search_verified_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERSISTED index — the composition that matters at 100 TB: WAND
     coarse top-k (block-max pruned, integer micro scores identical to
     brute-force BM25) → positional offset-histogram verification of
-    ONLY the surviving candidates, with positions decoded from the
-    varint block payload (``positions_for_query_terms``) and
+    ONLY the surviving candidates, with positions read from the
+    stored doc_terms columns (``positions_for_query_terms``) and
     semi-joined to the broadcast top-k doc set before the verify
     join. Same oracle as ``search_verified`` — one oracle, two
-    physical plans (v1 in-memory vs WAND + segment decode)."""
+    physical plans (v1 in-memory vs WAND + segment postings)."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.positional import (
         positional_verify,
         query_term_positions,
@@ -838,8 +839,8 @@ JOIN rr ON t.query_id = rr.query_id AND t.doc_id = rr.doc_id AND rr.rn = 1
 
 
 def q_bm25_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship query through the PERSISTED path: varint-block
-    segment index (buckets, salting, snapshots) → decode → BM25 —
+    """The flagship query through the PERSISTED path: segment index
+    (buckets, salting, snapshots) → stored postings scan → BM25 —
     must hash-match the same DuckDB oracle as the in-memory engine
     (Q_BM25_TOPK_SQL): one oracle, two physical plans."""
     idx = docs_segment_index(spark, sf_dir)
@@ -2248,7 +2249,7 @@ def _plan_union_sql(sql: str, labels: tuple[str, ...]) -> str:
 
 def q_bm25_topk_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bm25_topk through BOTH brute executors — v1 in-memory and the
-    persisted varint-block segment path — as one plan-labelled union
+    persisted segment path — as one plan-labelled union
     against one oracle."""
     return _plan_union([
         ("v1", q_bm25_topk(spark, sf_dir)),
@@ -2277,7 +2278,8 @@ def q_match_stats_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_positional_verify_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """positional verification from the v1 in-memory postings AND the
-    varint-block position payload, one labelled union / one oracle."""
+    segment index's stored positions, one labelled union / one
+    oracle."""
     return _plan_union([
         ("v1", q_positional_verify(spark, sf_dir)),
         ("segment", q_positional_segment(spark, sf_dir)),
@@ -2287,7 +2289,7 @@ def q_positional_verify_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
 @OWNER.query()
 def q_search_verified_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """the two-phase search lifecycle on the v1 index AND on
-    WAND + segment decode, one labelled union / one oracle. Both legs
+    WAND + segment postings, one labelled union / one oracle. Both legs
     run in this row's owner scope, so each keeps its top-k persist
     until the union's action."""
     return _plan_union([
@@ -2433,7 +2435,7 @@ ORACLE_SQL: dict[str, str] = {
     "match_stats": _plan_union_sql(Q_MATCH_STATS_SQL, ("window", "dist")),
     "db2qry": Q_DB2QRY_SQL,
     "phrase_match": Q_PHRASE_MATCH_SQL,
-    # labelled union: v1 postings + varint position payload decode
+    # labelled union: v1 postings + segment index's stored positions
     "positional_verify": _plan_union_sql(Q_POSITIONAL_SQL,
                                          ("v1", "segment")),
     # labelled union: v1 lifecycle + WAND/segment lifecycle

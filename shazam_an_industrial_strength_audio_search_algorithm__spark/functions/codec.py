@@ -82,23 +82,15 @@ def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
 
 
 def encode_block(doc_ids: np.ndarray, tfs: np.ndarray,
-                 doc_lens: np.ndarray,
-                 positions: np.ndarray | None = None) -> bytes:
+                 doc_lens: np.ndarray) -> bytes:
     """One posting block → binary payload.
 
     Layout: varint(n) | zigzag-varint(doc_ids[0]) | varint gaps[n-1]
-    | varint tfs[n] | varint doc_lens[n] [| varint pos-deltas[Σtf]].
+    | varint tfs[n] | varint doc_lens[n].
     Requires doc_ids strictly ascending. ``doc_len`` is stored inline
     (≈1-2 bytes/posting after varint) so BM25 scoring needs NO join
     against a per-doc norms table — at 10^12 docs that join would
     shuffle the entire decoded posting stream.
-
-    ``positions`` (optional): the per-doc occurrence offsets,
-    concatenated flat in doc order (length == Σtf, strictly ascending
-    within each doc). Stored as within-doc deltas (first offset
-    absolute), so phrase/positional verification runs against the
-    persisted index. Readers that don't need positions decode the
-    same payload unchanged — the section is trailing.
     """
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.uint64)
@@ -111,43 +103,24 @@ def encode_block(doc_ids: np.ndarray, tfs: np.ndarray,
     # gaps in mod-2^64 arithmetic: the true gap of two ascending int64s
     # always fits uint64 even when it overflows int64
     gaps = doc_ids[1:].astype(np.uint64) - doc_ids[:-1].astype(np.uint64)
-    parts = [
+    return varint_encode(np.concatenate([
         np.array([n], dtype=np.uint64),
         zigzag_encode(doc_ids[:1]),
         gaps,
         tfs,
         doc_lens,
-    ]
-    if positions is not None:
-        pos = np.asarray(positions, dtype=np.int64)
-        if pos.size != int(tfs.sum()):
-            raise ValueError(
-                f"positions size {pos.size} != sum(tf) {int(tfs.sum())}"
-            )
-        if pos.size:
-            starts = np.cumsum(tfs.astype(np.int64)) - tfs.astype(np.int64)
-            deltas = np.empty(pos.size, dtype=np.int64)
-            deltas[0] = pos[0]
-            deltas[1:] = pos[1:] - pos[:-1]
-            deltas[starts] = pos[starts]  # doc boundaries: absolute
-            if (deltas < 0).any():
-                raise ValueError("positions must ascend within each doc")
-            parts.append(deltas.astype(np.uint64))
-    return varint_encode(np.concatenate(parts))
+    ]))
 
 
-def decode_block(
-    payload: bytes, with_positions: bool = False
-) -> tuple[np.ndarray, ...]:
-    """payload → (doc_ids int64 ascending, tfs int64, doc_lens int64
-    [, positions int64 flat]). ``with_positions=True`` requires the
-    block to have been encoded with positions (raises otherwise);
-    ``False`` ignores any trailing positions section."""
+def decode_block(payload: bytes) -> tuple[np.ndarray, ...]:
+    """payload → (doc_ids int64 ascending, tfs int64, doc_lens int64).
+    Values past the block's 1 + 3n (the positions section that older
+    indexes appended) are ignored."""
     vals = varint_decode(payload)
     n = int(vals[0])
     if n == 0:
         z = np.zeros(0, dtype=np.int64)
-        return (z, z, z, z) if with_positions else (z, z, z)
+        return z, z, z
     first = zigzag_decode(vals[1:2]).astype(np.uint64)
     gaps = vals[2:1 + n]
     # mod-2^64 cumsum mirrors the encoder's wraparound gap arithmetic
@@ -156,19 +129,4 @@ def decode_block(
     doc_lens = vals[1 + 2 * n:1 + 3 * n].astype(np.int64)
     if tfs.size != n or doc_lens.size != n:
         raise ValueError("truncated block payload")
-    if not with_positions:
-        return doc_ids.view(np.int64), tfs, doc_lens
-    n_pos = int(tfs.sum())
-    deltas = vals[1 + 3 * n:1 + 3 * n + n_pos].astype(np.int64)
-    if deltas.size != n_pos:
-        raise ValueError(
-            "block has no positions section — index built with "
-            "store_positions=False"
-        )
-    s = np.cumsum(deltas)
-    starts = np.cumsum(tfs) - tfs
-    # within-doc cumsum: subtract the running total at each doc start
-    base = np.zeros(n, dtype=np.int64)
-    base[starts > 0] = s[starts[starts > 0] - 1]
-    positions = s - np.repeat(base, tfs)
-    return doc_ids.view(np.int64), tfs, doc_lens, positions
+    return doc_ids.view(np.int64), tfs, doc_lens

@@ -45,6 +45,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
     _atomic_write_json,
     _read_current,
     _write_current,
+    as_doc_terms,
     bucket_col,
     build_buckets_batch,
     read_snapshot,
@@ -107,7 +108,7 @@ def apply_updates(
     - ``"delta"`` (merge-on-read): the update writes ONLY its own
       postings as a new delta layer plus a doc-id tombstone set —
       write cost O(delta), zero base rewrites. Readers resolve
-      layers at query time (``SegmentIndex._resolve_layers``:
+      layers at query time (``SegmentIndex._postings``:
       tombstone supersession + exact df recompute over query-term
       postings); ``maintenance.compact()`` later multi-way-merges
       the layers back to one generation (Lucene segment-merge
@@ -227,13 +228,7 @@ def apply_updates(
                         "base stores positions but add_doc_terms "
                         "carries no positions column"
                     )
-                pcols = ["doc_id", "term", "tf"]
-                if store_pos:
-                    pcols.append("positions")
-                pcols.append("doc_len")
-                delta = add_doc_terms.select(*pcols).withColumn(
-                    "bucket", bucket_col(F.col("term"), base.n_buckets)
-                )
+                delta = add_doc_terms
             else:
                 from pyspark import StorageLevel
 
@@ -246,11 +241,13 @@ def apply_updates(
                 stage = doc_term_stage(
                     add_corpus, with_positions=store_pos,
                 ).persist(StorageLevel.MEMORY_AND_DISK)
-                delta = explode_doc_terms(
-                    stage, with_positions=store_pos,
-                ).withColumn(
+                delta = explode_doc_terms(stage, with_positions=store_pos)
+            delta = as_doc_terms(
+                delta.withColumn(
                     "bucket", bucket_col(F.col("term"), base.n_buckets)
-                )
+                ),
+                store_pos,
+            )
             delta_read_path = (
                 f"{index_dir}/data/dt_{gen}" if mode == "delta"
                 else dtdelta_path
@@ -451,7 +448,6 @@ def apply_updates(
             hot_df=base_snap["hot_df"],
             max_salt_bits=base_snap["max_salt_bits"],
             block_size=base_snap["block_size"],
-            store_positions=base_snap.get("store_positions", False),
         )
 
     done = all(
@@ -535,12 +531,12 @@ def compact(
     generation — the Lucene segment-merge / reference consolidation
     step (``Combine.py:55-62``), Spark-first and re-tokenization-free.
 
-    How the merge is expressed: each layer's blocks per (term, salt)
-    are already doc_id-sorted runs; ``merged_doc_terms`` decodes them
-    (vectorized varint), resolves tombstone supersession, and the
-    salted ``repartition(bucket, term, salt) + sortWithinPartitions``
-    in ``build_buckets_batch`` IS the k-way merge — the merged order
-    is declared and Tungsten's sort-based shuffle produces it; the
+    How the merge is expressed: ``merged_doc_terms`` scans every
+    generation's stored doc_terms columns (JVM only, no decode) and
+    drops tombstone-superseded rows, and the salted
+    ``repartition(bucket, term, salt) + sortWithinPartitions`` in
+    ``build_buckets_batch`` IS the k-way merge — the merged order is
+    declared and Tungsten's sort-based shuffle produces it; the
     one-pass numpy encoder re-blocks the merged runs. Because the
     encoder re-derives df, salts and block boundaries from the merged
     postings, the output is **bit-identical** to a from-scratch
@@ -560,7 +556,7 @@ def compact(
     from the base, the compaction re-shards: every term re-hashes
     into the new bucket count, so ALL buckets rebuild in one pass —
     the corpus is still never re-tokenized (the merge input is the
-    decoded segments). This is how a growing index keeps per-bucket
+    stored doc_terms). This is how a growing index keeps per-bucket
     posting volume ~constant (the serving-latency driver measured in
     the round-4 knob study) without hand-tuning.
 
@@ -629,8 +625,8 @@ def compact(
                     )
             affected_l = sorted(affected)
             merged = base.merged_doc_terms(affected_l)
-        # the merge: layered decode + tombstone resolve, written once
-        # as the new generation's doc_terms
+        # the merge: every generation's doc_terms minus tombstoned
+        # rows, written once as the new generation's doc_terms
         (
             merged
             .repartition(max(1, len(affected_l)), "bucket")
@@ -680,7 +676,6 @@ def compact(
             hot_df=base_snap["hot_df"],
             max_salt_bits=base_snap["max_salt_bits"],
             block_size=target_block,
-            store_positions=base_snap.get("store_positions", False),
         )
 
     done = all(

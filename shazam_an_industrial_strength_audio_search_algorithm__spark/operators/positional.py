@@ -49,22 +49,18 @@ def positional_verify(postings: DataFrame, queries: DataFrame,
     occurrences agree on, and how many agree.
 
     ``postings`` must carry (doc_id, term, positions array) — the v1
-    ``InvertedIndex.doc_terms`` or the segment reader's
-    ``postings_for_query_terms(..., with_positions=True)``.
+    ``InvertedIndex.doc_terms`` or the segment reader's stored
+    positions (``positions_for_query_terms``, a JVM scan of its
+    doc_terms columns).
 
     Output: (query_id, doc_id, best_delta, aligned_count), one row per
     candidate pair; ties break on smallest delta. ``aligned_count`` is
     the reference's ``max(histogram)`` score (``_Shazam_.py:343-347``).
     """
     qtp = query_term_positions(queries, id_col, text_col)
-    if "pos" in postings.columns:
-        # already occurrence-exploded (the segment reader's
-        # positions_for_query_terms fast path) — no Spark-side explode
-        occurrences = postings.select("doc_id", "term", "pos")
-    else:
-        occurrences = postings.select(
-            "doc_id", "term", F.explode("positions").alias("pos")
-        )
+    occurrences = postings.select(
+        "doc_id", "term", F.explode("positions").alias("pos")
+    )
     deltas = (
         occurrences.join(F.broadcast(qtp), "term")
         .select(

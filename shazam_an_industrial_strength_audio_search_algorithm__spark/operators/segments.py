@@ -47,7 +47,12 @@ Scale design (the 100 TB story):
   ordered, so blocks come out globally doc_id-sorted without a
   second regroup — the salt splits the skewed group AND preserves
   merge order.
-- ``doc_len`` is inlined in the payload: scoring needs no norms join.
+- ``doc_len`` is inlined in the payload and in ``doc_terms``:
+  scoring needs no norms join.
+- Two readers: WAND skips blocks, so it decodes the segments'
+  payloads; every other postings read (brute top-k, boolean,
+  positional, compaction's merge) is a JVM scan of the
+  ``doc_terms`` columns, bucket-pruned the same way.
 - Block bounds are stored as raw ints (max_tf, min_dl) so WAND upper
   bounds stay SAFE when later snapshots change n_docs/avgdl
   (tfnorm is increasing in tf, decreasing in dl — the bound is
@@ -71,9 +76,6 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.bm25 
     B,
     K1,
     idf_py,
-)
-from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec import (
-    decode_block,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
     with_doc_id,
@@ -148,7 +150,38 @@ SEGMENT_SCHEMA = T.StructType(
     + BLOCK_CORE_SCHEMA.fields[:1]
 )
 
-DT_COLS = ["term", "doc_id", "tf", "positions", "doc_len"]
+# the doc_terms parquet as written: one row per (doc, term),
+# ``positions`` only when the index stores them, ``bucket`` last as
+# the partition column. Every writer goes through ``as_doc_terms`` and
+# the reader scans with this schema, so opening a generation infers
+# nothing from parquet footers.
+DOC_TERMS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("term", T.StringType()),
+        T.StructField("tf", T.IntegerType()),
+        T.StructField("positions", T.ArrayType(T.IntegerType())),
+        T.StructField("doc_len", T.IntegerType()),
+        T.StructField("bucket", T.IntegerType()),
+    ]
+)
+
+
+def doc_terms_schema(store_positions: bool) -> T.StructType:
+    """``DOC_TERMS_SCHEMA``, without ``positions`` unless stored."""
+    return T.StructType([
+        f for f in DOC_TERMS_SCHEMA.fields
+        if store_positions or f.name != "positions"
+    ])
+
+
+def as_doc_terms(dt: DataFrame, store_positions: bool) -> DataFrame:
+    """``dt`` (with its ``bucket``) selected and cast to the doc_terms
+    schema, in order — the one projection every doc_terms write uses."""
+    return dt.select(*[
+        F.col(f.name).cast(f.dataType)
+        for f in doc_terms_schema(store_positions).fields
+    ])
 
 
 # ---------------------------------------------------------------------------
@@ -158,23 +191,7 @@ def bucket_col(term_col, n_buckets: int):
     return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast("int")
 
 
-def resolve_buckets(spark: SparkSession, terms: list[str], n_buckets: int) -> list[int]:
-    """Bucket ids for the given terms via the same JVM xxhash64 the
-    build used (one tiny local job — never re-guess the hash in
-    Python)."""
-    if not terms:
-        return []
-    df = local_rows_df(spark, [(t,) for t in terms], "term string")
-    rows = (
-        df.select(bucket_col(F.col("term"), n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    )
-    return sorted(r["b"] for r in rows)
-
-
-def _encode_partition(avgdl: float, block_size: int,
-                      store_positions: bool = False):
+def _encode_partition(avgdl: float, block_size: int):
     """mapInPandas PARTITION encoder: rows arrive hash-partitioned by
     (bucket, term, salt) and sorted within the partition by
     (term, salt, doc_id); every posting group in the partition is
@@ -191,8 +208,8 @@ def _encode_partition(avgdl: float, block_size: int,
 
     ``df`` joins in after (block rows are tiny compared to postings —
     attaching df via a block-side join beats a full-row window over
-    the postings). With ``store_positions`` the per-doc occurrence
-    offsets ride in a trailing delta-varint section of each payload.
+    the postings). Positions are not encoded: they live in the
+    ``doc_terms`` columns, which the positional readers scan.
     """
     from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec import (
         varint_encode_with_ends,
@@ -246,23 +263,11 @@ def _encode_partition(avgdl: float, block_size: int,
 
         # ---- assemble the value stream for ALL blocks at once -------
         # per-block layout: n | zz(first) gaps... | tfs... | dls...
-        #                   [| pos-deltas (Σtf of the block)]
         prev = np.empty(R, dtype=np.uint64)
         u = ids.astype(np.uint64)
         prev[1:] = u[:-1]
         rowval = np.where(is_bstart, zigzag_encode(ids), u - prev)
         blk_len = 1 + 3 * n
-        if store_positions:
-            flat_parts = pdf["positions"].to_numpy()
-            flat = (
-                np.concatenate([np.asarray(p, dtype=np.int64)
-                                for p in flat_parts])
-                if R else np.zeros(0, dtype=np.int64)
-            )
-            if flat.size != int(tf.sum()):
-                raise ValueError("positions length != sum(tf)")
-            npos_b = np.add.reduceat(tf, bstart)
-            blk_len = blk_len + npos_b
         off = np.concatenate(([0], np.cumsum(blk_len)[:-1]))
         total = int(np.cumsum(blk_len)[-1]) if nB else 0
         vals = np.zeros(total, dtype=np.uint64)
@@ -273,24 +278,6 @@ def _encode_partition(avgdl: float, block_size: int,
         vals[off_rep + 1 + j] = rowval
         vals[off_rep + 1 + n_rep + j] = tf.astype(np.uint64)
         vals[off_rep + 1 + 2 * n_rep + j] = dl.astype(np.uint64)
-        if store_positions:
-            # per-row first offset absolute, then in-row deltas
-            pprev = np.empty(flat.size, dtype=np.int64)
-            pprev[1:] = flat[:-1]
-            row_pstart = np.zeros(flat.size, dtype=bool)
-            row_pstart[np.cumsum(tf) - tf] = True
-            pdeltas = np.where(row_pstart, flat, flat - pprev)
-            if (pdeltas < 0).any():
-                raise ValueError("positions must ascend within each doc")
-            # scatter target: block pos-section + within-block prefix
-            tf_cum = np.cumsum(tf) - tf  # global prefix of positions
-            blk_pos_base = off_rep + 1 + 3 * n_rep  # per ROW
-            within_blk = tf_cum - np.repeat(tf_cum[bstart], n)
-            row_target = blk_pos_base + within_blk  # per ROW start
-            pos_target = np.repeat(row_target, tf) + (
-                np.arange(flat.size) - np.repeat(tf_cum, tf)
-            )
-            vals[pos_target] = pdeltas.astype(np.uint64)
 
         buf, ends = varint_encode_with_ends(vals)
         blk_val_end = np.cumsum(blk_len)
@@ -411,7 +398,6 @@ def build_buckets_batch(
     hot_df: int,
     max_salt_bits: int,
     block_size: int,
-    store_positions: bool = False,
 ) -> None:
     """Build segments for a batch of buckets in ONE Spark job, then
     commit each bucket's manifest (idempotent: dynamic partition
@@ -434,13 +420,10 @@ def build_buckets_batch(
     """
     if not buckets:
         return
-    cols = ["bucket", "term", "doc_id", "tf", "doc_len"]
-    if store_positions:
-        cols.insert(4, "positions")
     dt = (
-        spark.read.parquet(dt_path)
+        spark.read.schema(doc_terms_schema(False)).parquet(dt_path)
         .filter(F.col("bucket").isin(buckets))
-        .select(*cols)
+        .select("bucket", "term", "doc_id", "tf", "doc_len")
     )
     # persist: term_df (vocab-sized, tiny vs postings) feeds the hot
     # broadcast AND the final block join — without the persist each
@@ -483,7 +466,7 @@ def build_buckets_batch(
         salted.repartition(n_part, "bucket", "term", "salt")
         .sortWithinPartitions("term", "salt", "doc_id")
         .mapInPandas(
-            _encode_partition(avgdl, block_size, store_positions),
+            _encode_partition(avgdl, block_size),
             schema=BLOCK_CORE_SCHEMA,
         )
     )
@@ -716,13 +699,7 @@ def build_segment_index(
                     "store_positions=True but doc_terms_df carries no "
                     "positions column"
                 )
-            pcols = ["doc_id", "term", "tf"]
-            if store_positions:
-                pcols.append("positions")
-            pcols.append("doc_len")
-            dt = doc_terms_df.select(*pcols).withColumn(
-                "bucket", bucket_col(F.col("term"), n_buckets)
-            )
+            dt = doc_terms_df
         else:
             # spread a narrow input first: the tokenize UDF below is
             # the phase's CPU kernel, and a single-row-group corpus
@@ -739,8 +716,11 @@ def build_segment_index(
             stage = doc_term_stage(
                 corpus, id_col, text_col, with_positions=store_positions
             ).persist(StorageLevel.MEMORY_AND_DISK)
-            dt = explode_doc_terms(stage, with_positions=store_positions)\
-                .withColumn("bucket", bucket_col(F.col("term"), n_buckets))
+            dt = explode_doc_terms(stage, with_positions=store_positions)
+        dt = as_doc_terms(
+            dt.withColumn("bucket", bucket_col(F.col("term"), n_buckets)),
+            store_positions,
+        )
         if phase_a_shuffle:
             # consolidate to one file set per bucket — enable when
             # n_buckets × task-count would explode the file count
@@ -831,7 +811,6 @@ def build_segment_index(
     build_buckets_batch(
         spark, index_dir, gen, built, dt_path, avgdl, params["n_docs"],
         params["hot_df"], params["max_salt_bits"], params["block_size"],
-        store_positions=params.get("store_positions", False),
     )
     timings["phase_b_segments"] = _time.monotonic() - _t0
 
@@ -912,93 +891,31 @@ def build_segment_index(
 # ---------------------------------------------------------------------------
 # reader + query
 # ---------------------------------------------------------------------------
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("df", T.LongType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("tf", T.LongType()),
-        T.StructField("doc_len", T.LongType()),
-    ]
-)
-
-DECODED_SCHEMA_POS = T.StructType(
-    DECODED_SCHEMA.fields
-    + [T.StructField("positions", T.ArrayType(T.LongType()))]
-)
-
-
-def _decode_partition(it, with_positions: bool = False,
-                      passthrough: tuple[str, ...] = (),
-                      explode_positions: bool = False):
-    """Vectorized block → posting-rows decode. ``passthrough`` names
-    per-block scalar columns (e.g. ``bucket``, ``gen_seq``) repeated
-    onto every decoded row — the layered reader and compaction need
-    them to resolve tombstones and regroup.
-
-    ``explode_positions`` emits one row per OCCURRENCE with a flat
-    ``pos`` long column (pure np.repeat — no per-row object arrays):
-    positional queries explode anyway, and shipping array cells
-    through Arrow costs ~5× the whole downstream aggregation
-    (measured: positional_segment 10.1 s → see bench). ``df`` is
-    dropped in this mode (a per-occurrence df column invites wrong
-    aggregation; positional verification never needs it)."""
-    cols = ["term", "df", "doc_id", "tf", "doc_len"]
-    for pdf in it:
-        outs = []
-        extras = [pdf[c] for c in passthrough]
-        for term, df, payload, *extra in zip(
-            pdf["term"], pdf["df"], pdf["payload"], *extras
-        ):
-            if explode_positions:
-                ids, tfs, dls, flat = decode_block(bytes(payload), True)
-                d = {
-                    "term": term,
-                    "doc_id": np.repeat(ids, tfs),
-                    "tf": np.repeat(tfs, tfs),
-                    "doc_len": np.repeat(dls, tfs),
-                    "pos": flat,
-                }
-            elif with_positions:
-                ids, tfs, dls, flat = decode_block(bytes(payload), True)
-                pos = np.split(flat, np.cumsum(tfs)[:-1])
-                d = {"term": term, "df": int(df), "doc_id": ids,
-                     "tf": tfs, "doc_len": dls, "positions": pos}
-            else:
-                ids, tfs, dls = decode_block(bytes(payload))
-                d = {"term": term, "df": int(df), "doc_id": ids,
-                     "tf": tfs, "doc_len": dls}
-            for name, val in zip(passthrough, extra):
-                d[name] = val
-            outs.append(pd.DataFrame(d))
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-        else:
-            base = ["term", "doc_id", "tf", "doc_len", "pos"] \
-                if explode_positions else cols
-            d = {c: pd.Series(dtype="int64" if c != "term" else "object")
-                 for c in base}
-            if with_positions and not explode_positions:
-                d["positions"] = pd.Series(dtype="object")
-            for name in passthrough:
-                d[name] = pd.Series(dtype="int64")
-            yield pd.DataFrame(d)
-
-
 @dataclass
 class SegmentIndex:
     """Reader over a committed snapshot of the index.
+
+    Postings are read two ways. WAND (``wand.py``) decodes the
+    segments' block payloads, because it skips blocks by their bounds.
+    Every other postings read — ``postings_for_query_terms``,
+    ``postings_for_terms``, ``postings_for_term_prefixes``,
+    ``positions_for_query_terms``, ``merged_doc_terms`` — is one JVM
+    scan of the ``doc_terms`` columns: bucket-pruned to the query
+    terms, tombstone-resolved, with ``df`` counted over the surviving
+    rows. No Python runs on these paths.
 
     A committed snapshot never changes, so its read state is built once
     per instance, on first use, and lives as long as the instance:
 
     - one scan per kind (segments, doc_terms) over every bucket of
-      every generation — the bucket dirs are listed once, and the
-      segments scan carries ``SEGMENT_SCHEMA`` instead of inferring it
-      from parquet footers (a job per generation root); a bucket list
-      narrows it to a static partition filter;
+      every generation — the bucket dirs are listed once, and each
+      scan carries its schema (``SEGMENT_SCHEMA``, ``DOC_TERMS_SCHEMA``)
+      instead of inferring it from parquet footers (a job per
+      generation root); a bucket list narrows it to a static partition
+      filter;
     - on layered snapshots, the tombstones as sorted
-      ``(doc_id, tomb_seq)`` arrays and their one Spark broadcast.
+      ``(doc_id, tomb_seq)`` arrays, their one Spark broadcast (WAND)
+      and their one local frame (the postings readers).
 
     Reopen (``SegmentIndex.open``) to read a newer snapshot."""
 
@@ -1048,25 +965,17 @@ class SegmentIndex:
     def has_deltas(self) -> bool:
         return bool(self.layers)
 
-    def _empty(self, kind: str) -> DataFrame:
+    @property
+    def store_positions(self) -> bool:
+        return self.snapshot.get("store_positions", False)
+
+    def _schema(self, kind: str) -> T.StructType:
         if kind == "segments":
-            schema = SEGMENT_SCHEMA
-        else:
-            fields = [
-                T.StructField("term", T.StringType()),
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("tf", T.IntegerType()),
-            ]
-            if self.snapshot.get("store_positions", False):
-                fields.append(
-                    T.StructField("positions", T.ArrayType(T.IntegerType()))
-                )
-            fields += [
-                T.StructField("doc_len", T.IntegerType()),
-                T.StructField("bucket", T.IntegerType()),
-            ]
-            schema = T.StructType(fields)
-        return self.spark.createDataFrame([], schema)
+            return SEGMENT_SCHEMA
+        return doc_terms_schema(self.store_positions)
+
+    def _empty(self, kind: str) -> DataFrame:
+        return self.spark.createDataFrame([], self._schema(kind))
 
     def _scan_map(self, kind: str, bmap: dict,
                   strict: bool = False) -> DataFrame | None:
@@ -1097,9 +1006,7 @@ class SegmentIndex:
             if os.path.exists(path):
                 root = os.path.dirname(path)
                 by_root.setdefault(root, []).append(path)
-        reader = self.spark.read
-        if kind == "segments":
-            reader = reader.schema(SEGMENT_SCHEMA)
+        reader = self.spark.read.schema(self._schema(kind))
         dfs = [
             reader.option("basePath", root).parquet(*paths)
             for root, paths in sorted(by_root.items())
@@ -1191,6 +1098,19 @@ class SegmentIndex:
             self._tomb["arrays"] = arrays
         return self._tomb["arrays"]
 
+    def _tombstone_rows(self) -> DataFrame | None:
+        """``tombstone_arrays()`` as a local ``(doc_id, tomb_seq)``
+        frame (None when nothing is tombstoned), built once
+        per instance: JVM data with no job behind it, so every layered
+        read joins it without re-reading the tombstone parquet."""
+        if "rows" not in self._tomb:
+            arrays = self.tombstone_arrays()
+            self._tomb["rows"] = None if arrays is None else local_rows_df(
+                self.spark, list(zip(*(a.tolist() for a in arrays))),
+                "doc_id long, tomb_seq long",
+            )
+        return self._tomb["rows"]
+
     def tombstone_broadcast(self):
         """``tombstone_arrays()`` as this instance's one Spark
         broadcast (None when nothing is tombstoned): it ships once per
@@ -1226,38 +1146,25 @@ class SegmentIndex:
         out = parts[0]
         for d in parts[1:]:
             out = out.unionByName(d)
-        return self._drop_tombstoned(out).drop("gen_seq")
+        return self._drop_tombstoned(out)
 
     def _drop_tombstoned(self, rows: DataFrame) -> DataFrame:
-        """``rows`` (doc_id, gen_seq, ...) minus those superseded by a
-        newer tombstone: the newest tombstone per doc broadcasts in and
-        a row survives when ``gen_seq >= tomb_seq`` (or the doc has no
-        tombstone)."""
-        tomb = self.tombstones()
-        if tomb is None:
-            return rows
-        tmax = tomb.groupBy("doc_id").agg(F.max("gen_seq").alias("tomb_seq"))
+        """``rows`` (doc_id[, gen_seq], ...) minus those superseded by a
+        newer tombstone, without ``gen_seq``: the newest tombstone per
+        doc broadcasts in and a row survives when ``gen_seq >=
+        tomb_seq`` (or the doc has no tombstone). A no-op on a snapshot
+        without tombstones."""
+        tmax = self._tombstone_rows()
+        if tmax is None:
+            return rows.drop("gen_seq")
         return (
             rows.join(F.broadcast(tmax), "doc_id", "left")
             .filter(
                 F.col("tomb_seq").isNull()
                 | (F.col("gen_seq") >= F.col("tomb_seq"))
             )
-            .drop("tomb_seq")
+            .drop("tomb_seq", "gen_seq")
         )
-
-    def blocks_for_terms(self, terms: list[str]) -> DataFrame:
-        """Bucket-pruned + term-predicate-pushed block scan — the
-        reference's 'touch only LUT entries for the query keys'
-        access path (SURVEY §4), done by the storage layer. For
-        driver-known term lists (interactive / small batches): the
-        ``isin`` predicate reaches parquet row-group stats. For term
-        sets living in a DataFrame, use ``blocks_for_query_terms``
-        (collect-free)."""
-        buckets = resolve_buckets(self.spark, terms, self.n_buckets)
-        if not buckets:
-            return self.segments([0]).filter(F.lit(False))
-        return self.segments(buckets).filter(F.col("term").isin(terms))
 
     def blocks_for_term_prefixes(self, prefixes: list[str]) -> DataFrame:
         """Term-DICTIONARY range scan: every block whose term starts
@@ -1277,13 +1184,16 @@ class SegmentIndex:
             pred = pred | F.col("term").startswith(p)
         return self.segments(None).filter(pred)
 
-    def postings_for_term_prefixes(self, prefixes: list[str],
-                                   with_positions: bool = False) -> DataFrame:
-        """Decoded (tombstone-resolved) postings for every indexed term
-        matching any of ``prefixes``."""
-        out = self._spread(self.blocks_for_term_prefixes(prefixes),
-                           with_positions, passthrough=("gen_seq",))
-        return self._resolve_layers(out) if self.has_deltas else out
+    def _query_term_side(self, qt: DataFrame) -> DataFrame:
+        """(term, bucket) of the distinct terms in ``qt`` — the small
+        side that the block and postings scans join on (bucket, term)."""
+        return (
+            qt.select("term").distinct()
+            # a selective predicate on the build side is what makes
+            # Spark's DPP planner inject the pruning subquery
+            .filter(F.col("term") != "")
+            .withColumn("bucket", bucket_col(F.col("term"), self.n_buckets))
+        )
 
     def blocks_for_query_terms(self, qt: DataFrame) -> DataFrame:
         """Collect-free block access: the (tiny) distinct-term frame
@@ -1294,149 +1204,86 @@ class SegmentIndex:
         zero driver-side collection of the term set (the round-1
         reviewer's large-query-batch bottleneck). Output = block rows
         (one per block even if a term serves many queries)."""
-        qtb = (
-            qt.select("term").distinct()
-            # a selective predicate on the build side is what makes
-            # Spark's DPP planner inject the pruning subquery
-            .filter(F.col("term") != "")
-            .withColumn("bucket", bucket_col(F.col("term"), self.n_buckets))
+        return self.segments(None).join(
+            F.broadcast(self._query_term_side(qt)), ["bucket", "term"]
         )
-        return self.segments(None).join(F.broadcast(qtb), ["bucket", "term"])
 
-    def _spread(self, blocks: DataFrame,
-                with_positions: bool = False,
-                passthrough: tuple[str, ...] = (),
-                explode_positions: bool = False) -> DataFrame:
-        # spread the decode: compressed blocks are few MB (file-packing
-        # would scan them in 1-2 partitions) but varint decode is
-        # CPU-bound — a cheap round-robin repartition parallelizes it
-        if with_positions and not self.snapshot.get("store_positions", False):
+    def _postings(self, rows: DataFrame,
+                  with_positions: bool = False) -> DataFrame:
+        """The one postings reader behind every non-WAND read: ``rows``
+        (doc_terms rows of the wanted terms) minus tombstoned rows, as
+        (term, df, doc_id, tf, doc_len[, positions]) with ``df`` counted
+        over the surviving rows — exact on a layered snapshot, where
+        each generation holds only part of a term's postings. A term's
+        rows all live in one bucket, so the count's exchange carries
+        only the query terms' postings, never the index."""
+        if with_positions and not self.store_positions:
             raise ValueError(
                 "index was built with store_positions=False — "
-                "positions are not in the blocks"
+                "positions are not stored"
             )
-        passthrough = tuple(
-            c for c in passthrough if c in blocks.columns
-        )
-        if explode_positions:
-            fields = [
-                T.StructField("term", T.StringType()),
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("tf", T.LongType()),
-                T.StructField("doc_len", T.LongType()),
-                T.StructField("pos", T.LongType()),
-            ]
-        else:
-            fields = list(
-                (DECODED_SCHEMA_POS if with_positions
-                 else DECODED_SCHEMA).fields
-            )
-        for c in passthrough:
-            fields.append(T.StructField(
-                c, T.IntegerType() if c in ("bucket", "gen_seq")
-                else T.LongType()
-            ))
-        n_part = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        # hash-spread on the block identity, NOT keyless round-robin:
-        # repartition(n) pays a local sort of every input partition
-        # (sortBeforeRepartition, needed to make round-robin
-        # deterministic under task retry) and that sort moves the
-        # compressed payload bytes; hashing (term, salt, block_seq) is
-        # deterministic by construction — same spread, no sort
-        # (guide §2.5 deterministic-keys rule)
-        return blocks.repartition(
-            n_part, F.xxhash64("term", "salt", "block_seq")
-        ).mapInPandas(
-            lambda it: _decode_partition(it, with_positions, passthrough,
-                                         explode_positions),
-            schema=T.StructType(fields),
+        cols = ["term", "df", "doc_id", "tf", "doc_len"]
+        if with_positions:
+            cols.append("positions")
+        return (
+            self._drop_tombstoned(rows)
+            .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
+            .select(*cols)
         )
 
-    def _resolve_layers(self, decoded: DataFrame,
-                        recompute_df: bool = True) -> DataFrame:
-        """Merge-on-read resolution over decoded layered postings:
-        (1) drop rows superseded by a newer tombstone (a delete or an
-        overwrite-by-key tombstones the doc's older generations);
-        (2) recompute ``df`` exactly over the survivors — the stored
-        per-generation df is a partial count once layers exist. The
-        window shuffle touches only the decoded (query-term-bounded)
-        rows, never the whole index. Scale note: between compactions
-        the tombstone set is delta-sized, so the broadcast is small;
-        a long-uncompacted index should compact rather than grow it.
-        Output schema matches the non-layered decode (no gen_seq)."""
-        decoded = self._drop_tombstoned(decoded)
-        if not recompute_df or "df" not in decoded.columns:
-            # compaction re-derives df from the merged postings, and
-            # the exploded-positions reader drops df entirely —
-            # skipping the window here saves a full shuffle of every
-            # surviving posting by term
-            return decoded.drop("gen_seq")
-        w = Window.partitionBy("term")
-        return (
-            decoded
-            .withColumn("df", F.count(F.lit(1)).over(w))
-            .drop("gen_seq")
+    def postings_for_query_terms(self, qt: DataFrame,
+                                 with_positions: bool = False) -> DataFrame:
+        """Postings for every distinct term in ``qt`` — collect-free:
+        the terms broadcast into the doc_terms scan on (bucket, term),
+        with dynamic partition pruning (see ``blocks_for_query_terms``)."""
+        return self._postings(
+            self.doc_terms(None).join(
+                F.broadcast(self._query_term_side(qt)), ["bucket", "term"]
+            ),
+            with_positions,
         )
 
     def postings_for_terms(self, terms: list[str],
                            with_positions: bool = False) -> DataFrame:
-        out = self._spread(self.blocks_for_terms(terms), with_positions,
-                           passthrough=("gen_seq",))
-        return self._resolve_layers(out) if self.has_deltas else out
+        """Postings for a Python list of terms: each term's bucket is a
+        constant-folded ``bucket_col(lit(term))``, so the scan prunes
+        statically to those buckets and the ``term`` predicate reaches
+        parquet — no job runs to resolve them."""
+        terms = sorted(set(terms))
+        rows = self.doc_terms(None).filter(
+            F.col("bucket").isin(
+                [bucket_col(F.lit(t), self.n_buckets) for t in terms]
+            )
+            & F.col("term").isin(terms)
+        )
+        return self._postings(rows, with_positions)
 
-    def postings_for_query_terms(self, qt: DataFrame,
-                                 with_positions: bool = False) -> DataFrame:
-        """Decoded postings for every distinct term in ``qt`` —
-        collect-free (see ``blocks_for_query_terms``). On a layered
-        index the result is tombstone-resolved with exact df."""
-        out = self._spread(self.blocks_for_query_terms(qt), with_positions,
-                           passthrough=("gen_seq",))
-        return self._resolve_layers(out) if self.has_deltas else out
+    def postings_for_term_prefixes(self, prefixes: list[str],
+                                   with_positions: bool = False) -> DataFrame:
+        """Postings for every indexed term matching any of
+        ``prefixes``: the terms come from the block dictionary's
+        pushed ``StartsWith`` scan (``blocks_for_term_prefixes``; only
+        its ``term`` column is read), then read like query terms."""
+        return self.postings_for_query_terms(
+            self.blocks_for_term_prefixes(prefixes).select("term"),
+            with_positions,
+        )
 
     def positions_for_query_terms(self, qt: DataFrame) -> DataFrame:
-        """Occurrence-exploded postings (term, doc_id, tf, doc_len,
-        pos) for positional queries — positions flatten to a long
-        column INSIDE the decode kernel (np.repeat), never riding
-        through Arrow as per-row arrays only for Spark to explode
-        them again (that object-array round trip dominated the
-        positional_segment wall clock). No df column by design."""
-        out = self._spread(
-            self.blocks_for_query_terms(qt),
-            with_positions=True,  # store_positions guard
-            passthrough=("gen_seq",),
-            explode_positions=True,
-        )
-        return self._resolve_layers(out) if self.has_deltas else out
+        """(term, doc_id, tf, doc_len, positions) for positional
+        queries: ``postings_for_query_terms`` with the stored positions
+        array and no ``df``."""
+        return self.postings_for_query_terms(
+            qt, with_positions=True
+        ).drop("df")
 
     def merged_doc_terms(self, buckets: list[int] | None = None) -> DataFrame:
-        """The layered index resolved to its logical doc_terms —
-        decoded from the SEGMENTS (never re-tokenizing the corpus),
-        tombstone-resolved, typed to match the doc_terms parquet
-        schema. This is compaction's input: the multi-way sorted merge
-        is expressed declaratively (union of sorted block streams →
-        sort-based shuffle regroup) and the encoder re-blocks it."""
-        blocks = self.segments(buckets)
-        decoded = self._spread(
-            blocks,
-            with_positions=self.snapshot.get("store_positions", False),
-            passthrough=("bucket", "gen_seq"),
-        )
-        if self.has_deltas:
-            decoded = self._resolve_layers(decoded, recompute_df=False)
-        cols = [
-            F.col("doc_id"),
-            F.col("term"),
-            F.col("tf").cast("int").alias("tf"),
-        ]
-        if self.snapshot.get("store_positions", False):
-            cols.append(
-                F.col("positions").cast("array<int>").alias("positions")
-            )
-        cols += [
-            F.col("doc_len").cast("int").alias("doc_len"),
-            F.col("bucket").cast("int").alias("bucket"),
-        ]
-        return decoded.select(*cols)
+        """The layered index resolved to its logical doc_terms — every
+        generation's stored doc_terms rows minus the tombstoned ones,
+        in the doc_terms schema (never re-tokenizing the corpus). This
+        is compaction's input: the encoder's shuffle regroups and
+        re-blocks it."""
+        return self._drop_tombstoned(self.doc_terms(buckets))
 
     def idf(self, df: int) -> float:
         return idf_py(df, self.n_docs)
@@ -1493,10 +1340,10 @@ def segment_topk(
     guard below.
 
     Plan: query terms (tiny, broadcast — NEVER collected to the
-    driver) ⋈ block scan (bucket partitions dynamically pruned from
-    the broadcast side) → ``mapInPandas`` varint decode → the spine's
-    score (doc_len inline, no norms join) → groupBy(query, doc) sum →
-    row_number ≤ k.
+    Spark driver) ⋈ doc_terms scan (bucket partitions dynamically pruned
+    from the broadcast side) → df count per term → the spine's score
+    (doc_len inline, no norms join) → groupBy(query, doc) sum →
+    row_number ≤ k. All JVM: no Python operator in the plan.
 
     ``micro=True`` switches to exact integer micro-unit scoring
     (``bm25_topk``'s unit switch): output column becomes

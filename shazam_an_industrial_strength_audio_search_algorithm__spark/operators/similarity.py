@@ -587,7 +587,7 @@ def _delta_gens(index_dir: str) -> list[int]:
 def _resolved_vectors(spark, index_dir: str, part_col: str) -> DataFrame:
     """A vector layout's LOGICAL set: base layout + committed delta
     generations, tombstone-superseded (merge-on-read — the same
-    generation rule as ``segments._resolve_layers``: a tombstone at
+    generation rule as ``SegmentIndex._drop_tombstoned``: a tombstone at
     gen G kills every older generation of that vec_id; the add that
     travels WITH the tombstone carries gen G itself and survives).
     With no deltas this is exactly the base scan — zero overhead on a

@@ -194,7 +194,7 @@ def _pseudo_terms(g: pd.DataFrame, n_docs: int, avgdl: float,
     − tombstone-superseded postings; the dead count decodes ONLY
     blocks whose doc-id range contains a tombstoned doc (bounded by
     delta size, and those decodes pre-warm the slice cache's raw
-    side) — the kernel twin of ``SegmentIndex._resolve_layers``'s df
+    side) — the kernel twin of ``SegmentIndex._postings``'s df
     recompute, without touching the un-tombstoned bulk. A term whose
     alive df reaches 0 is dropped entirely (all postings dead)."""
     pts: list[_Term] = []

@@ -52,58 +52,19 @@ def test_block_roundtrip(ids, data):
     assert dl.tolist() == dls.tolist()
 
 
-@given(
-    st.sets(st.integers(min_value=-(2**63), max_value=2**63 - 1),
-            min_size=1, max_size=60),
-    st.data(),
-)
-@settings(max_examples=100, deadline=None)
-def test_block_roundtrip_with_positions(ids, data):
-    """Positions ride in a trailing delta section: tf[i] strictly
-    ascending offsets per doc; full round-trip, and the SAME payload
-    still decodes positions-free (readers that don't ask don't pay)."""
-    doc_ids = np.array(sorted(ids), dtype=np.int64)
-    n = len(doc_ids)
-    tfs = np.array(
-        data.draw(st.lists(st.integers(min_value=1, max_value=8),
-                           min_size=n, max_size=n)),
-        dtype=np.int64,
-    )
-    dls = np.array(
-        data.draw(st.lists(st.integers(min_value=1, max_value=10**6),
-                           min_size=n, max_size=n)),
-        dtype=np.int64,
-    )
-    pos_parts = []
-    for tf in tfs:
-        offs = sorted(data.draw(st.sets(
-            st.integers(min_value=0, max_value=10**6),
-            min_size=int(tf), max_size=int(tf))))
-        pos_parts.append(np.array(offs, dtype=np.int64))
-    flat = np.concatenate(pos_parts)
-    payload = encode_block(doc_ids, tfs, dls, flat)
-    d, t, dl, p = decode_block(payload, with_positions=True)
-    assert d.tolist() == doc_ids.tolist()
+def test_block_decode_ignores_trailing_section():
+    """Indexes written before positions moved to the doc_terms columns
+    append a positions section after doc_lens; the decoder reads the
+    first 1 + 3n values and ignores the rest, so WAND still reads
+    those payloads."""
+    ids = np.array([-5, 2, 9], dtype=np.int64)
+    tfs = np.array([2, 1, 3], dtype=np.int64)
+    dls = np.array([7, 7, 40], dtype=np.int64)
+    trailing = varint_encode(np.array([0, 4, 11, 1, 2, 9], dtype=np.uint64))
+    d, t, dl = decode_block(encode_block(ids, tfs, dls) + trailing)
+    assert d.tolist() == ids.tolist()
     assert t.tolist() == tfs.tolist()
     assert dl.tolist() == dls.tolist()
-    assert p.tolist() == flat.tolist()
-    d2, t2, dl2 = decode_block(payload)  # positions section ignored
-    assert d2.tolist() == doc_ids.tolist()
-    assert t2.tolist() == tfs.tolist()
-    assert dl2.tolist() == dls.tolist()
-
-
-def test_positions_size_mismatch_rejected():
-    import pytest
-
-    ids = np.array([1, 2], dtype=np.int64)
-    tfs = np.array([2, 1], dtype=np.int64)
-    dls = np.array([5, 5], dtype=np.int64)
-    with pytest.raises(ValueError):
-        encode_block(ids, tfs, dls, np.array([0, 1], dtype=np.int64))
-    payload = encode_block(ids, tfs, dls)  # no positions stored
-    with pytest.raises(ValueError):
-        decode_block(payload, with_positions=True)
 
 
 def test_block_rejects_unsorted():

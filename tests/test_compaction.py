@@ -296,23 +296,50 @@ def test_wand_layered_reuses_one_tombstone_broadcast(spark, layered,
 
 
 def test_segments_scan_schema_matches_footers(spark, layered, rebuilt):
-    """The reader's explicit segments schema is exactly what Spark
-    infers from the writer's parquet footers — on a fresh build and on
-    a delta layer — so the reader cannot drift from the writer."""
+    """The reader's explicit segments and doc_terms schemas are exactly
+    what Spark infers from the writers' parquet footers — on a fresh
+    build and on a delta layer — so the reader cannot drift from the
+    writer."""
     for d in (rebuilt, layered[0]):
         snap = read_snapshot(d)
         idx = SegmentIndex.open(spark, d)
         maps = [snap["buckets"]] + [
             layer["buckets"] for layer in snap.get("layers") or []
         ]
-        roots = {
-            os.path.dirname(f"{d}/{entry['segments']}")
-            for bmap in maps for entry in bmap.values()
-        }
-        assert roots
-        for root in roots:
-            inferred = spark.read.option("basePath", root).parquet(root)
-            assert idx.segments().drop("gen_seq").schema == inferred.schema
+        for kind in ("segments", "doc_terms"):
+            roots = {
+                os.path.dirname(f"{d}/{entry[kind]}")
+                for bmap in maps for entry in bmap.values()
+            }
+            assert roots
+            scan = getattr(idx, kind)().drop("gen_seq")
+            for root in roots:
+                inferred = spark.read.option("basePath", root).parquet(root)
+                assert scan.schema == inferred.schema, (kind, root)
+
+
+def test_layered_reads_reuse_tombstone_rows(spark, layered):
+    """The tombstone side of a layered postings read is built once per
+    index instance: a second read scans no tombstone parquet (so runs
+    no tombstone aggregation) and returns the same rows."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.plans.audit import (
+        plan_string,
+    )
+
+    d, final = layered
+    idx = SegmentIndex.open(spark, d)
+    qt = spark.createDataFrame([("gamma",), ("alpha",), ("tok0001",)],
+                               "term string")
+    first = sorted(idx.postings_for_query_terms(qt).collect())
+    assert first
+
+    def no_reread():
+        raise AssertionError("tombstone parquet read again")
+
+    idx.tombstones = no_reread
+    again = idx.postings_for_query_terms(qt)
+    assert "removed_" not in plan_string(again)
+    assert sorted(again.collect()) == first
 
 
 def test_rebuild_mode_refuses_layered(spark, layered, corpus80):

@@ -13,6 +13,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.plans.audit imp
     audit,
     count_shuffles,
     has_broadcast_join,
+    plan_string,
     pushed_filters,
     read_schemas,
 )
@@ -62,9 +63,10 @@ def test_segment_query_plan(spark, seg_index):
     """Segment top-k (collect-free path): bucket partitions prune
     DYNAMICALLY from the broadcast query-term side (no driver-side
     term collect); the query side broadcasts; shuffle count stays
-    bounded (decode spread + score agg + window — no accidental extra
-    exchanges). The driver-known-terms path (blocks_for_terms) keeps
-    static parquet predicate pushdown — asserted separately."""
+    bounded (df count + score agg + window — no accidental extra
+    exchanges). The term-list path (postings_for_terms)
+    prunes buckets statically and keeps parquet predicate pushdown —
+    asserted separately."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
         segment_topk,
     )
@@ -79,16 +81,22 @@ def test_segment_query_plan(spark, seg_index):
         "broadcast term side"
     )
     assert has_broadcast_join(df)
-    # heavy-side: decode-spread repartition + the one query_id
+    # heavy-side: the df count's term exchange + the one query_id
     # exchange (score groupBy + rank window share it); plus up to 2
     # KB-sized dim-side exchanges (query-term distinct feeding the DPP
     # broadcast) — bounded, not data-scaled
     assert count_shuffles(df) <= 4, count_shuffles(df)
-    # static path: term predicate reaches the parquet scan
-    blocks = seg_index.blocks_for_terms(["tok0001", "tok0002"])
-    assert any("term" in f for f in pushed_filters(blocks)), (
-        pushed_filters(blocks)
+    # static path: term predicate reaches the parquet scan, and the
+    # term's one bucket is a constant partition filter (no DPP)
+    post = seg_index.postings_for_terms(["tok0001"])
+    assert any("term" in f for f in pushed_filters(post)), (
+        pushed_filters(post)
     )
+    plan = plan_string(post)
+    filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert "dynamicpruning" not in plan.lower()
+    assert len({b for f in filters
+                for b in re.findall(r"bucket#\d+ = (\d+)", f)}) == 1, filters
 
 
 # every brute-force BM25 consumer rides the one score-and-rank spine
@@ -304,28 +312,82 @@ def test_search_verified_segment_gates_verify_on_topk(spark):
     assert has_broadcast_join(df)
 
 
-def test_positional_segment_decode_is_flat(spark):
-    """The persisted positional path must carry positions as a flat
-    long column out of the decode kernel (no Generate/explode over an
-    array column after mapInPandas)."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark import api
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.positional import (
-        query_term_positions,
-    )
+PYTHON_OPS = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
 
-    idx = api.docs_segment_index(spark, SF)
-    qtp = query_term_positions(api.queries_df(spark))
-    decoded = idx.positions_for_query_terms(qtp)
-    assert "pos" in decoded.columns and "positions" not in decoded.columns
-    # no explode between decode and aggregation in the full query
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.plans.audit import (
-        plan_string,
-    )
+
+def test_positional_segment_decode_is_flat(spark):
+    """The persisted positional path reads positions from the stored
+    doc_terms columns in the JVM: no Python operator anywhere in
+    ``q_positional_segment``'s plan."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark import api
 
     plan = plan_string(api.q_positional_segment(spark, SF))
-    # the query-side posexplode is fine (tiny); a doc-side explode of
-    # a positions ARRAY column would mean the flat-decode path was lost
-    assert "explode(positions" not in plan
+    assert not [op for op in PYTHON_OPS if op in plan], plan
+
+
+@pytest.fixture(scope="module")
+def pos_snapshots(spark, corpus_pdf, tmp_path_factory):
+    """One positions-storing index at two snapshots: v1 fresh, v2 with
+    a delta layer carrying adds and a delete."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
+        with_doc_id,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
+        apply_updates,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
+        SegmentIndex,
+        build_segment_index,
+    )
+
+    d = str(tmp_path_factory.mktemp("posplan"))
+    build_segment_index(
+        spark, with_doc_id(spark.createDataFrame(corpus_pdf.iloc[:40])), d,
+        n_buckets=4, hot_df=8, block_size=16, store_positions=True,
+    )
+    apply_updates(
+        spark, d,
+        add_corpus=spark.createDataFrame(corpus_pdf.iloc[40:45]),
+        delete_keys=spark.createDataFrame(
+            corpus_pdf.iloc[[3]][["repo", "path", "commit"]]
+        ),
+        mode="delta",
+    )
+    layered = SegmentIndex.open(spark, d)
+    assert layered.has_deltas and layered.tombstone_arrays() is not None
+    return {"fresh": SegmentIndex.open(spark, d, version=1),
+            "layered": layered}
+
+
+POSTINGS_READERS = {
+    "postings_for_query_terms": lambda idx, qt: idx.postings_for_query_terms(
+        qt, with_positions=True),
+    "postings_for_terms": lambda idx, qt: idx.postings_for_terms(
+        ["tok0001", "tok0002"]),
+    "postings_for_term_prefixes": lambda idx, qt:
+        idx.postings_for_term_prefixes(["tok001"]),
+    "positions_for_query_terms": lambda idx, qt:
+        idx.positions_for_query_terms(qt),
+    "merged_doc_terms": lambda idx, qt: idx.merged_doc_terms(),
+}
+
+
+@pytest.mark.parametrize("snapshot", ["fresh", "layered"])
+@pytest.mark.parametrize("reader", list(POSTINGS_READERS))
+def test_postings_readers_run_no_python(spark, pos_snapshots, reader,
+                                        snapshot):
+    """Every non-WAND postings read is a JVM scan of the stored
+    doc_terms columns: the executed plan holds no Python operator, on
+    a fresh and on a layered snapshot."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+        local_rows_df,
+    )
+
+    qt = local_rows_df(spark, [("tok0001",), ("tok0002",)], "term string")
+    df = POSTINGS_READERS[reader](pos_snapshots[snapshot], qt)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert not [op for op in PYTHON_OPS if op in plan], plan
 
 
 def test_emb_neardup_blocked_has_no_pair_explosion(spark):

@@ -205,19 +205,49 @@ def test_resume_verify_inputs_rebuilds_tampered_bucket(spark, corpus_df, tmp_pat
 
 
 def test_bucket_pruning_reads_subset(spark, built, index_dir):
-    """blocks_for_terms must touch only the buckets its terms hash to."""
+    """postings_for_terms must touch only the bucket its term hashes
+    to: a static partition filter naming one bucket, resolved without
+    a job, and every posting of the term read from it."""
+    import re
+
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.plans.audit import (
+        plan_string,
+    )
+
     seg = SegmentIndex.open(spark, index_dir)
-    one = seg.blocks_for_terms(["tok0000"])
-    buckets = {r["bucket"] for r in one.select("bucket").distinct().collect()}
-    assert len(buckets) == 1
+    one = seg.postings_for_terms(["tok0000"])
+    plan = plan_string(one)
+    filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert filters and "dynamicpruning" not in plan.lower(), filters
+    named = {int(b) for f in filters
+             for b in re.findall(r"bucket#\d+ = (\d+)", f)}
+    (bucket,) = {r["bucket"] for r in seg.doc_terms()
+                 .filter(F.col("term") == "tok0000")
+                 .select("bucket").distinct().collect()}
+    assert named == {bucket}, filters
+    want = seg.doc_terms().filter(F.col("term") == "tok0000").count()
+    assert one.count() == want > 0
+
+
+def test_positions_requested_without_stored_positions_raise(spark, built,
+                                                           index_dir):
+    """An index built with store_positions=False has no positions to
+    read: asking for them raises before any job runs."""
+    seg = SegmentIndex.open(spark, index_dir)
+    assert not seg.store_positions
+    qt = spark.createDataFrame([("tok0001",)], "term string")
+    with pytest.raises(ValueError, match="store_positions=False"):
+        seg.postings_for_query_terms(qt, with_positions=True)
+    with pytest.raises(ValueError, match="store_positions=False"):
+        seg.positions_for_query_terms(qt)
 
 
 def test_positions_roundtrip_through_segments(spark, corpus_df, tmp_path):
     """store_positions=True: per-doc occurrence offsets survive the
-    varint block codec exactly (segment postings == v1 doc_terms),
+    persisted doc_terms exactly (segment postings == v1 doc_terms),
     and the positional verifier gives identical answers on both
-    paths. The same payloads still serve the positions-free BM25
-    decode (trailing section skipped)."""
+    paths. The positions-free BM25 read of the same index returns
+    the same postings."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.positional import (
         positional_verify,
         query_term_positions,
@@ -266,9 +296,8 @@ def test_positions_roundtrip_through_segments(spark, corpus_df, tmp_path):
 
 def test_batched_encoder_matches_encode_block(spark):
     """The vectorized partition encoder must emit byte-identical
-    payloads to the reference single-block codec (encode_block), for
-    both layouts (with/without positions), across group/block
-    boundaries and negative doc_ids."""
+    payloads to the reference single-block codec (encode_block),
+    across group/block boundaries and negative doc_ids."""
     import numpy as np
     import pandas as pd
 
@@ -287,39 +316,32 @@ def test_batched_encoder_matches_encode_block(spark):
             rng.randint(-2**61, 2**61, size=n_docs * 2).astype(np.int64)
         )[:n_docs]
         for d in ids:
-            tf = int(rng.randint(1, 5))
-            pos = np.sort(rng.choice(1000, size=tf, replace=False))
             rows.append({"bucket": 0, "term": term, "salt": salt,
-                         "doc_id": int(d), "tf": tf,
-                         "doc_len": int(rng.randint(10, 500)),
-                         "positions": pos.astype(np.int64)})
+                         "doc_id": int(d), "tf": int(rng.randint(1, 5)),
+                         "doc_len": int(rng.randint(10, 500))})
     pdf = pd.DataFrame(rows).sort_values(
         ["term", "salt", "doc_id"], ignore_index=True
     )
 
-    for store_pos in (False, True):
-        got = pd.concat(
-            list(_encode_partition(300.0, 4, store_pos)(iter([pdf]))),
-            ignore_index=True,
-        )
-        # expected: per (term, salt) group, blocks of 4 via encode_block
-        exp = {}
-        for (term, salt), g in pdf.groupby(["term", "salt"], sort=True):
-            g = g.sort_values("doc_id")
-            ids = g["doc_id"].to_numpy(np.int64)
-            tfs = g["tf"].to_numpy(np.int64)
-            dls = g["doc_len"].to_numpy(np.int64)
-            pos = np.concatenate([np.asarray(p) for p in g["positions"]])
-            offs = np.concatenate(([0], np.cumsum(tfs)))
-            for seq, s in enumerate(range(0, len(ids), 4)):
-                e = min(s + 4, len(ids))
-                p = pos[offs[s]:offs[e]] if store_pos else None
-                exp[(term, salt, seq)] = encode_block(
-                    ids[s:e], tfs[s:e], dls[s:e], p
-                )
-        assert len(got) == len(exp)
-        for _, r in got.iterrows():
-            want = exp[(r["term"], int(r["salt"]), int(r["block_seq"]))]
-            assert bytes(r["payload"]) == want, (
-                r["term"], r["salt"], r["block_seq"], store_pos
+    got = pd.concat(
+        list(_encode_partition(300.0, 4)(iter([pdf]))),
+        ignore_index=True,
+    )
+    # expected: per (term, salt) group, blocks of 4 via encode_block
+    exp = {}
+    for (term, salt), g in pdf.groupby(["term", "salt"], sort=True):
+        g = g.sort_values("doc_id")
+        ids = g["doc_id"].to_numpy(np.int64)
+        tfs = g["tf"].to_numpy(np.int64)
+        dls = g["doc_len"].to_numpy(np.int64)
+        for seq, s in enumerate(range(0, len(ids), 4)):
+            e = min(s + 4, len(ids))
+            exp[(term, salt, seq)] = encode_block(
+                ids[s:e], tfs[s:e], dls[s:e]
             )
+    assert len(got) == len(exp)
+    for _, r in got.iterrows():
+        want = exp[(r["term"], int(r["salt"]), int(r["block_seq"]))]
+        assert bytes(r["payload"]) == want, (
+            r["term"], r["salt"], r["block_seq"]
+        )
