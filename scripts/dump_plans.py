@@ -29,20 +29,21 @@ def main() -> None:
 
     entries = [
         (
-            "bm25_topk — flagship BM25 top-k (v1 in-memory index)",
+            "bm25_topk — flagship BM25 top-k (segment index, "
+            "brute spine)",
             api.q_bm25_topk(spark, SF),
-            "Query side broadcasts (BroadcastHashJoin); one wide "
-            "groupBy for scores; rank window per query. No corpus "
+            "Query side broadcasts (BroadcastHashJoin); one query_id "
+            "exchange for scores and the rank window. No corpus "
             "sort, no driver collect.",
         ),
         (
-            "bm25_segment — same query through the persisted varint "
-            "segment index",
+            "bm25_segment — same query behind segment_topk's scratch "
+            "guard",
             api.q_bm25_segment(spark, SF),
             "Bucket partitions prune DYNAMICALLY from the broadcast "
             "query-term side (dynamicpruning subquery in the scan's "
-            "PartitionFilters); payloads decode in mapInPandas only "
-            "after pruning.",
+            "PartitionFilters); postings are a plain doc_terms "
+            "column scan, no Python.",
         ),
         (
             "wand_topk — pruned executor (block-max WAND, "

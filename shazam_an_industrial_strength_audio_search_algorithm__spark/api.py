@@ -35,8 +35,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.dedup
     simhash_pairs,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
-    InvertedIndex,
-    build_doc_terms,
+    term_stats,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
     SegmentIndex,
@@ -102,29 +101,18 @@ def _documents_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @OWNER.fixture
-def docs_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
-    """The v1 index over the driver's ``documents`` table (doc_id,
-    text, lang, source, n_chars)."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return InvertedIndex.build(docs, id_col="doc_id", text_col="text")
-
-
-@OWNER.fixture
 def docs_segment_index(spark: SparkSession, sf_dir: str):
-    """The PERSISTED segment index over ``documents`` — exposes the
-    block/bucket/snapshot path through the oracle-checked battery."""
+    """The persisted segment index over the battery's ``documents``
+    table (doc_id, text, lang, source, n_chars) — the one index every
+    fulltext row reads."""
     d = OWNER.tmpdir("driver_segidx_")
-    # store_positions=True: the SAME persisted index serves both
-    # BM25 (bm25_segment) and positional verification
-    # (positional_segment) — positions are a doc_terms column that
-    # only the positional reads select. The v1 index's postings
-    # (with positions) feed phase A directly: the identical postings
-    # without a second positions-UDF tokenize pass over the corpus
+    # store_positions=True: the SAME persisted index serves BM25 and
+    # positional verification — positions are a doc_terms column that
+    # only the positional reads select
     build_segment_index(spark, _documents_corpus(spark, sf_dir), d,
                         n_buckets=4, hot_df=64, block_size=64,
                         id_col="doc_id", text_col="content",
-                        store_positions=True,
-                        doc_terms_df=docs_index(spark, sf_dir).doc_terms)
+                        store_positions=True)
     return SegmentIndex.open(spark, d)
 
 
@@ -173,9 +161,10 @@ _SCORE_EXPR = (
 def q_term_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """term → document frequency, top 100 (df DESC, term ASC) — the
     index's LUT cardinality view (↔ addLUT, SURVEY §2.4 A2)."""
-    idx = docs_index(spark, sf_dir)
+    idx = docs_segment_index(spark, sf_dir)
     return (
-        idx.term_stats.select("term", F.col("df").cast("long").alias("df"))
+        term_stats(idx.merged_doc_terms())
+        .select("term", F.col("df").cast("long").alias("df"))
         .orderBy(F.col("df").desc(), F.col("term").asc())
         .limit(100)
     )
@@ -208,11 +197,10 @@ SELECT doc_id, doc_len FROM dl
 def q_term_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, term, tf) for a fixed probe-term set — posting-list
     content check (↔ the per-doc shash dict, _Shazam_.py:269-276)."""
-    idx = docs_index(spark, sf_dir)
+    idx = docs_segment_index(spark, sf_dir)
     probes = ["hash", "join", "spark", "window", "customer"]
-    return (
-        idx.doc_terms.filter(F.col("term").isin(probes))
-        .select("doc_id", "term", F.col("tf").cast("long").alias("tf"))
+    return idx.postings_for_terms(probes).select(
+        "doc_id", "term", F.col("tf").cast("long").alias("tf")
     )
 
 
@@ -226,10 +214,10 @@ WHERE term IN ('hash', 'join', 'spark', 'window', 'customer')
 def q_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate generation: per (query, doc) count of distinct matched
     query terms (↔ searchLUT_v2's Counter, _Shazam_.py:494-506)."""
-    idx = docs_index(spark, sf_dir)
+    idx = docs_segment_index(spark, sf_dir)
     qt = query_terms(queries_df(spark))
     return (
-        idx.doc_terms.join(F.broadcast(qt), "term")
+        idx.postings_for_query_terms(qt).join(F.broadcast(qt), "term")
         .groupBy("query_id", "doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("matched_terms"))
     )
@@ -247,8 +235,8 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: BM25 top-k per query, deterministic tie-break
     (score DESC, doc_id ASC) — the whole reference query pipeline
     (SURVEY §3.2) as one plan."""
-    return bm25_topk(docs_index(spark, sf_dir), queries_df(spark), TOPK_K,
-                     micro=True)
+    return bm25_topk(docs_segment_index(spark, sf_dir), queries_df(spark),
+                     TOPK_K, micro=True)
 
 
 _BM25_MICRO_CTES = f"""
@@ -290,7 +278,8 @@ def q_match_or_nil(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold or NULL (Nil), + second-best (Matching.py:120-148)."""
     threshold_micro = 2_000_000  # score > 2.0
     ranked = rank_scores(
-        bm25_scores(docs_index(spark, sf_dir), queries_df(spark), micro=True)
+        bm25_scores(docs_segment_index(spark, sf_dir), queries_df(spark),
+                    micro=True)
     )
     agg = ranked.groupBy("query_id").agg(
         F.max(F.when(F.col("rank") == 1, F.col("doc_id"))).alias("top1_doc"),
@@ -345,7 +334,7 @@ def q_match_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second-best, candidate count); exchange reuse dedupes the
     # shuffle but the aggregation above it re-ran per branch
     scores = OWNER.persist(
-        bm25_scores(docs_index(spark, sf_dir), queries_df(spark),
+        bm25_scores(docs_segment_index(spark, sf_dir), queries_df(spark),
                     micro=True).select(
             "query_id", "doc_id",
             F.col("score_micro").alias("score"), "matched_terms",
@@ -416,8 +405,8 @@ def _top1_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, query_id, score_micro): each query's best candidate,
     kept only when it scores above 2.0 — the matched half of the
     "doc or Nil" decision that the db2qry and stats reports read."""
-    scores = bm25_scores(docs_index(spark, sf_dir), queries_df(spark),
-                         micro=True)
+    scores = bm25_scores(docs_segment_index(spark, sf_dir),
+                         queries_df(spark), micro=True)
     return (
         rank_scores(scores, k=1)
         .filter(F.col("score_micro") > 2_000_000)
@@ -462,7 +451,8 @@ def q_match_classed(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold) dim frame (≤5 tokens → 2.0, else 3.0, in micro units)
     and ``decide`` broadcast-joins it in place of the scalar."""
     cand = rank_scores(
-        bm25_scores(docs_index(spark, sf_dir), queries_df(spark), micro=True)
+        bm25_scores(docs_segment_index(spark, sf_dir), queries_df(spark),
+                    micro=True)
     ).select("query_id", "rank", "doc_id",
              F.col("score_micro").alias("score"))
     thr = per_query_thresholds(
@@ -643,11 +633,13 @@ def q_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-offset-consistency vote (Δt alignment, _Shazam_.py:309-351):
     both check that matched terms occur at consistent relative
     positions, not just that they co-occur."""
-    idx = docs_index(spark, sf_dir)
-    a = idx.doc_terms.filter(F.col("term") == "hash").select(
+    post = docs_segment_index(spark, sf_dir).postings_for_terms(
+        ["hash", "join"], with_positions=True
+    )
+    a = post.filter(F.col("term") == "hash").select(
         "doc_id", F.explode("positions").alias("pa")
     )
-    b = idx.doc_terms.filter(F.col("term") == "join").select(
+    b = post.filter(F.col("term") == "join").select(
         F.col("doc_id").alias("doc_id_b"), F.explode("positions").alias("pb")
     )
     return (
@@ -675,13 +667,14 @@ def q_positional_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """General positional verification over the flagship queries — the
     offset-histogram vote (count_number_match, _Shazam_.py:309-351)
     for ARBITRARY queries: per (query, candidate), the best-aligned
-    offset delta and its vote count (v1 in-memory index path)."""
+    offset delta and its vote count, over every stored posting of the
+    segment index (``merged_doc_terms``)."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.positional import (
         positional_verify,
     )
 
-    idx = docs_index(spark, sf_dir)
-    return positional_verify(idx.doc_terms, queries_df(spark))
+    idx = docs_segment_index(spark, sf_dir)
+    return positional_verify(idx.merged_doc_terms(), queries_df(spark))
 
 
 def q_positional_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -747,10 +740,10 @@ def q_search_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # persisted: topk feeds BOTH the candidate gate and the final join
     topk = OWNER.persist(q_bm25_topk(spark, sf_dir))
-    idx = docs_index(spark, sf_dir)
+    idx = docs_segment_index(spark, sf_dir)
     cand_docs = topk.select("doc_id").distinct()
-    postings = idx.doc_terms.join(F.broadcast(cand_docs), "doc_id",
-                                  "left_semi")
+    postings = idx.merged_doc_terms().join(F.broadcast(cand_docs), "doc_id",
+                                           "left_semi")
     pv = positional_verify(postings, queries_df(spark))
     # topk is ≤ k rows per query (dimension-sized) — broadcast it so
     # the final attach is a hash join, not a size-estimated SMJ
@@ -770,7 +763,8 @@ def q_search_verified_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored doc_terms columns (``positions_for_query_terms``) and
     semi-joined to the broadcast top-k doc set before the verify
     join. Same oracle as ``search_verified`` — one oracle, two
-    physical plans (v1 in-memory vs WAND + segment postings)."""
+    physical plans (brute top-k + full postings scan vs WAND +
+    query-term positions)."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.positional import (
         positional_verify,
         query_term_positions,
@@ -840,9 +834,10 @@ JOIN rr ON t.query_id = rr.query_id AND t.doc_id = rr.doc_id AND rr.rn = 1
 
 def q_bm25_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship query through the PERSISTED path: segment index
-    (buckets, salting, snapshots) → stored postings scan → BM25 —
-    must hash-match the same DuckDB oracle as the in-memory engine
-    (Q_BM25_TOPK_SQL): one oracle, two physical plans."""
+    (buckets, salting, snapshots) → stored postings scan → BM25
+    behind ``segment_topk``'s scratch guard — must hash-match the same
+    DuckDB oracle as the unguarded spine (Q_BM25_TOPK_SQL): one oracle,
+    two physical plans."""
     idx = docs_segment_index(spark, sf_dir)
     return segment_topk(idx, queries_df(spark), k=TOPK_K, micro=True)
 
@@ -852,9 +847,9 @@ def q_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (interval-at-a-time, bound-gated decodes, query-group batching) in
     integer micro-unit scoring mode — must hash-match the SAME DuckDB
     oracle as the brute-force paths (Q_BM25_TOPK_SQL): one oracle,
-    THREE physical plans (v1 in-memory, segment brute force, WAND).
-    The gate therefore proves the pruning never changed a score, a
-    rank, or a tie-break."""
+    THREE physical plans (brute spine, guarded segment brute force,
+    WAND). The gate therefore proves the pruning never changed a
+    score, a rank, or a tie-break."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
         wand_topk,
     )
@@ -912,24 +907,9 @@ def docs_layered_segment_index(spark: SparkSession, sf_dir: str):
         (F.col("doc_id") + F.lit(1 << 40)).alias("doc_id"),
     )
     d = OWNER.tmpdir("driver_layeredidx_")
-    # tokenize only what differs from the documents table: the v1
-    # index holds postings for every unmodified doc, so the base
-    # build composes them with a fresh tokenize of just the
-    # stale/ghost rows (both constant 10-token texts), and the u2
-    # delta IS the v1 postings for its doc_ids — the fixture's
-    # content equals the documents table there by construction
-    v1 = docs_index(spark, sf_dir).doc_terms.select(
-        "doc_id", "term", "tf", "doc_len"
-    )
-    changed = build_doc_terms(
-        base.filter(mod7 == 3).unionByName(ghosts),
-        id_col="doc_id", text_col="content", with_positions=False,
-    ).select("doc_id", "term", "tf", "doc_len")
     build_segment_index(
         spark, base.unionByName(ghosts), d, n_buckets=4, hot_df=64,
         block_size=64, id_col="doc_id", text_col="content",
-        doc_terms_df=v1.filter((mod7 != 3) & (mod7 != 6))
-        .unionByName(changed),
     )
     apply_updates(
         spark, d,
@@ -938,7 +918,6 @@ def docs_layered_segment_index(spark: SparkSession, sf_dir: str):
         # the batch keys are distinct documents-table doc_ids by
         # construction — skip the strict-mode uniqueness probe job
         assume_unique=True,
-        add_doc_terms=v1.filter((mod7 == 3) | (mod7 == 6)),
     )
     apply_updates(
         spark, d, delete_keys=ghosts.select("doc_id"),
@@ -1008,7 +987,7 @@ def q_stream_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed idempotently to batch_id partitions. The union of the
     streamed batches must hash-match the SAME DuckDB oracle as every
     batch engine (Q_BM25_TOPK_SQL): one oracle, FOUR physical plans
-    (v1 in-memory, segment brute force, WAND, streamed WAND)."""
+    (brute spine, guarded segment brute force, WAND, streamed WAND)."""
 
     from shazam_an_industrial_strength_audio_search_algorithm__spark.streaming.match import (
         read_match_results,
@@ -2248,9 +2227,12 @@ def _plan_union_sql(sql: str, labels: tuple[str, ...]) -> str:
 
 
 def q_bm25_topk_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """bm25_topk through BOTH brute executors — v1 in-memory and the
-    persisted segment path — as one plan-labelled union
-    against one oracle."""
+    """bm25_topk through BOTH brute executors over the segment index,
+    as one plan-labelled union against one oracle. ``"v1"`` (the label
+    of the retired in-memory index, kept because it is part of the
+    oracle value) names the unguarded spine ``bm25_topk``;
+    ``"segment"`` names ``segment_topk``, the same spine behind its
+    scratch-budget estimate."""
     return _plan_union([
         ("v1", q_bm25_topk(spark, sf_dir)),
         ("segment", q_bm25_segment(spark, sf_dir)),
@@ -2277,9 +2259,12 @@ def q_match_stats_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_positional_verify_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """positional verification from the v1 in-memory postings AND the
-    segment index's stored positions, one labelled union / one
-    oracle."""
+    """positional verification from every stored posting AND from the
+    query terms' postings only, one labelled union / one oracle.
+    ``"v1"`` (the retired in-memory index's label, kept because it is
+    part of the oracle value) names the full ``merged_doc_terms()``
+    scan; ``"segment"`` names the bucket-pruned
+    ``positions_for_query_terms`` read."""
     return _plan_union([
         ("v1", q_positional_verify(spark, sf_dir)),
         ("segment", q_positional_segment(spark, sf_dir)),
@@ -2288,10 +2273,13 @@ def q_positional_verify_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @OWNER.query()
 def q_search_verified_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """the two-phase search lifecycle on the v1 index AND on
-    WAND + segment postings, one labelled union / one oracle. Both legs
-    run in this row's owner scope, so each keeps its top-k persist
-    until the union's action."""
+    """the two-phase search lifecycle through brute BM25 AND through
+    WAND, one labelled union / one oracle. ``"v1"`` (the retired
+    in-memory index's label, kept because it is part of the oracle
+    value) names brute top-k + the full ``merged_doc_terms()`` scan
+    gated to its docs; ``"segment"`` names WAND top-k + the query
+    terms' positions. Both legs run in this row's owner scope, so each
+    keeps its top-k persist until the union's action."""
     return _plan_union([
         ("v1", q_search_verified(spark, sf_dir)),
         ("segment", q_search_verified_segment(spark, sf_dir)),
@@ -2408,11 +2396,11 @@ ORACLE_SQL: dict[str, str] = {
     "doc_len": Q_DOC_LEN_SQL,
     "term_tf": Q_TERM_TF_SQL,
     "candidates": Q_CANDIDATES_SQL,
-    # one truth, SEVEN physical plans: the labelled union gates v1
-    # in-memory + segment brute force in this row; wand_topk,
-    # wand_layered, batch_match and stream_match gate the pruned /
-    # layered / resumable-batch / streamed executors against the SAME
-    # SQL below
+    # one truth, SEVEN physical plans: the labelled union gates the
+    # unguarded ("v1") and guarded ("segment") brute spine in this row;
+    # wand_topk, wand_layered, batch_match and stream_match gate the
+    # pruned / layered / resumable-batch / streamed executors against
+    # the SAME SQL below
     "bm25_topk": _plan_union_sql(Q_BM25_TOPK_SQL, ("v1", "segment")),
     "wand_topk": Q_BM25_TOPK_SQL,  # the pruned executor vs the same truth
     # the pruned executor over a LAYERED snapshot (overwrites + adds
@@ -2435,10 +2423,12 @@ ORACLE_SQL: dict[str, str] = {
     "match_stats": _plan_union_sql(Q_MATCH_STATS_SQL, ("window", "dist")),
     "db2qry": Q_DB2QRY_SQL,
     "phrase_match": Q_PHRASE_MATCH_SQL,
-    # labelled union: v1 postings + segment index's stored positions
+    # labelled union: full postings scan ("v1") + query-term
+    # positions ("segment")
     "positional_verify": _plan_union_sql(Q_POSITIONAL_SQL,
                                          ("v1", "segment")),
-    # labelled union: v1 lifecycle + WAND/segment lifecycle
+    # labelled union: brute lifecycle ("v1") + WAND lifecycle
+    # ("segment")
     "search_verified": _plan_union_sql(Q_SEARCH_VERIFIED_SQL,
                                        ("v1", "segment")),
     "unindexed": Q_UNINDEXED_SQL,

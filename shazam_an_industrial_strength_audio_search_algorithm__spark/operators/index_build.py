@@ -1,4 +1,4 @@
-"""Inverted-index construction — DataFrame-native.
+"""Inverted-index construction, phase A — DataFrame-native.
 
 Reference parity (SURVEY §2.4 A1/A2, §3.1): the reference builds, one
 doc at a time in a single thread (``utils/Hashing.py:43-63``),
@@ -8,17 +8,18 @@ and (b) the global ``LUT`` = {hash → doc set} (``addLUT``,
 
 Here the same two artifacts are:
 
-- ``doc_terms(doc_id, term, tf, positions, doc_len)`` — the per-doc
-  term vector with positions (↔ shash; ``doc_len`` ↔ ``max_time``,
+- ``doc_terms(doc_id, term, tf[, positions], doc_len)`` — the per-doc
+  term vector (↔ shash; ``doc_len`` ↔ ``max_time``,
   ``_Shazam_.py:278``), computed **narrow** (zero shuffle): every
   token of a doc already lives in its row, so tf/positions/doc_len
-  come out of one Arrow-batched pandas UDF — the 100 TB design point
-  is that tokenization+counting never shuffles.
+  come out of one Arrow-batched pandas UDF (``doc_term_stage`` +
+  ``explode_doc_terms``) — the 100 TB design point is that
+  tokenization+counting never shuffles.
 - flat postings = ``doc_terms`` viewed term-major; the only wide
-  dependency in the whole build is the ``groupBy(term)`` that derives
-  document frequencies / posting groups (↔ the addLUT fold-in), and
-  at scale it is salted (see operators/segments.py for the
-  skew-split, block-compressed, resumable builder).
+  dependency is the ``groupBy(term)`` that derives document
+  frequencies (``term_stats``, ↔ the addLUT fold-in). The persisted,
+  bucketed, skew-salted, resumable index that stores both is
+  ``operators/segments.py``; every index read goes through it.
 
 Scale notes: docs are hashed to 64-bit ids JVM-side (``xxhash64`` —
 the determinism contract the reference gets from unsalted int-tuple
@@ -26,10 +27,7 @@ the determinism contract the reference gets from unsalted int-tuple
 dropped silently (↔ ``[None, None]`` sentinel guards,
 ``_Shazam_.py:463-465``, ``Matching.py:108-111``).
 """
-
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -191,23 +189,6 @@ def explode_doc_terms(stage: DataFrame,
     ).select(*cols)
 
 
-def build_doc_terms(corpus: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "content",
-                    with_positions: bool = True) -> DataFrame:
-    """corpus → doc_terms(doc_id, term, tf[, positions], doc_len).
-
-    Zero-shuffle: one projection + one explode. ``doc_len`` = total
-    token count (BM25 length-normalization input, ↔ ``max_time``).
-    Empty docs vanish here; surface them with ``unindexed_docs``.
-    ``with_positions=False`` is the index-build fast path — BM25 needs
-    only tf; positions are for phrase/proximity verification.
-    """
-    return explode_doc_terms(
-        doc_term_stage(corpus, id_col, text_col, with_positions),
-        with_positions,
-    )
-
-
 def unindexed_docs(corpus: DataFrame, id_col: str = "doc_id",
                    text_col: str = "content") -> DataFrame:
     """Quarantine side-output: docs that tokenize to nothing (↔ the
@@ -224,68 +205,5 @@ def unindexed_docs(corpus: DataFrame, id_col: str = "doc_id",
 
 def term_stats(doc_terms: DataFrame) -> DataFrame:
     """term → document frequency. (doc_id, term) is unique in
-    doc_terms, so df = count(*) — map-side partial agg + final, the
-    one legitimate wide dep of the build."""
+    doc_terms, so df = count(*) — map-side partial agg + final."""
     return doc_terms.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-
-
-@dataclass
-class InvertedIndex:
-    """In-memory (DataFrame) form of the index — engine v1. The
-    persisted, block-compressed, resumable form lives in
-    operators/segments.py."""
-
-    doc_terms: DataFrame
-    term_stats: DataFrame
-    n_docs: int
-    avgdl: float
-
-    @classmethod
-    def build(cls, corpus: DataFrame, id_col: str = "doc_id",
-              text_col: str = "content") -> "InvertedIndex":
-        """Precondition: ``id_col`` is unique per corpus row — (N,
-        avgdl) come from a distinct over the postings' (doc_id,
-        doc_len), so two rows sharing an id and a length would count
-        as one doc.
-
-        The postings are persisted through the session owner (built
-        inside a memoized fixture, they live as long as it)."""
-        from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
-            OWNER,
-            spread_input,
-        )
-
-        if id_col == "doc_id" and "doc_id" not in corpus.columns:
-            corpus = with_doc_id(corpus)
-        # the tokenize UDF is the heavy per-row kernel of this build;
-        # a single-row-group input otherwise runs it on one task
-        corpus = spread_input(corpus)
-        # (N, avgdl) off the persisted postings instead of a second
-        # full-corpus tokenize pass: doc_len is functionally
-        # determined by doc_id, so the distinct collapses map-side to
-        # ~one row per doc (a doc's postings are co-located by the
-        # explode) — a doc-count-sized shuffle, not the index. avg
-        # over the int doc_len sums exactly in a long, so the double
-        # result is order-independent.
-        dt = OWNER.persist(build_doc_terms(corpus, id_col, text_col))
-        row = (
-            dt.select("doc_id", "doc_len").distinct()
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.avg("doc_len").alias("avgdl"))
-            .collect()[0]
-        )
-        n, avgdl = int(row["n"] or 0), float(row["avgdl"] or 0.0)
-        return cls(doc_terms=dt, term_stats=term_stats(dt), n_docs=n, avgdl=avgdl)
-
-    def postings_for_query_terms(self, qt: DataFrame) -> DataFrame:
-        """(term, doc_id, tf, doc_len, df) for every distinct term in
-        ``qt`` — the same shape ``SegmentIndex.postings_for_query_terms``
-        returns, so both index kinds feed ``topk.bm25_scores``. The
-        query's df stats are tiny and broadcast into the postings
-        scan."""
-        stats = self.term_stats.join(
-            F.broadcast(qt.select("term").distinct()), "term"
-        )
-        return self.doc_terms.join(F.broadcast(stats), "term").select(
-            "term", "doc_id", "tf", "doc_len", "df"
-        )

@@ -89,7 +89,6 @@ def apply_updates(
     assume_unique: bool = False,
     auto_compact: "CompactionPolicy | None" = None,
     explicit_ids: bool = False,
-    add_doc_terms: DataFrame | None = None,
 ) -> UpdateReport:
     """MERGE-equivalent maintenance producing snapshot v+1.
 
@@ -114,13 +113,6 @@ def apply_updates(
       the layers back to one generation (Lucene segment-merge
       analog, the reference's ``Combine.py:55-62`` consolidation).
 
-    ``add_doc_terms``: optional pre-tokenized postings (doc_id, term,
-    tf[, positions], doc_len) for EXACTLY the deduped ``add_corpus``
-    rows — skips the update's tokenizer pass entirely (the caller
-    guarantees correspondence; used when an in-memory index over the
-    same docs already holds them). Passing it without ``add_corpus``
-    raises ``ValueError``.
-
     ``auto_compact``: a ``CompactionPolicy`` — after this update
     commits, ``maybe_compact`` runs under it, so a continuously
     upserting pipeline keeps ``wand_topk`` at peak speed without manual
@@ -129,11 +121,6 @@ def apply_updates(
     """
     if mode not in ("rebuild", "delta"):
         raise ValueError(f"mode must be 'rebuild' or 'delta', got {mode!r}")
-    if add_doc_terms is not None and add_corpus is None:
-        raise ValueError(
-            "add_doc_terms are the postings of add_corpus's rows — "
-            "pass add_corpus with them"
-        )
     base = SegmentIndex.open(spark, index_dir)
     if mode == "rebuild" and base.has_deltas:
         raise ValueError(
@@ -218,34 +205,19 @@ def apply_updates(
         has_delta_rows = False
         stage = None
         if add_corpus is not None:
-            store_pos = base.snapshot.get("store_positions", False)
-            if add_doc_terms is not None:
-                # pre-tokenized postings for the batch (e.g. composed
-                # from an already-built in-memory index over the same
-                # docs): no tokenizer pass at all for this update
-                if store_pos and "positions" not in add_doc_terms.columns:
-                    raise ValueError(
-                        "base stores positions but add_doc_terms "
-                        "carries no positions column"
-                    )
-                delta = add_doc_terms
-            else:
-                from pyspark import StorageLevel
+            from pyspark import StorageLevel
 
-                # ONE tokenize pass for the whole update (the build's
-                # phase-A contract applied to deltas): the persisted
-                # stage feeds the delta doc_terms explode below AND
-                # the doc_lens projection further down — previously
-                # new_dl re-ran the tokenizer over the full add_corpus
-                # a second time
-                stage = doc_term_stage(
-                    add_corpus, with_positions=store_pos,
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                delta = explode_doc_terms(stage, with_positions=store_pos)
+            store_pos = base.snapshot.get("store_positions", False)
+            # ONE tokenize pass for the whole update (the build's
+            # phase-A contract applied to deltas): the persisted stage
+            # feeds the delta doc_terms explode below AND the doc_lens
+            # projection further down
+            stage = doc_term_stage(
+                add_corpus, with_positions=store_pos,
+            ).persist(StorageLevel.MEMORY_AND_DISK)
             delta = as_doc_terms(
-                delta.withColumn(
-                    "bucket", bucket_col(F.col("term"), base.n_buckets)
-                ),
+                explode_doc_terms(stage, with_positions=store_pos)
+                .withColumn("bucket", bucket_col(F.col("term"), base.n_buckets)),
                 store_pos,
             )
             delta_read_path = (
@@ -307,20 +279,13 @@ def apply_updates(
 
         # --- doc_lens + global stats -----------------------------------
         # narrow off the persisted tokenize stage (doc_len = Σtf, the
-        # same total-token count) — no second tokenizer pass. With
-        # pre-tokenized postings, the doc-count-sized distinct (doc_len
-        # functional on doc_id, postings co-located) replaces the stage
+        # same total-token count) — no second tokenizer pass
         new_dl = None
-        if add_corpus is not None:
-            if stage is not None:
-                new_dl = (
-                    stage.select("doc_id", "doc_len")
-                    .filter(F.col("doc_len") > 0)
-                )
-            else:
-                new_dl = (
-                    add_doc_terms.select("doc_id", "doc_len").distinct()
-                )
+        if stage is not None:
+            new_dl = (
+                stage.select("doc_id", "doc_len")
+                .filter(F.col("doc_len") > 0)
+            )
         if mode == "rebuild":
             dl = base.doc_lens()
             if removed is not None:

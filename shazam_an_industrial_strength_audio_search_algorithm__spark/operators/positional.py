@@ -48,10 +48,10 @@ def positional_verify(postings: DataFrame, queries: DataFrame,
     """Per (query, candidate doc): the offset delta most matched-term
     occurrences agree on, and how many agree.
 
-    ``postings`` must carry (doc_id, term, positions array) — the v1
-    ``InvertedIndex.doc_terms`` or the segment reader's stored
-    positions (``positions_for_query_terms``, a JVM scan of its
-    doc_terms columns).
+    ``postings`` must carry (doc_id, term, positions array) — a
+    positions-storing ``SegmentIndex``'s ``merged_doc_terms()`` or
+    its query-term read ``positions_for_query_terms`` (both JVM scans
+    of its doc_terms columns).
 
     Output: (query_id, doc_id, best_delta, aligned_count), one row per
     candidate pair; ties break on smallest delta. ``aligned_count`` is

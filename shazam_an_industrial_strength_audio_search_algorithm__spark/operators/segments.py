@@ -586,21 +586,14 @@ def build_segment_index(
     phase_a_shuffle: bool = False,
     store_positions: bool = False,
     verify_inputs: bool = False,
-    doc_terms_df: DataFrame | None = None,
 ) -> BuildReport:
     """Initial build (snapshot v1), two-phase and resumable.
 
-    ``doc_terms_df``: an already-tokenized postings frame (doc_id,
-    term, tf[, positions], doc_len) — e.g. the v1 in-memory index's
-    cached ``doc_terms`` over the same corpus. Phase A then writes it
-    directly (doc_lens derived by a doc-count-sized distinct) instead
-    of re-running the tokenizer — the 'tokenize once, ever' contract
-    applied ACROSS index layouts, not just within one build.
-
-    Phase A (once): tokenize → doc_terms parquet partitioned by term
-    bucket, + doc_lens + build-params json. Phase B (per bucket,
-    resumable): see ``build_bucket_segments``. Snapshot v1 + CURRENT
-    commit only when every bucket's manifest exists.
+    Phase A (once): tokenize ``corpus`` in one pass → doc_terms
+    parquet partitioned by term bucket, + doc_lens + build-params
+    json. Phase B (per bucket, resumable): see
+    ``build_bucket_segments``. Snapshot v1 + CURRENT commit only when
+    every bucket's manifest exists.
 
     ``buckets`` limits phase B to a subset (tests use it to simulate
     an interrupted build; a real deployment passes None).
@@ -629,10 +622,6 @@ def build_segment_index(
     """
     import time as _time
 
-    if corpus is None and doc_terms_df is None:
-        raise ValueError(
-            "build_segment_index needs a corpus or a doc_terms_df"
-        )
     timings: dict[str, float] = {}
     if resume:
         gen = _resumable_build_gen(index_dir)
@@ -645,8 +634,7 @@ def build_segment_index(
         gen = _next_build_gen(index_dir)  # atomic rebuild-over-live
     else:
         gen = "init"
-    if corpus is not None and id_col == "doc_id" \
-            and "doc_id" not in corpus.columns:
+    if id_col == "doc_id" and "doc_id" not in corpus.columns:
         corpus = with_doc_id(corpus)
     os.makedirs(f"{index_dir}/manifests/{gen}", exist_ok=True)
     os.makedirs(f"{index_dir}/snapshots", exist_ok=True)
@@ -660,10 +648,7 @@ def build_segment_index(
         # the input sizes the layout so per-bucket posting volume
         # stays ~constant as corpora grow — nothing to hand-tune at
         # 100 TB. Explicit knobs and resumed builds skip the count.
-        n_est = (
-            corpus.count() if corpus is not None
-            else doc_terms_df.select("doc_id").distinct().count()
-        )
+        n_est = corpus.count()
         if n_buckets is None:
             n_buckets = auto_n_buckets(n_est)
         if block_size is None:
@@ -687,38 +672,24 @@ def build_segment_index(
             doc_term_stage,
             explode_doc_terms,
         )
+        from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+            spread_input,
+        )
 
         _t0 = _time.monotonic()
-        stage = None
-        if doc_terms_df is not None:
-            # pre-tokenized postings supplied (e.g. the v1 index's
-            # cached doc_terms over the same corpus): write them
-            # directly — no tokenizer pass at all for this build
-            if store_positions and "positions" not in doc_terms_df.columns:
-                raise ValueError(
-                    "store_positions=True but doc_terms_df carries no "
-                    "positions column"
-                )
-            dt = doc_terms_df
-        else:
-            # spread a narrow input first: the tokenize UDF below is
-            # the phase's CPU kernel, and a single-row-group corpus
-            # file would otherwise run it on one task (no-op at scale)
-            from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
-                spread_input,
-            )
-
-            corpus = spread_input(corpus)
-            # ONE tokenize pass: the persisted stage feeds both the
-            # doc_terms explode AND the doc_lens projection —
-            # 'tokenize once, ever', no second corpus pass, no
-            # postings shuffle
-            stage = doc_term_stage(
-                corpus, id_col, text_col, with_positions=store_positions
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            dt = explode_doc_terms(stage, with_positions=store_positions)
+        # spread a narrow input first: the tokenize UDF below is the
+        # phase's CPU kernel, and a single-row-group corpus file would
+        # otherwise run it on one task (no-op at scale)
+        corpus = spread_input(corpus)
+        # ONE tokenize pass: the persisted stage feeds both the
+        # doc_terms explode AND the doc_lens projection — 'tokenize
+        # once, ever', no second corpus pass, no postings shuffle
+        stage = doc_term_stage(
+            corpus, id_col, text_col, with_positions=store_positions
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         dt = as_doc_terms(
-            dt.withColumn("bucket", bucket_col(F.col("term"), n_buckets)),
+            explode_doc_terms(stage, with_positions=store_positions)
+            .withColumn("bucket", bucket_col(F.col("term"), n_buckets)),
             store_positions,
         )
         if phase_a_shuffle:
@@ -739,26 +710,16 @@ def build_segment_index(
         # streams past (guide §1/§2: don't re-scan for metadata)
         from pyspark.sql import Observation
 
-        if stage is not None:
-            dl_src = stage.select("doc_id", "doc_len").filter(
-                F.col("doc_len") > 0
-            )
-        else:
-            # doc_len is functionally determined by doc_id, and a
-            # doc's postings are co-located, so the distinct collapses
-            # map-side to ~one row per doc — a doc-count-sized shuffle
-            # (empty docs hold no postings, so doc_len > 0 throughout)
-            dl_src = doc_terms_df.select("doc_id", "doc_len").distinct()
         obs = Observation("dl_stats")
         (
-            dl_src
+            stage.select("doc_id", "doc_len")
+            .filter(F.col("doc_len") > 0)
             .observe(obs, F.count(F.lit(1)).alias("n"),
                      F.sum("doc_len").alias("sum_dl"))
             .write.mode("overwrite")
             .parquet(dl_path)
         )
-        if stage is not None:
-            stage.unpersist()
+        stage.unpersist()
         row = obs.get
         timings["phase_a_doc_lens"] = _time.monotonic() - _t0
         n_ = int(row["n"] or 0)

@@ -8,7 +8,7 @@ generation = posting-list union-with-counts (``searchLUT_v2``,
 "doc or Nil" with second-best tracking (``Matching.py:120-148``).
 
 Here steps 2+3 fuse into the engine's one score-and-rank spine, used
-by both index kinds and every brute-force consumer: ``bm25_scores``
+by every brute-force consumer: ``bm25_scores``
 joins the index's ``postings_for_query_terms`` (term, doc_id, tf,
 doc_len, df) to the broadcast query terms, hashes the candidates by
 ``query_id`` (the single exchange), scores each term with
@@ -55,7 +55,8 @@ def query_terms(queries: DataFrame, id_col: str = "query_id",
 def bm25_scores(index, queries: DataFrame, id_col: str = "query_id",
                 text_col: str = "text", micro: bool = False) -> DataFrame:
     """(query_id, doc_id, score | score_micro, matched_terms) for every
-    candidate of ``index`` (an ``InvertedIndex`` or a ``SegmentIndex``).
+    candidate of ``index`` (a ``SegmentIndex``, or anything with its
+    ``postings_for_query_terms``, ``n_docs`` and ``avgdl``).
 
     ``matched_terms`` ↔ the reference's ``num_matches`` candidate
     count / ``num_union`` (``Matching.py:128``). ``micro=True`` scores

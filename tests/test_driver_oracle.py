@@ -109,16 +109,20 @@ def test_entry_smoke(spark):
 
 
 def test_close_releases_battery_state(spark, ddb, persisted_before):
-    """After every registry row: ``OWNER.close()`` unpersists every RDD
-    the battery persisted and removes every registry temp dir, and a
-    fixture-backed row run FIRST on the fresh owner (no v1 index
-    built yet) still equals its oracle."""
+    """After every registry row: ``OWNER.release()`` alone leaves no
+    RDD the battery persisted (no fixture holds a persist — the index
+    fixtures are on disk), ``OWNER.close()`` removes every registry
+    temp dir, and a fixture-backed row run FIRST on the fresh owner
+    (its layered index rebuilt from nothing) still equals its
+    oracle."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
         OWNER,
     )
 
     dirs = OWNER.tmpdirs
     assert dirs
+    OWNER.release()
+    assert _persisted_rdd_ids(spark) - persisted_before == set()
     OWNER.close()
     assert _persisted_rdd_ids(spark) - persisted_before == set()
     assert [d for d in dirs if os.path.exists(d)] == []

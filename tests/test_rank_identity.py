@@ -11,8 +11,11 @@ import math
 import pytest
 
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
-    InvertedIndex,
     with_doc_id,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
+    SegmentIndex,
+    build_segment_index,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
     bm25_topk,
@@ -27,10 +30,17 @@ K = 10
 THRESHOLD = 2.0
 
 
+def _segment_index(spark, corpus, index_dir, n_buckets):
+    build_segment_index(spark, corpus, index_dir, n_buckets=n_buckets,
+                        hot_df=8, block_size=16)
+    return SegmentIndex.open(spark, index_dir)
+
+
 @pytest.fixture(scope="module")
-def built(spark, corpus_df, corpus_pdf):
+def built(spark, corpus_df, corpus_pdf, tmp_path_factory):
     ids = with_doc_id(corpus_df)
-    index = InvertedIndex.build(ids)
+    index = _segment_index(spark, ids, str(tmp_path_factory.mktemp("rank")),
+                           n_buckets=4)
     id_map = ids.select("repo", "path", "commit", "doc_id").toPandas()
     oracle_docs = corpus_pdf.merge(id_map, on=["repo", "path", "commit"])
     oracle = OracleIndex.build(oracle_docs, id_col="doc_id", text_col="content")
@@ -87,17 +97,24 @@ def test_query_classes_resolve_correctly(built, queries_df, queries_pdf):
             )
 
 
-def test_rank_stable_across_partitioning(spark, built, queries_df):
-    """Partition count must not change results (determinism contract,
-    SURVEY §7 hard part (a))."""
-    import dataclasses
-
+def test_rank_stable_across_partitioning(spark, built, corpus_df,
+                                        queries_df, tmp_path):
+    """The index's bucket count (how its postings are partitioned on
+    disk and across tasks) must not change results (determinism
+    contract, SURVEY §7 hard part (a))."""
     index, _, _ = built
-    a = bm25_topk(index, queries_df, k=K).orderBy("query_id", "rank").toPandas()
-    idx13 = dataclasses.replace(index, doc_terms=index.doc_terms.repartition(13))
-    b = bm25_topk(idx13, queries_df, k=K).orderBy("query_id", "rank").toPandas()
-    assert list(a["doc_id"]) == list(b["doc_id"])
-    assert list(a["rank"]) == list(b["rank"])
+    idx13 = _segment_index(spark, with_doc_id(corpus_df),
+                           str(tmp_path / "b13"), n_buckets=13)
+
+    def ranked(idx):
+        return [
+            (r["query_id"], r["rank"], r["doc_id"])
+            for r in bm25_topk(idx, queries_df, k=K)
+            .orderBy("query_id", "rank").collect()
+        ]
+
+    a = ranked(index)
+    assert a and ranked(idx13) == a
 
 
 def test_compat_mode_diverges_from_engine_mode(spark):

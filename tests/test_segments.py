@@ -1,4 +1,4 @@
-"""Segment index: build → query equals the v1 DataFrame engine;
+"""Segment index: build → query equals the single-node oracle;
 interrupted builds resume without recomputation; hot-term salting
 produces ordered, disjoint blocks (SURVEY §5.3 resume test, §7.4)."""
 
@@ -7,12 +7,19 @@ from __future__ import annotations
 import json
 import math
 import os
+from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import functions as F
 
+from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.bm25 import (
+    score_py,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.tokenize import (
+    tokenize_py,
+)
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
-    InvertedIndex,
     with_doc_id,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
@@ -24,8 +31,62 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
     bm25_topk,
 )
+from shazam_an_industrial_strength_audio_search_algorithm__spark.oracle import (
+    OracleIndex,
+    oracle_topk_frame,
+)
 
 K = 10
+
+
+def _oracle(corpus) -> OracleIndex:
+    """The single-node oracle over ``corpus`` (doc_id, content)."""
+    idx = OracleIndex()
+    for r in corpus.select("doc_id", "content").collect():
+        idx.add(int(r["doc_id"]), r["content"])
+    return idx
+
+
+def _oracle_topk_micro(oracle: OracleIndex, queries_pdf, k: int) -> list:
+    """The registry's top-k in integer micro units: each per-term
+    contribution rounded half-up to 1e-6 before the sum, ranked
+    (score_micro DESC, doc_id ASC) — as (query_id, rank, doc_id,
+    score_micro, matched_terms) tuples."""
+    rows = []
+    for _, q in queries_pdf.iterrows():
+        terms = sorted(set(tokenize_py(q["text"])))
+        scored = []
+        for doc, matched in oracle.candidates(terms).items():
+            micro = 0
+            for t in terms:
+                docs = oracle.postings.get(t, {})
+                if doc in docs:
+                    contrib = score_py(docs[doc], len(docs),
+                                       oracle.doc_len[doc], oracle.n_docs,
+                                       oracle.avgdl)
+                    micro += int(Decimal(contrib * 1_000_000.0).quantize(
+                        Decimal(1), rounding=ROUND_HALF_UP))
+            scored.append((-micro, doc, matched))
+        scored.sort()
+        rows += [(q["query_id"], rank, doc, -neg, matched)
+                 for rank, (neg, doc, matched) in enumerate(scored[:k], 1)]
+    return rows
+
+
+def _segments_fingerprint(spark, index_dir):
+    """Every encoded block (payload bytes included) plus the snapshot
+    stats that feed scoring."""
+    idx = SegmentIndex.open(spark, index_dir)
+    blocks = sorted(
+        (r["bucket"], r["term"], r["salt"], r["block_seq"], r["df"],
+         r["n_docs"], bytes(r["payload"]).hex())
+        for r in idx.segments(None).select(
+            "bucket", "term", "salt", "block_seq", "df", "n_docs",
+            "payload",
+        ).collect()
+    )
+    snap = idx.snapshot
+    return blocks, (snap["n_docs"], snap.get("sum_dl"), snap["avgdl"])
 
 
 @pytest.fixture(scope="module")
@@ -63,29 +124,34 @@ SCHEMAS = {
 
 
 def test_segment_topk_equals_dataframe_engine(spark, built, index_dir,
-                                              queries_df):
-    """Both index kinds through the one spine, in both score units:
-    same rows, same output schema."""
+                                              queries_df, queries_pdf):
+    """``segment_topk`` and the bare spine over the segment index, in
+    both score units: the oracle's rows, the same output schema."""
     corpus, _ = built
     seg = SegmentIndex.open(spark, index_dir)
-    v1 = InvertedIndex.build(corpus)
+    oracle = _oracle(corpus)
     for micro in (False, True):
         got_df = segment_topk(seg, queries_df, k=K, micro=micro)
-        want_df = bm25_topk(v1, queries_df, k=K, micro=micro)
+        spine_df = bm25_topk(seg, queries_df, k=K, micro=micro)
         assert got_df.schema.simpleString() == SCHEMAS[micro]
-        assert want_df.schema.simpleString() == SCHEMAS[micro]
+        assert spine_df.schema.simpleString() == SCHEMAS[micro]
         got = got_df.orderBy("query_id", "rank").collect()
-        want = want_df.orderBy("query_id", "rank").collect()
-        assert len(got) == len(want)
+        assert spine_df.orderBy("query_id", "rank").collect() == got
         if micro:
             # integer units: exact equality, row for row
-            assert got == want
+            want = _oracle_topk_micro(oracle, queries_pdf, K)
+            assert [tuple(r) for r in got] == want
             continue
-        for g, w in zip(got, want):
+        want = oracle_topk_frame(oracle, queries_pdf, k=K)
+        assert len(got) == len(want) > 0
+        text = dict(zip(queries_pdf["query_id"], queries_pdf["text"]))
+        for g, (_, w) in zip(got, want.iterrows()):
             assert (g["query_id"], g["rank"], g["doc_id"]) == (
                 w["query_id"], w["rank"], w["doc_id"],
             )
             assert math.isclose(g["score"], w["score"], rel_tol=1e-9)
+            matched = oracle.candidates(tokenize_py(text[g["query_id"]]))
+            assert g["matched_terms"] == matched[g["doc_id"]]
 
 
 def test_blocks_are_salted_ordered_disjoint(spark, built, index_dir):
@@ -144,17 +210,22 @@ def test_interrupted_build_resumes_without_recompute(spark, corpus_df, queries_d
     for b in (0, 1):  # committed buckets untouched
         assert os.path.getmtime(f"{d}/manifests/init/bucket_{b}.json") == mtimes[b]
 
-    seg = SegmentIndex.open(spark, d)
-    got = segment_topk(seg, queries_df, k=K).orderBy("query_id", "rank").collect()
-    want = (
-        bm25_topk(InvertedIndex.build(corpus), queries_df, k=K)
-        .orderBy("query_id", "rank")
-        .collect()
-    )
-    assert [(g["query_id"], g["rank"], g["doc_id"]) for g in got] == [
-        (w["query_id"], w["rank"], w["doc_id"]) for w in want
-    ]
+    # the resumed index equals a one-shot build: every block
+    # byte-identical, the same stats, the same micro-unit top-k
+    one = str(tmp_path / "one_shot_idx")
+    build_segment_index(spark, corpus, one, n_buckets=4, hot_df=8,
+                        block_size=16)
+    assert _segments_fingerprint(spark, d) == _segments_fingerprint(spark, one)
+
+    def topk(index_dir):
+        return segment_topk(SegmentIndex.open(spark, index_dir), queries_df,
+                            k=K, micro=True).orderBy("query_id", "rank")\
+            .collect()
+
+    got = topk(d)
+    assert got and got == topk(one)
     drop_index(d)
+    drop_index(one)
 
 
 def test_resume_verify_inputs_rebuilds_tampered_bucket(spark, corpus_df, tmp_path):
@@ -244,10 +315,11 @@ def test_positions_requested_without_stored_positions_raise(spark, built,
 
 def test_positions_roundtrip_through_segments(spark, corpus_df, tmp_path):
     """store_positions=True: per-doc occurrence offsets survive the
-    persisted doc_terms exactly (segment postings == v1 doc_terms),
-    and the positional verifier gives identical answers on both
-    paths. The positions-free BM25 read of the same index returns
-    the same postings."""
+    persisted doc_terms exactly (segment postings == the oracle's
+    positions), and the positional verifier gives the oracle's
+    answers from the query terms' postings and from the full
+    ``merged_doc_terms`` scan. The positions-free BM25 read of the
+    same index returns the same postings."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.positional import (
         positional_verify,
         query_term_positions,
@@ -258,7 +330,7 @@ def test_positions_roundtrip_through_segments(spark, corpus_df, tmp_path):
     build_segment_index(spark, corpus, d, n_buckets=4, hot_df=8,
                         block_size=16, store_positions=True)
     seg = SegmentIndex.open(spark, d)
-    v1 = InvertedIndex.build(corpus, text_col="content")
+    oracle = _oracle(corpus)
 
     queries = spark.createDataFrame(
         [("q0", "tok0001 tok0002"), ("q1", "uniq00003doc tok0004 tok0001")],
@@ -274,20 +346,32 @@ def test_positions_roundtrip_through_segments(spark, corpus_df, tmp_path):
     }
     qterms = [r["term"] for r in qtp.select("term").distinct().collect()]
     want = {
-        (r["term"], r["doc_id"]): list(r["positions"])
-        for r in v1.doc_terms.filter(F.col("term").isin(qterms)).collect()
+        (t, doc): ps
+        for t in qterms
+        for doc, ps in oracle.positions.get(t, {}).items()
     }
     assert got == want and len(got) > 0
 
-    # positional_verify parity: persisted path == v1 path
-    pv_seg = positional_verify(
-        seg.postings_for_query_terms(qtp, with_positions=True), queries
-    )
-    pv_v1 = positional_verify(v1.doc_terms, queries)
+    # positional_verify parity: the offset-histogram vote recomputed
+    # from the oracle's positions (ties on the smallest delta)
+    votes: Counter = Counter()
+    for r in qtp.collect():
+        for doc, ps in oracle.positions.get(r["term"], {}).items():
+            for p in ps:
+                votes[(r["query_id"], doc, p - r["qpos"])] += 1
+    best: dict = {}
+    for (qid, doc, delta), n in sorted(votes.items()):
+        if n > best.get((qid, doc), (None, 0))[1]:
+            best[(qid, doc)] = (delta, n)
     key = lambda r: (r["query_id"], r["doc_id"])  # noqa: E731
-    a = {key(r): (r["best_delta"], r["aligned_count"]) for r in pv_seg.collect()}
-    b = {key(r): (r["best_delta"], r["aligned_count"]) for r in pv_v1.collect()}
-    assert a == b and len(a) > 0
+    for postings in (
+        seg.postings_for_query_terms(qtp, with_positions=True),
+        seg.merged_doc_terms(),
+    ):
+        pv = positional_verify(postings, queries).collect()
+        assert {key(r): (r["best_delta"], r["aligned_count"])
+                for r in pv} == best
+    assert len(best) > 0
 
     # positions-free decode of the same blocks still works (BM25 path)
     n = seg.postings_for_query_terms(qtp).count()
