@@ -138,7 +138,7 @@ def cmd_build(args) -> None:
         })
         return
     idx = SegmentIndex.open(spark, args.index)  # commit sanity check
-    tot = {"n_postings": 0, "n_terms": 0, "n_blocks": 0}
+    tot = {"n_postings": 0, "n_terms": 0}
     import glob as _glob
 
     for mp in _glob.glob(f"{args.index}/manifests/init/bucket_*.json"):

@@ -1,4 +1,4 @@
-"""Incremental index maintenance: upsert / delete / restore.
+"""Incremental index maintenance: upsert / delete / compact / restore.
 
 Reference parity (``utils/Hashing_update.py``, SURVEY §3.3):
 
@@ -13,24 +13,35 @@ Reference parity (``utils/Hashing_update.py``, SURVEY §3.3):
   bucket is inherited by path; ``restore()`` is a CURRENT-pointer
   flip (the reference's manual backup restore, for free).
 
+Every update stages its batch the same way: the removed doc ids, the
+added docs' doc_terms (partitioned by bucket) and their doc_lens, with
+n_docs / avgdl from exact integer accounting. A delta-mode update
+commits that staging as a new layer (merge-on-read). A rebuild-mode
+update is the compaction merge applied to the staged batch: the
+would-be layered snapshot goes through ``_merge`` — the one
+copy-on-write path, ``compact()``'s merge (the reference's
+``Combine.py:55-62`` consolidation) — which rewrites the touched
+buckets into one generation.
+
 Scale analysis: an update touching D docs with T distinct terms
 rebuilds only the buckets those terms hash into — work is
 O(postings in affected buckets), not O(index). The removed-docs
 probe is a predicate-pushed scan of ``doc_terms`` (at 10^12 scale
 you'd add a doc_id bloom per file; the dataflow is unchanged).
-Global stats (n_docs, avgdl) are recomputed from the incrementally
-maintained doc_lens table and stored in the snapshot; stored
-block bounds stay safe because WAND recomputes bounds from raw
-(max_tf, min_dl) under the current avgdl (see segments.py).
+Stored block bounds stay safe under a changed avgdl because WAND
+recomputes bounds from raw (max_tf, min_dl) (see segments.py).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
@@ -43,30 +54,34 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
     SegmentIndex,
     _atomic_write_json,
+    _next_commit_version,
     _read_current,
     _write_current,
     as_doc_terms,
+    auto_block_size,
+    auto_n_buckets,
     bucket_col,
     build_buckets_batch,
     read_snapshot,
 )
 
+# snapshot fields an update or a compaction inherits from its base
+_LAYOUT_KEYS = ("n_buckets", "block_size", "hot_df", "max_salt_bits",
+                "store_positions")
 
-def _next_version(index_dir: str, base_version: int) -> int:
-    """Smallest version above EVERY existing snapshot, not just the
-    base: after restore() the base may be an old snapshot while newer
-    ones are still retained — reusing their version would overwrite
-    data generations those snapshots reference (static overwrites of
-    dt/removed staging + dynamic overwrites of seg partitions), i.e.
-    silently corrupt retained history."""
-    versions = [base_version]
-    sdir = f"{index_dir}/snapshots"
-    if os.path.isdir(sdir):
-        versions += [
-            int(n[1:-5]) for n in os.listdir(sdir)
-            if n.startswith("v") and n.endswith(".json")
-        ]
-    return max(versions) + 1
+
+def _resumed_params(mdir: str, resume: bool) -> dict | None:
+    """The generation's params.json when resuming past its phase A."""
+    path = f"{mdir}/params.json"
+    if resume and os.path.exists(path):
+        with open(path) as f:
+            return json.load(f)
+    return None
+
+
+def _bucket_paths(gen_root: str, gen: str, b: int) -> dict:
+    return {"doc_terms": f"data/{gen_root}/bucket={b}",
+            "segments": f"data/seg_{gen}/bucket={b}"}
 
 
 @dataclass
@@ -97,21 +112,25 @@ def apply_updates(
     ``delete_keys``: rows with (repo, path, commit); missing keys are
     silently skipped. Resumable per affected bucket, like the build.
 
+    Both modes stage the batch alike: the removed doc ids, the added
+    docs' doc_terms partitioned by bucket, and their doc_lens.
     ``mode`` picks the write-amplification trade (the Iceberg
     copy-on-write vs merge-on-read split):
 
-    - ``"rebuild"`` (copy-on-write): every bucket any touched term
-      hashes into is re-encoded whole. Queries stay single-layer
-      (WAND-ready), but a 10-doc update rewrites multi-GB buckets at
-      10^12-file scale.
-    - ``"delta"`` (merge-on-read): the update writes ONLY its own
-      postings as a new delta layer plus a doc-id tombstone set —
-      write cost O(delta), zero base rewrites. Readers resolve
-      layers at query time (``SegmentIndex._postings``:
+    - ``"rebuild"`` (copy-on-write): the compaction merge applied to
+      the staged batch — the base plus the staged layer, held in
+      memory and never committed, is merged by ``compact()``'s
+      ``_merge``: every bucket a staged posting or a removed doc
+      touches is re-encoded whole, and one layer-free snapshot
+      commits. Queries stay single-layer (WAND-ready), but a 10-doc
+      update rewrites multi-GB buckets at 10^12-file scale.
+    - ``"delta"`` (merge-on-read): the staging IS the new layer — the
+      update's postings are encoded as a small layer beside a doc-id
+      tombstone set, write cost O(delta), zero base rewrites. Readers
+      resolve layers at query time (``SegmentIndex._postings``:
       tombstone supersession + exact df recompute over query-term
-      postings); ``maintenance.compact()`` later multi-way-merges
-      the layers back to one generation (Lucene segment-merge
-      analog, the reference's ``Combine.py:55-62`` consolidation).
+      postings); ``compact()`` later merges the layers back to one
+      generation.
 
     ``auto_compact``: a ``CompactionPolicy`` — after this update
     commits, ``maybe_compact`` runs under it, so a continuously
@@ -124,343 +143,106 @@ def apply_updates(
     base = SegmentIndex.open(spark, index_dir)
     if mode == "rebuild" and base.has_deltas:
         raise ValueError(
-            "rebuild-mode update on a layered snapshot would read "
-            "unresolved doc_terms — run compact() first, or keep using "
-            "mode='delta'"
+            "rebuild-mode updates apply to a single-layer snapshot — "
+            "run compact() first, or keep using mode='delta'"
         )
-    new_version = _next_version(index_dir, base.version)
+    new_version = _next_commit_version(index_dir)
     gen = f"u{new_version}"
     mdir = f"{index_dir}/manifests/{gen}"
     os.makedirs(mdir, exist_ok=True)
-    params_path = f"{mdir}/params.json"
+    # delta mode stages straight into its layer's dt_/dl_ dirs; rebuild
+    # mode stages beside them, since its merge writes dt_/dl_
+    if mode == "delta":
+        dt_root, dl_rel = f"dt_{gen}", f"data/dl_{gen}"
+    else:
+        dt_root, dl_rel = f"dtdelta_{gen}", f"data/dldelta_{gen}"
+    removed_rel = f"data/removed_{gen}"
 
-    dtdelta_path = f"{index_dir}/data/dtdelta_{gen}"
-    removed_path = f"{index_dir}/data/removed_{gen}"
-    dl_path = f"{index_dir}/data/dl_{gen}"
-
-    phase_a_done = resume and os.path.exists(params_path)
-    if not phase_a_done:
-        # --- doc ids being replaced or deleted -------------------------
-        # explicit_ids: the caller's rows already carry a stable
-        # ``doc_id`` (an index built with an explicit id_col — e.g.
-        # the driver corpus's own ids); hash mode derives it from the
-        # natural key, matching with_doc_id-built indexes
-        removed_parts = []
-        if delete_keys is not None:
-            removed_parts.append(
-                delete_keys.select("doc_id") if explicit_ids
-                else with_doc_id(delete_keys.select(*KEY_COLS))
-                .select("doc_id")
+    params = _resumed_params(mdir, resume)
+    if params is not None:
+        if params.get("mode", "rebuild") != mode:
+            raise ValueError(
+                f"resuming update {gen} with mode={mode!r} but it was "
+                f"started with mode={params.get('mode', 'rebuild')!r}"
             )
-        if add_corpus is not None:
-            # assume_unique: trusted pre-deduped batches (streaming
-            # ingest dedupes per micro-batch) skip the per-batch
-            # uniqueness probe job (round-3 advice)
-            add_corpus = dedup_last_wins(add_corpus,
-                                         assume_unique=assume_unique)
-            if not explicit_ids:
-                add_corpus = with_doc_id(add_corpus)
-            elif "doc_id" not in add_corpus.columns:
-                raise ValueError(
-                    "explicit_ids=True requires a doc_id column on "
-                    "add_corpus"
-                )
-            # overwrite-by-key: any incoming doc_id that already exists
-            removed_parts.append(
-                add_corpus.select("doc_id").join(
-                    base.doc_lens().select("doc_id"), "doc_id", "left_semi"
-                )
-            )
-        removed = None
-        rem_obs = None
-        if removed_parts:
-            removed = removed_parts[0]
-            for p in removed_parts[1:]:
-                removed = removed.unionByName(p)
-            removed = removed.distinct()
-            if mode == "delta":
-                # the delta-mode stats accounting needs (n, Σdoc_len)
-                # of the removed docs actually alive — ride the
-                # removed write as an Observation over a doc_lens left
-                # join (count of non-null dl ≡ the alive semi-join)
-                # instead of re-reading the just-written parquet in a
-                # separate aggregation job
-                from pyspark.sql import Observation
-
-                rem_obs = Observation(f"rem_{gen}")
-                removed = (
-                    removed.join(
-                        base.doc_lens().select("doc_id", "doc_len"),
-                        "doc_id", "left",
-                    )
-                    .observe(rem_obs,
-                             F.count("doc_len").alias("n"),
-                             F.sum("doc_len").alias("s"))
-                )
-            removed.select("doc_id").write.mode("overwrite")\
-                .parquet(removed_path)
-
-        # --- delta doc_terms for added docs (schema must match the
-        # base snapshot's doc_terms: positions present or not) --------
-        has_delta_rows = False
-        stage = None
-        if add_corpus is not None:
-            from pyspark import StorageLevel
-
-            store_pos = base.snapshot.get("store_positions", False)
-            # ONE tokenize pass for the whole update (the build's
-            # phase-A contract applied to deltas): the persisted stage
-            # feeds the delta doc_terms explode below AND the doc_lens
-            # projection further down
-            stage = doc_term_stage(
-                add_corpus, with_positions=store_pos,
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            delta = as_doc_terms(
-                explode_doc_terms(stage, with_positions=store_pos)
-                .withColumn("bucket", bucket_col(F.col("term"), base.n_buckets)),
-                store_pos,
-            )
-            delta_read_path = (
-                f"{index_dir}/data/dt_{gen}" if mode == "delta"
-                else dtdelta_path
-            )
-            if mode == "delta":
-                # the delta IS this generation's doc_terms: partition
-                # by bucket so the layer's bucket→path map prunes
-                (
-                    delta.write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(delta_read_path)
-                )
-            else:
-                delta.write.mode("overwrite").parquet(dtdelta_path)
-            # a batch whose docs all tokenize to empty produces ZERO
-            # part files (partitionBy writes none for 0 rows) — reading
-            # that back would fail schema inference. Legitimate input
-            # (e.g. binary/whitespace files): record a no-op/delete-only
-            # update instead of crashing.
-            has_delta_rows = any(
-                f.endswith(".parquet")
-                for _, _, files in os.walk(delta_read_path)
-                for f in files
-            )
-
-        # --- affected buckets ------------------------------------------
-        affected = set()
-        if has_delta_rows:
-            if mode == "delta":
-                # the partitioned write just materialized one
-                # ``bucket=K`` dir per affected bucket — read the
-                # answer off the directory names instead of running a
-                # distinct-aggregation job over the delta parquet
-                affected.update(
-                    int(name.split("=", 1)[1])
-                    for name in os.listdir(delta_read_path)
-                    if name.startswith("bucket=")
-                )
-            else:
-                affected.update(
-                    r["bucket"]
-                    for r in spark.read.parquet(delta_read_path)
-                    .select("bucket").distinct().collect()
-                )
-        if removed is not None and mode == "rebuild":
-            # delta mode never touches base buckets — deletes are
-            # tombstones applied at read; removal-affected buckets
-            # matter only to compaction
-            removed_ids = spark.read.parquet(removed_path)
-            affected.update(
-                r["bucket"]
-                for r in base.doc_terms()
-                .join(F.broadcast(removed_ids), "doc_id", "left_semi")
-                .select("bucket").distinct().collect()
-            )
-        affected = sorted(affected)
-
-        # --- doc_lens + global stats -----------------------------------
-        # narrow off the persisted tokenize stage (doc_len = Σtf, the
-        # same total-token count) — no second tokenizer pass
-        new_dl = None
-        if stage is not None:
-            new_dl = (
-                stage.select("doc_id", "doc_len")
-                .filter(F.col("doc_len") > 0)
-            )
-        if mode == "rebuild":
-            dl = base.doc_lens()
-            if removed is not None:
-                dl = dl.join(
-                    F.broadcast(spark.read.parquet(removed_path)),
-                    "doc_id", "left_anti",
-                )
-            if new_dl is not None:
-                dl = dl.unionByName(new_dl)
-            # n/sum ride the write job as an Observation — the
-            # read-back aggregation was a whole extra job for two
-            # scalars the writer already streams past
-            from pyspark.sql import Observation
-
-            obs = Observation(f"dl_{gen}")
-            dl.observe(
-                obs, F.count(F.lit(1)).alias("n"),
-                F.sum("doc_len").alias("s"),
-            ).write.mode("overwrite").parquet(dl_path)
-            row = obs.get
-            n_docs_new = int(row["n"] or 0)
-            sum_dl_new = int(row["s"] or 0)
-        else:
-            # delta: write ONLY the added docs' lens; update stats by
-            # exact incremental accounting — the full doc_lens table
-            # is never rewritten (it would be the one remaining
-            # O(index) write in an otherwise O(delta) update)
-            base_sum = base.snapshot.get("sum_dl")
-            base_n = base.n_docs
-            if base_sum is None:  # pre-sum_dl snapshot: one-time scan
-                row = base.doc_lens().agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("doc_len").alias("s"),
-                ).collect()[0]
-                base_n, base_sum = int(row["n"] or 0), int(row["s"] or 0)
-            rem_n = rem_sum = 0
-            if removed is not None:
-                # dl of the docs actually alive among the removed set
-                # (ghost delete keys have no doc_lens row and count 0)
-                # — captured by the Observation on the removed write
-                row = rem_obs.get
-                rem_n, rem_sum = int(row["n"] or 0), int(row["s"] or 0)
-            add_n = add_sum = 0
-            if new_dl is not None:
-                # n/sum ride the write job as an Observation (one job,
-                # not count-then-write); an all-empty batch's dir is
-                # dropped after the fact so no schema-less/0-row delta
-                # scan ever attaches to the layer
-                from pyspark.sql import Observation
-
-                obs = Observation(f"dl_delta_{gen}")
-                new_dl.observe(
-                    obs, F.count(F.lit(1)).alias("n"),
-                    F.sum("doc_len").alias("s"),
-                ).write.mode("overwrite").parquet(dl_path)
-                row = obs.get
-                add_n, add_sum = int(row["n"] or 0), int(row["s"] or 0)
-                if add_n == 0:
-                    import shutil as _shutil
-
-                    _shutil.rmtree(dl_path, ignore_errors=True)
-                    new_dl = None
-            n_docs_new = base_n - rem_n + add_n
-            sum_dl_new = base_sum - rem_sum + add_sum
-        _atomic_write_json(
-            params_path,
-            {
-                "base_version": base.version,
-                "n_docs": n_docs_new,
-                "sum_dl": sum_dl_new,
-                "avgdl": (sum_dl_new / n_docs_new) if n_docs_new else 0.0,
-                "affected_buckets": affected,
-                "has_removed": removed is not None,
-                "has_delta": bool(has_delta_rows),
-                "has_dl_delta": bool(new_dl is not None),
-                "mode": mode,
-            },
+        base = SegmentIndex.open(spark, index_dir, params["base_version"])
+        staging = params
+    else:
+        staging, removed_ids = _stage_batch(
+            spark, base, gen, add_corpus, delete_keys, assume_unique,
+            explicit_ids, f"{index_dir}/data/{dt_root}",
+            f"{index_dir}/{dl_rel}", f"{index_dir}/{removed_rel}",
+            keep_removed_ids=mode == "rebuild",
         )
-        if stage is not None:
-            stage.unpersist()
-    params = json.load(open(params_path))
-    if params.get("mode", "rebuild") != mode:
-        raise ValueError(
-            f"resuming update {gen} with mode={mode!r} but it was "
-            f"started with mode={params.get('mode', 'rebuild')!r}"
-        )
-    affected = params["affected_buckets"]
-    n_docs, avgdl = params["n_docs"], params["avgdl"]
-    base_snap = read_snapshot(index_dir, params["base_version"])
+        staging["mode"] = mode
+        if mode == "delta":
+            _atomic_write_json(f"{mdir}/params.json", staging)
 
-    skipped = [
-        b for b in affected
-        if resume and os.path.exists(f"{mdir}/bucket_{b}.json")
-    ]
-    built = [b for b in affected if b not in skipped]
-    if built and mode == "rebuild":
-        # updated doc_terms for the batch = old minus removed + delta,
-        # written partitionBy(bucket) in one job
-        dt = base.doc_terms(built)
-        if params["has_removed"]:
-            dt = dt.join(
-                F.broadcast(spark.read.parquet(removed_path)),
-                "doc_id", "left_anti",
+    layer = {
+        "gen": gen,
+        "buckets": {
+            str(b): _bucket_paths(dt_root, gen, b)
+            for b in staging["layer_buckets"]
+        },
+    }
+    if staging["has_removed"]:
+        layer["tombstones"] = removed_rel
+    if staging["has_dl_delta"]:
+        layer["doc_lens_delta"] = dl_rel
+    snapshot = {
+        **{k: base.snapshot.get(k, False) for k in _LAYOUT_KEYS},
+        "n_docs": staging["n_docs"],
+        "sum_dl": staging["sum_dl"],
+        "avgdl": staging["avgdl"],
+        "doc_lens": base.snapshot["doc_lens"],
+        "buckets": base.snapshot["buckets"],
+        "layers": base.layers + [layer],
+    }
+
+    if mode == "rebuild":
+        layered = SegmentIndex(spark, index_dir,
+                               {**snapshot, "version": base.version})
+        if params is None:
+            # the staged layer's tombstones are exactly the removed ids
+            # the staging observed: hand them to the merge instead of
+            # re-reading the parquet just written
+            layered._tomb["arrays"] = None if removed_ids is None else (
+                removed_ids,
+                np.full(len(removed_ids), len(layered.layers), np.int64),
             )
-        if params["has_delta"]:
-            dt = dt.unionByName(
-                spark.read.parquet(dtdelta_path)
-                .filter(F.col("bucket").isin(built))
-                .select(*dt.columns)
-            )
-        (
-            dt.repartition(max(1, len(built)), "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(f"{index_dir}/data/dt_{gen}")
+        merge = _merge(
+            spark, layered, gen, new_version,
+            {"operation": "update_rebuild"},
+            params=params, staging=staging,
         )
-    if built:
-        # delta mode: dt_{gen} already holds exactly this update's
-        # postings — encode them as a new (small) layer, zero base IO
+        version, affected = merge.snapshot_version, merge.affected_buckets
+        built, skipped = merge.built_buckets, merge.skipped_buckets
+    else:
+        affected = staging["layer_buckets"]
+        skipped = [
+            b for b in affected
+            if params is not None and os.path.exists(f"{mdir}/bucket_{b}.json")
+        ]
+        built = [b for b in affected if b not in skipped]
+        # dt_{gen} holds exactly this update's postings — encode them as
+        # a new (small) layer, zero base IO
         build_buckets_batch(
             spark, index_dir, gen, built,
-            dt_path=f"{index_dir}/data/dt_{gen}",
-            avgdl=avgdl, n_docs=n_docs,
-            hot_df=base_snap["hot_df"],
-            max_salt_bits=base_snap["max_salt_bits"],
-            block_size=base_snap["block_size"],
+            dt_path=f"{index_dir}/data/{dt_root}",
+            avgdl=snapshot["avgdl"], n_docs=snapshot["n_docs"],
+            hot_df=snapshot["hot_df"],
+            max_salt_bits=snapshot["max_salt_bits"],
+            block_size=snapshot["block_size"],
         )
-
-    done = all(
-        os.path.exists(f"{mdir}/bucket_{b}.json") for b in affected
-    )
-    version = None
-    if done:
-        version = new_version
-        gen_map = {
-            str(b): {
-                "doc_terms": f"data/dt_{gen}/bucket={b}",
-                "segments": f"data/seg_{gen}/bucket={b}",
-            }
-            for b in affected
-        }
-        if mode == "rebuild":
-            buckets_map = dict(base_snap["buckets"])
-            buckets_map.update(gen_map)
-            layers = base_snap.get("layers") or []
-            doc_lens_rel = f"data/dl_{gen}"
-        else:
-            buckets_map = dict(base_snap["buckets"])
-            layer = {"gen": gen, "buckets": gen_map}
-            if params["has_removed"]:
-                layer["tombstones"] = f"data/removed_{gen}"
-            if params.get("has_dl_delta"):
-                layer["doc_lens_delta"] = f"data/dl_{gen}"
-            layers = (base_snap.get("layers") or []) + [layer]
-            doc_lens_rel = base_snap["doc_lens"]  # never rewritten
-        _atomic_write_json(
-            f"{index_dir}/snapshots/v{version}.json",
-            {
-                "n_docs": n_docs,
-                "sum_dl": params.get("sum_dl"),
-                "avgdl": avgdl,
-                "n_buckets": base_snap["n_buckets"],
-                "block_size": base_snap["block_size"],
-                "hot_df": base_snap["hot_df"],
-                "max_salt_bits": base_snap["max_salt_bits"],
-                "store_positions": base_snap.get("store_positions", False),
-                "doc_lens": doc_lens_rel,
-                "buckets": buckets_map,
-                "layers": layers,
-                "parent": params["base_version"],
-                "operation": f"update_{mode}",
-            },
-        )
-        _write_current(index_dir, version)
+        version = None
+        if all(os.path.exists(f"{mdir}/bucket_{b}.json") for b in affected):
+            version = new_version
+            _atomic_write_json(
+                f"{index_dir}/snapshots/v{version}.json",
+                {**snapshot, "parent": base.version,
+                 "operation": "update_delta"},
+            )
+            _write_current(index_dir, version)
     if version is not None and auto_compact is not None:
         report = maybe_compact(spark, index_dir, auto_compact)
         if report is not None and report.snapshot_version is not None:
@@ -470,9 +252,139 @@ def apply_updates(
         affected_buckets=affected,
         built_buckets=built,
         skipped_buckets=skipped,
-        n_docs=n_docs,
-        avgdl=avgdl,
+        n_docs=staging["n_docs"],
+        avgdl=staging["avgdl"],
     )
+
+
+def _stage_batch(spark, base, gen, add_corpus, delete_keys, assume_unique,
+                 explicit_ids, dt_path, dl_path, removed_path,
+                 keep_removed_ids) -> tuple[dict, np.ndarray | None]:
+    """Phase A of an update: write the batch's removed doc ids, its
+    doc_terms ``partitionBy("bucket")`` and its docs' lens. Returns the
+    staging params — the new (n_docs, sum_dl, avgdl) by exact integer
+    accounting and the buckets the staged doc_terms touch — and, with
+    ``keep_removed_ids``, the sorted removed ids (None when there are
+    none), observed on their write."""
+    # --- doc ids being replaced or deleted -----------------------------
+    # explicit_ids: the caller's rows already carry a stable ``doc_id``
+    # (an index built with an explicit id_col — e.g. the driver
+    # corpus's own ids); hash mode derives it from the natural key,
+    # matching with_doc_id-built indexes
+    removed_parts = []
+    if delete_keys is not None:
+        removed_parts.append(
+            delete_keys.select("doc_id") if explicit_ids
+            else with_doc_id(delete_keys.select(*KEY_COLS)).select("doc_id")
+        )
+    if add_corpus is not None:
+        # assume_unique: trusted pre-deduped batches (streaming ingest
+        # dedupes per micro-batch) skip the per-batch uniqueness probe
+        # job (round-3 advice)
+        add_corpus = dedup_last_wins(add_corpus, assume_unique=assume_unique)
+        if not explicit_ids:
+            add_corpus = with_doc_id(add_corpus)
+        elif "doc_id" not in add_corpus.columns:
+            raise ValueError(
+                "explicit_ids=True requires a doc_id column on add_corpus"
+            )
+        # overwrite-by-key: any incoming doc_id that already exists
+        removed_parts.append(
+            add_corpus.select("doc_id").join(
+                base.doc_lens().select("doc_id"), "doc_id", "left_semi"
+            )
+        )
+    rem_n = rem_sum = 0
+    removed_ids = None
+    if removed_parts:
+        removed = removed_parts[0]
+        for p in removed_parts[1:]:
+            removed = removed.unionByName(p)
+        # (n, Σdoc_len) of the removed docs actually alive (ghost delete
+        # keys have no doc_lens row and count 0) ride the removed write
+        # as an Observation over a doc_lens left join — count of
+        # non-null dl ≡ the alive semi-join — instead of re-reading the
+        # just-written parquet in a separate aggregation job
+        rem_obs = Observation(f"rem_{gen}")
+        metrics = [F.count("doc_len").alias("n"), F.sum("doc_len").alias("s")]
+        if keep_removed_ids:
+            metrics.append(F.collect_set("doc_id").alias("ids"))
+        (
+            removed.distinct()
+            .join(base.doc_lens().select("doc_id", "doc_len"), "doc_id", "left")
+            .observe(rem_obs, *metrics)
+            .select("doc_id")
+            .write.mode("overwrite").parquet(removed_path)
+        )
+        row = rem_obs.get
+        rem_n, rem_sum = int(row["n"] or 0), int(row["s"] or 0)
+        if keep_removed_ids and row["ids"]:
+            removed_ids = np.sort(np.asarray(row["ids"], np.int64))
+
+    # --- staged doc_terms + doc_lens of the added docs (schema must
+    # match the base snapshot's doc_terms: positions present or not) ---
+    layer_buckets: list[int] = []
+    add_n = add_sum = 0
+    if add_corpus is not None:
+        store_pos = base.store_positions
+        # ONE tokenize pass for the whole update (the build's phase-A
+        # contract applied to deltas): the persisted stage feeds the
+        # doc_terms explode AND the doc_lens projection
+        stage = doc_term_stage(
+            add_corpus, with_positions=store_pos,
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        (
+            as_doc_terms(
+                explode_doc_terms(stage, with_positions=store_pos)
+                .withColumn("bucket", bucket_col(F.col("term"), base.n_buckets)),
+                store_pos,
+            )
+            .write.mode("overwrite").partitionBy("bucket").parquet(dt_path)
+        )
+        # the partitioned write materialized one ``bucket=K`` dir per
+        # touched bucket — read the answer off the directory names
+        # instead of running a distinct-aggregation job. A batch whose
+        # docs all tokenize to empty (binary/whitespace files) writes
+        # none: a no-op/delete-only update, not a crash.
+        layer_buckets = sorted(
+            int(name.split("=", 1)[1])
+            for name in os.listdir(dt_path) if name.startswith("bucket=")
+        )
+        # n/sum ride the write job as an Observation (one job, not
+        # count-then-write); an all-empty batch's dir is dropped after
+        # the fact so no schema-less/0-row scan ever attaches to the
+        # layer. The full doc_lens table is never rewritten here.
+        obs = Observation(f"dl_delta_{gen}")
+        (
+            stage.select("doc_id", "doc_len")
+            .filter(F.col("doc_len") > 0)
+            .observe(obs, F.count(F.lit(1)).alias("n"),
+                     F.sum("doc_len").alias("s"))
+            .write.mode("overwrite").parquet(dl_path)
+        )
+        stage.unpersist()
+        row = obs.get
+        add_n, add_sum = int(row["n"] or 0), int(row["s"] or 0)
+        if add_n == 0:
+            shutil.rmtree(dl_path, ignore_errors=True)
+
+    base_n, base_sum = base.n_docs, base.snapshot.get("sum_dl")
+    if base_sum is None:  # pre-sum_dl snapshot: one-time scan
+        row = base.doc_lens().agg(
+            F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("s"),
+        ).collect()[0]
+        base_n, base_sum = int(row["n"] or 0), int(row["s"] or 0)
+    n_docs = base_n - rem_n + add_n
+    sum_dl = base_sum - rem_sum + add_sum
+    return {
+        "base_version": base.version,
+        "n_docs": n_docs,
+        "sum_dl": sum_dl,
+        "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
+        "layer_buckets": layer_buckets,
+        "has_removed": bool(removed_parts),
+        "has_dl_delta": add_n > 0,
+    }, removed_ids
 
 
 @dataclass
@@ -482,6 +394,152 @@ class CompactReport:
     built_buckets: list[int]
     skipped_buckets: list[int]
     n_layers_merged: int
+
+
+def _merge(
+    spark: SparkSession,
+    index: SegmentIndex,
+    gen: str,
+    version: int,
+    meta: dict,
+    params: dict | None = None,
+    n_buckets: int | None = None,
+    block_size: int | None = None,
+    staging: dict | None = None,
+) -> CompactReport:
+    """The one copy-on-write merge: fold ``index``'s delta layers into
+    generation ``gen`` and commit it as layer-free snapshot ``version``
+    (with ``meta``: operation, trigger) whose parent is ``index``.
+
+    Phase A (skipped when ``params``, a resumed generation's
+    params.json, is given): the touched buckets — every layer's
+    buckets plus the base buckets holding a tombstoned doc, or all of
+    them when the layout (``n_buckets``/``block_size``, default
+    ``index``'s) changes — are read as ``merged_doc_terms`` and written
+    once as ``dt_{gen}``; doc_lens is consolidated to ``dl_{gen}`` when
+    a layer changed it; params.json (with ``staging``'s fields) is
+    written last. Phase B encodes each touched bucket, resumable per
+    bucket via its manifest."""
+    index_dir = index.index_dir
+    snap = index.snapshot
+    mdir = f"{index_dir}/manifests/{gen}"
+    os.makedirs(mdir, exist_ok=True)
+    dt_path = f"{index_dir}/data/dt_{gen}"
+    resumed = params is not None
+    if params is None:
+        n_buckets = n_buckets or snap["n_buckets"]
+        block_size = block_size or snap["block_size"]
+        rebucket = (n_buckets != snap["n_buckets"]
+                    or block_size != snap["block_size"])
+        if rebucket:
+            # re-shard: every term may move — all target buckets build
+            affected = list(range(n_buckets))
+            merged = index.merged_doc_terms(None).drop("bucket").withColumn(
+                "bucket", bucket_col(F.col("term"), n_buckets)
+            )
+        else:
+            touched = {int(b) for layer in index.layers
+                       for b in layer.get("buckets", {})}
+            tomb = index._tombstone_rows()
+            if tomb is not None:
+                # buckets whose BASE postings lost docs: probe the base
+                # generation's doc_terms (layer buckets are in already)
+                # with the tombstone frame the merge itself drops by
+                base_dt = index._scan_map("doc_terms", snap["buckets"],
+                                          strict=True)
+                if base_dt is not None:
+                    touched.update(
+                        r["bucket"]
+                        for r in base_dt.join(
+                            F.broadcast(tomb.select("doc_id")),
+                            "doc_id", "left_semi",
+                        ).select("bucket").distinct().collect()
+                    )
+            affected = sorted(touched)
+            merged = index.merged_doc_terms(affected)
+        # the merge: every generation's doc_terms minus tombstoned
+        # rows, written once as the new generation's doc_terms
+        (
+            merged
+            .repartition(max(1, len(affected)), "bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(dt_path)
+        )
+        dl_consolidated = any(
+            layer.get("doc_lens_delta") or layer.get("tombstones")
+            for layer in index.layers
+        )
+        if dl_consolidated:
+            index.doc_lens().write.mode("overwrite").parquet(
+                f"{index_dir}/data/dl_{gen}"
+            )
+        params = {
+            **(staging or {}),
+            "base_version": index.version,
+            "affected_buckets": affected,
+            "dl_consolidated": dl_consolidated,
+            "n_buckets": n_buckets,
+            "block_size": block_size,
+            "rebucket": rebucket,
+        }
+        _atomic_write_json(f"{mdir}/params.json", params)
+    # a resumed merge uses the layout it was STARTED with
+    affected = params["affected_buckets"]
+    n_buckets, block_size = params["n_buckets"], params["block_size"]
+    rebucket = params["rebucket"]
+
+    skipped = [
+        b for b in affected
+        if resumed and os.path.exists(f"{mdir}/bucket_{b}.json")
+    ]
+    built = [b for b in affected if b not in skipped]
+    build_buckets_batch(
+        spark, index_dir, gen, built,
+        dt_path=dt_path,
+        avgdl=snap["avgdl"], n_docs=snap["n_docs"],
+        hot_df=snap["hot_df"],
+        max_salt_bits=snap["max_salt_bits"],
+        block_size=block_size,
+    )
+
+    committed = None
+    if all(os.path.exists(f"{mdir}/bucket_{b}.json") for b in affected):
+        committed = version
+        # a re-shard changed every bucket's assignment: nothing
+        # inherits by path
+        buckets_map = {} if rebucket else dict(snap["buckets"])
+        for b in (range(n_buckets) if rebucket else affected):
+            buckets_map[str(b)] = _bucket_paths(f"dt_{gen}", gen, b)
+        _atomic_write_json(
+            f"{index_dir}/snapshots/v{version}.json",
+            {
+                **{k: snap.get(k, False) for k in _LAYOUT_KEYS},
+                "n_buckets": n_buckets,
+                "block_size": block_size,
+                "n_docs": snap["n_docs"],
+                "sum_dl": snap.get("sum_dl"),
+                "avgdl": snap["avgdl"],
+                "doc_lens": (
+                    f"data/dl_{gen}" if params["dl_consolidated"]
+                    else snap["doc_lens"]
+                ),
+                "buckets": buckets_map,
+                "layers": [],
+                "parent": params["base_version"],
+                "rebucketed": rebucket,
+                **meta,
+            },
+        )
+        _write_current(index_dir, version)
+    return CompactReport(
+        snapshot_version=committed,
+        affected_buckets=list(affected),
+        built_buckets=built,
+        skipped_buckets=skipped,
+        n_layers_merged=len(index.layers),
+    )
 
 
 def compact(
@@ -495,6 +553,8 @@ def compact(
     """Multi-way sorted merge of the delta layers back into one
     generation — the Lucene segment-merge / reference consolidation
     step (``Combine.py:55-62``), Spark-first and re-tokenization-free.
+    This is ``_merge`` applied to the current snapshot; a rebuild-mode
+    ``apply_updates`` is the same merge applied to its staged batch.
 
     How the merge is expressed: ``merged_doc_terms`` scans every
     generation's stored doc_terms columns (JVM only, no decode) and
@@ -529,14 +589,8 @@ def compact(
     ``"policy"`` from ``maybe_compact``) so the snapshot log shows
     which compactions the auto-policy fired.
     """
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
-        auto_block_size,
-        auto_n_buckets,
-    )
-
     base = SegmentIndex.open(spark, index_dir)
     snap = base.snapshot
-    layers = snap.get("layers") or []
     target_buckets = (
         auto_n_buckets(base.n_docs) if n_buckets == "auto"
         else int(n_buckets) if n_buckets is not None
@@ -547,154 +601,21 @@ def compact(
         else int(block_size) if block_size is not None
         else snap["block_size"]
     )
-    rebucket = (target_buckets != snap["n_buckets"]
-                or target_block != snap["block_size"])
-    if not layers and not rebucket:
+    if not base.layers and target_buckets == snap["n_buckets"] \
+            and target_block == snap["block_size"]:
         return CompactReport(
             snapshot_version=None, affected_buckets=[], built_buckets=[],
             skipped_buckets=[], n_layers_merged=0,
         )
-    new_version = _next_version(index_dir, base.version)
+    new_version = _next_commit_version(index_dir)
     gen = f"c{new_version}"
-    mdir = f"{index_dir}/manifests/{gen}"
-    os.makedirs(mdir, exist_ok=True)
-    params_path = f"{mdir}/params.json"
-    dt_path = f"{index_dir}/data/dt_{gen}"
-
-    phase_a_done = resume and os.path.exists(params_path)
-    if not phase_a_done:
-        if rebucket:
-            # re-shard: every term may move — all target buckets build
-            affected_l = list(range(target_buckets))
-            merged = base.merged_doc_terms(None).drop("bucket")
-            merged = merged.withColumn(
-                "bucket", bucket_col(F.col("term"), target_buckets)
-            )
-        else:
-            affected: set[int] = set()
-            for layer in layers:
-                affected.update(int(b) for b in layer.get("buckets", {}))
-            tomb = base.tombstones()
-            if tomb is not None:
-                # buckets whose BASE postings lost docs: probe the base
-                # generation's doc_terms (layer buckets are in already)
-                base_dt = base._scan_map("doc_terms", snap["buckets"],
-                                         strict=True)
-                if base_dt is not None:
-                    affected.update(
-                        r["bucket"]
-                        for r in base_dt.join(
-                            F.broadcast(tomb.select("doc_id").distinct()),
-                            "doc_id", "left_semi",
-                        ).select("bucket").distinct().collect()
-                    )
-            affected_l = sorted(affected)
-            merged = base.merged_doc_terms(affected_l)
-        # the merge: every generation's doc_terms minus tombstoned
-        # rows, written once as the new generation's doc_terms
-        (
-            merged
-            .repartition(max(1, len(affected_l)), "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(dt_path)
-        )
-        # consolidate doc_lens if any layer carried a dl delta
-        has_dl_layers = any(
-            layer.get("doc_lens_delta") or layer.get("tombstones")
-            for layer in layers
-        )
-        if has_dl_layers:
-            base.doc_lens().write.mode("overwrite").parquet(
-                f"{index_dir}/data/dl_{gen}"
-            )
-        _atomic_write_json(
-            params_path,
-            {
-                "base_version": base.version,
-                "affected_buckets": affected_l,
-                "dl_consolidated": has_dl_layers,
-                "n_buckets": target_buckets,
-                "block_size": target_block,
-                "rebucket": rebucket,
-            },
-        )
-    params = json.load(open(params_path))
-    affected = params["affected_buckets"]
-    base_snap = read_snapshot(index_dir, params["base_version"])
-    # a resumed compaction uses the layout it was STARTED with
-    target_buckets = params.get("n_buckets", base_snap["n_buckets"])
-    target_block = params.get("block_size", base_snap["block_size"])
-    rebucket = params.get("rebucket", False)
-
-    skipped = [
-        b for b in affected
-        if resume and os.path.exists(f"{mdir}/bucket_{b}.json")
-    ]
-    built = [b for b in affected if b not in skipped]
-    if built:
-        build_buckets_batch(
-            spark, index_dir, gen, built,
-            dt_path=dt_path,
-            avgdl=base_snap["avgdl"], n_docs=base_snap["n_docs"],
-            hot_df=base_snap["hot_df"],
-            max_salt_bits=base_snap["max_salt_bits"],
-            block_size=target_block,
-        )
-
-    done = all(
-        os.path.exists(f"{mdir}/bucket_{b}.json") for b in affected
-    )
-    version = None
-    if done:
-        version = new_version
-        if rebucket:
-            # bucket assignment changed: nothing inherits by path
-            buckets_map = {
-                str(b): {
-                    "doc_terms": f"data/dt_{gen}/bucket={b}",
-                    "segments": f"data/seg_{gen}/bucket={b}",
-                }
-                for b in range(target_buckets)
-            }
-        else:
-            buckets_map = dict(base_snap["buckets"])
-            for b in affected:
-                buckets_map[str(b)] = {
-                    "doc_terms": f"data/dt_{gen}/bucket={b}",
-                    "segments": f"data/seg_{gen}/bucket={b}",
-                }
-        _atomic_write_json(
-            f"{index_dir}/snapshots/v{version}.json",
-            {
-                "n_docs": base_snap["n_docs"],
-                "sum_dl": base_snap.get("sum_dl"),
-                "avgdl": base_snap["avgdl"],
-                "n_buckets": target_buckets,
-                "block_size": target_block,
-                "hot_df": base_snap["hot_df"],
-                "max_salt_bits": base_snap["max_salt_bits"],
-                "store_positions": base_snap.get("store_positions", False),
-                "doc_lens": (
-                    f"data/dl_{gen}" if params.get("dl_consolidated")
-                    else base_snap["doc_lens"]
-                ),
-                "buckets": buckets_map,
-                "layers": [],
-                "parent": params["base_version"],
-                "operation": "compact",
-                "trigger": trigger,
-                "rebucketed": rebucket,
-            },
-        )
-        _write_current(index_dir, version)
-    return CompactReport(
-        snapshot_version=version,
-        affected_buckets=list(affected),
-        built_buckets=built,
-        skipped_buckets=skipped,
-        n_layers_merged=len(layers),
+    params = _resumed_params(f"{index_dir}/manifests/{gen}", resume)
+    if params is not None:
+        base = SegmentIndex.open(spark, index_dir, params["base_version"])
+    return _merge(
+        spark, base, gen, new_version,
+        {"operation": "compact", "trigger": trigger},
+        params=params, n_buckets=target_buckets, block_size=target_block,
     )
 
 
@@ -747,7 +668,7 @@ def should_compact(spark: SparkSession, index_dir: str,
                    policy: CompactionPolicy | None = None) -> str | None:
     """Reason string if the policy says compact now, else None."""
     policy = policy or CompactionPolicy()
-    snap = read_snapshot(index_dir, _read_current_version(index_dir))
+    snap = read_snapshot(index_dir)
     layers = snap.get("layers") or []
     if not layers:
         return None
@@ -799,9 +720,7 @@ def vacuum(index_dir: str, keep_last: int = 2) -> dict:
     snapshots' bucket maps + doc_lens pointers; only data/ and
     manifests/ entries referenced by NO kept snapshot are deleted.
     """
-    import shutil
-
-    current = _read_current_version(index_dir)
+    current = _read_current(index_dir)
     log = snapshot_log(index_dir)
     versions = [s["version"] for s in log]
     keep = sorted(set(versions[-keep_last:]) | {current})
@@ -842,9 +761,11 @@ def vacuum(index_dir: str, keep_last: int = 2) -> dict:
                 referenced_dirs.update({
                     f"dt_{name}", f"dl_{name}", f"seg_{name}",
                 })
-    # update generations also reference their delta/removed staging
+    # update generations also reference their staging
     for gen in referenced_gens:
-        referenced_dirs.update({f"dtdelta_{gen}", f"removed_{gen}"})
+        referenced_dirs.update({
+            f"dtdelta_{gen}", f"dldelta_{gen}", f"removed_{gen}",
+        })
 
     removed_data, removed_snaps = [], []
     for name in sorted(os.listdir(f"{index_dir}/data")):
@@ -863,10 +784,6 @@ def vacuum(index_dir: str, keep_last: int = 2) -> dict:
         "removed_versions": removed_snaps,
         "removed_data_dirs": removed_data,
     }
-
-
-def _read_current_version(index_dir: str) -> int:
-    return _read_current(index_dir)
 
 
 def snapshot_log(index_dir: str) -> list[dict]:

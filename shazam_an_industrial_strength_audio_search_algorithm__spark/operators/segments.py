@@ -314,6 +314,12 @@ def _snapshot_versions(index_dir: str) -> list[int]:
 
 
 def _next_commit_version(index_dir: str) -> int:
+    """Smallest version above EVERY existing snapshot and CURRENT, not
+    just CURRENT: after restore() CURRENT may name an old snapshot
+    while newer ones are still retained — reusing their version would
+    overwrite data generations those snapshots reference (static
+    overwrites of dt/removed staging + dynamic overwrites of seg
+    partitions), i.e. silently corrupt retained history."""
     vs = [0] + _snapshot_versions(index_dir)
     if os.path.exists(f"{index_dir}/CURRENT"):
         vs.append(_read_current(index_dir))
@@ -407,16 +413,17 @@ def build_buckets_batch(
     aggregation, only counts shuffle; (2) hot terms (df > hot_df,
     a tiny set by Zipf) broadcast back onto the postings to assign
     doc-id-range salts; (3) the one heavy shuffle:
-    groupBy(bucket, term, salt) → applyInPandas block encode;
-    (4) df attaches to the BLOCK rows (≈ postings/block_size rows —
-    far cheaper than windowing df over raw postings); (5) write
-    partitionBy(bucket), overwriting only the touched partitions.
+    ``repartition(bucket, term, salt)`` + ``sortWithinPartitions(term,
+    salt, doc_id)`` → ``mapInPandas`` block encode; (4) df attaches to
+    the BLOCK rows (≈ postings/block_size rows — far cheaper than
+    windowing df over raw postings); (5) write partitionBy(bucket),
+    overwriting only the touched partitions.
 
     Each manifest's ``n_terms`` and ``n_postings`` come from the input
-    ``term_df`` (its (bucket, term) rows and Σdf), not from the written
-    blocks; only ``n_blocks`` is counted from the write. So a manifest
-    records what the encoder was given, and does not by itself witness
-    that the encoder wrote every posting.
+    ``term_df`` (its (bucket, term) rows and Σdf); nothing is counted
+    from the written blocks. So a manifest records what the encoder
+    was given, and does not by itself witness that the encoder wrote
+    every posting.
     """
     if not buckets:
         return
@@ -459,8 +466,8 @@ def build_buckets_batch(
     # pin the shuffle width: AQE coalesces by BYTES, but the encode
     # stage is CPU-bound Python — letting it coalesce to a handful of
     # partitions serializes the codec. Explicit repartition on the
-    # grouping keys satisfies the groupBy's distribution (no second
-    # shuffle) and keeps every core busy.
+    # (bucket, term, salt) keys puts each run in one partition for the
+    # encoder and keeps every core busy.
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     blocks = (
         salted.repartition(n_part, "bucket", "term", "salt")
@@ -470,26 +477,10 @@ def build_buckets_batch(
             schema=BLOCK_CORE_SCHEMA,
         )
     )
-    out = blocks.join(term_df, ["bucket", "term"]).select(
-        *SEGMENT_SCHEMA.fieldNames()
-    )
-    # per-bucket block counts ride the write job as an Observation
-    # (one count_if per bucket) instead of a read-back aggregation
-    # over the just-written parquet — a whole job per batch. Gated on
-    # bucket count: thousands of per-row comparisons per block would
-    # cost more than the read-back job they save.
-    from pyspark.sql import Observation
-
-    nb_obs = None
-    if len(buckets) <= int(os.environ.get(
-            "SPARK_GRAFT_OBS_BLOCKSTATS_MAX", "128")):
-        nb_obs = Observation(f"blocks_{gen}")
-        out = out.observe(nb_obs, *[
-            F.count_if(F.col("bucket") == b).alias(f"b{b}")
-            for b in buckets
-        ])
     (
-        out.write.mode("overwrite")
+        blocks.join(term_df, ["bucket", "term"])
+        .select(*SEGMENT_SCHEMA.fieldNames())
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(f"{index_dir}/data/seg_{gen}")
@@ -500,10 +491,8 @@ def build_buckets_batch(
     # multiset each bucket was built from (resume can verify a
     # skipped bucket's inputs against it without re-encoding —
     # build_segment_index(verify_inputs=True)); n_terms is the
-    # (bucket, term) row count and n_postings = Σdf, the same values
-    # the previous read-back recomputed from the written blocks
-    # (block salting partitions postings, so Σ n_docs over blocks
-    # = Σ df over terms).
+    # (bucket, term) row count and n_postings = Σdf (block salting
+    # partitions postings, so Σ n_docs over blocks = Σ df over terms).
     lineage = {
         r["bucket"]: r
         for r in term_df.groupBy("bucket")
@@ -520,27 +509,8 @@ def build_buckets_batch(
         .collect()
     }
     term_df.unpersist()
-    if nb_obs is not None:
-        row = nb_obs.get
-        nblocks = {b: int(row[f"b{b}"] or 0) for b in buckets}
-    else:
-        # a batch whose buckets hold NO postings (rebuild of a
-        # shrunken corpus) writes zero part files — schema inference
-        # over the bare dir would fail; such buckets commit honest
-        # all-zero manifests
-        seg_root = f"{index_dir}/data/seg_{gen}"
-        has_files = any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(seg_root) for f in files
-        )
-        nblocks = {} if not has_files else {
-            r["bucket"]: int(r["n_blocks"])
-            for r in spark.read.parquet(seg_root)
-            .filter(F.col("bucket").isin(buckets))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n_blocks"))
-            .collect()
-        }
+    # a bucket with NO postings (rebuild of a shrunken corpus) has no
+    # lineage row and commits an honest all-zero manifest
     for b in buckets:
         lin = lineage.get(b)
         _atomic_write_json(
@@ -548,7 +518,6 @@ def build_buckets_batch(
             {
                 "bucket": b,
                 "gen": gen,
-                "n_blocks": nblocks.get(b, 0),
                 "n_postings": int(lin["n_postings"]) if lin else 0,
                 "n_terms": int(lin["n_terms"]) if lin else 0,
                 "n_docs_corpus": n_docs,
@@ -591,9 +560,10 @@ def build_segment_index(
 
     Phase A (once): tokenize ``corpus`` in one pass → doc_terms
     parquet partitioned by term bucket, + doc_lens + build-params
-    json. Phase B (per bucket, resumable): see
-    ``build_bucket_segments``. Snapshot v1 + CURRENT commit only when
-    every bucket's manifest exists.
+    json. Phase B (per bucket, resumable): ``build_buckets_batch``
+    encodes the pending buckets in one batch and commits one manifest
+    per bucket. Snapshot v1 + CURRENT commit only when every bucket's
+    manifest exists.
 
     ``buckets`` limits phase B to a subset (tests use it to simulate
     an interrupted build; a real deployment passes None).

@@ -69,8 +69,9 @@ def stream_ingest(
     layers pile up — the policy keeps serving at peak). Leave both
     None and run
     ``maintenance.compact()`` on your own schedule. ``mode="rebuild"``
-    re-encodes affected buckets per batch (copy-on-write; keeps the
-    index WAND-ready at all times at much higher write amplification).
+    runs the compaction merge on each staged batch, re-encoding its
+    affected buckets (copy-on-write; keeps the index single-layer at
+    all times at much higher write amplification).
 
     Exactly-once still holds in delta mode: a replayed micro-batch
     re-applies the same keys, whose tombstone supersession makes the

@@ -33,6 +33,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
     apply_updates,
     compact,
+    snapshot_log,
     vacuum,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
@@ -58,23 +59,20 @@ def corpus80():
     return make_corpus(n_docs=80, seed=7, min_len=40, max_len=200)
 
 
-@pytest.fixture(scope="module")
-def layered(spark, corpus80, tmp_path_factory):
-    """Base build on docs 0..59, then two delta updates:
+def _two_updates(spark, pdf, d, mode):
+    """Base build on docs 0..59, then two updates in ``mode``:
 
-    u2 (delta): add docs 60..69, overwrite docs 0 and 1 (same key,
-        changed content);
-    u3 (delta): delete docs 3 and 60 (one base doc, one u2-added doc),
-        re-add doc 2 with new content (tombstone + same-update re-add).
+    u2: add docs 60..69, overwrite docs 0 and 1 (same key, changed
+        content);
+    u3: delete docs 3 and 60 (one base doc, one u2-added doc), re-add
+        doc 2 with new content (tombstone + same-update re-add).
 
-    Returns (index_dir, final_pdf) where final_pdf is the logical
-    corpus state after both updates.
+    Returns (reports, final_pdf) where final_pdf is the logical corpus
+    state after both updates.
     """
-    pdf = corpus80
-    d = str(tmp_path_factory.mktemp("layeredidx"))
-    base_pdf = pdf.iloc[:60]
     build_segment_index(
-        spark, with_doc_id(spark.createDataFrame(base_pdf)), d, **BUILD_KW
+        spark, with_doc_id(spark.createDataFrame(pdf.iloc[:60])), d,
+        **BUILD_KW
     )
 
     # --- u2: adds + overwrites --------------------------------------
@@ -85,9 +83,8 @@ def layered(spark, corpus80, tmp_path_factory):
     ]
     add1 = pd.concat([over, pdf.iloc[60:70]], ignore_index=True)
     rep1 = apply_updates(
-        spark, d, add_corpus=spark.createDataFrame(add1), mode="delta"
+        spark, d, add_corpus=spark.createDataFrame(add1), mode=mode
     )
-    assert rep1.snapshot_version == 2
 
     # --- u3: deletes + same-update re-add ---------------------------
     del2 = pdf.iloc[[3]][["repo", "path", "commit"]]
@@ -100,16 +97,43 @@ def layered(spark, corpus80, tmp_path_factory):
         spark, d,
         add_corpus=spark.createDataFrame(readd),
         delete_keys=spark.createDataFrame(del2),
-        mode="delta",
+        mode=mode,
     )
-    assert rep2.snapshot_version == 3
 
     final = pdf.iloc[:70].copy()  # docs 70..79 were never added
     final.loc[0, "content"] = add1.iloc[0]["content"]
     final.loc[1, "content"] = add1.iloc[1]["content"]
     final.loc[2, "content"] = readd.iloc[0]["content"]
     final = final.drop(index=[3, 60]).reset_index(drop=True)
+    return (rep1, rep2), final
+
+
+@pytest.fixture(scope="module")
+def layered(spark, corpus80, tmp_path_factory):
+    """``_two_updates`` in delta mode: two layers on the base.
+    Returns (index_dir, final_pdf)."""
+    d = str(tmp_path_factory.mktemp("layeredidx"))
+    reps, final = _two_updates(spark, corpus80, d, "delta")
+    assert [r.snapshot_version for r in reps] == [2, 3]
     return d, final
+
+
+@pytest.fixture(scope="module")
+def rebuild_mode(spark, corpus80, tmp_path_factory):
+    """``layered``'s two batches applied in rebuild mode: each update
+    is the compaction merge of its staged batch, so each commits one
+    layer-free snapshot."""
+    d = str(tmp_path_factory.mktemp("rebuildmodeidx"))
+    reps, _ = _two_updates(spark, corpus80, d, "rebuild")
+    assert [r.snapshot_version for r in reps] == [2, 3]
+    log = snapshot_log(d)
+    assert [(s["version"], s["operation"], s["parent"]) for s in log] == [
+        (1, "initial_build", None),
+        (2, "update_rebuild", 1),
+        (3, "update_rebuild", 2),
+    ]
+    assert all(s["layers"] == [] for s in log[1:])
+    return d
 
 
 @pytest.fixture(scope="module")
@@ -391,7 +415,11 @@ def compacted(spark, layered, tmp_path_factory):
     return c, final, rep
 
 
-def test_compact_blocks_bit_identical_to_rebuild(spark, compacted, rebuilt):
+def test_compact_blocks_bit_identical_to_rebuild(spark, compacted, rebuilt,
+                                                rebuild_mode):
+    """Both copy-on-write paths — ``compact()`` of the delta layers and
+    rebuild-mode updates of the same batches — write the blocks of a
+    from-scratch build of the final corpus."""
     d, final, rep = compacted
     assert rep.snapshot_version == 4
     assert rep.n_layers_merged == 2
@@ -409,7 +437,9 @@ def test_compact_blocks_bit_identical_to_rebuild(spark, compacted, rebuilt):
             .collect()
         )
 
-    assert block_set(d) == block_set(rebuilt)
+    want = block_set(rebuilt)
+    assert block_set(d) == want
+    assert block_set(rebuild_mode) == want
 
     # queries unchanged by compaction, and WAND now agrees with brute
     queries = _queries(spark, final)

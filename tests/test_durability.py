@@ -15,8 +15,12 @@ from pyspark.sql import functions as F
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
     with_doc_id,
 )
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators import (
+    maintenance,
+)
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
     apply_updates,
+    compact,
     restore,
     vacuum,
 )
@@ -25,6 +29,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
     _read_current,
     build_segment_index,
     drop_index,
+    read_snapshot,
     segment_topk,
 )
 
@@ -215,3 +220,64 @@ def test_update_batch_tokenizing_to_empty_completes(spark, corpus_df,
         F.explode(F.split("content", " ")).alias("t")).first()["t"]
     assert idx.postings_for_terms([term]).count() > 0
     drop_index(d)
+
+
+@pytest.mark.parametrize("op", ["rebuild", "delta", "compact"])
+def test_resume_between_phase_a_and_phase_b(spark, corpus_df, tmp_path,
+                                            monkeypatch, op):
+    """An update (either mode) or a compaction that dies after its
+    phase A wrote params.json, before phase B encoded any bucket,
+    resumes from its staging — phase A is not re-run — and commits the
+    same snapshot and blocks as an uninterrupted run."""
+    import shutil
+
+    base = str(tmp_path / "base")
+    build_segment_index(spark, with_doc_id(corpus_df), base, n_buckets=4,
+                        hot_df=8, block_size=16)
+    add = _add_batch(spark, "r")
+    dele = corpus_df.limit(2).select("repo", "path", "commit")
+    if op == "compact":
+        apply_updates(spark, base, add_corpus=add, delete_keys=dele,
+                      mode="delta")
+
+    def run(d, resume=False):
+        if op == "compact":
+            return compact(spark, d, resume=resume)
+        return apply_updates(spark, d, add_corpus=add, delete_keys=dele,
+                             mode=op, resume=resume)
+
+    def blocks(d):
+        return sorted(
+            tuple(r) for r in SegmentIndex.open(spark, d).segments()
+            .withColumn("sha", F.sha2("payload", 256)).drop("payload")
+            .collect()
+        )
+
+    want_dir, got_dir = str(tmp_path / "want"), str(tmp_path / "got")
+    shutil.copytree(base, want_dir)
+    shutil.copytree(base, got_dir)
+    want = run(want_dir)
+
+    staged = []
+
+    def crash(spark_, index_dir, gen, *args, **kwargs):
+        params = f"{index_dir}/manifests/{gen}/params.json"
+        assert os.path.exists(params), "phase B began before phase A ended"
+        staged.append((params, os.stat(params).st_mtime_ns))
+        raise RuntimeError("crash between phase A and phase B")
+
+    monkeypatch.setattr(maintenance, "build_buckets_batch", crash)
+    with pytest.raises(RuntimeError, match="crash between"):
+        run(got_dir)
+    assert _read_current(got_dir) == _read_current(base)
+    monkeypatch.undo()
+
+    got = run(got_dir, resume=True)
+    [(params, mtime)] = staged
+    assert os.stat(params).st_mtime_ns == mtime, "resume re-ran phase A"
+    assert got.skipped_buckets == []
+    assert got.built_buckets == want.built_buckets != []
+    assert got.snapshot_version == want.snapshot_version
+    assert _read_current(got_dir) == want.snapshot_version
+    assert read_snapshot(got_dir) == read_snapshot(want_dir)
+    assert blocks(got_dir) == blocks(want_dir)

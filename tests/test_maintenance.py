@@ -208,3 +208,38 @@ def test_explicit_ids_requires_doc_id_column(spark, corpus_pdf,
         apply_updates(spark, d,
                       add_corpus=spark.createDataFrame(no_id),
                       mode="delta", explicit_ids=True)
+
+
+# Spark jobs one delta-mode update launched on this fixture (the
+# session's 50-doc corpus, 4 buckets, positions stored) when this test
+# was written: the add batch on the fresh build, then the delete batch
+# on the layered result. The delta write is the benchmarked upsert
+# path; an update may launch fewer jobs, never more.
+DELTA_UPDATE_JOBS = {"add": 20, "delete": 9}
+
+
+def test_delta_update_job_counts(spark, corpus_df, update_fixtures,
+                                 tmp_path):
+    d = str(tmp_path / "idx")
+    build_segment_index(spark, with_doc_id(corpus_df), d, n_buckets=4,
+                        hot_df=8, block_size=16, store_positions=True)
+    add_pdf, del_pdf = update_fixtures
+    batches = {
+        "add": dict(add_corpus=spark.createDataFrame(add_pdf)),
+        "delete": dict(delete_keys=spark.createDataFrame(del_pdf)),
+    }
+    sc = spark.sparkContext
+    jobs = {}
+    for name, batch in batches.items():
+        group = f"delta_update_jobs_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            rep = apply_updates(spark, d, mode="delta", **batch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert rep.snapshot_version is not None
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert all(
+        0 < jobs[name] <= bound for name, bound in DELTA_UPDATE_JOBS.items()
+    ), (jobs, DELTA_UPDATE_JOBS)
