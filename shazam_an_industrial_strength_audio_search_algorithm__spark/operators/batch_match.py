@@ -48,6 +48,11 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand 
     wand_topk,
 )
 
+# match groups submitted concurrently (see batch_match_resumable): enough to
+# back-fill the current group's straggler tail without the groups
+# fighting for executors
+GROUPS_IN_FLIGHT = 4
+
 
 def _result_schema(mode: str, micro: bool) -> T.StructType:
     if mode == "wand":
@@ -154,18 +159,15 @@ def batch_match_resumable(
     # back-fill executors idled by the current group's stragglers
     # (spark_optimization_guide §2.6). Each group's results and
     # manifest are written exactly as in the sequential loop, so a
-    # crash/rerun resumes identically; 2-4 in flight is enough to
-    # fill the tail without the groups fighting for executors.
+    # crash/rerun resumes identically.
     pending = [
         g for g in todo
         if not os.path.exists(f"{out_dir}/manifests/grp_{g}.json")
     ]
-    max_par = max(1, int(os.environ.get(
-        "SPARK_GRAFT_BATCH_MATCH_PARALLEL", "4")))
-    if len(pending) > 1 and max_par > 1:
+    if len(pending) > 1:
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(min(max_par, len(pending))) as pool:
+        with ThreadPoolExecutor(min(GROUPS_IN_FLIGHT, len(pending))) as pool:
             # materialize to surface the first exception, like the loop
             list(pool.map(run_group, pending))
     else:

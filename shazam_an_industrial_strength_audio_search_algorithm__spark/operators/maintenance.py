@@ -13,15 +13,17 @@ Reference parity (``utils/Hashing_update.py``, SURVEY §3.3):
   bucket is inherited by path; ``restore()`` is a CURRENT-pointer
   flip (the reference's manual backup restore, for free).
 
-Every update stages its batch the same way: the removed doc ids, the
-added docs' doc_terms (partitioned by bucket) and their doc_lens, with
+Every update stages its batch the same way: the removed doc ids, then
+the added docs' doc_terms (partitioned by bucket) and their doc_lens
+through the build's own phase A (``segments.stage_corpus``), with
 n_docs / avgdl from exact integer accounting. A delta-mode update
-commits that staging as a new layer (merge-on-read). A rebuild-mode
-update is the compaction merge applied to the staged batch: the
-would-be layered snapshot goes through ``_merge`` — the one
-copy-on-write path, ``compact()``'s merge (the reference's
+encodes and commits that staging as a new layer (merge-on-read). A
+rebuild-mode update is the compaction merge applied to the staged
+batch: the would-be layered snapshot goes through ``_merge`` — the
+one copy-on-write path, ``compact()``'s merge (the reference's
 ``Combine.py:55-62`` consolidation) — which rewrites the touched
-buckets into one generation.
+buckets into one generation. Both modes and the merge commit through
+the build's phase B (``segments.commit_generation``).
 
 Scale analysis: an update touching D docs with T distinct terms
 rebuilds only the buckets those terms hash into — work is
@@ -40,29 +42,30 @@ import shutil
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
     KEY_COLS,
     dedup_last_wins,
-    doc_term_stage,
-    explode_doc_terms,
     with_doc_id,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
+    TOMBSTONES_SCHEMA,
     SegmentIndex,
     _atomic_write_json,
     _next_commit_version,
     _read_current,
     _write_current,
-    as_doc_terms,
+    as_schema,
     auto_block_size,
     auto_n_buckets,
     bucket_col,
-    build_buckets_batch,
+    bucket_paths,
+    commit_generation,
+    manifested,
     read_snapshot,
+    stage_corpus,
 )
 
 # snapshot fields an update or a compaction inherits from its base
@@ -77,11 +80,6 @@ def _resumed_params(mdir: str, resume: bool) -> dict | None:
         with open(path) as f:
             return json.load(f)
     return None
-
-
-def _bucket_paths(gen_root: str, gen: str, b: int) -> dict:
-    return {"doc_terms": f"data/{gen_root}/bucket={b}",
-            "segments": f"data/seg_{gen}/bucket={b}"}
 
 
 @dataclass
@@ -181,7 +179,7 @@ def apply_updates(
     layer = {
         "gen": gen,
         "buckets": {
-            str(b): _bucket_paths(dt_root, gen, b)
+            str(b): bucket_paths(gen, b, dt_root)
             for b in staging["layer_buckets"]
         },
     }
@@ -219,30 +217,15 @@ def apply_updates(
         built, skipped = merge.built_buckets, merge.skipped_buckets
     else:
         affected = staging["layer_buckets"]
-        skipped = [
-            b for b in affected
-            if params is not None and os.path.exists(f"{mdir}/bucket_{b}.json")
-        ]
-        built = [b for b in affected if b not in skipped]
+        skipped = manifested(index_dir, gen, affected) if params else []
         # dt_{gen} holds exactly this update's postings — encode them as
         # a new (small) layer, zero base IO
-        build_buckets_batch(
-            spark, index_dir, gen, built,
-            dt_path=f"{index_dir}/data/{dt_root}",
-            avgdl=snapshot["avgdl"], n_docs=snapshot["n_docs"],
-            hot_df=snapshot["hot_df"],
-            max_salt_bits=snapshot["max_salt_bits"],
-            block_size=snapshot["block_size"],
+        built, version = commit_generation(
+            spark, index_dir, gen, affected, skipped,
+            f"{index_dir}/data/{dt_root}",
+            {**snapshot, "parent": base.version, "operation": "update_delta"},
+            new_version,
         )
-        version = None
-        if all(os.path.exists(f"{mdir}/bucket_{b}.json") for b in affected):
-            version = new_version
-            _atomic_write_json(
-                f"{index_dir}/snapshots/v{version}.json",
-                {**snapshot, "parent": base.version,
-                 "operation": "update_delta"},
-            )
-            _write_current(index_dir, version)
     if version is not None and auto_compact is not None:
         report = maybe_compact(spark, index_dir, auto_compact)
         if report is not None and report.snapshot_version is not None:
@@ -272,6 +255,9 @@ def _stage_batch(spark, base, gen, add_corpus, delete_keys, assume_unique,
     # corpus's own ids); hash mode derives it from the natural key,
     # matching with_doc_id-built indexes
     removed_parts = []
+    # the base's alive docs, built once for both joins below
+    alive = (base.doc_lens() if add_corpus is not None
+             or delete_keys is not None else None)
     if delete_keys is not None:
         removed_parts.append(
             delete_keys.select("doc_id") if explicit_ids
@@ -291,7 +277,7 @@ def _stage_batch(spark, base, gen, add_corpus, delete_keys, assume_unique,
         # overwrite-by-key: any incoming doc_id that already exists
         removed_parts.append(
             add_corpus.select("doc_id").join(
-                base.doc_lens().select("doc_id"), "doc_id", "left_semi"
+                alive.select("doc_id"), "doc_id", "left_semi"
             )
         )
     rem_n = rem_sum = 0
@@ -309,62 +295,28 @@ def _stage_batch(spark, base, gen, add_corpus, delete_keys, assume_unique,
         metrics = [F.count("doc_len").alias("n"), F.sum("doc_len").alias("s")]
         if keep_removed_ids:
             metrics.append(F.collect_set("doc_id").alias("ids"))
-        (
-            removed.distinct()
-            .join(base.doc_lens().select("doc_id", "doc_len"), "doc_id", "left")
-            .observe(rem_obs, *metrics)
-            .select("doc_id")
-            .write.mode("overwrite").parquet(removed_path)
-        )
+        as_schema(
+            removed.distinct().join(alive, "doc_id", "left")
+            .observe(rem_obs, *metrics),
+            TOMBSTONES_SCHEMA,
+        ).write.mode("overwrite").parquet(removed_path)
         row = rem_obs.get
         rem_n, rem_sum = int(row["n"] or 0), int(row["s"] or 0)
         if keep_removed_ids and row["ids"]:
             removed_ids = np.sort(np.asarray(row["ids"], np.int64))
 
-    # --- staged doc_terms + doc_lens of the added docs (schema must
-    # match the base snapshot's doc_terms: positions present or not) ---
+    # --- staged doc_terms + doc_lens of the added docs, in the base's
+    # layout (positions stored or not). A batch whose docs all tokenize
+    # to empty (binary/whitespace files) touches no bucket: a
+    # no-op/delete-only update, not a crash; its empty doc_lens dir is
+    # dropped so no 0-row scan ever attaches to the layer. The full
+    # doc_lens table is never rewritten here.
     layer_buckets: list[int] = []
     add_n = add_sum = 0
     if add_corpus is not None:
-        store_pos = base.store_positions
-        # ONE tokenize pass for the whole update (the build's phase-A
-        # contract applied to deltas): the persisted stage feeds the
-        # doc_terms explode AND the doc_lens projection
-        stage = doc_term_stage(
-            add_corpus, with_positions=store_pos,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        (
-            as_doc_terms(
-                explode_doc_terms(stage, with_positions=store_pos)
-                .withColumn("bucket", bucket_col(F.col("term"), base.n_buckets)),
-                store_pos,
-            )
-            .write.mode("overwrite").partitionBy("bucket").parquet(dt_path)
+        add_n, add_sum, layer_buckets = stage_corpus(
+            add_corpus, dt_path, dl_path, base.n_buckets, base.store_positions,
         )
-        # the partitioned write materialized one ``bucket=K`` dir per
-        # touched bucket — read the answer off the directory names
-        # instead of running a distinct-aggregation job. A batch whose
-        # docs all tokenize to empty (binary/whitespace files) writes
-        # none: a no-op/delete-only update, not a crash.
-        layer_buckets = sorted(
-            int(name.split("=", 1)[1])
-            for name in os.listdir(dt_path) if name.startswith("bucket=")
-        )
-        # n/sum ride the write job as an Observation (one job, not
-        # count-then-write); an all-empty batch's dir is dropped after
-        # the fact so no schema-less/0-row scan ever attaches to the
-        # layer. The full doc_lens table is never rewritten here.
-        obs = Observation(f"dl_delta_{gen}")
-        (
-            stage.select("doc_id", "doc_len")
-            .filter(F.col("doc_len") > 0)
-            .observe(obs, F.count(F.lit(1)).alias("n"),
-                     F.sum("doc_len").alias("s"))
-            .write.mode("overwrite").parquet(dl_path)
-        )
-        stage.unpersist()
-        row = obs.get
-        add_n, add_sum = int(row["n"] or 0), int(row["s"] or 0)
         if add_n == 0:
             shutil.rmtree(dl_path, ignore_errors=True)
 
@@ -485,54 +437,34 @@ def _merge(
             "rebucket": rebucket,
         }
         _atomic_write_json(f"{mdir}/params.json", params)
-    # a resumed merge uses the layout it was STARTED with
-    affected = params["affected_buckets"]
-    n_buckets, block_size = params["n_buckets"], params["block_size"]
-    rebucket = params["rebucket"]
-
-    skipped = [
-        b for b in affected
-        if resumed and os.path.exists(f"{mdir}/bucket_{b}.json")
-    ]
-    built = [b for b in affected if b not in skipped]
-    build_buckets_batch(
-        spark, index_dir, gen, built,
-        dt_path=dt_path,
-        avgdl=snap["avgdl"], n_docs=snap["n_docs"],
-        hot_df=snap["hot_df"],
-        max_salt_bits=snap["max_salt_bits"],
-        block_size=block_size,
+    # a resumed merge uses the layout it was STARTED with; a re-shard
+    # changed every bucket's assignment (all of them are affected), so
+    # nothing inherits by path
+    affected, rebucket = params["affected_buckets"], params["rebucket"]
+    buckets_map = {} if rebucket else dict(snap["buckets"])
+    buckets_map.update({str(b): bucket_paths(gen, b) for b in affected})
+    skipped = manifested(index_dir, gen, affected) if resumed else []
+    built, committed = commit_generation(
+        spark, index_dir, gen, affected, skipped, dt_path,
+        {
+            **{k: snap.get(k, False) for k in _LAYOUT_KEYS},
+            "n_buckets": params["n_buckets"],
+            "block_size": params["block_size"],
+            "n_docs": snap["n_docs"],
+            "sum_dl": snap.get("sum_dl"),
+            "avgdl": snap["avgdl"],
+            "doc_lens": (
+                f"data/dl_{gen}" if params["dl_consolidated"]
+                else snap["doc_lens"]
+            ),
+            "buckets": buckets_map,
+            "layers": [],
+            "parent": params["base_version"],
+            "rebucketed": rebucket,
+            **meta,
+        },
+        version,
     )
-
-    committed = None
-    if all(os.path.exists(f"{mdir}/bucket_{b}.json") for b in affected):
-        committed = version
-        # a re-shard changed every bucket's assignment: nothing
-        # inherits by path
-        buckets_map = {} if rebucket else dict(snap["buckets"])
-        for b in (range(n_buckets) if rebucket else affected):
-            buckets_map[str(b)] = _bucket_paths(f"dt_{gen}", gen, b)
-        _atomic_write_json(
-            f"{index_dir}/snapshots/v{version}.json",
-            {
-                **{k: snap.get(k, False) for k in _LAYOUT_KEYS},
-                "n_buckets": n_buckets,
-                "block_size": block_size,
-                "n_docs": snap["n_docs"],
-                "sum_dl": snap.get("sum_dl"),
-                "avgdl": snap["avgdl"],
-                "doc_lens": (
-                    f"data/dl_{gen}" if params["dl_consolidated"]
-                    else snap["doc_lens"]
-                ),
-                "buckets": buckets_map,
-                "layers": [],
-                "parent": params["base_version"],
-                "rebucketed": rebucket,
-                **meta,
-            },
-        )
-        _write_current(index_dir, version)
     return CompactReport(
         snapshot_version=committed,
         affected_buckets=list(affected),

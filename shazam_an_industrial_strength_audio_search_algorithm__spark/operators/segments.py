@@ -34,6 +34,14 @@ Layout::
       data/dl_<gen>/              # doc_lens parquet
       manifests/<gen>/bucket_K.json
 
+Write path: every generation — the build, a delta update's layer, the
+merge behind ``compact()`` and rebuild-mode updates — commits through
+two steps. ``stage_corpus`` (phase A) tokenizes a corpus once into
+doc_terms partitioned by bucket plus doc_lens (the merge stages its
+doc_terms from the stored columns instead). ``commit_generation``
+(phase B) encodes the buckets that have no manifest yet
+(``build_buckets_batch``), then writes the snapshot and moves CURRENT.
+
 Scale design (the 100 TB story):
 
 - ``bucket = pmod(xxhash64(term), n_buckets)`` — a term's postings
@@ -68,7 +76,8 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -78,13 +87,18 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.bm25 
     idf_py,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
+    doc_term_stage,
+    explode_doc_terms,
     with_doc_id,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
     local_rows_df,
+    spread_input,
 )
 
 BLOCK_SIZE = 128
+# a hot term splits into at most 2**MAX_SALT_BITS doc-id-range salts
+MAX_SALT_BITS = 6
 
 # ---------------------------------------------------------------------------
 # data-aware layout policy (round-5: verdict item 2)
@@ -152,9 +166,9 @@ SEGMENT_SCHEMA = T.StructType(
 
 # the doc_terms parquet as written: one row per (doc, term),
 # ``positions`` only when the index stores them, ``bucket`` last as
-# the partition column. Every writer goes through ``as_doc_terms`` and
-# the reader scans with this schema, so opening a generation infers
-# nothing from parquet footers.
+# the partition column. Like doc_lens and tombstones below, every
+# writer casts to it (``as_schema``) and the reader scans with it, so
+# opening a generation infers nothing from parquet footers.
 DOC_TERMS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -167,6 +181,14 @@ DOC_TERMS_SCHEMA = T.StructType(
 )
 
 
+# the doc_lens parquet (one row per doc with a token) and a layer's
+# tombstones (the doc ids it removes)
+DOC_LENS_SCHEMA = T.StructType(
+    [DOC_TERMS_SCHEMA["doc_id"], DOC_TERMS_SCHEMA["doc_len"]]
+)
+TOMBSTONES_SCHEMA = T.StructType([DOC_TERMS_SCHEMA["doc_id"]])
+
+
 def doc_terms_schema(store_positions: bool) -> T.StructType:
     """``DOC_TERMS_SCHEMA``, without ``positions`` unless stored."""
     return T.StructType([
@@ -175,13 +197,10 @@ def doc_terms_schema(store_positions: bool) -> T.StructType:
     ])
 
 
-def as_doc_terms(dt: DataFrame, store_positions: bool) -> DataFrame:
-    """``dt`` (with its ``bucket``) selected and cast to the doc_terms
-    schema, in order — the one projection every doc_terms write uses."""
-    return dt.select(*[
-        F.col(f.name).cast(f.dataType)
-        for f in doc_terms_schema(store_positions).fields
-    ])
+def as_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """``df`` selected and cast to ``schema``, in order — the one
+    projection every doc_terms, doc_lens and tombstones write uses."""
+    return df.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
 
 
 # ---------------------------------------------------------------------------
@@ -399,15 +418,14 @@ def build_buckets_batch(
     gen: str,
     buckets: list[int],
     dt_path: str,
-    avgdl: float,
-    n_docs: int,
-    hot_df: int,
-    max_salt_bits: int,
-    block_size: int,
+    snapshot: dict,
 ) -> None:
     """Build segments for a batch of buckets in ONE Spark job, then
     commit each bucket's manifest (idempotent: dynamic partition
-    overwrite + manifest-last).
+    overwrite + manifest-last). ``snapshot`` is the snapshot the
+    generation will commit: its stats (``n_docs``, ``avgdl``) and
+    layout (``hot_df``, ``max_salt_bits``, ``block_size``) drive the
+    encode.
 
     Plan: (1) count-only df agg per (bucket, term) — map-side partial
     aggregation, only counts shuffle; (2) hot terms (df > hot_df,
@@ -427,6 +445,7 @@ def build_buckets_batch(
     """
     if not buckets:
         return
+    hot_df = snapshot["hot_df"]
     dt = (
         spark.read.schema(doc_terms_schema(False)).parquet(dt_path)
         .filter(F.col("bucket").isin(buckets))
@@ -447,7 +466,7 @@ def build_buckets_batch(
                 F.col("hot_term_df").isNotNull(),
                 F.least(
                     F.ceil(F.log2(F.col("hot_term_df") / F.lit(float(hot_df)))),
-                    F.lit(max_salt_bits),
+                    F.lit(snapshot["max_salt_bits"]),
                 ),
             )
             .otherwise(F.lit(0))
@@ -473,7 +492,7 @@ def build_buckets_batch(
         salted.repartition(n_part, "bucket", "term", "salt")
         .sortWithinPartitions("term", "salt", "doc_id")
         .mapInPandas(
-            _encode_partition(avgdl, block_size),
+            _encode_partition(snapshot["avgdl"], snapshot["block_size"]),
             schema=BLOCK_CORE_SCHEMA,
         )
     )
@@ -520,13 +539,109 @@ def build_buckets_batch(
                 "gen": gen,
                 "n_postings": int(lin["n_postings"]) if lin else 0,
                 "n_terms": int(lin["n_terms"]) if lin else 0,
-                "n_docs_corpus": n_docs,
+                "n_docs_corpus": snapshot["n_docs"],
                 "input_digest": int(lin["input_digest"]) if lin else 0,
                 "term_min": lin["term_min"] if lin else None,
                 "term_max": lin["term_max"] if lin else None,
                 "status": "committed",
             },
         )
+
+
+def stage_corpus(
+    corpus: DataFrame,
+    dt_path: str,
+    dl_path: str,
+    n_buckets: int,
+    store_positions: bool,
+    id_col: str = "doc_id",
+    text_col: str = "content",
+) -> tuple[int, int, list[int]]:
+    """Phase A of every writer that tokenizes (the build, an update's
+    added docs): ONE tokenize pass — the persisted ``doc_term_stage``
+    feeds the doc_terms explode AND the doc_lens projection ('tokenize
+    once, ever', no second corpus pass, no postings shuffle).
+
+    Writes the doc_terms ``partitionBy("bucket")`` to ``dt_path`` and
+    the lens of the docs with a token to ``dl_path``. Returns ``(n,
+    sum_dl, buckets)``: the doc count and Σdoc_len ride the doc_lens
+    write as an Observation (no read-back job), and the touched buckets
+    are read off the ``bucket=K`` dirs the partitioned write made (none
+    when every doc tokenizes to nothing)."""
+    stage = doc_term_stage(
+        corpus, id_col, text_col, with_positions=store_positions
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    (
+        as_schema(
+            explode_doc_terms(stage, with_positions=store_positions)
+            .withColumn("bucket", bucket_col(F.col("term"), n_buckets)),
+            doc_terms_schema(store_positions),
+        )
+        .write.mode("overwrite").partitionBy("bucket").parquet(dt_path)
+    )
+    obs = Observation()
+    (
+        as_schema(stage.filter(F.col("doc_len") > 0), DOC_LENS_SCHEMA)
+        .observe(obs, F.count(F.lit(1)).alias("n"),
+                 F.sum("doc_len").alias("s"))
+        .write.mode("overwrite").parquet(dl_path)
+    )
+    stage.unpersist()
+    row = obs.get
+    buckets = sorted(
+        int(name.split("=", 1)[1])
+        for name in os.listdir(dt_path) if name.startswith("bucket=")
+    )
+    return int(row["n"] or 0), int(row["s"] or 0), buckets
+
+
+def bucket_paths(gen: str, b: int, dt_root: str | None = None) -> dict:
+    """Bucket ``b``'s entry in a snapshot's bucket map: generation
+    ``gen``'s doc_terms (under ``dt_root``, default ``dt_{gen}``) and
+    segments."""
+    return {"doc_terms": f"data/{dt_root or f'dt_{gen}'}/bucket={b}",
+            "segments": f"data/seg_{gen}/bucket={b}"}
+
+
+def manifested(index_dir: str, gen: str, buckets) -> list[int]:
+    """The ``buckets`` of generation ``gen`` whose manifest exists."""
+    return [
+        b for b in buckets
+        if os.path.exists(f"{index_dir}/manifests/{gen}/bucket_{b}.json")
+    ]
+
+
+def commit_generation(
+    spark: SparkSession,
+    index_dir: str,
+    gen: str,
+    buckets: list[int],
+    skip: list[int],
+    dt_path: str,
+    snapshot: dict,
+    version: int,
+) -> tuple[list[int], int | None]:
+    """Phase B and commit of every writer (the build, a delta update,
+    the merge): encode generation ``gen``'s ``buckets`` — all but
+    ``skip``, the ones a resumed run already committed or a partial
+    build leaves for later — from the doc_terms staged at ``dt_path``,
+    in one ``build_buckets_batch`` with ``snapshot``'s stats and layout.
+    Once every bucket's manifest exists, ``snapshot`` commits as
+    ``snapshots/v{version}.json``, then CURRENT moves to it: snapshot
+    first, pointer second, and never backward (a build re-verifying an
+    older committed generation rewrites that snapshot in place).
+
+    Returns the buckets encoded and the committed version (None while
+    a bucket is pending)."""
+    built = [b for b in buckets if b not in skip]
+    build_buckets_batch(spark, index_dir, gen, built, dt_path, snapshot)
+    if len(manifested(index_dir, gen, buckets)) < len(buckets):
+        return built, None
+    _atomic_write_json(f"{index_dir}/snapshots/v{version}.json", snapshot)
+    if not os.path.exists(f"{index_dir}/CURRENT") \
+            or version >= _read_current(index_dir):
+        _write_current(index_dir, version)
+    return built, version
 
 
 @dataclass
@@ -546,24 +661,23 @@ def build_segment_index(
     index_dir: str,
     n_buckets: int | None = None,
     hot_df: int = 2048,
-    max_salt_bits: int = 6,
     block_size: int | None = None,
     resume: bool = False,
     id_col: str = "doc_id",
     text_col: str = "content",
     buckets: list[int] | None = None,
-    phase_a_shuffle: bool = False,
     store_positions: bool = False,
     verify_inputs: bool = False,
 ) -> BuildReport:
     """Initial build (snapshot v1), two-phase and resumable.
 
-    Phase A (once): tokenize ``corpus`` in one pass → doc_terms
-    parquet partitioned by term bucket, + doc_lens + build-params
-    json. Phase B (per bucket, resumable): ``build_buckets_batch``
-    encodes the pending buckets in one batch and commits one manifest
-    per bucket. Snapshot v1 + CURRENT commit only when every bucket's
-    manifest exists.
+    Phase A (once): ``stage_corpus`` tokenizes ``corpus`` in one pass
+    into doc_terms partitioned by term bucket + doc_lens, then the
+    build-params json is written. Phase B (per bucket, resumable):
+    ``commit_generation`` encodes the pending buckets in one batch,
+    commits one manifest per bucket, and commits the snapshot + CURRENT
+    only when every bucket's manifest exists — the same two steps every
+    update and compaction writes through.
 
     ``buckets`` limits phase B to a subset (tests use it to simulate
     an interrupted build; a real deployment passes None).
@@ -611,7 +725,6 @@ def build_segment_index(
 
     params_path = f"{index_dir}/manifests/{gen}/params.json"
     dt_path = f"{index_dir}/data/dt_{gen}"
-    dl_path = f"{index_dir}/data/dl_{gen}"
     phase_a_done = resume and os.path.exists(params_path)
     if not phase_a_done and (n_buckets is None or block_size is None):
         # data-aware defaults (verdict r4 item 2): one cheap count of
@@ -624,76 +737,25 @@ def build_segment_index(
         if block_size is None:
             block_size = auto_block_size(n_est)
     if not phase_a_done:
-        import shutil as _shutil
-
         # fresh (non-resume) build into a dir holding a previous
         # attempt: clear this generation's outputs first. The seg
         # write uses DYNAMIC partition overwrite (only touched buckets
         # rewrite), so a bucket that is empty in the new corpus would
         # otherwise keep the OLD corpus's partition and manifest —
         # committing stale postings into the new snapshot.
-        _shutil.rmtree(f"{index_dir}/data/seg_{gen}", ignore_errors=True)
-        _shutil.rmtree(f"{index_dir}/manifests/{gen}", ignore_errors=True)
+        shutil.rmtree(f"{index_dir}/data/seg_{gen}", ignore_errors=True)
+        shutil.rmtree(f"{index_dir}/manifests/{gen}", ignore_errors=True)
         os.makedirs(f"{index_dir}/manifests/{gen}", exist_ok=True)
 
-        from pyspark import StorageLevel
-
-        from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
-            doc_term_stage,
-            explode_doc_terms,
-        )
-        from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
-            spread_input,
-        )
-
         _t0 = _time.monotonic()
-        # spread a narrow input first: the tokenize UDF below is the
-        # phase's CPU kernel, and a single-row-group corpus file would
+        # spread a narrow input first: the tokenize UDF is the phase's
+        # CPU kernel, and a single-row-group corpus file would
         # otherwise run it on one task (no-op at scale)
-        corpus = spread_input(corpus)
-        # ONE tokenize pass: the persisted stage feeds both the
-        # doc_terms explode AND the doc_lens projection — 'tokenize
-        # once, ever', no second corpus pass, no postings shuffle
-        stage = doc_term_stage(
-            corpus, id_col, text_col, with_positions=store_positions
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        dt = as_doc_terms(
-            explode_doc_terms(stage, with_positions=store_positions)
-            .withColumn("bucket", bucket_col(F.col("term"), n_buckets)),
-            store_positions,
+        n_, sum_, _ = stage_corpus(
+            spread_input(corpus), dt_path, f"{index_dir}/data/dl_{gen}",
+            n_buckets, store_positions, id_col, text_col,
         )
-        if phase_a_shuffle:
-            # consolidate to one file set per bucket — enable when
-            # n_buckets × task-count would explode the file count
-            # (large clusters); costs a full shuffle of doc_terms
-            dt = dt.repartition(n_buckets, "bucket")
-        (
-            dt.write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(dt_path)
-        )
-        timings["phase_a_doc_terms"] = _time.monotonic() - _t0
-        _t0 = _time.monotonic()
-        # n_docs/sum_dl ride the write job as an Observation — the
-        # previous read-back aggregation over the just-written parquet
-        # was a whole extra job for two scalars the writer already
-        # streams past (guide §1/§2: don't re-scan for metadata)
-        from pyspark.sql import Observation
-
-        obs = Observation("dl_stats")
-        (
-            stage.select("doc_id", "doc_len")
-            .filter(F.col("doc_len") > 0)
-            .observe(obs, F.count(F.lit(1)).alias("n"),
-                     F.sum("doc_len").alias("sum_dl"))
-            .write.mode("overwrite")
-            .parquet(dl_path)
-        )
-        stage.unpersist()
-        row = obs.get
-        timings["phase_a_doc_lens"] = _time.monotonic() - _t0
-        n_ = int(row["n"] or 0)
-        sum_ = int(row["sum_dl"] or 0)
+        timings["phase_a_stage"] = _time.monotonic() - _t0
         _atomic_write_json(
             params_path,
             {
@@ -707,23 +769,21 @@ def build_segment_index(
                 "n_buckets": n_buckets,
                 "block_size": block_size,
                 "hot_df": hot_df,
-                "max_salt_bits": max_salt_bits,
+                "max_salt_bits": MAX_SALT_BITS,
                 "store_positions": store_positions,
                 "format_version": 2,
             },
         )
     params = json.load(open(params_path))
-    n_buckets, avgdl = params["n_buckets"], params["avgdl"]
+    n_buckets = params["n_buckets"]
 
     todo = list(range(n_buckets)) if buckets is None else list(buckets)
-    skipped = [
-        b for b in todo
-        if resume and os.path.exists(f"{index_dir}/manifests/{gen}/bucket_{b}.json")
-    ]
+    skipped = manifested(index_dir, gen, todo) if resume else []
     if skipped and verify_inputs:
         cur = {
             r["bucket"]: int(r["d"])
-            for r in spark.read.parquet(dt_path)
+            for r in spark.read.schema(doc_terms_schema(False))
+            .parquet(dt_path)
             .filter(F.col("bucket").isin(skipped))
             .groupBy("bucket", "term")
             .agg(F.count(F.lit(1)).alias("df"))
@@ -737,86 +797,50 @@ def build_segment_index(
             if int(m.get("input_digest", 0) or 0) != cur.get(b, 0):
                 stale.append(b)
         skipped = [b for b in skipped if b not in stale]
-    built = [b for b in todo if b not in skipped]
+    report = dict(
+        skipped_buckets=skipped, phase_a_skipped=phase_a_done,
+        n_docs=params["n_docs"], avgdl=params["avgdl"], timings=timings,
+    )
+
+    already_current = None
+    if os.path.exists(f"{index_dir}/CURRENT"):
+        already_current = _read_current(index_dir)
+    committed = _committed_version_of_gen(index_dir, gen)
+    # idempotent re-run guard: a resume re-run that rebuilds NOTHING
+    # over an already-committed generation must not re-commit —
+    # rewriting CURRENT backward would silently roll back updates
+    # committed after the build. A run that actually (re)builds
+    # buckets commits normally.
+    if committed is not None and already_current is not None \
+            and already_current >= committed \
+            and all(b in skipped for b in todo):
+        return BuildReport(built_buckets=[], snapshot_version=committed,
+                           **report)
+    snapshot = {
+        **{k: params[k] for k in ("n_docs", "avgdl", "n_buckets",
+                                  "block_size", "hot_df", "max_salt_bits")},
+        "sum_dl": params.get("sum_dl"),
+        "store_positions": params.get("store_positions", False),
+        "doc_lens": f"data/dl_{gen}",
+        "buckets": {str(b): bucket_paths(gen, b) for b in range(n_buckets)},
+        "gen": gen,
+        "parent": already_current if gen != "init" else None,
+        "operation": "initial_build" if gen == "init" else "rebuild",
+    }
     _t0 = _time.monotonic()
-    build_buckets_batch(
-        spark, index_dir, gen, built, dt_path, avgdl, params["n_docs"],
-        params["hot_df"], params["max_salt_bits"], params["block_size"],
+    # a committed generation re-verified in place (verify_inputs
+    # rebuilds) keeps its version; a fresh generation commits past
+    # every existing snapshot AND the current pointer — so a rebuild
+    # racing a concurrent update can never clobber it
+    built, version = commit_generation(
+        spark, index_dir, gen, range(n_buckets),
+        [b for b in range(n_buckets) if b not in todo or b in skipped],
+        dt_path, snapshot,
+        committed if committed is not None else _next_commit_version(index_dir),
     )
     timings["phase_b_segments"] = _time.monotonic() - _t0
-
-    done = all(
-        os.path.exists(f"{index_dir}/manifests/{gen}/bucket_{b}.json")
-        for b in range(n_buckets)
-    )
-    version = None
-    if done:
-        already_current = None
-        if os.path.exists(f"{index_dir}/CURRENT"):
-            already_current = _read_current(index_dir)
-        committed = _committed_version_of_gen(index_dir, gen)
-        # idempotent re-run guard: a resume re-run that rebuilt
-        # NOTHING over an already-committed generation must not
-        # re-commit — rewriting CURRENT backward would silently roll
-        # back updates committed after the build. A run that actually
-        # (re)built buckets commits normally.
-        if not built and committed is not None \
-                and already_current is not None \
-                and already_current >= committed:
-            return BuildReport(
-                built_buckets=built,
-                skipped_buckets=skipped,
-                phase_a_skipped=phase_a_done,
-                n_docs=params["n_docs"],
-                avgdl=avgdl,
-                snapshot_version=committed,
-                timings=timings,
-            )
-        # a committed generation re-verified in place (verify_inputs
-        # rebuilds) keeps its version; a fresh generation commits past
-        # every existing snapshot AND the current pointer — so a
-        # rebuild racing a concurrent update can never clobber it
-        version = committed if committed is not None \
-            else _next_commit_version(index_dir)
-        _atomic_write_json(
-            f"{index_dir}/snapshots/v{version}.json",
-            {
-                "n_docs": params["n_docs"],
-                "sum_dl": params.get("sum_dl"),
-                "avgdl": avgdl,
-                "n_buckets": n_buckets,
-                "block_size": params["block_size"],
-                "hot_df": params["hot_df"],
-                "max_salt_bits": params["max_salt_bits"],
-                "store_positions": params.get("store_positions", False),
-                "doc_lens": f"data/dl_{gen}",
-                "buckets": {
-                    str(b): {
-                        "doc_terms": f"data/dt_{gen}/bucket={b}",
-                        "segments": f"data/seg_{gen}/bucket={b}",
-                    }
-                    for b in range(n_buckets)
-                },
-                "gen": gen,
-                "parent": (
-                    already_current if gen != "init" else None
-                ),
-                "operation": "initial_build" if gen == "init" else "rebuild",
-            },
-        )
-        # snapshot first, pointer second (the atomic commit protocol);
-        # never move CURRENT backward
-        if already_current is None or version >= already_current:
-            _write_current(index_dir, version)
-    return BuildReport(
-        built_buckets=built,
-        skipped_buckets=skipped,
-        phase_a_skipped=phase_a_done,
-        n_docs=params["n_docs"],
-        avgdl=avgdl,
-        snapshot_version=version,
-        timings=timings,
-    )
+    return BuildReport(built_buckets=built, snapshot_version=version,
+                       **report)
 
 
 # ---------------------------------------------------------------------------
@@ -999,7 +1023,8 @@ class SegmentIndex:
             rel = layer.get("tombstones")
             if rel:
                 parts.append(
-                    self.spark.read.parquet(f"{self.index_dir}/{rel}")
+                    self.spark.read.schema(TOMBSTONES_SCHEMA)
+                    .parquet(f"{self.index_dir}/{rel}")
                     .select("doc_id", F.lit(i + 1).alias("gen_seq"))
                 )
         if not parts:
@@ -1061,9 +1086,8 @@ class SegmentIndex:
         tombstone-resolved — doc_lens is never rewritten by a delta
         update (it would be the one remaining O(index) write in an
         otherwise O(delta) update)."""
-        base = self.spark.read.parquet(
-            f"{self.index_dir}/{self.snapshot['doc_lens']}"
-        )
+        reader = self.spark.read.schema(DOC_LENS_SCHEMA)
+        base = reader.parquet(f"{self.index_dir}/{self.snapshot['doc_lens']}")
         if not self.has_deltas:
             return base
         parts = [base.withColumn("gen_seq", F.lit(0))]
@@ -1071,7 +1095,7 @@ class SegmentIndex:
             rel = layer.get("doc_lens_delta")
             if rel and os.path.exists(f"{self.index_dir}/{rel}"):
                 parts.append(
-                    self.spark.read.parquet(f"{self.index_dir}/{rel}")
+                    reader.parquet(f"{self.index_dir}/{rel}")
                     .withColumn("gen_seq", F.lit(i + 1))
                 )
         out = parts[0]

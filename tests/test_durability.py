@@ -17,6 +17,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators import (
     maintenance,
+    segments,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
     apply_updates,
@@ -222,18 +223,22 @@ def test_update_batch_tokenizing_to_empty_completes(spark, corpus_df,
     drop_index(d)
 
 
-@pytest.mark.parametrize("op", ["rebuild", "delta", "compact"])
+@pytest.mark.parametrize("op", ["build", "rebuild", "delta", "compact"])
 def test_resume_between_phase_a_and_phase_b(spark, corpus_df, tmp_path,
                                             monkeypatch, op):
-    """An update (either mode) or a compaction that dies after its
-    phase A wrote params.json, before phase B encoded any bucket,
-    resumes from its staging — phase A is not re-run — and commits the
-    same snapshot and blocks as an uninterrupted run."""
+    """An initial build, an update (either mode) or a compaction that
+    dies after its phase A wrote params.json, before phase B encoded
+    any bucket, resumes from its staging — phase A is not re-run — and
+    commits the same snapshot and blocks as an uninterrupted run. All
+    four writers commit through ``commit_generation``, so the crash is
+    injected there."""
     import shutil
 
+    corpus = with_doc_id(corpus_df)
     base = str(tmp_path / "base")
-    build_segment_index(spark, with_doc_id(corpus_df), base, n_buckets=4,
-                        hot_df=8, block_size=16)
+    if op != "build":
+        build_segment_index(spark, corpus, base, n_buckets=4, hot_df=8,
+                            block_size=16)
     add = _add_batch(spark, "r")
     dele = corpus_df.limit(2).select("repo", "path", "commit")
     if op == "compact":
@@ -241,10 +246,17 @@ def test_resume_between_phase_a_and_phase_b(spark, corpus_df, tmp_path,
                       mode="delta")
 
     def run(d, resume=False):
+        if op == "build":
+            return build_segment_index(spark, corpus, d, n_buckets=4,
+                                       hot_df=8, block_size=16,
+                                       resume=resume)
         if op == "compact":
             return compact(spark, d, resume=resume)
         return apply_updates(spark, d, add_corpus=add, delete_keys=dele,
                              mode=op, resume=resume)
+
+    def current(d):
+        return _read_current(d) if os.path.exists(f"{d}/CURRENT") else None
 
     def blocks(d):
         return sorted(
@@ -254,8 +266,9 @@ def test_resume_between_phase_a_and_phase_b(spark, corpus_df, tmp_path,
         )
 
     want_dir, got_dir = str(tmp_path / "want"), str(tmp_path / "got")
-    shutil.copytree(base, want_dir)
-    shutil.copytree(base, got_dir)
+    if op != "build":
+        shutil.copytree(base, want_dir)
+        shutil.copytree(base, got_dir)
     want = run(want_dir)
 
     staged = []
@@ -266,10 +279,11 @@ def test_resume_between_phase_a_and_phase_b(spark, corpus_df, tmp_path,
         staged.append((params, os.stat(params).st_mtime_ns))
         raise RuntimeError("crash between phase A and phase B")
 
-    monkeypatch.setattr(maintenance, "build_buckets_batch", crash)
+    monkeypatch.setattr(segments, "commit_generation", crash)
+    monkeypatch.setattr(maintenance, "commit_generation", crash)
     with pytest.raises(RuntimeError, match="crash between"):
         run(got_dir)
-    assert _read_current(got_dir) == _read_current(base)
+    assert current(got_dir) == current(base)
     monkeypatch.undo()
 
     got = run(got_dir, resume=True)

@@ -17,6 +17,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
     apply_updates,
+    compact,
     restore,
     snapshot_log,
 )
@@ -210,36 +211,45 @@ def test_explicit_ids_requires_doc_id_column(spark, corpus_pdf,
                       mode="delta", explicit_ids=True)
 
 
-# Spark jobs one delta-mode update launched on this fixture (the
-# session's 50-doc corpus, 4 buckets, positions stored) when this test
-# was written: the add batch on the fresh build, then the delete batch
-# on the layered result. The delta write is the benchmarked upsert
-# path; an update may launch fewer jobs, never more.
-DELTA_UPDATE_JOBS = {"add": 20, "delete": 9}
+# Spark jobs each write path launched on this fixture (the session's
+# 50-doc corpus, 4 buckets, positions stored) when the build, the
+# delta update and the merge came to stage through ``stage_corpus``
+# and commit through ``commit_generation``: the build, a delta-mode add
+# batch on it, a delete batch on the layered result, then compact() of
+# both layers. perfbench's set-up runs two builds and a delta update,
+# so these host-independent counts guard it. A write may launch fewer
+# jobs, never more.
+WRITE_PATH_JOBS = {"build": 11, "add": 18, "delete": 6, "compact": 19}
 
 
 def test_delta_update_job_counts(spark, corpus_df, update_fixtures,
                                  tmp_path):
     d = str(tmp_path / "idx")
-    build_segment_index(spark, with_doc_id(corpus_df), d, n_buckets=4,
-                        hot_df=8, block_size=16, store_positions=True)
+    corpus = with_doc_id(corpus_df)
     add_pdf, del_pdf = update_fixtures
-    batches = {
-        "add": dict(add_corpus=spark.createDataFrame(add_pdf)),
-        "delete": dict(delete_keys=spark.createDataFrame(del_pdf)),
+    add, dele = spark.createDataFrame(add_pdf), spark.createDataFrame(del_pdf)
+    writes = {
+        "build": lambda: build_segment_index(
+            spark, corpus, d, n_buckets=4, hot_df=8, block_size=16,
+            store_positions=True,
+        ),
+        "add": lambda: apply_updates(spark, d, mode="delta", add_corpus=add),
+        "delete": lambda: apply_updates(spark, d, mode="delta",
+                                        delete_keys=dele),
+        "compact": lambda: compact(spark, d),
     }
     sc = spark.sparkContext
     jobs = {}
-    for name, batch in batches.items():
-        group = f"delta_update_jobs_{name}"
+    for name, write in writes.items():
+        group = f"write_path_jobs_{name}"
         sc.setJobGroup(group, group)
         try:
-            rep = apply_updates(spark, d, mode="delta", **batch)
+            rep = write()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         assert rep.snapshot_version is not None
         jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
     assert all(
-        0 < jobs[name] <= bound for name, bound in DELTA_UPDATE_JOBS.items()
-    ), (jobs, DELTA_UPDATE_JOBS)
+        0 < jobs[name] <= bound for name, bound in WRITE_PATH_JOBS.items()
+    ), (jobs, WRITE_PATH_JOBS)
