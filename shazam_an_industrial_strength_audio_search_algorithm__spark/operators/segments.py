@@ -77,7 +77,7 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -1198,18 +1198,23 @@ class SegmentIndex:
             with_positions,
         )
 
+    def terms_filter(self, terms: list[str]) -> Column:
+        """The static predicate selecting ``terms``' rows from a
+        segments or doc_terms scan: each term's bucket is a
+        constant-folded ``bucket_col(lit(term))``, so the scan prunes
+        statically to those buckets (``PartitionFilters: [bucket = K]``)
+        and the ``term`` predicate reaches parquet — no job runs to
+        resolve them."""
+        return F.col("bucket").isin(
+            [bucket_col(F.lit(t), self.n_buckets) for t in terms]
+        ) & F.col("term").isin(terms)
+
     def postings_for_terms(self, terms: list[str],
                            with_positions: bool = False) -> DataFrame:
-        """Postings for a Python list of terms: each term's bucket is a
-        constant-folded ``bucket_col(lit(term))``, so the scan prunes
-        statically to those buckets and the ``term`` predicate reaches
-        parquet — no job runs to resolve them."""
-        terms = sorted(set(terms))
+        """Postings for a Python list of terms, read through
+        ``terms_filter``."""
         rows = self.doc_terms(None).filter(
-            F.col("bucket").isin(
-                [bucket_col(F.lit(t), self.n_buckets) for t in terms]
-            )
-            & F.col("term").isin(terms)
+            self.terms_filter(sorted(set(terms)))
         )
         return self._postings(rows, with_positions)
 

@@ -37,7 +37,10 @@ def local_rows_df(spark: SparkSession, rows, schema):
     (query lists, centroid tables, bucket stats, rank offsets) are
     driver-tiny, single-task consumers (a ``coalesce(1)`` write, a
     broadcast build, a group-by that needs no exchange) read them
-    whole, and a write fed by the frame keeps one writer task.
+    whole, and a write fed by the frame keeps one writer task. A
+    one-row frame is already one partition, so it skips the coalesce
+    and stays a local relation (``isLocal()``): its ``collect()``
+    launches no job, and ``wand_topk`` answers it on the driver.
 
     ``rows`` are tuples (or ``Row``s) in schema order; ``schema`` is a
     ``StructType`` or a DDL string."""
@@ -52,7 +55,8 @@ def local_rows_df(spark: SparkSession, rows, schema):
         [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,
     )
-    return spark.createDataFrame(table, schema).coalesce(1)
+    df = spark.createDataFrame(table, schema)
+    return df if table.num_rows == 1 else df.coalesce(1)
 
 
 def spread_input(df, n: int | None = None):

@@ -64,6 +64,7 @@ def stream_match(
         segment_topk,
     )
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
+        TombstoneCapError,
         wand_topk,
     )
 
@@ -84,8 +85,8 @@ def stream_match(
             # a concurrent stream_ingest committing delta layers
             # mid-stream no longer forces the brute path
             res = wand_topk(idx, batch_df, k=k, micro=micro)
-        except ValueError:
-            # tombstone set outgrew the kernel-closure cap (a
+        except TombstoneCapError:
+            # tombstone set outgrew the kernel's cap (a
             # long-uncompacted pipeline): serve this batch exactly via
             # the brute merge-on-read path instead of wedging the
             # stream, with the decode counters nulled to keep one

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import math
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -238,18 +239,95 @@ def test_delta_update_job_counts(spark, corpus_df, update_fixtures,
                                         delete_keys=dele),
         "compact": lambda: compact(spark, d),
     }
-    sc = spark.sparkContext
     jobs = {}
     for name, write in writes.items():
-        group = f"write_path_jobs_{name}"
-        sc.setJobGroup(group, group)
-        try:
-            rep = write()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
+        rep, ids = _count_jobs(spark, f"write_path_jobs_{name}", write)
         assert rep.snapshot_version is not None
-        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        jobs[name] = len(ids)
     assert all(
         0 < jobs[name] <= bound for name, bound in WRITE_PATH_JOBS.items()
     ), (jobs, WRITE_PATH_JOBS)
+
+
+def _count_jobs(spark, group: str, fn):
+    """``fn()``'s result and the Spark job ids it launched, by job
+    group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+# Spark jobs a WAND request launched on the same fixture, counted the
+# same way (call and collect): one query from a one-row local frame on
+# the fresh build; the same on the layered snapshot after the add and
+# delete batches, once its tombstone arrays exist (a first call builds
+# them); and a local frame one row past the driver placement's limit,
+# which keeps the grouped path's broadcast build, scan + shuffle and
+# kernel.
+WAND_QUERY_JOBS = {"single": 1, "single_layered": 1, "over_limit": 3}
+
+
+def test_wand_query_job_counts(spark, corpus_pdf, corpus_df, update_fixtures,
+                               tmp_path, monkeypatch):
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators import (
+        wand,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+        local_rows_df,
+    )
+
+    d = str(tmp_path / "idx")
+    build_segment_index(spark, with_doc_id(corpus_df), d, n_buckets=4,
+                        hot_df=8, block_size=16)
+    text = " ".join(corpus_pdf["content"].iloc[10].split()[:6])
+    one = local_rows_df(spark, [("q1", text)], "query_id string, text string")
+    n_over = wand.DRIVER_MAX_QUERIES + 1
+    over = spark.createDataFrame(pd.DataFrame(
+        {"query_id": [f"q{i}" for i in range(n_over)], "text": [text] * n_over}
+    ))
+    assert over.isLocal()
+    # the kernel runs in this process on the driver path, never in a
+    # Python worker
+    kernel_calls = []
+    real_kernel = wand._kernel  # noqa: SLF001
+    monkeypatch.setattr(wand, "_kernel", lambda *a: (
+        kernel_calls.append(1), real_kernel(*a))[1])
+
+    def single(idx):
+        res = wand.wand_topk(idx, one, k=3)
+        rows = res.collect()
+        assert res.isLocal() and rows
+        return rows
+
+    jobs = {}
+    _, jobs["single"] = _count_jobs(
+        spark, "wand_jobs_single", lambda: single(SegmentIndex.open(spark, d)))
+    assert kernel_calls == [1]
+    add_pdf, del_pdf = update_fixtures
+    apply_updates(spark, d, mode="delta",
+                  add_corpus=spark.createDataFrame(add_pdf))
+    apply_updates(spark, d, mode="delta",
+                  delete_keys=spark.createDataFrame(del_pdf))
+    layered = SegmentIndex.open(spark, d)
+    assert layered.has_deltas
+    single(layered)
+    assert layered.tombstone_arrays() is not None
+    _, jobs["single_layered"] = _count_jobs(
+        spark, "wand_jobs_single_layered", lambda: single(layered))
+    assert kernel_calls == [1, 1, 1]
+    _, jobs["over_limit"] = _count_jobs(
+        spark, "wand_jobs_over_limit",
+        lambda: wand.wand_topk(layered, over, k=3).collect())
+    assert kernel_calls == [1, 1, 1]
+    sc = spark.sparkContext
+    stages = {name: [len(sc.statusTracker().getJobInfo(j).stageIds)
+                     for j in ids] for name, ids in jobs.items()}
+    counts = {name: len(ids) for name, ids in jobs.items()}
+    assert counts == WAND_QUERY_JOBS, (counts, stages)
+    # a single query's one job is one scan stage: no exchange
+    assert stages["single"] == stages["single_layered"] == [1], stages

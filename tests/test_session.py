@@ -63,3 +63,19 @@ def test_local_rows_df_from_collected_rows(spark):
 def test_local_rows_df_empty(spark, schema):
     got = _check(spark, [], schema)
     assert got.count() == 0
+
+
+def test_local_rows_df_one_row_stays_local(spark):
+    """A one-row frame skips the coalesce: it is already one partition,
+    it stays a local relation, and reading it launches no job."""
+    got = _check(spark, MIXED_ROWS[:1], MIXED_DDL)
+    assert got.isLocal()
+    sc = spark.sparkContext
+    sc.setJobGroup("local_rows_df_one_row", "local_rows_df_one_row")
+    try:
+        rows = got.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("local_rows_df_one_row") == []
+    assert rows == spark.createDataFrame(MIXED_ROWS[:1], MIXED_DDL).collect()

@@ -14,6 +14,9 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.token
     tokenize_udf,
     tokens_col,
 )
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
+    query_terms,
+)
 
 SAMPLES = [
     "def foo(bar): return bar + 1",
@@ -55,3 +58,17 @@ def test_duckdb_sql_matches_python():
     expr = DUCKDB_TOKENS_SQL.format(col="text")
     got = con.sql(f"SELECT {expr} AS toks FROM t").df()["toks"].tolist()
     assert [list(g) for g in got] == [tokenize_py(s) for s in SAMPLES]
+
+
+def test_query_terms_match_python(spark):
+    """Query side: the JVM ``query_terms`` (the grouped WAND and brute
+    paths) must yield exactly the distinct ``tokenize_py`` terms, in
+    order, that the driver WAND path computes — a None text included."""
+    texts = SAMPLES + [None]
+    df = spark.createDataFrame(
+        pd.DataFrame({"query_id": [f"q{i}" for i in range(len(texts))],
+                      "text": texts})
+    )
+    got = [(r["query_id"], r["term"]) for r in query_terms(df).collect()]
+    assert got == [(f"q{i}", t) for i, s in enumerate(texts)
+                   for t in dict.fromkeys(tokenize_py(s))]

@@ -5,10 +5,14 @@ from __future__ import annotations
 
 import math
 
+import pandas as pd
 import pytest
 
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
     with_doc_id,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
+    apply_updates,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
     SegmentIndex,
@@ -16,8 +20,14 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
     segment_topk,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
+    DRIVER_MAX_QUERIES,
     wand_topk,
 )
+from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+    local_rows_df,
+)
+
+Q_DDL = "query_id string, text string"
 
 
 @pytest.fixture(scope="module")
@@ -27,6 +37,28 @@ def seg(spark, corpus_df, tmp_path_factory):
     # small blocks + low hot_df → many blocks per term → skippable work
     build_segment_index(spark, corpus, d, n_buckets=4, hot_df=8, block_size=8)
     return SegmentIndex.open(spark, d)
+
+
+@pytest.fixture(scope="module")
+def layered_seg(spark, corpus_pdf, tmp_path_factory):
+    """40 base docs, then one delta layer adding 5 docs and deleting
+    one base doc: a merge-on-read snapshot with a tombstone."""
+    d = str(tmp_path_factory.mktemp("wandidx_layered"))
+    build_segment_index(
+        spark, with_doc_id(spark.createDataFrame(corpus_pdf.iloc[:40])), d,
+        n_buckets=4, hot_df=8, block_size=8,
+    )
+    apply_updates(
+        spark, d,
+        add_corpus=spark.createDataFrame(corpus_pdf.iloc[40:45]),
+        delete_keys=spark.createDataFrame(
+            corpus_pdf.iloc[[3]][["repo", "path", "commit"]]
+        ),
+        mode="delta",
+    )
+    idx = SegmentIndex.open(spark, d)
+    assert idx.has_deltas and idx.tombstone_arrays() is not None
+    return idx
 
 
 @pytest.mark.parametrize("k", [1, 3, 10])
@@ -69,6 +101,78 @@ def test_wand_oov_query_yields_nothing(spark, seg):
         [("qx", "zzqabsent wwqmissing")], "query_id string, text string"
     )
     assert wand_topk(seg, q, k=5).count() == 0
+
+
+def _by_query(rows) -> dict:
+    out: dict = {}
+    for r in rows:
+        out.setdefault(r["query_id"], []).append(tuple(r))
+    return {q: sorted(v, key=lambda t: t[1]) for q, v in out.items()}
+
+
+@pytest.mark.parametrize("micro", [False, True])
+@pytest.mark.parametrize("which", ["fresh", "layered"])
+def test_driver_path_equals_grouped_path(spark, seg, layered_seg, queries_pdf,
+                                         queries_df, which, micro):
+    """Each fixture query alone, as a one-row local frame, takes the
+    driver path and must return exactly the grouped path's rows for it
+    (docs, ranks, scores, matched_terms, both block counters) and the
+    brute path's ranking — on a fresh and on a layered snapshot."""
+    idx = seg if which == "fresh" else layered_seg
+    score = "score_micro" if micro else "score"
+    assert queries_df.isLocal() and len(queries_pdf) > DRIVER_MAX_QUERIES
+    grouped = _by_query(wand_topk(idx, queries_df, k=5, micro=micro).collect())
+    brute = _by_query(
+        segment_topk(idx, queries_df, k=5, micro=micro)
+        .select("query_id", "rank", "doc_id", score, "matched_terms")
+        .collect()
+    )
+    assert grouped, "the fixture queries match nothing"
+    for qid, text in zip(queries_pdf["query_id"], queries_pdf["text"]):
+        res = wand_topk(idx, local_rows_df(spark, [(qid, text)], Q_DDL),
+                        k=5, micro=micro)
+        assert res.isLocal(), "a one-row local frame left the driver path"
+        got = _by_query(res.collect()).get(qid, [])
+        assert got == grouped.get(qid, []), qid
+        want = brute.get(qid, [])
+        assert [g[:3] + g[4:5] for g in got] == [w[:3] + w[4:] for w in want]
+        for g, w in zip(got, want):
+            if micro:
+                assert g[3] == w[3]
+            else:
+                assert math.isclose(g[3], w[3], rel_tol=1e-9, abs_tol=1e-12)
+
+
+@pytest.mark.parametrize("text", ["zzqabsent wwqmissing", "", None])
+def test_driver_path_empty_answers(spark, seg, layered_seg, text):
+    """An OOV query, an empty text and a None text answer nothing on
+    the driver path, as on the grouped path."""
+    for idx in (seg, layered_seg):
+        res = wand_topk(idx, local_rows_df(spark, [("qx", text)], Q_DDL), k=5)
+        assert res.isLocal() and res.collect() == []
+        grouped = spark.createDataFrame([("qx", text)], Q_DDL)
+        assert not grouped.isLocal()
+        assert wand_topk(idx, grouped, k=5).collect() == []
+
+
+def test_duplicate_query_id_is_rejected(spark, seg, queries_pdf):
+    """A query id that repeats would sum its rows' scores and double
+    ``matched_terms``. The driver path refuses it before any job runs;
+    the grouped kernel refuses an id repeated in a term's query list."""
+    rows = [("q1", queries_pdf["text"].iloc[0])] * 2
+    local = spark.createDataFrame(pd.DataFrame(rows, columns=["query_id", "text"]))
+    assert local.isLocal()
+    sc = spark.sparkContext
+    sc.setJobGroup("wand_duplicate_id", "wand_duplicate_id")
+    try:
+        with pytest.raises(ValueError, match="duplicate query_id 'q1'"):
+            wand_topk(seg, local, k=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("wand_duplicate_id") == []
+    with pytest.raises(Exception, match="duplicate query_id 'q1'"):
+        wand_topk(seg, spark.createDataFrame(rows, Q_DDL), k=5).collect()
 
 
 def test_interval_kernel_covers_max_int64_doc_id():
