@@ -48,7 +48,9 @@ Rollback::
         restore --index /data/index --version 3
 
 Vector store (same lifecycle over the persisted ANN layouts —
-sign-LSH or IVF; updates commit as atomic merge-on-read generations)::
+sign-LSH or IVF; updates commit as atomic merge-on-read generations,
+and ann-update / ann-compact read the layout's kind from its
+snapshot)::
 
     spark-submit --py-files /tmp/engine.zip scripts/run_pipeline.py \
         ann-build --vectors /data/embeddings --index /data/annidx \
@@ -184,16 +186,14 @@ def main(argv: list[str]) -> int:
                         help="O(delta) upsert/delete: one atomically "
                              "committed generation (merge-on-read)")
     au.add_argument("--index", required=True)
-    au.add_argument("--layout", choices=["lsh", "ivf"], default="lsh")
     au.add_argument("--add")
     au.add_argument("--delete",
                     help="input spec of a one-column (vec_id) table")
 
     ac = sub.add_parser("ann-compact",
-                        help="fold delta generations back into the "
-                             "base layout (pause probes)")
+                        help="fold the generations back into one "
+                             "(probes keep running)")
     ac.add_argument("--index", required=True)
-    ac.add_argument("--layout", choices=["lsh", "ivf"], default="lsh")
 
     aq = sub.add_parser("ann-query")
     aq.add_argument("--index", required=True)
@@ -251,10 +251,9 @@ def main(argv: list[str]) -> int:
             similarity as sim,
         )
 
-        lsh = args.layout == "lsh"
         if args.cmd == "ann-build":
             vecs = read_input(spark, args.vectors)
-            if lsh:
+            if args.layout == "lsh":
                 sim.lsh_persist(vecs, args.index,
                                 n_planes=args.n_planes, seed=args.seed)
             else:
@@ -262,22 +261,22 @@ def main(argv: list[str]) -> int:
             print(f"ann-build layout={args.layout} -> {args.index}")
             return 0
         if args.cmd == "ann-update":
-            upsert = sim.lsh_upsert if lsh else sim.ivf_upsert
-            gen = upsert(
+            version = sim.vector_upsert(
                 spark, args.index,
                 add=read_input(spark, args.add) if args.add else None,
                 delete_ids=(read_input(spark, args.delete)
                             if args.delete else None),
             )
-            print(f"ann-update layout={args.layout} committed g={gen}")
+            print(f"ann-update committed v{version}")
             return 0
         if args.cmd == "ann-compact":
-            (sim.lsh_compact if lsh else sim.ivf_compact)(spark, args.index)
-            print(f"ann-compact layout={args.layout} done")
+            version = sim.vector_compact(spark, args.index)
+            print(f"ann-compact committed v{version}" if version
+                  else "ann-compact: nothing to fold")
             return 0
         # ann-query
         qs = read_input(spark, args.queries)
-        if lsh:
+        if args.layout == "lsh":
             top = sim.lsh_topk_persisted(
                 spark, args.index, qs, k=args.k,
                 probe_flips=args.probe_flips,

@@ -49,11 +49,10 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.simil
     ivf_persist,
     ivf_topk,
     ivf_topk_persisted,
-    ivf_upsert,
     lsh_persist,
     lsh_topk,
     lsh_topk_persisted,
-    lsh_upsert,
+    vector_upsert,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
     bm25_scores,
@@ -1968,18 +1967,20 @@ def q_ann_lsh_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _upserted_copy(spark: SparkSession, sf_dir: str, base_dir: str,
-                   upsert, prefix: str) -> str:
+                   prefix: str) -> str:
     """A file-level copy of a persisted vector layout with the
     deterministic delta batch upserted: every ``vec_id % 97 == 0``
     re-added with its vector reversed, every other ``vec_id % 101 ==
     0`` deleted. The delta twin MUTATES its layout, so it copies the
-    _disk twin's base instead of paying a second Spark build."""
+    _disk twin's base instead of paying a second Spark build (the
+    layout's snapshots name their data by relative path, so the copy
+    is a layout of its own)."""
     import shutil
 
     emb = load(spark, sf_dir, "embeddings")
     d = OWNER.tmpdir(prefix)
     shutil.copytree(base_dir, d, dirs_exist_ok=True)
-    upsert(
+    vector_upsert(
         spark, d,
         add=emb.filter(F.col("vec_id") % 97 == 0)
         .withColumn("embedding", F.reverse("embedding")),
@@ -2005,13 +2006,13 @@ def _delta_query_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @OWNER.fixture
 def ivf_delta_dir(spark: SparkSession, sf_dir: str) -> str:
     return _upserted_copy(spark, sf_dir, ivf_disk_dir(spark, sf_dir),
-                          ivf_upsert, "driver_ivfdelta_")
+                          "driver_ivfdelta_")
 
 
 @OWNER.fixture
 def lsh_delta_dir(spark: SparkSession, sf_dir: str) -> str:
     return _upserted_copy(spark, sf_dir, lsh_disk_dir(spark, sf_dir),
-                          lsh_upsert, "driver_lshdelta_")
+                          "driver_lshdelta_")
 
 
 def q_ann_ivf_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2040,7 +2041,7 @@ _DELTA_LOGICAL_SELECT = (
 
 def q_ann_lsh_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH ANN through a persisted layout WITH PENDING UPSERTS:
-    build the base layout, then ``lsh_upsert`` a deterministic delta
+    build the base layout, then ``vector_upsert`` a deterministic delta
     batch (every ``vec_id % 97 == 0`` re-added with its vector
     reversed; every ``vec_id % 101 == 0`` not in the upsert set
     deleted) and probe merge-on-read — delta generations +

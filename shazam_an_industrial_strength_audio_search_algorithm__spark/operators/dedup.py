@@ -27,8 +27,6 @@ made explicit).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark import StorageLevel
@@ -48,6 +46,8 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.session import 
 MINHASH_PRIME = (1 << 61) - 1
 DEFAULT_NUM_PERM = 64
 DEFAULT_BANDS = 16
+# near_dup_clusters: edge sets up to this size take the local union-find
+LOCAL_CC_CAP = 2_000_000
 
 
 def minhash_expected_recall(jaccard: float,
@@ -792,8 +792,7 @@ def near_dup_clusters(pairs: DataFrame, max_iter: int = 50,
     # identical by construction (min-label propagation computes
     # exactly the per-component minimum); past the cap the
     # distributed propagation below runs unchanged.
-    cc_cap = int(os.environ.get("SPARK_GRAFT_LOCAL_CC_CAP", "2000000"))
-    if edges.count() <= cc_cap:
+    if edges.count() <= LOCAL_CC_CAP:
         from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
             local_rows_df,
         )

@@ -11,7 +11,9 @@ Reference parity (``utils/Hashing_update.py``, SURVEY §3.3):
 - backup-then-rewrite of all catalogs (``:102-108``) → a real
   snapshot commit: only affected buckets are rebuilt, every other
   bucket is inherited by path; ``restore()`` is a CURRENT-pointer
-  flip (the reference's manual backup restore, for free).
+  flip (the reference's manual backup restore, for free). ``restore``,
+  ``vacuum`` and ``snapshot_log`` live in ``snapshot.py``, shared with
+  the vector layouts, and are re-exported here.
 
 Every update stages its batch the same way: the removed doc ids, then
 the added docs' doc_terms (partitioned by bucket) and their doc_lens
@@ -53,10 +55,6 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
     TOMBSTONES_SCHEMA,
     SegmentIndex,
-    _atomic_write_json,
-    _next_commit_version,
-    _read_current,
-    _write_current,
     as_schema,
     auto_block_size,
     auto_n_buckets,
@@ -64,8 +62,15 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
     bucket_paths,
     commit_generation,
     manifested,
-    read_snapshot,
     stage_corpus,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (  # noqa: F401 (re-exported)
+    _atomic_write_json,
+    _next_commit_version,
+    read_snapshot,
+    restore,
+    snapshot_log,
+    vacuum,
 )
 
 # snapshot fields an update or a compaction inherits from its base
@@ -631,99 +636,3 @@ def maybe_compact(spark: SparkSession, index_dir: str,
         n_buckets=policy.rebucket, block_size=policy.rebucket,
         trigger=f"policy:{reason}",
     )
-
-
-def restore(index_dir: str, version: int) -> None:
-    """Time-travel rollback: point CURRENT at an older snapshot (the
-    reference's backup-file restore, ``Hashing_update.py:102-108``,
-    as a pointer flip; no data moves)."""
-    if not os.path.exists(f"{index_dir}/snapshots/v{version}.json"):
-        raise FileNotFoundError(f"snapshot v{version} does not exist")
-    _write_current(index_dir, version)
-
-
-def vacuum(index_dir: str, keep_last: int = 2) -> dict:
-    """Expire old snapshots and delete data generations no kept
-    snapshot references (Iceberg expire_snapshots/remove_orphans
-    analog). CURRENT's snapshot is always kept. Returns a report of
-    what was removed.
-
-    Safe by construction: referenced paths are collected from the kept
-    snapshots' bucket maps + doc_lens pointers; only data/ and
-    manifests/ entries referenced by NO kept snapshot are deleted.
-    """
-    current = _read_current(index_dir)
-    log = snapshot_log(index_dir)
-    versions = [s["version"] for s in log]
-    keep = sorted(set(versions[-keep_last:]) | {current})
-    kept_snaps = [s for s in log if s["version"] in keep]
-
-    def _collect(snaps):
-        dirs: set[str] = set()
-        gens: set[str] = set()
-        for s in snaps:
-            dirs.add(s["doc_lens"].split("/")[1])
-            for paths in s["buckets"].values():
-                for p in paths.values():
-                    dirs.add(p.split("/")[1])  # e.g. dt_u2
-            for layer in s.get("layers") or []:
-                gens.add(layer["gen"])
-                for key in ("tombstones", "doc_lens_delta"):
-                    if layer.get(key):
-                        dirs.add(layer[key].split("/")[1])
-            for layer in s.get("layers") or []:
-                for paths in layer.get("buckets", {}).values():
-                    for p in paths.values():
-                        dirs.add(p.split("/")[1])
-        for d in dirs:
-            gens.add(d.split("_", 1)[1])  # init / uN
-        return dirs, gens
-
-    referenced_dirs, referenced_gens = _collect(kept_snaps)
-    # an IN-PROGRESS generation (manifests/<gen> exists but no snapshot
-    # anywhere references it yet — e.g. a concurrent update between its
-    # phase A and its snapshot commit) must survive vacuum: deleting
-    # its staging would fail the running job or, worse, let it commit a
-    # snapshot pointing at vanished paths
-    _, committed_gens = _collect(log)
-    if os.path.isdir(f"{index_dir}/manifests"):
-        for name in os.listdir(f"{index_dir}/manifests"):
-            if name not in committed_gens:
-                referenced_gens.add(name)
-                referenced_dirs.update({
-                    f"dt_{name}", f"dl_{name}", f"seg_{name}",
-                })
-    # update generations also reference their staging
-    for gen in referenced_gens:
-        referenced_dirs.update({
-            f"dtdelta_{gen}", f"dldelta_{gen}", f"removed_{gen}",
-        })
-
-    removed_data, removed_snaps = [], []
-    for name in sorted(os.listdir(f"{index_dir}/data")):
-        if name not in referenced_dirs:
-            shutil.rmtree(f"{index_dir}/data/{name}", ignore_errors=True)
-            removed_data.append(name)
-    for s in log:
-        if s["version"] not in keep:
-            os.remove(f"{index_dir}/snapshots/v{s['version']}.json")
-            removed_snaps.append(s["version"])
-    for name in sorted(os.listdir(f"{index_dir}/manifests")):
-        if name not in referenced_gens:
-            shutil.rmtree(f"{index_dir}/manifests/{name}", ignore_errors=True)
-    return {
-        "kept_versions": keep,
-        "removed_versions": removed_snaps,
-        "removed_data_dirs": removed_data,
-    }
-
-
-def snapshot_log(index_dir: str) -> list[dict]:
-    """Snapshot lineage, oldest→newest (Iceberg history analog)."""
-    out = []
-    for name in sorted(os.listdir(f"{index_dir}/snapshots")):
-        if name.startswith("v") and name.endswith(".json"):
-            snap = json.load(open(f"{index_dir}/snapshots/{name}"))
-            snap["version"] = int(name[1:-5])
-            out.append(snap)
-    return sorted(out, key=lambda s: s["version"])

@@ -40,7 +40,8 @@ two steps. ``stage_corpus`` (phase A) tokenizes a corpus once into
 doc_terms partitioned by bucket plus doc_lens (the merge stages its
 doc_terms from the stored columns instead). ``commit_generation``
 (phase B) encodes the buckets that have no manifest yet
-(``build_buckets_batch``), then writes the snapshot and moves CURRENT.
+(``build_buckets_batch``), then commits the snapshot through
+``snapshot.commit``, the protocol every persisted index shares.
 
 Scale design (the 100 TB story):
 
@@ -90,6 +91,15 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index
     doc_term_stage,
     explode_doc_terms,
     with_doc_id,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
+    _atomic_write_json,
+    _next_commit_version,
+    _read_current,
+    _snapshot_versions,
+    commit,
+    drop_superseded,
+    read_snapshot,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
     local_rows_df,
@@ -310,41 +320,6 @@ def _encode_partition(avgdl: float, block_size: int):
     return fn
 
 
-def _atomic_write_json(path: str, obj: dict) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
-
-
-def _read_current(index_dir: str) -> int:
-    with open(f"{index_dir}/CURRENT") as f:
-        return int(f.read().strip())
-
-
-def _snapshot_versions(index_dir: str) -> list[int]:
-    sdir = f"{index_dir}/snapshots"
-    if not os.path.isdir(sdir):
-        return []
-    return sorted(
-        int(n[1:-5]) for n in os.listdir(sdir)
-        if n.startswith("v") and n.endswith(".json")
-    )
-
-
-def _next_commit_version(index_dir: str) -> int:
-    """Smallest version above EVERY existing snapshot and CURRENT, not
-    just CURRENT: after restore() CURRENT may name an old snapshot
-    while newer ones are still retained — reusing their version would
-    overwrite data generations those snapshots reference (static
-    overwrites of dt/removed staging + dynamic overwrites of seg
-    partitions), i.e. silently corrupt retained history."""
-    vs = [0] + _snapshot_versions(index_dir)
-    if os.path.exists(f"{index_dir}/CURRENT"):
-        vs.append(_read_current(index_dir))
-    return max(vs) + 1
-
-
 def _next_build_gen(index_dir: str) -> str:
     """Name for a fresh REBUILD generation: past any committed
     snapshot version AND past any crashed rebuild's staged dirs, so a
@@ -395,21 +370,6 @@ def _committed_version_of_gen(index_dir: str, gen: str) -> int | None:
         ):
             return v
     return None
-
-
-def _write_current(index_dir: str, version: int) -> None:
-    tmp = f"{index_dir}/CURRENT.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, f"{index_dir}/CURRENT")
-
-
-def read_snapshot(index_dir: str, version: int | None = None) -> dict:
-    if version is None:
-        version = _read_current(index_dir)
-    snap = json.load(open(f"{index_dir}/snapshots/v{version}.json"))
-    snap["version"] = version
-    return snap
 
 
 def build_buckets_batch(
@@ -627,9 +587,10 @@ def commit_generation(
     build leaves for later — from the doc_terms staged at ``dt_path``,
     in one ``build_buckets_batch`` with ``snapshot``'s stats and layout.
     Once every bucket's manifest exists, ``snapshot`` commits as
-    ``snapshots/v{version}.json``, then CURRENT moves to it: snapshot
-    first, pointer second, and never backward (a build re-verifying an
-    older committed generation rewrites that snapshot in place).
+    version ``version`` through ``snapshot.commit``: it raises
+    ``CommitConflict`` when another writer moved CURRENT off
+    ``snapshot["parent"]``, and re-committing an identical snapshot (a
+    build re-verifying an older committed generation) is a no-op.
 
     Returns the buckets encoded and the committed version (None while
     a bucket is pending)."""
@@ -637,11 +598,7 @@ def commit_generation(
     build_buckets_batch(spark, index_dir, gen, built, dt_path, snapshot)
     if len(manifested(index_dir, gen, buckets)) < len(buckets):
         return built, None
-    _atomic_write_json(f"{index_dir}/snapshots/v{version}.json", snapshot)
-    if not os.path.exists(f"{index_dir}/CURRENT") \
-            or version >= _read_current(index_dir):
-        _write_current(index_dir, version)
-    return built, version
+    return built, commit(index_dir, version, snapshot)
 
 
 @dataclass
@@ -824,14 +781,19 @@ def build_segment_index(
         "doc_lens": f"data/dl_{gen}",
         "buckets": {str(b): bucket_paths(gen, b) for b in range(n_buckets)},
         "gen": gen,
-        "parent": already_current if gen != "init" else None,
+        # a committed generation re-verified in place keeps its parent,
+        # so its snapshot re-commits byte-identical
+        "parent": (
+            read_snapshot(index_dir, committed).get("parent")
+            if committed is not None
+            else already_current if gen != "init" else None
+        ),
         "operation": "initial_build" if gen == "init" else "rebuild",
     }
     _t0 = _time.monotonic()
     # a committed generation re-verified in place (verify_inputs
     # rebuilds) keeps its version; a fresh generation commits past
-    # every existing snapshot AND the current pointer — so a rebuild
-    # racing a concurrent update can never clobber it
+    # every existing snapshot AND the current pointer
     built, version = commit_generation(
         spark, index_dir, gen, range(n_buckets),
         [b for b in range(n_buckets) if b not in todo or b in skipped],
@@ -1109,17 +1071,7 @@ class SegmentIndex:
         doc broadcasts in and a row survives when ``gen_seq >=
         tomb_seq`` (or the doc has no tombstone). A no-op on a snapshot
         without tombstones."""
-        tmax = self._tombstone_rows()
-        if tmax is None:
-            return rows.drop("gen_seq")
-        return (
-            rows.join(F.broadcast(tmax), "doc_id", "left")
-            .filter(
-                F.col("tomb_seq").isNull()
-                | (F.col("gen_seq") >= F.col("tomb_seq"))
-            )
-            .drop("tomb_seq", "gen_seq")
-        )
+        return drop_superseded(rows, self._tombstone_rows(), "doc_id")
 
     def blocks_for_term_prefixes(self, prefixes: list[str]) -> DataFrame:
         """Term-DICTIONARY range scan: every block whose term starts

@@ -8,6 +8,12 @@
   re-verifies candidates only. Probing the query's bucket plus
   single-bit-flip neighbors trades recall for compute; recall is
   measured against the exact baseline in tests.
+- ``lsh_persist`` / ``ivf_persist``: the persisted layouts, vectors
+  partitioned by bucket / cell and snapshot-versioned through
+  ``operators/snapshot.py`` like the segment index. One
+  ``vector_upsert`` and one ``vector_compact`` maintain either kind;
+  ``lsh_topk_persisted`` / ``ivf_topk_persisted`` probe them with
+  dynamic partition pruning.
 
 Scale shape: brute force is a broadcast-join of Q queries against N
 vectors — O(Q·N·d) but embarrassingly parallel and shuffle-free
@@ -18,7 +24,10 @@ way: bucket id = coarse quantizer, same join/verify dataflow.
 
 from __future__ import annotations
 
+import json
 import os
+import uuid
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -26,6 +35,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
+    _next_commit_version,
+    commit,
+    current_version,
+    drop_superseded,
+    read_snapshot,
+)
 from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
     local_rows_df,
 )
@@ -60,25 +76,31 @@ def _cosine_micro_expr(v, q, vn, qn):
     ).otherwise(F.lit(0).cast("long"))
 
 
-def cosine_topk(emb: DataFrame, query_vecs: DataFrame, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                qid_col: str = "query_id", qvec_col: str = "qvec") -> DataFrame:
-    """Exact cosine top-k: (query_id, rank, vec_id, cosine_micro).
-    Queries are broadcast; ties break (cosine DESC, vec_id ASC)."""
-    base = emb.select(
+def _vectors(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vec_id, v double array, vnorm): the vector side of every path."""
+    return emb.select(
         F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
     ).withColumn("vnorm", _norm(F.col("v")))
-    qs = query_vecs.select(
+
+
+def _queries(query_vecs: DataFrame, qid_col: str, qvec_col: str) -> DataFrame:
+    """(query_id, q double array, qnorm): the query side of every path."""
+    return query_vecs.select(
         F.col(qid_col).alias("query_id"), _as_double(F.col(qvec_col)).alias("q")
     ).withColumn("qnorm", _norm(F.col("q")))
-    scored = (
-        base.join(F.broadcast(qs))
-        .withColumn(
-            "cosine_micro",
-            _cosine_micro_expr(F.col("v"), F.col("q"),
-                               F.col("vnorm"), F.col("qnorm")),
-        )
+
+
+def _top_k(cand: DataFrame, k: int, distinct: bool = True) -> DataFrame:
+    """(query_id, rank, vec_id, cosine_micro): ``cand``'s (query,
+    vector) pairs scored exactly and ranked (cosine DESC, vec_id ASC).
+    ``distinct`` collapses a pair that several probes reached."""
+    scored = cand.select(
+        "query_id", "vec_id",
+        _cosine_micro_expr(F.col("v"), F.col("q"), F.col("vnorm"),
+                           F.col("qnorm")).alias("cosine_micro"),
     )
+    if distinct:
+        scored = scored.distinct()
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_micro").desc(), F.col("vec_id").asc()
     )
@@ -87,6 +109,16 @@ def cosine_topk(emb: DataFrame, query_vecs: DataFrame, k: int = 10,
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "vec_id", "cosine_micro")
     )
+
+
+def cosine_topk(emb: DataFrame, query_vecs: DataFrame, k: int = 10,
+                id_col: str = "vec_id", vec_col: str = "embedding",
+                qid_col: str = "query_id", qvec_col: str = "qvec") -> DataFrame:
+    """Exact cosine top-k: (query_id, rank, vec_id, cosine_micro).
+    Queries are broadcast; ties break (cosine DESC, vec_id ASC)."""
+    qs = _queries(query_vecs, qid_col, qvec_col)
+    return _top_k(_vectors(emb, id_col, vec_col).join(F.broadcast(qs)), k,
+                  distinct=False)
 
 
 def hyperplanes(dim: int, n_planes: int = DEFAULT_PLANES, seed: int = 13) -> np.ndarray:
@@ -138,6 +170,7 @@ def _bucket_expr(v_col, planes: np.ndarray):
 
 DEFAULT_CELLS = 16
 DEFAULT_PROBE = 4
+CENTROIDS_SCHEMA = "cid int, cv array<double>, cnorm double"
 
 
 def _id_hash(col):
@@ -195,9 +228,7 @@ def ivf_centroids_refined(emb: DataFrame, n_cells: int = DEFAULT_CELLS,
     (cid, cv, cnorm)."""
     spark = emb.sparkSession
     cent = ivf_centroids(emb, n_cells, id_col, vec_col)
-    base = emb.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("vnorm", _norm(F.col("v")))
+    base = _vectors(emb, id_col, vec_col)
     for _ in range(int(iters)):
         cent_rows = cent.collect()
         cent_local = local_rows_df(spark, cent_rows, cent.schema)
@@ -279,6 +310,46 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     ).select("vec_id", "v", "vnorm", "cell")
 
 
+def _centroid_table(emb: DataFrame, n_cells: int, refine_iters: int,
+                    id_col: str, vec_col: str) -> DataFrame:
+    """The coarse quantizer (sampled, or Lloyd-refined when
+    ``refine_iters``) collected once into a one-partition local
+    relation, so the assignment literals and the probe broadcast (or
+    the centroid write) reuse the same rows instead of each re-running
+    the full-table sample plan."""
+    if refine_iters:
+        cent = ivf_centroids_refined(emb, n_cells, refine_iters,
+                                     id_col, vec_col)
+    else:
+        cent = ivf_centroids(emb, n_cells, id_col, vec_col)
+    return local_rows_df(emb.sparkSession, cent.collect(), CENTROIDS_SCHEMA)
+
+
+def _ivf_probes(cent: DataFrame, query_vecs: DataFrame, n_probe: int,
+                qid_col: str, qvec_col: str) -> DataFrame:
+    """(query_id, q, qnorm, cell): each query's ``n_probe`` nearest
+    cells (ties → lowest cid), the centroid table broadcast."""
+    qscored = _queries(query_vecs, qid_col, qvec_col).join(
+        F.broadcast(cent)).withColumn(
+        "ccos",
+        # same zero-norm policy as ivf_assign's nanvl(-2.0): a
+        # degenerate query or centroid must sort LAST, not NaN-first
+        F.when(
+            (F.col("qnorm") * F.col("cnorm")) > 0,
+            _dot(F.col("q"), F.col("cv"))
+            / (F.col("qnorm") * F.col("cnorm")),
+        ).otherwise(F.lit(-2.0)),
+    )
+    wq = Window.partitionBy("query_id").orderBy(
+        F.col("ccos").desc(), F.col("cid").asc()
+    )
+    return (
+        qscored.withColumn("rn", F.row_number().over(wq))
+        .filter(F.col("rn") <= n_probe)
+        .select("query_id", "q", "qnorm", F.col("cid").alias("cell"))
+    )
+
+
 def ivf_topk(emb: DataFrame, query_vecs: DataFrame, k: int = 10,
              n_cells: int = DEFAULT_CELLS, n_probe: int = DEFAULT_PROBE,
              id_col: str = "vec_id", vec_col: str = "embedding",
@@ -291,146 +362,54 @@ def ivf_topk(emb: DataFrame, query_vecs: DataFrame, k: int = 10,
     (``ivf_centroids_refined``) — better recall at equal n_probe,
     same dataflow; the SQL value oracle covers the default sampled
     quantizer only."""
-    if refine_iters:
-        cent = ivf_centroids_refined(emb, n_cells, refine_iters,
-                                     id_col, vec_col)
-    else:
-        cent = ivf_centroids(emb, n_cells, id_col, vec_col)
-    # one centroid scan, not two: collect the (tiny) centroid frame and
-    # rebuild it as a local relation so the assignment literals AND the
-    # probe broadcast reuse the same materialized rows instead of each
-    # re-running the full-table sample plan
-    # single-slice local frame: the collected centroid rows are a dim
-    # table; one slice avoids N-python-slice replays per evaluation
-    cent = local_rows_df(emb.sparkSession, cent.collect(), cent.schema)
-    base = emb.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("vnorm", _norm(F.col("v")))
-    assigned = ivf_assign(base, cent)
-
-    qs = query_vecs.select(
-        F.col(qid_col).alias("query_id"), _as_double(F.col(qvec_col)).alias("q")
-    ).withColumn("qnorm", _norm(F.col("q")))
-    qscored = qs.join(F.broadcast(cent)).withColumn(
-        "ccos",
-        # same zero-norm policy as ivf_assign's nanvl(-2.0): a
-        # degenerate query or centroid must sort LAST, not NaN-first
-        F.when(
-            (F.col("qnorm") * F.col("cnorm")) > 0,
-            _dot(F.col("q"), F.col("cv"))
-            / (F.col("qnorm") * F.col("cnorm")),
-        ).otherwise(F.lit(-2.0)),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("ccos").desc(), F.col("cid").asc()
-    )
-    probes = (
-        qscored.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "q", "qnorm", F.col("cid").alias("cell"))
-    )
-
-    cand = assigned.join(F.broadcast(probes), "cell").withColumn(
-        "cosine_micro",
-        _cosine_micro_expr(F.col("v"), F.col("q"),
-                           F.col("vnorm"), F.col("qnorm")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_micro").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.select("query_id", "vec_id", "cosine_micro").distinct()
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine_micro")
-    )
+    cent = _centroid_table(emb, n_cells, refine_iters, id_col, vec_col)
+    assigned = ivf_assign(_vectors(emb, id_col, vec_col), cent)
+    probes = _ivf_probes(cent, query_vecs, n_probe, qid_col, qvec_col)
+    return _top_k(assigned.join(F.broadcast(probes), "cell"), k)
 
 
 def ivf_persist(emb: DataFrame, out_dir: str,
                 n_cells: int = DEFAULT_CELLS,
                 id_col: str = "vec_id",
                 vec_col: str = "embedding",
-                refine_iters: int = 0) -> None:
-    """Ingest-time IVF layout: vectors written PARTITIONED BY cell
-    (plus the centroid table) — the storage shape that makes probes
-    prune files instead of scanning the corpus. At 10^12 vectors this
-    is the difference between reading n_probe/n_cells of the data and
-    reading all of it; the assignment itself is one broadcast
-    cross-join pass (no shuffle of the vector table beyond the
+                refine_iters: int = 0) -> int:
+    """Ingest-time IVF layout: vectors written PARTITIONED BY cell,
+    plus the centroid table, committed as snapshot v1 of a vector
+    layout (see "Persisted layouts" below) — the storage shape that
+    makes probes prune files instead of scanning the corpus. At 10^12
+    vectors this is the difference between reading n_probe/n_cells of
+    the data and reading all of it; the assignment itself is one
+    narrow pass (no shuffle of the vector table beyond the salted
     partitioned write). ``refine_iters>0`` persists Lloyd-refined
-    centroids (no SQL value oracle — see ivf_centroids_refined)."""
-    if refine_iters:
-        cent = ivf_centroids_refined(emb, n_cells, refine_iters,
-                                     id_col, vec_col)
-    else:
-        cent = ivf_centroids(emb, n_cells, id_col, vec_col)
-    # one centroid scan, not two: collect the (tiny) centroid frame and
-    # rebuild it as a local relation so the assignment literals AND the
-    # probe broadcast reuse the same materialized rows instead of each
-    # re-running the full-table sample plan
-    # single-slice local frame: the collected centroid rows are a dim
-    # table; one slice avoids N-python-slice replays per evaluation
-    cent = local_rows_df(emb.sparkSession, cent.collect(), cent.schema)
-    base = emb.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("vnorm", _norm(F.col("v")))
-    assigned = ivf_assign(base, cent)
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{out_dir}/vectors"
+    centroids (no SQL value oracle — see ivf_centroids_refined).
+    Returns the committed snapshot version."""
+    cent = _centroid_table(emb, n_cells, refine_iters, id_col, vec_col)
+    gen = _stage_gen(out_dir)
+    cent.write.parquet(f"{out_dir}/data/centroids_{gen}")
+    return _persist(
+        out_dir, gen, ivf_assign(_vectors(emb, id_col, vec_col), cent),
+        {"kind": "ivf", "centroids": f"data/centroids_{gen}"},
     )
-    cent.write.mode("overwrite").parquet(f"{out_dir}/centroids")
 
 
 def ivf_topk_persisted(spark, index_dir: str, query_vecs: DataFrame,
                        k: int = 10, n_probe: int = DEFAULT_PROBE,
                        qid_col: str = "query_id",
                        qvec_col: str = "qvec") -> DataFrame:
-    """IVF top-k over the persisted layout: probe cells come from the
-    (tiny, broadcast) centroid table; the vector scan is joined on its
-    PARTITION column, so dynamic partition pruning reads only the
-    probed cells' files (asserted in test_plans). Values are identical
-    to the in-memory ``ivf_topk`` — same centroids, same assignment,
-    same scoring. On a layout with pending ``ivf_upsert`` batches the
-    scan resolves delta generations and tombstones first
-    (merge-on-read)."""
-    cent = spark.read.parquet(f"{index_dir}/centroids")
-    qs = query_vecs.select(
-        F.col(qid_col).alias("query_id"), _as_double(F.col(qvec_col)).alias("q")
-    ).withColumn("qnorm", _norm(F.col("q")))
-    qscored = qs.join(F.broadcast(cent)).withColumn(
-        "ccos",
-        # same zero-norm policy as ivf_assign's nanvl(-2.0): a
-        # degenerate query or centroid must sort LAST, not NaN-first
-        F.when(
-            (F.col("qnorm") * F.col("cnorm")) > 0,
-            _dot(F.col("q"), F.col("cv"))
-            / (F.col("qnorm") * F.col("cnorm")),
-        ).otherwise(F.lit(-2.0)),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("ccos").desc(), F.col("cid").asc()
-    )
-    probes = (
-        qscored.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "q", "qnorm", F.col("cid").alias("cell"))
-    )
-
-    vectors = _ivf_resolved_vectors(spark, index_dir)
-    cand = vectors.join(F.broadcast(probes), "cell").withColumn(
-        "cosine_micro",
-        _cosine_micro_expr(F.col("v"), F.col("q"),
-                           F.col("vnorm"), F.col("qnorm")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_micro").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.select("query_id", "vec_id", "cosine_micro").distinct()
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine_micro")
-    )
+    """IVF top-k over the persisted layout's current snapshot: probe
+    cells come from the (tiny, broadcast) centroid table; the vector
+    scan is joined on its PARTITION column, so dynamic partition
+    pruning reads only the probed cells' files (asserted in
+    test_similarity). Values are identical to the in-memory
+    ``ivf_topk`` — same centroids, same assignment, same scoring.
+    Every generation the snapshot lists is read merge-on-read
+    (``_resolved_vectors``). Building the frame launches no job."""
+    snap = _open_layout(index_dir, "ivf")
+    cent = spark.read.schema(CENTROIDS_SCHEMA).parquet(
+        f"{index_dir}/{snap['centroids']}")
+    probes = _ivf_probes(cent, query_vecs, n_probe, qid_col, qvec_col)
+    vectors = _resolved_vectors(spark, index_dir, snap)
+    return _top_k(vectors.join(F.broadcast(probes), "cell"), k)
 
 
 def lsh_expected_recall(cos_sim: float,
@@ -478,350 +457,299 @@ def lsh_persist(emb: DataFrame, out_dir: str,
                 n_planes: int = DEFAULT_PLANES, seed: int = 13,
                 id_col: str = "vec_id",
                 vec_col: str = "embedding",
-                target_rows_per_file: int = 1_000_000) -> None:
+                target_rows_per_file: int = 1_000_000) -> int:
     """Ingest-time sign-LSH layout: vectors written PARTITIONED BY
-    their (seeded, deterministic) hyperplane bucket, plus a tiny meta
-    table (dim / n_planes / seed) so probe time can regenerate the
-    SAME planes. This is the reference's "touch only matching index
-    entries" access path (/root/reference/utils/_Shazam_.py:502-504)
-    applied to the vector store: at 10^12 vectors a probe reads the
-    probed buckets' files only (dynamic partition pruning) instead of
-    re-bucketing the whole corpus per query batch — the same storage
-    story as ``ivf_persist`` and the segment index buckets. The
-    bucket computation itself is one narrow projection (plane
-    literals folded into the expression), so the only data movement
-    is the partitioned write.
-
-    Skew hardening (round-4 verdict item 4): real embedding corpora
-    have mega-buckets (near-duplicate clusters all land on one sign
-    pattern); ``repartition("bucket")`` alone sends each bucket to
-    exactly ONE writer task — a mega-bucket becomes one straggler
-    writing one giant file. The write key is therefore SALTED per
-    bucket: a tiny per-bucket count agg (≤ 2^n_planes rows,
-    deterministic — the bucket is a pure function of the seeded
-    planes, so the extra scan for the write job cannot drift) sizes
-    each bucket's writer fan-out to ``ceil(rows /
-    target_rows_per_file)``; hot buckets spread across that many
-    tasks, cold buckets keep one file, and ``maxRecordsPerFile``
-    bounds file size as belt-and-braces. Per-bucket row counts +
-    fan-out land in ``{out_dir}/bucket_stats`` — the skew metric a
-    100 TB operator monitors."""
-    import math
-
+    their (seeded, deterministic) hyperplane bucket, committed as
+    snapshot v1 of a vector layout (see "Persisted layouts" below),
+    whose JSON records dim / n_planes / seed so probe time regenerates
+    the SAME planes. This is the reference's "touch only matching
+    index entries" access path (``_Shazam_.py:502-504``) applied to
+    the vector store: at 10^12 vectors a probe
+    reads the probed buckets' files only (dynamic partition pruning)
+    instead of re-bucketing the whole corpus per query batch — the
+    same storage story as ``ivf_persist`` and the segment index
+    buckets. The bucket computation itself is one narrow projection,
+    so the only data movement is the salted partitioned write
+    (``_write_vectors``). Returns the committed snapshot version."""
     first = emb.select(vec_col).first()
     if first is None:
         raise ValueError("lsh_persist: empty vector table")
     dim = len(first[0])
     planes = hyperplanes(dim, n_planes, seed)
-    base = emb.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("vnorm", _norm(F.col("v"))).withColumn(
-        "bucket", _bucket_expr(F.col("v"), planes)
+    return _persist(
+        out_dir, _stage_gen(out_dir),
+        _vectors(emb, id_col, vec_col).withColumn(
+            "bucket", _bucket_expr(F.col("v"), planes)),
+        {"kind": "lsh",
+         "lsh": {"dim": dim, "n_planes": int(n_planes), "seed": int(seed)}},
+        target_rows_per_file,
     )
-    spark = emb.sparkSession
-    counts = base.groupBy("bucket").count().collect()  # ≤ 2^n_planes rows
+
+
+# ---------------------------------------------------------------------------
+# Persisted layouts: both kinds commit through operators/snapshot.py
+# ---------------------------------------------------------------------------
+# A layout is a snapshot-versioned directory, like the segment index:
+#
+#     index_dir/
+#       CURRENT, snapshots/v<N>.json    # the snapshot protocol
+#       data/vec_<gen>/<part>=K/        # a generation's vectors
+#       data/tomb_<gen>/                # ids it supersedes (upserts)
+#       data/stats_<gen>/               # per-partition rows + writers
+#       data/centroids_<gen>/           # IVF: the frozen quantizer
+#
+# A snapshot records the layout's ``kind``, its partition assigner (LSH:
+# ``lsh`` = dim / n_planes / seed; IVF: the ``centroids`` path), the
+# vector ``schema``, the ``bucket_stats`` path and its ``generations``:
+# ``{gen, gen_seq, vectors?, tombstones?}``, oldest first. Generation
+# names are random, so two racing writers never share a staging dir.
+
+# each kind's partition column
+_PART_COL = {"lsh": "bucket", "ivf": "cell"}
+# at most this many files per writer task (see ``_write_vectors``)
+FILES_PER_WRITE_TASK = 96
+
+
+def _stage_gen(index_dir: str) -> str:
+    """A fresh generation name. Its ``manifests/<gen>`` dir marks it
+    in flight, so ``vacuum`` spares its data until a snapshot names
+    it (or forever, if its writer crashed before committing)."""
+    gen = uuid.uuid4().hex[:12]
+    os.makedirs(f"{index_dir}/manifests/{gen}")
+    return gen
+
+
+def _open_layout(index_dir: str, kind: str | None = None) -> dict:
+    snap = read_snapshot(index_dir)
+    if kind is not None and snap.get("kind") != kind:
+        raise ValueError(
+            f"{index_dir} holds a {snap.get('kind')!r} layout, not {kind!r}")
+    return snap
+
+
+def _write_vectors(assigned: DataFrame, index_dir: str, gen: str,
+                   part_col: str, target_rows_per_file: int) -> dict:
+    """Write ``assigned`` (vec_id, v, vnorm, ``part_col``) as generation
+    ``gen``'s vectors partitioned by ``part_col``, plus its per-partition
+    stats; returns the generation's snapshot paths.
+
+    Skew hardening (round-4 verdict item 4): real embedding corpora
+    have mega-buckets (near-duplicate clusters all land on one sign
+    pattern); ``repartition(part_col)`` alone sends each partition to
+    exactly ONE writer task — a mega-bucket becomes one straggler
+    writing one giant file. The write key is therefore SALTED per
+    partition: a tiny per-partition count agg (≤ 2^n_planes or n_cells
+    rows, deterministic — the assignment is a pure function of the
+    stored planes or centroids, so the extra scan for the write job
+    cannot drift) sizes each partition's writer fan-out to
+    ``ceil(rows / target_rows_per_file)``; hot partitions spread across
+    that many tasks, cold ones keep one file, and ``maxRecordsPerFile``
+    bounds file size as belt-and-braces. Per-partition row counts +
+    fan-out land in ``data/stats_<gen>`` — the skew metric a 100 TB
+    operator monitors."""
+    import math
+
+    spark = assigned.sparkSession
+    counts = assigned.groupBy(part_col).count().collect()
     factors = [
-        (int(r["bucket"]), int(r["count"]),
+        (int(r[part_col]), int(r["count"]),
          max(1, math.ceil(int(r["count"]) / target_rows_per_file)))
         for r in counts
     ]
     fdf = local_rows_df(
-        spark, factors, "bucket long, n_rows long, n_writers int"
+        spark, factors, f"{part_col} int, n_rows long, n_writers int"
     )
     # writer-task fan-out sized from the measured layout, not the
-    # shuffle default: the per-bucket counts already in hand give the
-    # exact expected file count (Σ n_writers ≈ one file per occupied
-    # bucket per salt). On a local FS without Hadoop native IO every
-    # file create forks a chmod, and 32 concurrent writers convoy on
-    # that fork path (measured, 1457 files: 32 tasks = 16.6 s,
-    # 16 tasks = 2.4 s, flat write = 0.26 s) — so bound the tasks to
-    # what the file count and row volume actually need. Both terms
-    # grow with the corpus, so a 10^9-row layout still fans out to
-    # the full shuffle width.
+    # shuffle default: the per-partition counts already in hand give
+    # the exact expected file count (Σ n_writers ≈ one file per
+    # occupied partition per salt). On a local FS without Hadoop native
+    # IO every file create forks a chmod, and 32 concurrent writers
+    # convoy on that fork path (measured, 1457 files: 32 tasks =
+    # 16.6 s, 16 tasks = 2.4 s, flat write = 0.26 s) — so bound the
+    # tasks to what the file count and row volume actually need. Both
+    # terms grow with the corpus, so a 10^9-row layout still fans out
+    # to the full shuffle width.
     n_files = sum(f[2] for f in factors)
     total_rows = sum(f[1] for f in factors)
-    files_per_task = int(os.environ.get(
-        "SPARK_GRAFT_FILES_PER_WRITE_TASK", "96"))
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_tasks = max(1, min(n_part, max(
-        math.ceil(n_files / files_per_task),
+        math.ceil(n_files / FILES_PER_WRITE_TASK),
         math.ceil(total_rows / target_rows_per_file),
     )))
     salted = (
-        base.join(F.broadcast(fdf.select("bucket", "n_writers")), "bucket")
+        assigned.join(F.broadcast(fdf.select(part_col, "n_writers")),
+                      part_col)
         .withColumn(
             "_salt",
             F.pmod(F.xxhash64(F.col("vec_id")), F.col("n_writers")),
         )
-        .repartition(n_tasks, F.col("bucket"), F.col("_salt"))
+        .repartition(n_tasks, F.col(part_col), F.col("_salt"))
         .drop("_salt", "n_writers")
     )
+    paths = {"vectors": f"data/vec_{gen}", "bucket_stats": f"data/stats_{gen}"}
     (
-        salted.write.mode("overwrite")
+        salted.write
         .option("maxRecordsPerFile", target_rows_per_file)
-        .partitionBy("bucket")
-        .parquet(f"{out_dir}/vectors")
+        .partitionBy(part_col)
+        .parquet(f"{index_dir}/{paths['vectors']}")
     )
-    fdf.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/bucket_stats")
-    meta = local_rows_df(
-        spark,
-        [(int(dim), int(n_planes), int(seed))],
-        "dim int, n_planes int, seed int",
-    )
-    meta.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/meta")
+    fdf.write.parquet(f"{index_dir}/{paths['bucket_stats']}")
+    return paths
 
 
-def _delta_gens(index_dir: str) -> list[int]:
-    """Committed delta generations of a vector layout, ascending. A
-    generation exists iff its ``delta/g=<N>`` directory does — the
-    directory RENAME in ``_commit_delta`` is the commit point, so a
-    crashed upsert (still in ``delta_staging/``) is never listed."""
-    import glob as _glob
-
-    return sorted(
-        int(p.rsplit("=", 1)[1])
-        for p in _glob.glob(f"{index_dir}/delta/g=*")
-    )
-
-
-def _resolved_vectors(spark, index_dir: str, part_col: str) -> DataFrame:
-    """A vector layout's LOGICAL set: base layout + committed delta
-    generations, tombstone-superseded (merge-on-read — the same
-    generation rule as ``SegmentIndex._drop_tombstoned``: a tombstone at
-    gen G kills every older generation of that vec_id; the add that
-    travels WITH the tombstone carries gen G itself and survives).
-    With no deltas this is exactly the base scan — zero overhead on a
-    freshly-built or compacted layout, and the partition column
-    (``bucket`` for LSH, ``cell`` for IVF) survives untouched either
-    way so probe-time DPP keeps working (Catalyst pushes the probe
-    join's dynamic pruning through the union onto every branch's
-    scan — plan-asserted in test_similarity). One union branch + one
-    tombstone dir per pending generation: compaction bounds the list."""
-    base = spark.read.parquet(f"{index_dir}/vectors")
-    gens = _delta_gens(index_dir)
-    if not gens:
-        return base
-    vectors = base.withColumn("gen", F.lit(0).cast("int"))
-    tomb_dirs = []
-    for g in gens:
-        gdir = f"{index_dir}/delta/g={g}"
-        if os.path.isdir(f"{gdir}/vectors"):
-            d = spark.read.parquet(f"{gdir}/vectors")
-            vectors = vectors.unionByName(
-                d.select(part_col, "vec_id", "v", "vnorm", "gen"))
-        if os.path.isdir(f"{gdir}/tombstones"):
-            tomb_dirs.append(f"{gdir}/tombstones")
-    if tomb_dirs:
-        tmax = (
-            spark.read.parquet(*tomb_dirs)
-            .groupBy("vec_id").agg(F.max("gen").alias("tomb_gen"))
-        )
-        vectors = (
-            vectors.join(F.broadcast(tmax), "vec_id", "left")
-            .filter(F.col("tomb_gen").isNull()
-                    | (F.col("gen") >= F.col("tomb_gen")))
-            .drop("tomb_gen")
-        )
-    return vectors.drop("gen")
+def _persist(index_dir: str, gen: str, assigned: DataFrame, layout: dict,
+             target_rows_per_file: int = 1_000_000) -> int:
+    """Write ``assigned`` as the layout's one generation and commit it
+    (over an existing layout: a rebuild, whose parent is CURRENT)."""
+    paths = _write_vectors(assigned, index_dir, gen,
+                           _PART_COL[layout["kind"]], target_rows_per_file)
+    return commit(index_dir, _next_commit_version(index_dir), {
+        **layout,
+        "schema": json.loads(assigned.schema.json()),
+        "bucket_stats": paths["bucket_stats"],
+        "generations": [
+            {"gen": gen, "gen_seq": 0, "vectors": paths["vectors"]}],
+        "parent": current_version(index_dir),
+        "operation": "persist",
+    })
 
 
-def _lsh_resolved_vectors(spark, index_dir: str) -> DataFrame:
-    return _resolved_vectors(spark, index_dir, "bucket")
+def _resolved_vectors(spark, index_dir: str, snap: dict) -> DataFrame:
+    """A layout snapshot's LOGICAL vector set: every generation it
+    lists, tombstone-superseded by ``snapshot.drop_superseded`` — the
+    segment index's rule: a tombstone at gen_seq G kills every older
+    generation of that vec_id, and the add that travels WITH the
+    tombstone carries G itself and survives. Every scan carries the
+    snapshot's schema, so building the frame launches no job. On a
+    one-generation layout this is exactly the base scan. The partition
+    column (``bucket`` for LSH, ``cell`` for IVF) survives either way,
+    so probe-time DPP keeps working: Catalyst pushes the probe join's
+    dynamic pruning through the union onto every generation's scan
+    (plan-asserted in test_similarity). Compaction bounds the list."""
+    schema = T.StructType.fromJson(snap["schema"])
+    tomb_schema = T.StructType([schema["vec_id"]])
+    vectors, tombs = [], []
+    for g in snap["generations"]:
+        seq = F.lit(g["gen_seq"]).alias("gen_seq")
+        if g.get("vectors"):
+            vectors.append(spark.read.schema(schema).parquet(
+                f"{index_dir}/{g['vectors']}").select("*", seq))
+        if g.get("tombstones"):
+            tombs.append(spark.read.schema(tomb_schema).parquet(
+                f"{index_dir}/{g['tombstones']}").select("vec_id", seq))
+    tmax = None
+    if tombs:
+        tmax = reduce(DataFrame.unionByName, tombs).groupBy("vec_id").agg(
+            F.max("gen_seq").alias("tomb_seq"))
+    return drop_superseded(reduce(DataFrame.unionByName, vectors), tmax,
+                           "vec_id")
 
 
-def _ivf_resolved_vectors(spark, index_dir: str) -> DataFrame:
-    return _resolved_vectors(spark, index_dir, "cell")
+def _assign(spark, index_dir: str, snap: dict, vecs: DataFrame) -> DataFrame:
+    """``vecs`` with the layout's partition column, from the assigner
+    its snapshot stores: the seeded planes give ``bucket``, the frozen
+    centroids give ``cell``."""
+    if snap["kind"] == "lsh":
+        lsh = snap["lsh"]
+        planes = hyperplanes(lsh["dim"], lsh["n_planes"], lsh["seed"])
+        return vecs.withColumn("bucket", _bucket_expr(F.col("v"), planes))
+    return ivf_assign(vecs, spark.read.schema(CENTROIDS_SCHEMA).parquet(
+        f"{index_dir}/{snap['centroids']}"))
 
 
-def _tomb_frame(add: DataFrame | None, delete_ids: DataFrame | None,
-                id_col: str, gen: int) -> DataFrame:
-    """One generation-stamped tombstone frame covering every upserted
-    AND deleted id (an add IS an upsert — its tombstone supersedes
-    older generations of the id while the add row, carrying this gen
-    itself, survives the ``>=`` filter in ``_resolved_vectors``)."""
-    parts = []
-    if delete_ids is not None:
-        parts.append(delete_ids.select(F.col(id_col).alias("vec_id")))
-    if add is not None:
-        parts.append(add.select(F.col(id_col).alias("vec_id")))
-    tomb = parts[0]
-    for t in parts[1:]:
-        tomb = tomb.unionByName(t)
-    return tomb.distinct().withColumn("gen", F.lit(gen).cast("int"))
+def _commit_next(index_dir: str, snap: dict, operation: str,
+                 **changes) -> int:
+    """Commit ``snap`` with ``changes`` as the child of ``snap``."""
+    body = {k: v for k, v in snap.items() if k != "version"}
+    return commit(index_dir, _next_commit_version(index_dir), {
+        **body, **changes, "parent": snap["version"],
+        "operation": operation,
+    })
 
 
-def _commit_delta(spark, index_dir: str, part_col: str,
-                  tomb: DataFrame, batch: DataFrame | None,
-                  gen: int) -> None:
-    """Atomic generation commit for the vector layouts: the batch's
-    tombstones AND partitioned vectors are written into a private
-    ``delta_staging/<uuid>`` directory — invisible to probes — and
-    become visible with ONE ``os.rename`` to ``delta/g=<gen>``
-    (atomic on POSIX). A concurrent probe therefore sees a generation
-    either completely or not at all, and a crashed upsert leaves only
-    an abandoned staging dir that is never read (and is swept by the
-    next compact). Two upserts racing the same generation number:
-    exactly one rename wins, the loser raises loudly."""
-    import shutil as _shutil
-    import uuid as _uuid
-
-    staging = f"{index_dir}/delta_staging/{_uuid.uuid4().hex[:12]}"
-    tomb.coalesce(1).write.parquet(f"{staging}/tombstones")
-    if batch is not None:
-        batch.write.partitionBy(part_col).parquet(f"{staging}/vectors")
-    os.makedirs(f"{index_dir}/delta", exist_ok=True)
-    try:
-        os.rename(staging, f"{index_dir}/delta/g={gen}")
-    except OSError as e:
-        _shutil.rmtree(staging, ignore_errors=True)
-        raise RuntimeError(
-            f"vector upsert: generation {gen} already committed "
-            f"(concurrent upsert?) — re-read and retry"
-        ) from e
-
-
-def _swap_compacted(index_dir: str, staged_vectors: str,
-                    extra_swaps: list[tuple[str, str]] = []) -> None:
-    """Swap-then-drop commit for layout compaction: move the old base
-    aside and the staged base in BEFORE deleting anything, so a crash
-    at any single point leaves either the old or the new base fully
-    present on disk (vs delete-first, which loses the layout entirely
-    on a crash after the rmtree)."""
-    import shutil as _shutil
-
-    os.rename(f"{index_dir}/vectors", f"{index_dir}/vectors_old")
-    for src, dst in extra_swaps:
-        os.rename(f"{index_dir}/{dst}", f"{index_dir}/{dst}_old")
-    os.rename(staged_vectors, f"{index_dir}/vectors")
-    for src, dst in extra_swaps:
-        os.rename(src, f"{index_dir}/{dst}")
-    # delta removal comes LAST, and a crash before it is harmless:
-    # re-applying committed deltas over the already-folded base is
-    # value-idempotent — each upserted id's folded base copy (gen 0)
-    # is superseded by its own tombstone (gen G) while the delta copy
-    # (gen G) survives, and delete tombstones find nothing to kill
-    cleanup = ["vectors_old", "delta", "delta_staging"]
-    cleanup += [f"{dst}_old" for _, dst in extra_swaps]
-    for sub in cleanup:
-        _shutil.rmtree(f"{index_dir}/{sub}", ignore_errors=True)
-
-
-def lsh_upsert(spark, index_dir: str,
-               add: DataFrame | None = None,
-               delete_ids: DataFrame | None = None,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding") -> int:
-    """O(delta) maintenance for the persisted sign-LSH layout — the
+def vector_upsert(spark, index_dir: str,
+                  add: DataFrame | None = None,
+                  delete_ids: DataFrame | None = None,
+                  id_col: str = "vec_id",
+                  vec_col: str = "embedding") -> int:
+    """O(delta) maintenance for a persisted LSH or IVF layout — the
     vector-store twin of ``maintenance.apply_updates(mode="delta")``
-    (reference analog: ``Hashing_update.py:53-100`` overwrite-by-key):
-    added vectors land as a bucket-partitioned DELTA batch (bucketed
-    with the layout's stored seeded planes, so probe-time pruning
-    covers them identically), and every upserted/deleted id gets a
-    generation-stamped TOMBSTONE that supersedes older generations at
-    read time. Write cost tracks BATCH size, never layout size; the
-    base layout's files are never rewritten. Run ``lsh_compact``
-    periodically to fold deltas back into the base (the probe-side
-    overhead between compactions is one broadcast anti-join of the
-    delta-sized tombstone set + the delta scans).
+    (reference analog: ``Hashing_update.py:53-100`` overwrite-by-key).
+    Added vectors land as a new generation partitioned by the
+    layout's own assigner (``_assign``: an IVF quantizer is frozen at
+    build time — re-training centroids would silently move every
+    existing assignment, so that is a rebuild, ``ivf_persist``), and
+    every upserted/deleted id is tombstoned at the generation's
+    ``gen_seq``, superseding older generations at read time. Write
+    cost tracks BATCH size, never layout size; no existing file is
+    rewritten. Run ``vector_compact`` periodically to fold the
+    generations back into one.
 
-    Each generation commits ATOMICALLY via ``_commit_delta``'s
-    directory rename — a concurrent probe sees the whole batch or
-    none of it, never a torn batch. Returns the generation number
-    assigned to this batch."""
+    The generation becomes visible in one ``snapshot.commit``: a
+    concurrent probe sees the whole batch or none of it, and of two
+    upserts racing from the same snapshot the second raises
+    ``CommitConflict``. Returns the committed snapshot version."""
     if add is None and delete_ids is None:
-        raise ValueError("lsh_upsert: nothing to apply")
-    m = spark.read.parquet(f"{index_dir}/meta").first()
-    planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
-    gen = (_delta_gens(index_dir)[-1:] or [0])[0] + 1
-    tomb = _tomb_frame(add, delete_ids, id_col, gen)
-    batch = None
+        raise ValueError("vector_upsert: nothing to apply")
+    snap = _open_layout(index_dir)
+    id_type = T.StructType.fromJson(snap["schema"])["vec_id"].dataType
+    gen = _stage_gen(index_dir)
+    entry = {"gen": gen,
+             "gen_seq": snap["generations"][-1]["gen_seq"] + 1,
+             "tombstones": f"data/tomb_{gen}"}
+    ids = [f.select(F.col(id_col).cast(id_type).alias("vec_id"))
+           for f in (delete_ids, add) if f is not None]
+    reduce(DataFrame.unionByName, ids).coalesce(1).write.parquet(
+        f"{index_dir}/{entry['tombstones']}")
     if add is not None:
-        batch = add.select(
-            F.col(id_col).alias("vec_id"),
-            _as_double(F.col(vec_col)).alias("v"),
-        ).withColumn("vnorm", _norm(F.col("v"))).withColumn(
-            "bucket", _bucket_expr(F.col("v"), planes)
-        ).withColumn("gen", F.lit(gen).cast("int"))
-    _commit_delta(spark, index_dir, "bucket", tomb, batch, gen)
-    return gen
+        entry["vectors"] = f"data/vec_{gen}"
+        vecs = _vectors(add, id_col, vec_col).withColumn(
+            "vec_id", F.col("vec_id").cast(id_type))
+        _assign(spark, index_dir, snap, vecs).write.partitionBy(
+            _PART_COL[snap["kind"]]).parquet(f"{index_dir}/{entry['vectors']}")
+    return _commit_next(index_dir, snap, "upsert",
+                        generations=snap["generations"] + [entry])
 
 
-def lsh_compact(spark, index_dir: str,
-                target_rows_per_file: int = 1_000_000) -> None:
-    """Fold delta batches + tombstones back into the base layout (the
-    vector-store twin of ``maintenance.compact()``): materialize the
-    resolved logical set, rewrite it through the same salted
-    bucket-partitioned writer as ``lsh_persist`` (bucket_stats
-    refreshed), then drop the delta/tombstone dirs. Requires no
-    concurrent probes (the base rewrite is not snapshot-isolated —
-    documented trade vs the segment index's CURRENT protocol)."""
-    import shutil as _shutil
-
-    resolved = _lsh_resolved_vectors(spark, index_dir)
-    m = spark.read.parquet(f"{index_dir}/meta").first()
-    staged = f"{index_dir}/vectors_compacting"
-    # v is already the double-cast vector; lsh_persist recomputes
-    # vnorm/bucket from it deterministically (same planes)
-    lsh_persist(
-        resolved.select("vec_id", F.col("v").alias("embedding")),
-        staged, n_planes=int(m["n_planes"]), seed=int(m["seed"]),
-        target_rows_per_file=target_rows_per_file,
+def vector_compact(spark, index_dir: str,
+                   target_rows_per_file: int = 1_000_000) -> int | None:
+    """Fold a layout's generations + tombstones into one generation
+    (the vector-store twin of ``maintenance.compact()``): the resolved
+    logical set, which already carries its partition column, is
+    rewritten through the salted writer (``bucket_stats`` refreshed)
+    and committed as a new snapshot. The IVF centroids are kept
+    verbatim (frozen quantizer). Nothing is deleted: a probe holding
+    the old snapshot keeps answering from its generations until
+    ``vacuum`` expires them. Returns the committed version, or None
+    when the layout is already one tombstone-free generation."""
+    snap = _open_layout(index_dir)
+    gens = snap["generations"]
+    if len(gens) == 1 and not gens[0].get("tombstones"):
+        return None
+    gen = _stage_gen(index_dir)
+    paths = _write_vectors(
+        _resolved_vectors(spark, index_dir, snap), index_dir, gen,
+        _PART_COL[snap["kind"]], target_rows_per_file)
+    return _commit_next(
+        index_dir, snap, "compact", bucket_stats=paths["bucket_stats"],
+        generations=[{"gen": gen, "gen_seq": 0, "vectors": paths["vectors"]}],
     )
-    _swap_compacted(
-        index_dir, f"{staged}/vectors",
-        extra_swaps=[(f"{staged}/bucket_stats", "bucket_stats")],
+
+
+def _lsh_probes(query_vecs: DataFrame, planes: np.ndarray,
+                probe_flips: int, qid_col: str, qvec_col: str) -> DataFrame:
+    """(query_id, q, qnorm, probe): each query's bucket plus every
+    bucket within ``probe_flips`` bit flips (multi-probe;
+    popcount-bounded masks — ``lsh_expected_recall``'s neighborhood
+    exactly)."""
+    qs = _queries(query_vecs, qid_col, qvec_col).withColumn(
+        "qbucket", _bucket_expr(F.col("q"), planes)
     )
-    _shutil.rmtree(staged, ignore_errors=True)
-
-
-def ivf_upsert(spark, index_dir: str,
-               add: DataFrame | None = None,
-               delete_ids: DataFrame | None = None,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding") -> int:
-    """O(delta) maintenance for the persisted IVF layout — same
-    generation/tombstone protocol as ``lsh_upsert`` (shared
-    ``_commit_delta`` / ``_resolved_vectors`` machinery; reference
-    analog: ``Hashing_update.py:53-100``). Added vectors are assigned
-    with the PERSISTED centroid table — the quantizer is frozen at
-    build time, the standard IVF maintenance story: re-training
-    centroids would silently move every existing assignment, so that
-    is a rebuild (``ivf_persist``), never an upsert. Each generation
-    commits atomically (directory rename — see ``_commit_delta``).
-    Returns the generation number assigned to this batch."""
-    if add is None and delete_ids is None:
-        raise ValueError("ivf_upsert: nothing to apply")
-    cent = spark.read.parquet(f"{index_dir}/centroids")
-    gen = (_delta_gens(index_dir)[-1:] or [0])[0] + 1
-    tomb = _tomb_frame(add, delete_ids, id_col, gen)
-    batch = None
-    if add is not None:
-        base = add.select(
-            F.col(id_col).alias("vec_id"),
-            _as_double(F.col(vec_col)).alias("v"),
-        ).withColumn("vnorm", _norm(F.col("v")))
-        batch = ivf_assign(base, cent).withColumn(
-            "gen", F.lit(gen).cast("int")
-        )
-    _commit_delta(spark, index_dir, "cell", tomb, batch, gen)
-    return gen
-
-
-def ivf_compact(spark, index_dir: str) -> None:
-    """Fold IVF delta batches + tombstones back into the base layout.
-    Unlike ``lsh_compact`` this does NOT re-run the builder: the
-    persisted centroids are kept verbatim (quantizer frozen — see
-    ``ivf_upsert``) and the resolved logical set, which already
-    carries its cell assignment, is rewritten cell-partitioned.
-    Requires no concurrent probes (same documented trade as
-    ``lsh_compact``)."""
-    import shutil as _shutil
-
-    resolved = _ivf_resolved_vectors(spark, index_dir)
-    staged = f"{index_dir}/vectors_compacting"
-    resolved.write.mode("overwrite").partitionBy("cell").parquet(staged)
-    _swap_compacted(index_dir, staged)
-    _shutil.rmtree(staged, ignore_errors=True)
+    probes = [F.col("qbucket")] + [
+        F.col("qbucket").bitwiseXOR(F.lit(m))
+        for m in probe_masks(len(planes), probe_flips)
+    ]
+    return qs.withColumn("probe", F.explode(F.array(*probes)))
 
 
 def lsh_topk_persisted(spark, index_dir: str, query_vecs: DataFrame,
@@ -830,47 +758,21 @@ def lsh_topk_persisted(spark, index_dir: str, query_vecs: DataFrame,
                        qvec_col: str = "qvec") -> DataFrame:
     """Sign-LSH top-k over the persisted bucket-partitioned layout:
     query buckets + single-bit-flip probes are computed on the (tiny,
-    broadcast) query side with planes regenerated from the stored
+    broadcast) query side with planes regenerated from the snapshot's
     (dim, n_planes, seed); the vector scan is joined on its PARTITION
     column, so dynamic partition pruning reads only the probed
-    buckets' files (asserted in test_plans). Values are identical to
-    the in-memory ``lsh_topk`` — same planes, same buckets, same
-    probes, same scoring — one oracle, two physical plans. On a
-    layout with pending ``lsh_upsert`` batches the scan resolves
-    delta generations and tombstones first (merge-on-read)."""
-    m = spark.read.parquet(f"{index_dir}/meta").first()
-    planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
-    n_planes = int(m["n_planes"])
-
-    qs = query_vecs.select(
-        F.col(qid_col).alias("query_id"), _as_double(F.col(qvec_col)).alias("q")
-    ).withColumn("qnorm", _norm(F.col("q"))).withColumn(
-        "qbucket", _bucket_expr(F.col("q"), planes)
-    )
-    probes = [F.col("qbucket")] + [
-        F.col("qbucket").bitwiseXOR(F.lit(m))
-        for m in probe_masks(n_planes, probe_flips)
-    ]
-    qs = qs.withColumn("probe", F.explode(F.array(*probes)))
-
-    vectors = _lsh_resolved_vectors(spark, index_dir)
-    scored = (
-        vectors.join(F.broadcast(qs), vectors.bucket == qs.probe)
-        .withColumn(
-            "cosine_micro",
-            _cosine_micro_expr(F.col("v"), F.col("q"),
-                               F.col("vnorm"), F.col("qnorm")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_micro").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.select("query_id", "vec_id", "cosine_micro").distinct()
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine_micro")
-    )
+    buckets' files (asserted in test_similarity). Values are identical
+    to the in-memory ``lsh_topk`` — same planes, same buckets, same
+    probes, same scoring — one oracle, two physical plans. Every
+    generation the snapshot lists is read merge-on-read
+    (``_resolved_vectors``). Building the frame launches no job."""
+    snap = _open_layout(index_dir, "lsh")
+    lsh = snap["lsh"]
+    planes = hyperplanes(lsh["dim"], lsh["n_planes"], lsh["seed"])
+    qs = _lsh_probes(query_vecs, planes, probe_flips, qid_col, qvec_col)
+    vectors = _resolved_vectors(spark, index_dir, snap)
+    return _top_k(vectors.join(F.broadcast(qs), vectors.bucket == qs.probe),
+                  k)
 
 
 def duckdb_ivf_topk_sql(dim: int, k: int = 10,
@@ -885,7 +787,7 @@ def duckdb_ivf_topk_sql(dim: int, k: int = 10,
     ``logical_select`` (must yield ``vec_id`` + double-list ``v``)
     overrides the vector set that is ASSIGNED and QUERIED, while the
     centroid sample stays on the original ``embeddings`` table — the
-    SQL mirror of ``ivf_upsert``'s frozen-quantizer rule, used by the
+    SQL mirror of ``vector_upsert``'s frozen-quantizer rule, used by the
     ``ann_ivf_delta`` driver row."""
     if logical_select is None:
         logical_cte, logical_src = "", "nrm"
@@ -1069,40 +971,8 @@ def lsh_topk(emb: DataFrame, query_vecs: DataFrame, k: int = 10,
     dim = len(qrow[0])  # from the tiny query side: no extra emb scan,
     # and an empty/NULL-first-row base table cannot crash inference
     planes = hyperplanes(dim, n_planes, seed)
-
-    base = emb.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("vnorm", _norm(F.col("v"))).withColumn(
+    base = _vectors(emb, id_col, vec_col).withColumn(
         "bucket", _bucket_expr(F.col("v"), planes)
     )
-    qs = query_vecs.select(
-        F.col(qid_col).alias("query_id"), _as_double(F.col(qvec_col)).alias("q")
-    ).withColumn("qnorm", _norm(F.col("q"))).withColumn(
-        "qbucket", _bucket_expr(F.col("q"), planes)
-    )
-    # multi-probe: the query's bucket + every bucket within
-    # probe_flips bit flips (popcount-bounded masks — matches
-    # lsh_expected_recall's neighborhood exactly)
-    probes = [F.col("qbucket")] + [
-        F.col("qbucket").bitwiseXOR(F.lit(m))
-        for m in probe_masks(n_planes, probe_flips)
-    ]
-    qs = qs.withColumn("probe", F.explode(F.array(*probes)))
-
-    scored = (
-        base.join(F.broadcast(qs), base.bucket == qs.probe)
-        .withColumn(
-            "cosine_micro",
-            _cosine_micro_expr(F.col("v"), F.col("q"),
-                               F.col("vnorm"), F.col("qnorm")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_micro").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.select("query_id", "vec_id", "cosine_micro").distinct()
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine_micro")
-    )
+    qs = _lsh_probes(query_vecs, planes, probe_flips, qid_col, qvec_col)
+    return _top_k(base.join(F.broadcast(qs), base.bucket == qs.probe), k)

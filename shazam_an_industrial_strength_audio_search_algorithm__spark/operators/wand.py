@@ -54,8 +54,6 @@ end.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -364,10 +362,14 @@ def _topk_one_query(terms: list[_Term], k: int, avgdl: float):
     return (top_docs[sel], top_scores[sel], top_matched[sel], decoded, total)
 
 
+# the most tombstoned docs a layered snapshot may ship into the kernel
+TOMB_CAP = 2_000_000
+
+
 class TombstoneCapError(ValueError):
     """A layered snapshot carries more tombstoned docs than the kernel
-    takes (``SPARK_GRAFT_WAND_TOMB_CAP``, default 2,000,000): compact
-    it, or serve the request by the brute merge-on-read path."""
+    takes (``TOMB_CAP``): compact it, or serve the request by the brute
+    merge-on-read path."""
 
 
 def _capped_tombstones(index: SegmentIndex):
@@ -375,12 +377,10 @@ def _capped_tombstones(index: SegmentIndex):
     set outgrew the cap, so an un-compacted pipeline fails loudly
     instead of shipping an unbounded set into the kernel."""
     tomb = index.tombstone_arrays()
-    cap = int(os.environ.get("SPARK_GRAFT_WAND_TOMB_CAP", 2_000_000))
-    if tomb is not None and tomb[0].size > cap:
+    if tomb is not None and tomb[0].size > TOMB_CAP:
         raise TombstoneCapError(
             f"layered snapshot carries {tomb[0].size:,} tombstoned "
-            f"docs (> cap {cap:,}) — run maintenance.compact() "
-            "or raise SPARK_GRAFT_WAND_TOMB_CAP"
+            f"docs (> cap {TOMB_CAP:,}) — run maintenance.compact()"
         )
     return tomb
 

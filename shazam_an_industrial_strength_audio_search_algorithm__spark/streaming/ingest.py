@@ -144,19 +144,17 @@ def stream_vector_ingest(
     checkpoint_dir: str,
     trigger_available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    layout: str = "lsh",
     compact_every: int | None = None,
     schema: T.StructType | None = None,
 ):
     """Ingest embedding parquet files appearing under ``source_dir``
     into a persisted ANN layout at ``index_dir`` (built first with
-    ``lsh_persist``/``ivf_persist``) — the vector-store twin of
-    ``stream_ingest``. Each micro-batch becomes exactly ONE delta
-    generation committed atomically (``similarity._commit_delta``'s
-    directory rename), so a concurrent prober sees every batch
-    completely or not at all — the same no-torn-reads guarantee the
-    segment index gets from its snapshot/CURRENT protocol, obtained
-    here from the filesystem rename instead.
+    ``lsh_persist``/``ivf_persist``; the layout's snapshot names its
+    kind) — the vector-store twin of ``stream_ingest``. Each
+    micro-batch becomes exactly ONE ``vector_upsert`` generation,
+    committed through the snapshot protocol every persisted index
+    shares (``operators/snapshot.py``), so a concurrent prober sees
+    every batch completely or not at all.
 
     Exactly-once on replay: a crashed-and-replayed micro-batch
     re-upserts the same vec_ids as a NEW generation whose tombstones
@@ -166,23 +164,13 @@ def stream_vector_ingest(
     vec_ids are resolved replay-deterministically (greatest
     serialized-embedding sha wins), never by partition layout.
 
-    ``layout`` is ``"lsh"`` or ``"ivf"`` (IVF batches are assigned
-    with the frozen build-time centroids — see ``ivf_upsert``).
-    ``compact_every=N`` folds accumulated generations into the base
-    after every N batches; compaction is the one operation that still
-    requires pausing probes (documented in ``lsh_compact``).
-    Returns the StreamingQuery."""
+    ``compact_every=N`` runs ``vector_compact`` after every N batches.
+    A compaction commits a new snapshot too, so probes keep running
+    through it. Returns the StreamingQuery."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        ivf_compact,
-        ivf_upsert,
-        lsh_compact,
-        lsh_upsert,
+        vector_compact,
+        vector_upsert,
     )
-
-    if layout not in ("lsh", "ivf"):
-        raise ValueError(f"layout must be 'lsh' or 'ivf', got {layout!r}")
-    upsert = lsh_upsert if layout == "lsh" else ivf_upsert
-    compact_fn = lsh_compact if layout == "lsh" else ivf_compact
 
     # file streams need a declared schema; default double vectors —
     # pass schema= for float32 sources (parquet is strict about the
@@ -205,9 +193,9 @@ def stream_vector_ingest(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        upsert(spark, index_dir, add=deduped)
+        vector_upsert(spark, index_dir, add=deduped)
         if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_fn(spark, index_dir)
+            vector_compact(spark, index_dir)
 
     writer = (
         stream.writeStream.foreachBatch(upsert_batch)

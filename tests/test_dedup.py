@@ -276,10 +276,25 @@ def test_simhash_small_hamming_chunk_widths(spark, dup_df):
         assert (0, 100) in got
 
 
-def test_near_dup_clusters_chain_and_star(spark):
-    """Min-label propagation must close transitive chains (multiple
-    rounds) and stars (one round), and label each component by its
-    min id."""
+@pytest.fixture(params=["local", "distributed"])
+def cc_path(request, monkeypatch):
+    """Runs a test on each of ``near_dup_clusters``' two paths: the
+    local union-find, and (cap 0) the distributed min-label
+    propagation that edge sets over ``LOCAL_CC_CAP`` take."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators import (
+        dedup,
+    )
+
+    if request.param == "distributed":
+        monkeypatch.setattr(dedup, "LOCAL_CC_CAP", 0)
+    return request.param
+
+
+def test_near_dup_clusters_chain_and_star(spark, cc_path):
+    """Both paths must close transitive chains (propagation: multiple
+    rounds) and stars (one round), and label each component by its min
+    id; a chain longer than ``max_iter`` rounds raises on the
+    distributed path instead of returning split components."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.dedup import (
         near_dup_clusters,
     )
@@ -298,12 +313,15 @@ def test_near_dup_clusters_chain_and_star(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
                    10: 10, 11: 10, 12: 10, 13: 10,
                    20: 20, 21: 20}
+    if cc_path == "distributed":
+        with pytest.raises(RuntimeError, match="did not converge"):
+            near_dup_clusters(pairs.filter("doc_b <= 5"), max_iter=2)
 
 
-def test_near_dup_clusters_random_graphs_match_union_find(spark):
-    """Randomized pin: min-label propagation over arbitrary pair
-    graphs must equal a union-find ground truth (components labeled
-    by min member)."""
+def test_near_dup_clusters_random_graphs_match_union_find(spark, cc_path):
+    """Randomized pin: both paths over arbitrary pair graphs must
+    equal a union-find ground truth (components labeled by min
+    member)."""
     import random
 
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.dedup import (

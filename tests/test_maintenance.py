@@ -249,6 +249,61 @@ def test_delta_update_job_counts(spark, corpus_df, update_fixtures,
     ), (jobs, WRITE_PATH_JOBS)
 
 
+# Spark jobs the vector layouts' paths launched on 300 random 16-d
+# vectors (``vec_id % 7`` re-added reversed, ``vec_id % 11`` deleted):
+# building a probe frame on a fresh layout and on one with an upsert
+# generation (0: the planes and centroid paths come from the snapshot
+# JSON, and every scan carries its schema), one ``vector_upsert`` and
+# one ``vector_compact``, per layout kind. A path may launch fewer
+# jobs, never more; a probe frame launches none.
+VECTOR_PATH_JOBS = {
+    "lsh": {"probe_fresh": 0, "upsert": 2, "probe_delta": 0, "compact": 10},
+    "ivf": {"probe_fresh": 0, "upsert": 3, "probe_delta": 0, "compact": 10},
+}
+
+
+def test_vector_path_job_counts(spark, tmp_path):
+    import numpy as np
+
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators import (
+        similarity,
+    )
+
+    emb = spark.createDataFrame(pd.DataFrame({
+        "vec_id": range(300),
+        "embedding": [[float(x) for x in np.random.RandomState(i).normal(
+            size=16)] for i in range(300)],
+    }))
+    qs = emb.filter(F.col("vec_id") < 5).select(
+        F.concat(F.lit("v"), F.col("vec_id")).alias("query_id"),
+        F.col("embedding").alias("qvec"),
+    )
+    adds = emb.filter(F.col("vec_id") % 7 == 0).withColumn(
+        "embedding", F.reverse("embedding"))
+    dels = emb.filter(F.col("vec_id") % 11 == 0).select("vec_id")
+    jobs = {}
+    for kind in VECTOR_PATH_JOBS:
+        d = str(tmp_path / kind)
+        getattr(similarity, f"{kind}_persist")(emb, d)
+        topk = getattr(similarity, f"{kind}_topk_persisted")
+        steps = {
+            "probe_fresh": lambda: topk(spark, d, qs, k=5),
+            "upsert": lambda: similarity.vector_upsert(
+                spark, d, add=adds, delete_ids=dels),
+            "probe_delta": lambda: topk(spark, d, qs, k=5),
+            "compact": lambda: similarity.vector_compact(spark, d),
+        }
+        jobs[kind] = {
+            step: len(_count_jobs(spark, f"vector_jobs_{kind}_{step}", fn)[1])
+            for step, fn in steps.items()
+        }
+    for kind, bounds in VECTOR_PATH_JOBS.items():
+        assert jobs[kind]["probe_fresh"] == jobs[kind]["probe_delta"] == 0, jobs
+        assert all(
+            0 < jobs[kind][s] <= bounds[s] for s in ("upsert", "compact")
+        ), (jobs, VECTOR_PATH_JOBS)
+
+
 def _count_jobs(spark, group: str, fn):
     """``fn()``'s result and the Spark job ids it launched, by job
     group."""

@@ -298,6 +298,42 @@ def test_zero_norm_vectors_score_zero_not_nan(spark):
     assert embedding_neardup_blocked(emb, threshold=0.5).count() == 1
 
 
+def _rows(df):
+    return {(r["query_id"], r["rank"], r["vec_id"], r["cosine_micro"])
+            for r in df.collect()}
+
+
+def _resolved_count(spark, d):
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
+        _resolved_vectors,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
+        read_snapshot,
+    )
+
+    return _resolved_vectors(spark, d, read_snapshot(d)).count()
+
+
+def _upsert_batch(emb):
+    """The ``ann_*_delta`` rows' batch: ``vec_id % 97`` re-added
+    reversed, the other ``vec_id % 101`` deleted; and the logical set
+    it leaves."""
+    adds = emb.filter(F.col("vec_id") % 97 == 0).withColumn(
+        "embedding", F.reverse("embedding")
+    )
+    dels = emb.filter(
+        (F.col("vec_id") % 101 == 0) & (F.col("vec_id") % 97 != 0)
+    ).select("vec_id")
+    logical = emb.filter(
+        ~((F.col("vec_id") % 101 == 0) & (F.col("vec_id") % 97 != 0))
+    ).withColumn(
+        "embedding",
+        F.when(F.col("vec_id") % 97 == 0, F.reverse("embedding"))
+        .otherwise(F.col("embedding")),
+    )
+    return adds, dels, logical
+
+
 def test_lsh_persist_salts_mega_bucket_writes(spark, tmp_path):
     """Skew hardening (round-4): a degenerate corpus where EVERY
     vector lands in one sign bucket (positive multiples of one
@@ -312,6 +348,9 @@ def test_lsh_persist_salts_mega_bucket_writes(spark, tmp_path):
         lsh_topk,
         lsh_topk_persisted,
     )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
+        read_snapshot,
+    )
 
     dim, n = 8, 300
     base_vec = [1.0, 0.5, -0.25, 2.0, -1.0, 0.75, 0.1, -0.6]
@@ -320,13 +359,14 @@ def test_lsh_persist_salts_mega_bucket_writes(spark, tmp_path):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     d = str(tmp_path / "skewlsh")
-    lsh_persist(emb, d, n_planes=6, target_rows_per_file=50)
+    assert lsh_persist(emb, d, n_planes=6, target_rows_per_file=50) == 1
 
-    stats = spark.read.parquet(f"{d}/bucket_stats").collect()
+    snap = read_snapshot(d)
+    stats = spark.read.parquet(f"{d}/{snap['bucket_stats']}").collect()
     assert len(stats) == 1, "all vectors must share one sign bucket"
     assert stats[0]["n_rows"] == n
     assert stats[0]["n_writers"] == 6  # ceil(300/50)
-    bdir = glob.glob(f"{d}/vectors/bucket=*")
+    bdir = glob.glob(f"{d}/{snap['generations'][0]['vectors']}/bucket=*")
     assert len(bdir) == 1
     files = glob.glob(f"{bdir[0]}/*.parquet")
     assert len(files) >= 6, (
@@ -349,44 +389,32 @@ def test_lsh_persist_salts_mega_bucket_writes(spark, tmp_path):
 
 
 def test_lsh_upsert_merge_on_read_matches_rebuild(spark, emb, tmp_path):
-    """O(delta) vector-store maintenance: ``lsh_upsert`` batches +
-    tombstones resolved at probe time must equal a FULL REBUILD of the
+    """O(delta) vector-store maintenance: ``vector_upsert`` generations
+    + tombstones resolved at probe time must equal a FULL REBUILD of the
     post-upsert logical set bit-identically; a second generation
-    supersedes the first; ``lsh_compact`` folds deltas back into the
-    base with zero value change and drops the delta/tombstone dirs."""
-    import os
-
+    supersedes the first; ``vector_compact`` folds the generations
+    into one with zero value change."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        _lsh_resolved_vectors,
-        lsh_compact,
         lsh_persist,
         lsh_topk_persisted,
-        lsh_upsert,
+        vector_compact,
+        vector_upsert,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
+        read_snapshot,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.plans.audit import (
+        plan_string,
     )
 
     d = str(tmp_path / "deltalsh")
     lsh_persist(emb, d)
     n_base = emb.count()
-
-    adds = emb.filter(F.col("vec_id") % 97 == 0).withColumn(
-        "embedding", F.reverse("embedding")
-    )
-    dels = emb.filter(
-        (F.col("vec_id") % 101 == 0) & (F.col("vec_id") % 97 != 0)
-    ).select("vec_id")
+    adds, dels, logical = _upsert_batch(emb)
     n_adds, n_dels = adds.count(), dels.count()
     assert n_adds > 0 and n_dels > 0
-    assert lsh_upsert(spark, d, add=adds, delete_ids=dels) == 1
-
-    # logical set: upserted ids reversed, deleted ids gone
-    logical = emb.filter(
-        ~((F.col("vec_id") % 101 == 0) & (F.col("vec_id") % 97 != 0))
-    ).withColumn(
-        "embedding",
-        F.when(F.col("vec_id") % 97 == 0, F.reverse("embedding"))
-        .otherwise(F.col("embedding")),
-    )
-    assert _lsh_resolved_vectors(spark, d).count() == n_base - n_dels
+    assert vector_upsert(spark, d, add=adds, delete_ids=dels) == 2
+    assert _resolved_count(spark, d) == n_base - n_dels
 
     d2 = str(tmp_path / "rebuiltlsh")
     lsh_persist(logical, d2)
@@ -394,149 +422,122 @@ def test_lsh_upsert_merge_on_read_matches_rebuild(spark, emb, tmp_path):
         F.concat(F.lit("v"), F.col("vec_id")).alias("query_id"),
         F.col("embedding").alias("qvec"),
     )
-
-    def rows(df):
-        return {(r["query_id"], r["rank"], r["vec_id"], r["cosine_micro"])
-                for r in df.collect()}
-
-    got = rows(lsh_topk_persisted(spark, d, qs2, k=5))
-    want = rows(lsh_topk_persisted(spark, d2, qs2, k=5))
+    got = _rows(lsh_topk_persisted(spark, d, qs2, k=5))
+    want = _rows(lsh_topk_persisted(spark, d2, qs2, k=5))
     assert got == want and len(got) > 0
 
     # merge-on-read must NOT cost the pruning: Catalyst pushes the
     # probe join's dynamic partition pruning through the
-    # union+tombstone-join onto BOTH the base and the delta scan
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.plans.audit import (
-        plan_string,
-    )
-
+    # union+tombstone-join onto BOTH generations' scans
     p = plan_string(lsh_topk_persisted(spark, d, qs2, k=5)).lower()
     assert p.count("dynamicpruningexpression") >= 2, p
 
-    # generation 2: delete the gen-1 adds; tombstone gen 2 must
-    # supersede BOTH the gen-1 delta rows and the gen-0 base rows
-    assert lsh_upsert(spark, d, delete_ids=adds.select("vec_id")) == 2
-    after_del = lsh_topk_persisted(spark, d, qs2, k=5)
-    got2 = rows(after_del)
+    # generation 2: delete the gen-1 adds; its tombstones must
+    # supersede BOTH the gen-1 rows and the base rows
+    assert vector_upsert(spark, d, delete_ids=adds.select("vec_id")) == 3
+    got2 = _rows(lsh_topk_persisted(spark, d, qs2, k=5))
     assert all(vid % 97 != 0 for (_, _, vid, _) in got2)
-    assert _lsh_resolved_vectors(spark, d).count() == \
-        n_base - n_dels - n_adds
+    assert _resolved_count(spark, d) == n_base - n_dels - n_adds
 
-    # compact: same answers, merge-on-read machinery gone
-    lsh_compact(spark, d)
-    assert not os.path.exists(f"{d}/delta")
-    assert not os.path.exists(f"{d}/delta_staging")
-    assert not os.path.exists(f"{d}/vectors_compacting")
-    assert rows(lsh_topk_persisted(spark, d, qs2, k=5)) == got2
+    # compact: same answers from one tombstone-free generation
+    assert vector_compact(spark, d) == 4
+    snap = read_snapshot(d)
+    assert snap["operation"] == "compact" and snap["parent"] == 3
+    assert [set(g) for g in snap["generations"]] == [
+        {"gen", "gen_seq", "vectors"}]
+    assert _rows(lsh_topk_persisted(spark, d, qs2, k=5)) == got2
+    assert vector_compact(spark, d) is None  # nothing left to fold
 
 
 def test_ivf_upsert_path_independence_and_compact(spark, emb, tmp_path):
     """IVF delta maintenance: the generation/tombstone protocol must
     be PATH-INDEPENDENT (one combined upsert == delete-then-add as two
-    generations — same logical set, same probe answers), ``ivf_compact``
-    must fold deltas with zero value change while keeping the
-    centroids byte-identical (frozen-quantizer contract — the value
-    semantics themselves are oracle-checked by the ``ann_ivf_delta``
-    driver row against DuckDB), and merge-on-read must equal the
-    compacted pure-base scan."""
-    import os
+    generations — same logical set, same probe answers),
+    ``vector_compact`` must fold the generations with zero value change
+    while keeping the centroids byte-identical (frozen-quantizer
+    contract — the value semantics themselves are oracle-checked by the
+    ``ann_ivf_delta`` driver row against DuckDB), and merge-on-read
+    must equal the compacted one-generation scan."""
     import shutil
 
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        _ivf_resolved_vectors,
-        ivf_compact,
         ivf_persist,
         ivf_topk_persisted,
-        ivf_upsert,
+        vector_compact,
+        vector_upsert,
     )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
+        read_snapshot,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.plans.audit import (
+        plan_string,
+    )
+
+    def centroids(d):
+        return sorted(
+            (r["cid"], tuple(r["cv"]))
+            for r in spark.read.parquet(
+                f"{d}/{read_snapshot(d)['centroids']}").collect()
+        )
 
     d = str(tmp_path / "deltaivf")
     ivf_persist(emb, d)
     d2 = str(tmp_path / "deltaivf2")
     shutil.copytree(d, d2)
     n_base = emb.count()
-    cent_before = sorted(
-        (r["cid"], tuple(r["cv"]))
-        for r in spark.read.parquet(f"{d}/centroids").collect()
-    )
-
-    adds = emb.filter(F.col("vec_id") % 97 == 0).withColumn(
-        "embedding", F.reverse("embedding")
-    )
-    dels = emb.filter(
-        (F.col("vec_id") % 101 == 0) & (F.col("vec_id") % 97 != 0)
-    ).select("vec_id")
+    cent_before = centroids(d)
+    adds, dels, logical = _upsert_batch(emb)
     n_dels = dels.count()
     assert adds.count() > 0 and n_dels > 0
 
     # path A: one combined batch; path B: two generations
-    assert ivf_upsert(spark, d, add=adds, delete_ids=dels) == 1
-    assert ivf_upsert(spark, d2, delete_ids=dels) == 1
-    assert ivf_upsert(spark, d2, add=adds) == 2
-    assert _ivf_resolved_vectors(spark, d).count() == n_base - n_dels
-    assert _ivf_resolved_vectors(spark, d2).count() == n_base - n_dels
+    assert vector_upsert(spark, d, add=adds, delete_ids=dels) == 2
+    assert vector_upsert(spark, d2, delete_ids=dels) == 2
+    assert vector_upsert(spark, d2, add=adds) == 3
+    assert _resolved_count(spark, d) == n_base - n_dels
+    assert _resolved_count(spark, d2) == n_base - n_dels
 
-    logical = emb.filter(
-        ~((F.col("vec_id") % 101 == 0) & (F.col("vec_id") % 97 != 0))
-    ).withColumn(
-        "embedding",
-        F.when(F.col("vec_id") % 97 == 0, F.reverse("embedding"))
-        .otherwise(F.col("embedding")),
-    )
     qs2 = logical.filter(F.col("vec_id") < 5).select(
         F.concat(F.lit("v"), F.col("vec_id")).alias("query_id"),
         F.col("embedding").alias("qvec"),
     )
-
-    def rows(df):
-        return {(r["query_id"], r["rank"], r["vec_id"], r["cosine_micro"])
-                for r in df.collect()}
-
-    got = rows(ivf_topk_persisted(spark, d, qs2, k=5))
-    assert got == rows(ivf_topk_persisted(spark, d2, qs2, k=5))
+    got = _rows(ivf_topk_persisted(spark, d, qs2, k=5))
+    assert got == _rows(ivf_topk_persisted(spark, d2, qs2, k=5))
     assert len(got) > 0
 
-    # DPP reaches both the base and the delta scan (same property as
-    # the LSH twin — asserted per-layout because the plans differ)
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.plans.audit import (
-        plan_string,
-    )
-
+    # DPP reaches every generation's scan (same property as the LSH
+    # twin — asserted per-layout because the plans differ)
     p = plan_string(ivf_topk_persisted(spark, d, qs2, k=5)).lower()
     assert p.count("dynamicpruningexpression") >= 2, p
 
-    # compact: same answers, centroids byte-identical, deltas folded
-    ivf_compact(spark, d)
-    assert not os.path.exists(f"{d}/delta")
-    assert not os.path.exists(f"{d}/delta_staging")
-    assert not os.path.exists(f"{d}/vectors_compacting")
-    cent_after = sorted(
-        (r["cid"], tuple(r["cv"]))
-        for r in spark.read.parquet(f"{d}/centroids").collect()
-    )
-    assert cent_after == cent_before
-    assert rows(ivf_topk_persisted(spark, d, qs2, k=5)) == got
-    assert _ivf_resolved_vectors(spark, d).count() == n_base - n_dels
+    # compact: same answers, centroids byte-identical, one generation
+    assert vector_compact(spark, d) == 3
+    assert len(read_snapshot(d)["generations"]) == 1
+    assert centroids(d) == cent_before
+    assert _rows(ivf_topk_persisted(spark, d, qs2, k=5)) == got
+    assert _resolved_count(spark, d) == n_base - n_dels
 
 
-def test_vector_delta_crash_windows_are_safe(spark, emb, tmp_path):
-    """The two delta-protocol crash windows: (1) a crashed upsert
-    leaves only ``delta_staging/<uuid>`` — probes and generation
-    numbering ignore it entirely (the directory RENAME is the commit
-    point); (2) a compact that crashed after the base swap but before
-    delta removal leaves committed deltas lying over the
-    already-folded base — re-applying them is value-idempotent (each
-    upserted id's folded base copy is superseded by its own tombstone
-    while the delta copy survives)."""
+def test_vector_delta_crash_windows_are_safe(spark, emb, tmp_path,
+                                             monkeypatch):
+    """The two crash windows of the vector protocol: (1) an upsert that
+    crashed after staging leaves a generation no snapshot names — probes
+    ignore it and the next upsert commits as if it were not there; (2) a
+    compaction that crashed before its commit leaves the previous
+    snapshot serving, and the next compaction commits normally."""
     import os
-    import shutil
 
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators import (
+        similarity,
+    )
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        _delta_gens,
-        lsh_compact,
         lsh_persist,
         lsh_topk_persisted,
-        lsh_upsert,
+        vector_compact,
+        vector_upsert,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
+        current_version,
     )
 
     d = str(tmp_path / "crashlsh")
@@ -545,34 +546,120 @@ def test_vector_delta_crash_windows_are_safe(spark, emb, tmp_path):
         F.concat(F.lit("v"), F.col("vec_id")).alias("query_id"),
         F.col("embedding").alias("qvec"),
     )
+    before = _rows(lsh_topk_persisted(spark, d, qs, k=5))
 
-    def rows(df):
-        return {(r["query_id"], r["rank"], r["vec_id"], r["cosine_micro"])
-                for r in df.collect()}
-
-    before = rows(lsh_topk_persisted(spark, d, qs, k=5))
-
-    # window 1: staged-but-never-renamed upsert is invisible
-    os.makedirs(f"{d}/delta_staging/deadbeef0123/tombstones")
-    with open(f"{d}/delta_staging/deadbeef0123/tombstones/x.parquet",
-              "wb") as f:
-        f.write(b"torn")
-    assert _delta_gens(d) == []
-    assert rows(lsh_topk_persisted(spark, d, qs, k=5)) == before
-    shutil.rmtree(f"{d}/delta_staging")
-
-    # window 2: compact crash after base swap, before delta removal
+    # window 1: a staged-but-never-committed upsert is invisible
+    for sub in ("vec_deadbeef0123/bucket=0", "tomb_deadbeef0123"):
+        os.makedirs(f"{d}/data/{sub}")
+        with open(f"{d}/data/{sub}/x.parquet", "wb") as f:
+            f.write(b"torn")
+    os.makedirs(f"{d}/manifests/deadbeef0123")
+    assert _rows(lsh_topk_persisted(spark, d, qs, k=5)) == before
     adds = emb.filter(F.col("vec_id") % 97 == 0).withColumn(
         "embedding", F.reverse("embedding")
     )
-    assert lsh_upsert(spark, d, add=adds) == 1
-    with_delta = rows(lsh_topk_persisted(spark, d, qs, k=5))
-    shutil.copytree(f"{d}/delta", str(tmp_path / "delta_saved"))
-    lsh_compact(spark, d)
-    assert rows(lsh_topk_persisted(spark, d, qs, k=5)) == with_delta
-    shutil.copytree(str(tmp_path / "delta_saved"), f"{d}/delta")
-    # folded base + re-applied committed deltas: same logical set
-    assert rows(lsh_topk_persisted(spark, d, qs, k=5)) == with_delta
+    assert vector_upsert(spark, d, add=adds) == 2
+    with_delta = _rows(lsh_topk_persisted(spark, d, qs, k=5))
+    assert with_delta != before
+
+    # window 2: a compaction that dies before its commit
+    def crash(*_):
+        raise OSError("crash before commit")
+
+    monkeypatch.setattr(similarity, "commit", crash)
+    with pytest.raises(OSError, match="crash"):
+        vector_compact(spark, d)
+    monkeypatch.undo()
+    assert current_version(d) == 2
+    assert _rows(lsh_topk_persisted(spark, d, qs, k=5)) == with_delta
+    assert vector_compact(spark, d) == 3
+    assert _rows(lsh_topk_persisted(spark, d, qs, k=5)) == with_delta
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_probe_built_before_compaction_keeps_its_snapshot(spark, emb,
+                                                          tmp_path, kind):
+    """A compaction commits a new snapshot and deletes nothing, so a
+    probe frame built on the old snapshot still returns the
+    pre-compaction answer when collected after it."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators import (
+        similarity,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
+        vector_compact,
+        vector_upsert,
+    )
+
+    persist = getattr(similarity, f"{kind}_persist")
+    topk = getattr(similarity, f"{kind}_topk_persisted")
+    d = str(tmp_path / kind)
+    persist(emb, d)
+    adds, dels, logical = _upsert_batch(emb)
+    vector_upsert(spark, d, add=adds, delete_ids=dels)
+    qs = logical.filter(F.col("vec_id") < 5).select(
+        F.concat(F.lit("v"), F.col("vec_id")).alias("query_id"),
+        F.col("embedding").alias("qvec"),
+    )
+    held = topk(spark, d, qs, k=5)
+    want = _rows(topk(spark, d, qs, k=5))
+    vector_compact(spark, d)
+    assert _rows(held) == want and len(want) > 0
+
+
+def test_vector_layout_vacuum_and_restore(spark, emb, tmp_path):
+    """``restore`` and ``vacuum`` serve a vector layout through the
+    same functions as the text index: restore flips CURRENT between
+    the layout's snapshots; vacuum after a compaction reclaims every
+    generation the compacted snapshot does not name, and the current
+    snapshot still answers."""
+    import os
+
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
+        restore,
+        snapshot_log,
+        vacuum,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
+        ivf_persist,
+        ivf_topk_persisted,
+        vector_compact,
+        vector_upsert,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
+        read_snapshot,
+    )
+
+    d = str(tmp_path / "vacivf")
+    ivf_persist(emb, d)
+    adds, dels, logical = _upsert_batch(emb)
+    qs = logical.filter(F.col("vec_id") < 5).select(
+        F.concat(F.lit("v"), F.col("vec_id")).alias("query_id"),
+        F.col("embedding").alias("qvec"),
+    )
+    base = _rows(ivf_topk_persisted(spark, d, qs, k=5))
+    vector_upsert(spark, d, add=adds, delete_ids=dels)
+    want = _rows(ivf_topk_persisted(spark, d, qs, k=5))
+    assert want != base
+    assert vector_compact(spark, d) == 3
+
+    restore(d, 1)
+    assert _rows(ivf_topk_persisted(spark, d, qs, k=5)) == base
+    restore(d, 3)
+
+    upsert_gen = read_snapshot(d, 2)["generations"][-1]["gen"]
+    rep = vacuum(d, keep_last=1)
+    assert rep["kept_versions"] == [3] and rep["removed_versions"] == [1, 2]
+    assert [s["version"] for s in snapshot_log(d)] == [3]
+    snap = read_snapshot(d)
+    named = {p.split("/")[1] for p in [
+        snap["centroids"], snap["bucket_stats"],
+        snap["generations"][0]["vectors"]]}
+    assert set(os.listdir(f"{d}/data")) == named
+    assert {f"vec_{upsert_gen}", f"tomb_{upsert_gen}"} <= set(
+        rep["removed_data_dirs"])
+    assert _rows(ivf_topk_persisted(spark, d, qs, k=5)) == want
+    with pytest.raises(FileNotFoundError):
+        restore(d, 2)
 
 
 def test_concurrent_probe_upsert_soak(spark, emb, tmp_path):
@@ -582,7 +669,7 @@ def test_concurrent_probe_upsert_soak(spark, emb, tmp_path):
     result must equal the exact answer for SOME committed prefix of
     generations — never a torn batch (tombstones visible without their
     adds, or half a batch's files). The reference forbids this race by
-    sequencing; the staging+rename commit makes it safe."""
+    sequencing; the snapshot commit makes it safe."""
     import threading
     import time
 
@@ -590,7 +677,7 @@ def test_concurrent_probe_upsert_soak(spark, emb, tmp_path):
         lsh_persist,
         lsh_topk,
         lsh_topk_persisted,
-        lsh_upsert,
+        vector_upsert,
     )
 
     small = emb.filter(F.col("vec_id") < 40).select("vec_id", "embedding")
@@ -603,10 +690,7 @@ def test_concurrent_probe_upsert_soak(spark, emb, tmp_path):
     )
 
     def rows(df):
-        return frozenset(
-            (r["query_id"], r["rank"], r["vec_id"], r["cosine_micro"])
-            for r in df.collect()
-        )
+        return frozenset(_rows(df))
 
     # four generations: g batches of 5 vectors each, reversed (upsert)
     batches = [
@@ -638,7 +722,7 @@ def test_concurrent_probe_upsert_soak(spark, emb, tmp_path):
     t.start()
     try:
         for g, b in enumerate(batches):
-            assert lsh_upsert(spark, d, add=b) == g + 1
+            assert vector_upsert(spark, d, add=b) == g + 2
             time.sleep(0.3)  # let probes interleave around the commit
     finally:
         stop.set()

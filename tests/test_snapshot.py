@@ -1,0 +1,164 @@
+"""The snapshot protocol every persisted index commits through
+(``operators/snapshot.py``): exclusive, parent-checked commits, and
+writer races made deterministic — a wrapper around ``commit`` lets
+another writer commit first, with no threads. The loser of every race
+raises ``CommitConflict``, CURRENT names the winner, and no batch is
+lost silently."""
+
+from __future__ import annotations
+
+import json
+import os
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators import (
+    segments,
+    similarity,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
+    with_doc_id,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
+    apply_updates,
+    compact,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
+    CommitConflict,
+    commit,
+    current_version,
+    read_snapshot,
+)
+
+
+def test_commit_is_exclusive_and_parent_checked(tmp_path):
+    d = str(tmp_path / "idx")
+    assert commit(d, 1, {"parent": None, "n": 1}) == 1
+    assert commit(d, 2, {"parent": 1, "n": 2}) == 2
+    # a writer that read v1 before v2 committed
+    with pytest.raises(CommitConflict) as e:
+        commit(d, 3, {"parent": 1, "n": 3})
+    assert (e.value.version, e.value.parent, e.value.current) == (3, 1, 2)
+    # the same version from another writer: the file is never replaced
+    with pytest.raises(CommitConflict):
+        commit(d, 2, {"parent": 1, "n": 99})
+    assert json.load(open(f"{d}/snapshots/v2.json"))["n"] == 2
+    # an identical re-commit (resume) is a no-op; CURRENT never moves back
+    assert commit(d, 1, {"parent": None, "n": 1}) == 1
+    assert current_version(d) == 2
+    assert sorted(os.listdir(f"{d}/snapshots")) == ["v1.json", "v2.json"]
+
+
+def _race(monkeypatch, module, winner):
+    """Make the next ``commit`` called through ``module`` run ``winner``
+    (another writer, which commits first) before it commits."""
+    real = module.commit
+
+    def racing(index_dir, version, snapshot):
+        monkeypatch.setattr(module, "commit", real)
+        winner()
+        return real(index_dir, version, snapshot)
+
+    monkeypatch.setattr(module, "commit", racing)
+
+
+def _docs(pdf, lo, hi):
+    return pdf.iloc[lo:hi].reset_index(drop=True)
+
+
+@pytest.mark.parametrize("loser", ["compact", "update"])
+def test_text_compact_and_delta_update_race(spark, tmp_path, monkeypatch,
+                                            loser):
+    """A compaction and a delta update staged on the same snapshot: the
+    one that commits second raises. Without the conflict check, the
+    compaction committed over the update and silently dropped its docs
+    (65 of 80 left), and both calls reported success."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.sources.corpus import (
+        make_corpus,
+    )
+
+    pdf = make_corpus(n_docs=80, seed=7, min_len=20, max_len=60)
+    d = str(tmp_path / "idx")
+    segments.build_segment_index(
+        spark, with_doc_id(spark.createDataFrame(_docs(pdf, 0, 50))), d,
+        n_buckets=4, hot_df=8, block_size=16,
+    )
+    apply_updates(spark, d, mode="delta",
+                  add_corpus=spark.createDataFrame(_docs(pdf, 50, 65)))
+    writers = {
+        "update": lambda: apply_updates(
+            spark, d, mode="delta",
+            add_corpus=spark.createDataFrame(_docs(pdf, 65, 80))),
+        "compact": lambda: compact(spark, d),
+    }
+    winner = "update" if loser == "compact" else "compact"
+    _race(monkeypatch, segments, writers[winner])
+    with pytest.raises(CommitConflict) as e:
+        writers[loser]()
+    assert (e.value.version, e.value.parent, e.value.current) == (3, 2, 3)
+    snap = read_snapshot(d)
+    assert snap["version"] == 3
+    assert snap["operation"] == (
+        "update_delta" if winner == "update" else "compact")
+    assert snap["n_docs"] == (80 if winner == "update" else 65)
+    # the loser re-reads and retries: both batches land
+    writers[loser]()
+    assert read_snapshot(d)["n_docs"] == 80
+    idx = segments.SegmentIndex.open(spark, d)
+    assert idx.doc_lens().count() == 80
+
+
+@pytest.fixture
+def vectors(spark):
+    pdf = pd.DataFrame({
+        "vec_id": range(120),
+        "embedding": [[float(x) for x in np.random.RandomState(i).normal(
+            size=16)] for i in range(120)],
+    })
+    return spark.createDataFrame(pdf)
+
+
+def _ids(spark, d):
+    snap = read_snapshot(d)
+    return {r["vec_id"] for r in similarity._resolved_vectors(  # noqa: SLF001
+        spark, d, snap).select("vec_id").collect()}
+
+
+def test_vector_upsert_race(spark, vectors, tmp_path, monkeypatch):
+    """Two upserts staged on the same snapshot of an LSH layout: the
+    second to commit raises, and its retry lands both batches."""
+    d = str(tmp_path / "lsh")
+    similarity.lsh_persist(vectors.filter("vec_id < 100"), d, n_planes=6)
+    a = vectors.filter("vec_id >= 100 AND vec_id < 110")
+    b = vectors.filter("vec_id >= 110")
+    _race(monkeypatch, similarity,
+          lambda: similarity.vector_upsert(spark, d, add=b))
+    with pytest.raises(CommitConflict):
+        similarity.vector_upsert(spark, d, add=a)
+    assert current_version(d) == 2
+    assert _ids(spark, d) == set(range(100)) | set(range(110, 120))
+    assert similarity.vector_upsert(spark, d, add=a) == 3
+    assert _ids(spark, d) == set(range(120))
+
+
+def test_vector_compact_and_upsert_race(spark, vectors, tmp_path,
+                                        monkeypatch):
+    """A compaction of an IVF layout that another writer's upsert beats
+    to the commit raises instead of folding the upsert away; CURRENT
+    names the upsert, and a retried compaction keeps every vector."""
+    d = str(tmp_path / "ivf")
+    similarity.ivf_persist(vectors.filter("vec_id < 100"), d, n_cells=4)
+    similarity.vector_upsert(spark, d, delete_ids=vectors.filter(
+        "vec_id < 10").select("vec_id"))
+    _race(monkeypatch, similarity, lambda: similarity.vector_upsert(
+        spark, d, add=vectors.filter("vec_id >= 100")))
+    with pytest.raises(CommitConflict):
+        similarity.vector_compact(spark, d)
+    snap = read_snapshot(d)
+    assert (snap["version"], snap["operation"]) == (3, "upsert")
+    want = set(range(10, 120))
+    assert _ids(spark, d) == want
+    assert similarity.vector_compact(spark, d) == 4
+    assert _ids(spark, d) == want

@@ -147,6 +147,9 @@ def test_ann_cli_lifecycle_matches_library(spark, tmp_path):
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
         lsh_topk_persisted,
     )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
+        read_snapshot,
+    )
 
     spec = importlib.util.spec_from_file_location(
         "run_pipeline_ann", os.path.join(REPO, "scripts", "run_pipeline.py")
@@ -200,7 +203,8 @@ def test_ann_cli_lifecycle_matches_library(spark, tmp_path):
 
     # compact, re-query through the CLI: answers unchanged
     assert rp.main(["ann-compact", "--index", idx]) == 0
-    assert not os.path.exists(f"{idx}/delta")
+    snap = read_snapshot(idx)
+    assert snap["operation"] == "compact" and len(snap["generations"]) == 1
     out2 = str(tmp_path / "out2")
     assert rp.main(["ann-query", "--index", idx, "--queries", qdir,
                     "--out", out2, "--k", "5"]) == 0

@@ -536,15 +536,15 @@ def test_stream_vector_ingest_atomic_generations(spark, tmp_path):
     probes equal a full rebuild of the logical set; re-running the
     drained stream changes nothing (exactly-once); periodic compaction
     folds generations without changing answers."""
-    import os
-
     import numpy as np
     import pandas as pd
 
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.similarity import (
-        _delta_gens,
         lsh_persist,
         lsh_topk_persisted,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
+        read_snapshot,
     )
     from shazam_an_industrial_strength_audio_search_algorithm__spark.streaming.ingest import (
         stream_vector_ingest,
@@ -576,8 +576,10 @@ def test_stream_vector_ingest_atomic_generations(spark, tmp_path):
                              trigger_available_now=True,
                              max_files_per_trigger=2)
     q.awaitTermination(300)
-    gens = _delta_gens(d)
-    assert len(gens) >= 1  # one atomic generation per non-empty batch
+    snap = read_snapshot(d)
+    # one upsert snapshot, carrying one generation, per non-empty batch
+    assert snap["operation"] == "upsert"
+    assert len(snap["generations"]) == snap["version"] >= 2
 
     # logical set == rebuild: base 1-39 + streamed 40-69 + overwritten 0
     logical_pdf = pd.concat([mk([0], shift=3.0), base_pdf.iloc[1:],
@@ -600,11 +602,10 @@ def test_stream_vector_ingest_atomic_generations(spark, tmp_path):
 
     # exactly-once: draining the same checkpointed stream again must
     # not add generations
-    n_gens = len(_delta_gens(d))
     q2 = stream_vector_ingest(spark, src, d, ckpt,
                               trigger_available_now=True)
     q2.awaitTermination(300)
-    assert len(_delta_gens(d)) == n_gens
+    assert read_snapshot(d) == snap
     assert rows(lsh_topk_persisted(spark, d, qs, k=5)) == got
 
     # compaction cadence: a fresh stream over the same files with
@@ -616,6 +617,7 @@ def test_stream_vector_ingest_atomic_generations(spark, tmp_path):
                               max_files_per_trigger=2,
                               compact_every=1)
     q3.awaitTermination(300)
-    assert _delta_gens(d3) == []
-    assert not os.path.exists(f"{d3}/delta")
+    snap3 = read_snapshot(d3)
+    assert snap3["operation"] == "compact"
+    assert len(snap3["generations"]) == 1
     assert rows(lsh_topk_persisted(spark, d3, qs, k=5)) == got
