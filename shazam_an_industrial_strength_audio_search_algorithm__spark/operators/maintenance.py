@@ -149,10 +149,9 @@ def apply_updates(
             "rebuild-mode updates apply to a single-layer snapshot — "
             "run compact() first, or keep using mode='delta'"
         )
-    new_version = _next_commit_version(index_dir)
+    new_version = _reserve_update(index_dir, resume)
     gen = f"u{new_version}"
     mdir = f"{index_dir}/manifests/{gen}"
-    os.makedirs(mdir, exist_ok=True)
     # delta mode stages straight into its layer's dt_/dl_ dirs; rebuild
     # mode stages beside them, since its merge writes dt_/dl_
     if mode == "delta":
@@ -245,6 +244,26 @@ def apply_updates(
     )
 
 
+def _reserve_update(index_dir: str, resume: bool) -> int:
+    """The version N of this update's generation ``u{N}``, reserved by
+    creating ``manifests/u{N}`` exclusively before anything stages:
+    two updates staged on the same parent never share a staging dir.
+    The loser of the ``mkdir`` takes the next free N (and its commit,
+    on a stale parent, raises ``CommitConflict``). With ``resume`` the
+    first N is taken even when its dir exists: it is this writer's own
+    interrupted generation."""
+    os.makedirs(f"{index_dir}/manifests", exist_ok=True)
+    n = _next_commit_version(index_dir)
+    while True:
+        try:
+            os.mkdir(f"{index_dir}/manifests/u{n}")
+            return n
+        except FileExistsError:
+            if resume:
+                return n
+            n += 1
+
+
 def _stage_batch(spark, base, gen, add_corpus, delete_keys, assume_unique,
                  explicit_ids, dt_path, dl_path, removed_path,
                  keep_removed_ids) -> tuple[dict, np.ndarray | None]:
@@ -254,6 +273,13 @@ def _stage_batch(spark, base, gen, add_corpus, delete_keys, assume_unique,
     accounting and the buckets the staged doc_terms touch — and, with
     ``keep_removed_ids``, the sorted removed ids (None when there are
     none), observed on their write."""
+    # a driver-held batch (a local relation) scans as up to
+    # defaultParallelism partitions: one writer task keeps the staged
+    # layer at one file per touched bucket
+    add_corpus, delete_keys = (
+        f.coalesce(1) if f is not None and f.isLocal() else f
+        for f in (add_corpus, delete_keys)
+    )
     # --- doc ids being replaced or deleted -----------------------------
     # explicit_ids: the caller's rows already carry a stable ``doc_id``
     # (an index built with an explicit id_col — e.g. the driver

@@ -1153,13 +1153,25 @@ class SegmentIndex:
     def terms_filter(self, terms: list[str]) -> Column:
         """The static predicate selecting ``terms``' rows from a
         segments or doc_terms scan: each term's bucket is a
-        constant-folded ``bucket_col(lit(term))``, so the scan prunes
-        statically to those buckets (``PartitionFilters: [bucket = K]``)
-        and the ``term`` predicate reaches parquet — no job runs to
-        resolve them."""
-        return F.col("bucket").isin(
-            [bucket_col(F.lit(t), self.n_buckets) for t in terms]
-        ) & F.col("term").isin(terms)
+        constant-folded ``bucket_col`` of its literal, so the scan
+        prunes statically to those buckets (``PartitionFilters:
+        [bucket IN (…)]``) and the ``term`` predicate reaches parquet —
+        no job runs to resolve them.
+
+        Built as ONE SQL expression string, so the predicate costs one
+        Py4J call whatever the term count (a Column per term costs ~5,
+        ~0.6 s for a 194-term batch). Each term travels as a UTF-8 hex
+        literal cast to string, so no quote, backslash or escape
+        setting can change it."""
+        if not terms:
+            return F.lit(False)
+        lits = [f"CAST(X'{t.encode('utf-8').hex()}' AS STRING)"
+                for t in terms]
+        buckets = ", ".join(
+            f"CAST(pmod(xxhash64({lit}), {self.n_buckets}) AS INT)"
+            for lit in lits
+        )
+        return F.expr(f"bucket IN ({buckets}) AND term IN ({', '.join(lits)})")
 
     def postings_for_terms(self, terms: list[str],
                            with_positions: bool = False) -> DataFrame:

@@ -43,6 +43,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snaps
     read_snapshot,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+    OWNER,
     local_rows_df,
 )
 
@@ -385,7 +386,7 @@ def ivf_persist(emb: DataFrame, out_dir: str,
     Returns the committed snapshot version."""
     cent = _centroid_table(emb, n_cells, refine_iters, id_col, vec_col)
     gen = _stage_gen(out_dir)
-    cent.write.parquet(f"{out_dir}/data/centroids_{gen}")
+    cent.coalesce(1).write.parquet(f"{out_dir}/data/centroids_{gen}")
     return _persist(
         out_dir, gen, ivf_assign(_vectors(emb, id_col, vec_col), cent),
         {"kind": "ivf", "centroids": f"data/centroids_{gen}"},
@@ -550,6 +551,10 @@ def _write_vectors(assigned: DataFrame, index_dir: str, gen: str,
     import math
 
     spark = assigned.sparkSession
+    # the count and the write below are two passes over the input:
+    # evaluate it once (on a compaction: the tombstone aggregate and
+    # every generation's scan; on a persist: the assignment)
+    OWNER.persist(assigned)
     counts = assigned.groupBy(part_col).count().collect()
     factors = [
         (int(r[part_col]), int(r["count"]),
@@ -593,7 +598,8 @@ def _write_vectors(assigned: DataFrame, index_dir: str, gen: str,
         .partitionBy(part_col)
         .parquet(f"{index_dir}/{paths['vectors']}")
     )
-    fdf.write.parquet(f"{index_dir}/{paths['bucket_stats']}")
+    OWNER.unpersist(assigned)
+    fdf.coalesce(1).write.parquet(f"{index_dir}/{paths['bucket_stats']}")
     return paths
 
 

@@ -19,14 +19,18 @@ Execution shape: a request's critical path is the block scan and the
 kernel, nothing else. Two placements run the same kernel (``_kernel``):
 
 - **driver** — a query frame that already lives on the driver
-  (``isLocal()``) with at most ``DRIVER_MAX_QUERIES`` rows, the
-  reference's one-clip-at-a-time request (``Matching.py:96-131``).
-  The queries tokenize in Python (``tokenize_py``), their terms' block
-  rows arrive by ONE bucket-pruned JVM scan (``terms_filter``), the
-  kernel runs on the driver and the answer is a local relation. One
-  Spark job, no exchange, no Python worker.
-- **grouped** — every other frame (batches, ``batch_match`` groups,
-  streaming micro-batches). The query side is ONE broadcast — query
+  (``isLocal()``) and is small enough for the index
+  (``driver_max_queries``: at most ``DRIVER_MAX_QUERIES`` rows, or
+  more while rows × docs stays within ``DRIVER_MAX_QUERY_DOCS``): the
+  reference's one-clip-at-a-time request (``Matching.py:96-131``), and
+  a driver-held batch while answering it in one process still beats
+  sharing. The queries tokenize in Python (``tokenize_py``), their
+  terms' block rows arrive by ONE bucket-pruned JVM scan whose
+  predicate is one SQL string (``terms_filter``), the kernel runs on
+  the driver and the answer is a local relation. One Spark job, no
+  exchange, no Python worker.
+- **grouped** — every other frame (larger local batches, ``batch_match``
+  groups, streaming micro-batches). The query side is ONE broadcast — query
   terms (one partition; queries are the small axis, the reference's
   nj=32 splits) grouped to (bucket, term, group) → query ids without
   an exchange — which the block scan joins on (bucket, term) and which
@@ -76,20 +80,29 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
     bucket_col,
 )
 
-# A driver-held query frame with at most this many rows is answered on
-# the driver; larger ones share the grouped path's fixed 3 jobs. The
-# measured crossover (median speed-up of the driver placement over the
-# grouped one, interleaved pairs of the same local frame, 8-token
-# queries, default layout, 4 vCPUs at load ~2.8):
+# A driver-held query frame is answered on the driver while it holds
+# at most DRIVER_MAX_QUERIES rows, on any index, or while rows × n_docs
+# stays within DRIVER_MAX_QUERY_DOCS (``driver_max_queries``); larger
+# ones share the grouped path's fixed 3 jobs. The measured crossover,
+# ``scripts/wand_crossover.py --docs 600,5000,20000 --batches
+# 4,8,16,32,64,128 --pairs 8`` (median speed-up of the driver placement
+# over the grouped one, and pairs of 8 it won; perfbench's 8-token
+# query mix, default layout, 4 vCPUs):
 #
-#   queries        1     2     4     8     16    32
-#   600 docs     2.31  1.92  1.47  1.36  1.05  0.69
-#   20k docs     2.04  1.57  1.13  0.79  0.68  0.51
+#   queries     4          8          16         32         64         128
+#   600 docs  2.95 (8)   2.57 (8)   2.86 (8)   1.72 (8)   1.53 (8)   1.01 (4)
+#   5k docs   1.98 (8)   2.05 (8)   1.19 (6)   1.16 (6)   0.82 (1)   0.58 (0)
+#   20k docs  1.19 (8)   0.96 (3)   0.80 (0)   0.64 (0)   0.66 (0)   0.54 (0)
 #
 # The driver decodes every query's blocks in one process, so its cost
-# grows with batch size and posting volume; the larger index crosses
-# over first, and its last winning size is the limit.
+# grows with batch size × posting volume, while the grouped path's is
+# mostly fixed. 40k query·docs sends 64 queries at 600 docs and 8 at 5k
+# to the driver, each won in 8 of 8 pairs; the first shape it keeps
+# grouped (128 at 600 docs, 16 at 5k) is no longer a clear win. A
+# count cap alone would not do: 32 queries lose on 20k docs. The
+# 4-query floor keeps small batches on the driver on any index.
 DRIVER_MAX_QUERIES = 4
+DRIVER_MAX_QUERY_DOCS = 40_000
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -455,6 +468,14 @@ def _kernel(pdf: pd.DataFrame, k: int, n_docs: int, avgdl: float,
     return pd.concat(frames, ignore_index=True)
 
 
+def driver_max_queries(n_docs: int) -> int:
+    """The most rows of a driver-held query frame that ``wand_topk``
+    answers on the driver, over an index of ``n_docs`` docs:
+    ``DRIVER_MAX_QUERIES`` on any index, more while the batch stays
+    within ``DRIVER_MAX_QUERY_DOCS`` query·docs."""
+    return max(DRIVER_MAX_QUERIES, DRIVER_MAX_QUERY_DOCS // max(n_docs, 1))
+
+
 def _block_cols(layered: bool) -> list[str]:
     return [
         "bucket", "term", "df", "salt", "block_seq", "doc_id_lo",
@@ -516,12 +537,15 @@ def wand_topk(
     ``ValueError`` instead of summing the rows' scores.
 
     Driver placement: a frame that already lives on the driver
-    (``queries.isLocal()``) with at most ``DRIVER_MAX_QUERIES`` rows is
-    answered at call time — the scan of its terms' block rows runs
-    here, eagerly (1 Spark job, no exchange, no Python worker), and the
-    result is a local relation whose ``collect()`` launches no job.
-    Answering eagerly is safe because a ``SegmentIndex`` is a fixed
-    snapshot. ``n_groups`` does not apply on this path.
+    (``queries.isLocal()``, e.g. one built by ``local_rows_df``) with
+    at most ``driver_max_queries(index.n_docs)`` rows — the larger of
+    ``DRIVER_MAX_QUERIES`` and ``DRIVER_MAX_QUERY_DOCS // n_docs``, from
+    the crossover measured above those constants — is answered at call time: the scan of
+    its terms' block rows runs here, eagerly (1 Spark job, no exchange,
+    no Python worker), and the result is a local relation whose
+    ``collect()`` launches no job. Answering eagerly is safe because a
+    ``SegmentIndex`` is a fixed snapshot. ``n_groups`` does not apply
+    on this path.
 
     Batched execution (every other frame): queries are hashed into
     ``n_groups`` groups
@@ -555,9 +579,9 @@ def wand_topk(
     if queries.isLocal():
         # reading a local frame (projection + limit fold into the
         # LocalRelation) launches no job
-        rows = (queries.select(id_col, text_col)
-                .limit(DRIVER_MAX_QUERIES + 1).collect())
-        if len(rows) <= DRIVER_MAX_QUERIES:
+        cap = driver_max_queries(index.n_docs)
+        rows = queries.select(id_col, text_col).limit(cap + 1).collect()
+        if len(rows) <= cap:
             return _driver_topk(index, rows, k, micro)
 
     # Layered (merge-on-read) snapshots are served EXACTLY without a

@@ -22,8 +22,8 @@ from pyspark.sql import types as T
 
 
 def local_rows_df(spark: SparkSession, rows, schema):
-    """Small driver-side row list → DataFrame in ONE partition, built
-    without a Python worker.
+    """Small driver-side row list → a local relation (``isLocal()``),
+    built without a Python worker.
 
     ``spark.createDataFrame(rows, schema)`` turns local rows into a
     Python RDD: every evaluation of the frame — every job that reads
@@ -31,16 +31,16 @@ def local_rows_df(spark: SparkSession, rows, schema):
     (~0.2–0.3 s per crossing on a 4-core host, against ~0.04 s for a
     JVM-only job). Here the rows become an Arrow table on the driver
     and the JVM reads its batches directly, so the frame is JVM data
-    from the start (create + collect of one row: ~0.02 s). The Arrow
-    frame is split into ``defaultParallelism`` partitions; the
-    ``coalesce(1)`` keeps the one-partition contract: dimension frames
-    (query lists, centroid tables, bucket stats, rank offsets) are
-    driver-tiny, single-task consumers (a ``coalesce(1)`` write, a
-    broadcast build, a group-by that needs no exchange) read them
-    whole, and a write fed by the frame keeps one writer task. A
-    one-row frame is already one partition, so it skips the coalesce
-    and stays a local relation (``isLocal()``): its ``collect()``
-    launches no job, and ``wand_topk`` answers it on the driver.
+    from the start (create + collect of one row: ~0.02 s).
+
+    The frame is returned as it is, uncoalesced: it stays a local
+    relation, so its ``collect()`` launches no job and ``wand_topk``
+    can answer a query batch built with it on the driver. A scan of it
+    splits into up to ``defaultParallelism`` partitions. Consumers that
+    read it whole (a broadcast build, the rank offsets) do not care; a
+    write it feeds keeps one writer task by coalescing itself
+    (``maintenance._stage_batch``, the IVF centroid and
+    ``bucket_stats`` writes).
 
     ``rows`` are tuples (or ``Row``s) in schema order; ``schema`` is a
     ``StructType`` or a DDL string."""
@@ -55,8 +55,7 @@ def local_rows_df(spark: SparkSession, rows, schema):
         [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,
     )
-    df = spark.createDataFrame(table, schema)
-    return df if table.num_rows == 1 else df.coalesce(1)
+    return spark.createDataFrame(table, schema)
 
 
 def spread_input(df, n: int | None = None):
@@ -189,6 +188,12 @@ class ResourceOwner:
         (self._fixture_persists if self._building
          else self.query_persists).append(df)
         return df
+
+    def unpersist(self, df) -> None:
+        """Release one persist before its scope ends."""
+        for dfs in (self._fixture_persists, self.query_persists):
+            dfs[:] = [d for d in dfs if d is not df]
+        df.unpersist(blocking=False)
 
     def tmpdir(self, prefix: str) -> str:
         self.tmpdirs.append(tempfile.mkdtemp(prefix=prefix))

@@ -249,16 +249,52 @@ def test_delta_update_job_counts(spark, corpus_df, update_fixtures,
     ), (jobs, WRITE_PATH_JOBS)
 
 
+def test_local_frame_delta_update_writes_one_file_per_bucket(
+        spark, corpus_df, update_fixtures, tmp_path):
+    """A delta update fed by driver-held ``local_rows_df`` frames (a
+    local relation scans as several partitions) stages its layer with
+    one writer task: one doc_terms file per touched bucket and one
+    doc_lens file."""
+    import os
+
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+        local_rows_df,
+    )
+
+    def files(path):
+        return [f for f in os.listdir(path) if f.endswith(".parquet")]
+
+    d = str(tmp_path / "idx")
+    build_segment_index(spark, with_doc_id(corpus_df), d, n_buckets=4,
+                        hot_df=8, block_size=16)
+    add_pdf, del_pdf = update_fixtures
+    add = local_rows_df(spark, list(add_pdf.itertuples(index=False)),
+                        ", ".join(f"{c} string" for c in add_pdf.columns))
+    dele = local_rows_df(spark, list(del_pdf.itertuples(index=False)),
+                         "repo string, path string, commit string")
+    assert add.isLocal() and add.rdd.getNumPartitions() > 1
+    rep = apply_updates(spark, d, mode="delta", add_corpus=add,
+                        delete_keys=dele)
+    gen = f"u{rep.snapshot_version}"
+    assert rep.affected_buckets
+    assert {b: len(files(f"{d}/data/dt_{gen}/bucket={b}"))
+            for b in rep.affected_buckets} == \
+        {b: 1 for b in rep.affected_buckets}
+    assert len(files(f"{d}/data/dl_{gen}")) == 1
+
+
 # Spark jobs the vector layouts' paths launched on 300 random 16-d
 # vectors (``vec_id % 7`` re-added reversed, ``vec_id % 11`` deleted):
 # building a probe frame on a fresh layout and on one with an upsert
 # generation (0: the planes and centroid paths come from the snapshot
 # JSON, and every scan carries its schema), one ``vector_upsert`` and
-# one ``vector_compact``, per layout kind. A path may launch fewer
-# jobs, never more; a probe frame launches none.
+# one ``vector_compact``, per layout kind (its writer evaluates the
+# resolved generations once, persisted across the fan-out count and
+# the salted write). A path may launch fewer jobs, never more; a probe
+# frame launches none.
 VECTOR_PATH_JOBS = {
-    "lsh": {"probe_fresh": 0, "upsert": 2, "probe_delta": 0, "compact": 10},
-    "ivf": {"probe_fresh": 0, "upsert": 3, "probe_delta": 0, "compact": 10},
+    "lsh": {"probe_fresh": 0, "upsert": 2, "probe_delta": 0, "compact": 9},
+    "ivf": {"probe_fresh": 0, "upsert": 3, "probe_delta": 0, "compact": 9},
 }
 
 
@@ -321,10 +357,12 @@ def _count_jobs(spark, group: str, fn):
 # same way (call and collect): one query from a one-row local frame on
 # the fresh build; the same on the layered snapshot after the add and
 # delete batches, once its tombstone arrays exist (a first call builds
-# them); and a local frame one row past the driver placement's limit,
-# which keeps the grouped path's broadcast build, scan + shuffle and
-# kernel.
-WAND_QUERY_JOBS = {"single": 1, "single_layered": 1, "over_limit": 3}
+# them); a 32-query batch from a ``local_rows_df`` frame, which the
+# driver still answers (32 × ~60 docs is inside the query·doc budget);
+# and a local frame one row past the placement rule's cap, which keeps
+# the grouped path's broadcast build, scan + shuffle and kernel.
+WAND_QUERY_JOBS = {"single": 1, "single_layered": 1, "batch_32": 1,
+                   "over_limit": 3}
 
 
 def test_wand_query_job_counts(spark, corpus_pdf, corpus_df, update_fixtures,
@@ -341,11 +379,10 @@ def test_wand_query_job_counts(spark, corpus_pdf, corpus_df, update_fixtures,
                         hot_df=8, block_size=16)
     text = " ".join(corpus_pdf["content"].iloc[10].split()[:6])
     one = local_rows_df(spark, [("q1", text)], "query_id string, text string")
-    n_over = wand.DRIVER_MAX_QUERIES + 1
-    over = spark.createDataFrame(pd.DataFrame(
-        {"query_id": [f"q{i}" for i in range(n_over)], "text": [text] * n_over}
-    ))
-    assert over.isLocal()
+    words = corpus_pdf["content"].str.split()
+    batch = local_rows_df(
+        spark, [(f"b{i}", " ".join(words.iloc[i][:6])) for i in range(32)],
+        "query_id string, text string")
     # the kernel runs in this process on the driver path, never in a
     # Python worker
     kernel_calls = []
@@ -353,8 +390,8 @@ def test_wand_query_job_counts(spark, corpus_pdf, corpus_df, update_fixtures,
     monkeypatch.setattr(wand, "_kernel", lambda *a: (
         kernel_calls.append(1), real_kernel(*a))[1])
 
-    def single(idx):
-        res = wand.wand_topk(idx, one, k=3)
+    def single(idx, frame=one):
+        res = wand.wand_topk(idx, frame, k=3)
         rows = res.collect()
         assert res.isLocal() and rows
         return rows
@@ -375,14 +412,25 @@ def test_wand_query_job_counts(spark, corpus_pdf, corpus_df, update_fixtures,
     _, jobs["single_layered"] = _count_jobs(
         spark, "wand_jobs_single_layered", lambda: single(layered))
     assert kernel_calls == [1, 1, 1]
+    assert 32 <= wand.driver_max_queries(layered.n_docs)
+    rows, jobs["batch_32"] = _count_jobs(
+        spark, "wand_jobs_batch_32", lambda: single(layered, batch))
+    assert kernel_calls == [1, 1, 1, 1]
+    assert len({r["query_id"] for r in rows}) == 32
+    n_over = wand.driver_max_queries(layered.n_docs) + 1
+    over = spark.createDataFrame(pd.DataFrame(
+        {"query_id": [f"q{i}" for i in range(n_over)], "text": [text] * n_over}
+    ))
+    assert over.isLocal()
     _, jobs["over_limit"] = _count_jobs(
         spark, "wand_jobs_over_limit",
         lambda: wand.wand_topk(layered, over, k=3).collect())
-    assert kernel_calls == [1, 1, 1]
+    assert kernel_calls == [1, 1, 1, 1]
     sc = spark.sparkContext
     stages = {name: [len(sc.statusTracker().getJobInfo(j).stageIds)
                      for j in ids] for name, ids in jobs.items()}
     counts = {name: len(ids) for name, ids in jobs.items()}
     assert counts == WAND_QUERY_JOBS, (counts, stages)
-    # a single query's one job is one scan stage: no exchange
-    assert stages["single"] == stages["single_layered"] == [1], stages
+    # a driver-placed request's one job is one scan stage: no exchange
+    assert stages["single"] == stages["single_layered"] == \
+        stages["batch_32"] == [1], stages

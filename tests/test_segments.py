@@ -300,6 +300,70 @@ def test_bucket_pruning_reads_subset(spark, built, index_dir):
     assert one.count() == want > 0
 
 
+HOSTILE_TERMS = ["it's", "back\\slash", "a\\'b", 'quo"te', "ünïcödé",
+                 "日本", "", "tok0000", "tok0001"]
+
+
+def _column_terms_filter(seg, terms):
+    """The Column-per-term form ``terms_filter`` replaced (the
+    reference its one-string form must agree with)."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
+        bucket_col,
+    )
+
+    return F.col("bucket").isin(
+        [bucket_col(F.lit(t), seg.n_buckets) for t in terms]
+    ) & F.col("term").isin(terms)
+
+
+def test_terms_filter_on_hostile_terms(spark, built, index_dir):
+    """``terms_filter`` (one SQL string, terms as hex literals) selects
+    the same rows as the Column form for terms with quotes,
+    backslashes, unicode and the empty string — on a frame holding
+    those terms and on the index through ``postings_for_terms`` — and
+    still prunes buckets statically, with no job and no dynamic
+    pruning."""
+    import re
+
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
+        bucket_col,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.plans.audit import (
+        plan_string,
+    )
+
+    seg = SegmentIndex.open(spark, index_dir)
+    rows = spark.createDataFrame(
+        [(t,) for t in HOSTILE_TERMS + ["its", "backslash", "other"]],
+        "term string",
+    ).withColumn("bucket", bucket_col(F.col("term"), seg.n_buckets))
+
+    def terms_of(df):
+        return sorted(r["term"] for r in df.select("term").collect())
+
+    assert terms_of(rows.filter(seg.terms_filter(HOSTILE_TERMS))) == \
+        terms_of(rows.filter(_column_terms_filter(seg, HOSTILE_TERMS))) == \
+        sorted(HOSTILE_TERMS)
+    assert rows.filter(seg.terms_filter([])).count() == 0
+
+    got = seg.postings_for_terms(HOSTILE_TERMS)
+    want = seg._postings(  # noqa: SLF001
+        seg.doc_terms().filter(_column_terms_filter(seg, sorted(HOSTILE_TERMS))))
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, want.collect()))
+    assert {r["term"] for r in got.collect()} == {"tok0000", "tok0001"}
+
+    plan = plan_string(got)
+    filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert filters and "dynamicpruning" not in plan.lower(), filters
+    assert not any("xxhash64" in f for f in filters), filters
+    named = {int(b) for f in filters
+             for b in re.findall(r"\d+", re.sub(r"#\d+", "", f))}
+    buckets = {r["bucket"] for r in rows.filter(
+        F.col("term").isin(HOSTILE_TERMS)).collect()}
+    assert named == buckets, (filters, buckets)
+
+
 def test_positions_requested_without_stored_positions_raise(spark, built,
                                                            index_dir):
     """An index built with store_positions=False has no positions to

@@ -1,7 +1,7 @@
-"""``local_rows_df``: driver-side rows → a one-partition frame that is
-JVM data from the start — same rows and schema as
+"""``local_rows_df``: driver-side rows → a local relation that is JVM
+data from the start — same rows and schema as
 ``spark.createDataFrame(rows, schema)``, but no Python worker runs
-when the frame is evaluated."""
+when the frame is evaluated, and reading it back launches no job."""
 
 from __future__ import annotations
 
@@ -31,12 +31,24 @@ def _python_nodes(df) -> list[str]:
     return [n for n in PYTHON_NODES if n in text]
 
 
+def _collect_jobs(spark, df) -> tuple[list, list]:
+    """``df.collect()`` and the Spark job ids it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup("local_rows_df_collect", "local_rows_df_collect")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return rows, sc.statusTracker().getJobIdsForGroup("local_rows_df_collect")
+
+
 def _check(spark, rows, schema):
     got = local_rows_df(spark, rows, schema)
     want = spark.createDataFrame(rows, schema)
     assert got.schema == want.schema
-    assert got.collect() == want.collect()
-    assert got.rdd.getNumPartitions() == 1
+    assert got.isLocal()
+    assert _collect_jobs(spark, got) == (want.collect(), [])
     assert _python_nodes(got) == []
     return got
 
@@ -65,17 +77,9 @@ def test_local_rows_df_empty(spark, schema):
     assert got.count() == 0
 
 
-def test_local_rows_df_one_row_stays_local(spark):
-    """A one-row frame skips the coalesce: it is already one partition,
-    it stays a local relation, and reading it launches no job."""
-    got = _check(spark, MIXED_ROWS[:1], MIXED_DDL)
-    assert got.isLocal()
-    sc = spark.sparkContext
-    sc.setJobGroup("local_rows_df_one_row", "local_rows_df_one_row")
-    try:
-        rows = got.collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sc.statusTracker().getJobIdsForGroup("local_rows_df_one_row") == []
-    assert rows == spark.createDataFrame(MIXED_ROWS[:1], MIXED_DDL).collect()
+@pytest.mark.parametrize("n", [0, 1, 32])
+def test_local_rows_df_stays_local(spark, n):
+    """Frames of 0, 1 and 32 rows stay local relations: reading one
+    back launches no job, whatever its row count."""
+    rows = [(f"q{i}", f"text {i}") for i in range(n)]
+    _check(spark, rows, "query_id string, text string")

@@ -110,6 +110,53 @@ def test_text_compact_and_delta_update_race(spark, tmp_path, monkeypatch,
     assert idx.doc_lens().count() == 80
 
 
+def test_text_delta_update_race(spark, tmp_path, monkeypatch):
+    """Two delta updates staged on the same snapshot: each reserves its
+    own generation before staging (the winner, finding ``u2`` taken,
+    stages ``u3``), so neither writes into the other's staging; the one
+    that commits second raises, and its retry lands both batches."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.sources.corpus import (
+        make_corpus,
+    )
+
+    pdf = make_corpus(n_docs=80, seed=7, min_len=20, max_len=60)
+    d = str(tmp_path / "idx")
+    segments.build_segment_index(
+        spark, with_doc_id(spark.createDataFrame(_docs(pdf, 0, 50))), d,
+        n_buckets=4, hot_df=8, block_size=16,
+    )
+
+    def update(lo, hi):
+        return apply_updates(spark, d, mode="delta",
+                             add_corpus=spark.createDataFrame(_docs(pdf, lo, hi)))
+
+    _race(monkeypatch, segments, lambda: update(65, 80))
+    with pytest.raises(CommitConflict) as e:
+        update(50, 65)
+    assert (e.value.version, e.value.parent, e.value.current) == (2, 1, 3)
+    snap = read_snapshot(d)
+    assert (snap["version"], snap["n_docs"]) == (3, 65)
+    assert [layer["gen"] for layer in snap["layers"]] == ["u3"]
+    assert sorted(os.listdir(f"{d}/manifests")) == ["init", "u2", "u3"]
+    # each staging holds only its own writer's docs
+    staged = {
+        gen: {r["doc_id"] for r in spark.read.parquet(f"{d}/data/dl_{gen}")
+              .select("doc_id").collect()}
+        for gen in ("u2", "u3")
+    }
+    want = {
+        gen: {r["doc_id"] for r in with_doc_id(spark.createDataFrame(
+            _docs(pdf, lo, hi))).select("doc_id").collect()}
+        for gen, lo, hi in (("u2", 50, 65), ("u3", 65, 80))
+    }
+    assert staged == want
+    # the loser re-reads and retries: both batches land
+    assert update(50, 65).snapshot_version == 4
+    assert read_snapshot(d)["n_docs"] == 80
+    idx = segments.SegmentIndex.open(spark, d)
+    assert idx.doc_lens().count() == 80
+
+
 @pytest.fixture
 def vectors(spark):
     pdf = pd.DataFrame({

@@ -21,6 +21,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
     DRIVER_MAX_QUERIES,
+    driver_max_queries,
     wand_topk,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
@@ -114,14 +115,21 @@ def _by_query(rows) -> dict:
 @pytest.mark.parametrize("which", ["fresh", "layered"])
 def test_driver_path_equals_grouped_path(spark, seg, layered_seg, queries_pdf,
                                          queries_df, which, micro):
-    """Each fixture query alone, as a one-row local frame, takes the
-    driver path and must return exactly the grouped path's rows for it
-    (docs, ranks, scores, matched_terms, both block counters) and the
-    brute path's ranking — on a fresh and on a layered snapshot."""
+    """Each fixture query alone, as a one-row local frame, and the whole
+    local batch take the driver path and must return exactly the
+    grouped path's rows (docs, ranks, scores, matched_terms, both block
+    counters) and the brute path's ranking — on a fresh and on a
+    layered snapshot."""
     idx = seg if which == "fresh" else layered_seg
     score = "score_micro" if micro else "score"
     assert queries_df.isLocal() and len(queries_pdf) > DRIVER_MAX_QUERIES
-    grouped = _by_query(wand_topk(idx, queries_df, k=5, micro=micro).collect())
+    assert len(queries_pdf) <= driver_max_queries(idx.n_docs)
+    batch = wand_topk(idx, queries_df, k=5, micro=micro)
+    assert batch.isLocal(), "a local batch within the cap left the driver path"
+    shared = queries_df.coalesce(1)  # not local: the grouped path
+    assert not shared.isLocal()
+    grouped = _by_query(wand_topk(idx, shared, k=5, micro=micro).collect())
+    assert _by_query(batch.collect()) == grouped
     brute = _by_query(
         segment_topk(idx, queries_df, k=5, micro=micro)
         .select("query_id", "rank", "doc_id", score, "matched_terms")
