@@ -49,8 +49,8 @@ def main() -> None:
             "wand_topk — pruned executor (block-max WAND, "
             "query-group batching, micro scoring)",
             api.q_wand_topk(spark, SF),
-            "Blocks join the per-(group,term) query map as a "
-            "BROADCAST and shuffle once per GROUP (repartition by "
+            "doc_terms posting rows join the per-(group,term) query "
+            "map as a BROADCAST and shuffle once per GROUP (repartition by "
             "grp), never once per query; the interval-at-a-time "
             "kernel runs in applyInPandas.",
         ),
@@ -59,12 +59,11 @@ def main() -> None:
             "merge-on-read snapshot (overwrites + adds + deletes "
             "as delta generations)",
             api.q_wand_layered(spark, SF),
-            "Same WAND shape as wand_topk: blocks from EVERY alive "
+            "Same WAND shape as wand_topk: posting rows from EVERY "
             "generation join the broadcast query map and shuffle "
-            "once per GROUP; per-(term, generation) pseudo-terms "
-            "keep blocks doc-range disjoint inside the kernel, the "
-            "tombstone closure resolves vectorized — no compaction "
-            "barrier between upsert and serve.",
+            "once per GROUP; the kernel drops tombstone-superseded "
+            "rows vectorized and blocks each term's survivors — no "
+            "compaction barrier between upsert and serve.",
         ),
         (
             "bool_query — boolean retrieval (must / must-not / "

@@ -843,7 +843,7 @@ def q_bm25_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship query through the PRUNED executor: block-max WAND
-    (interval-at-a-time, bound-gated decodes, query-group batching) in
+    (interval-at-a-time, bound-gated scoring, query-group batching) in
     integer micro-unit scoring mode — must hash-match the SAME DuckDB
     oracle as the brute-force paths (Q_BM25_TOPK_SQL): one oracle,
     THREE physical plans (brute spine, guarded segment brute force,
@@ -930,9 +930,8 @@ def q_wand_layered(spark: SparkSession, sf_dir: str) -> DataFrame:
     (merge-on-read) snapshot — overwrites, adds and deletes stacked
     as two delta generations on a base whose stale/ghost postings
     pollute the flagship terms' posting lists. WAND serves it
-    directly (round 5: per-(term, generation) pseudo-terms,
-    tombstone-resolved slices, exact df from per-generation stored df
-    minus tombstone-dead postings) and must hash-match the SAME
+    directly (its kernel drops tombstone-superseded rows, then
+    counts df over the survivors) and must hash-match the SAME
     DuckDB oracle as every other flagship plan (Q_BM25_TOPK_SQL):
     one oracle, FIVE physical plans. The gate therefore proves
     merge-on-read never changes a score, rank or tie-break — upsert

@@ -66,19 +66,3 @@ def tokenize_udf(texts: pd.Series) -> pd.Series:
     tokenizer that has no JVM expression).
     """
     return texts.map(tokenize_py)
-
-
-def doc_terms(df, id_col: str, text_col: str, use_pandas_udf: bool = False):
-    """corpus → exploded (id, term, pos) — narrow op, no shuffle.
-
-    Reference parity: per-doc fingerprinting loop ``Hashing.py:43-63``
-    (one doc at a time, single thread) becomes a fully parallel
-    projection; the per-doc ``shash`` positions set
-    (``_Shazam_.py:269-276``) is recovered downstream by
-    ``groupBy(id, term).agg(collect_list(pos))``.
-    """
-    toks = tokenize_udf(F.col(text_col)) if use_pandas_udf else tokens_col(text_col)
-    return (
-        df.select(id_col, F.posexplode(toks).alias("pos", "term"))
-        .select(id_col, "term", "pos")
-    )

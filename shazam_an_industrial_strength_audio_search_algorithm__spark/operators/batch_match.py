@@ -44,7 +44,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
     segment_topk,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
-    RESULT_SCHEMA,
+    result_schema,
     wand_topk,
 )
 
@@ -56,13 +56,7 @@ GROUPS_IN_FLIGHT = 4
 
 def _result_schema(mode: str, micro: bool) -> T.StructType:
     if mode == "wand":
-        fields = [
-            f if f.name != "score"
-            else T.StructField("score_micro" if micro else "score",
-                               T.LongType() if micro else T.DoubleType())
-            for f in RESULT_SCHEMA
-        ]
-        return T.StructType(fields)
+        return result_schema(micro)
     # brute (segment_topk) schema
     if micro:
         return T.StructType([

@@ -304,20 +304,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     return _verify_pairs(sh, sizes, cand, threshold)
 
 
-def exact_jaccard_for_pairs(df: DataFrame, cand: DataFrame,
-                            id_col: str = "doc_id", text_col: str = "text",
-                            n: int = 3, threshold: float = 0.0) -> DataFrame:
-    """Exact shingle Jaccard computed ONLY for the given candidate
-    pairs (doc_a, doc_b) — the verify kernel behind LSH blocking.
-
-    Shape: cand ⋈ shingles(doc_a) ⋈ shingles(doc_b, shingle) — work is
-    O(candidate pairs × shingles per doc), never O(Σ df²) over the
-    corpus. Pairs sharing no shingle come back with n_common = 0."""
-    sh = shingles(df, id_col, text_col, n)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    return _verify_pairs(sh, sizes, cand, threshold)
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------

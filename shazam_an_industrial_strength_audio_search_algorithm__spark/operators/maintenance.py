@@ -66,8 +66,8 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (  # noqa: F401 (re-exported)
     _atomic_write_json,
-    _next_commit_version,
     read_snapshot,
+    reserve_generation,
     restore,
     snapshot_log,
     vacuum,
@@ -149,7 +149,7 @@ def apply_updates(
             "rebuild-mode updates apply to a single-layer snapshot — "
             "run compact() first, or keep using mode='delta'"
         )
-    new_version = _reserve_update(index_dir, resume)
+    new_version = reserve_generation(index_dir, "u", resume)
     gen = f"u{new_version}"
     mdir = f"{index_dir}/manifests/{gen}"
     # delta mode stages straight into its layer's dt_/dl_ dirs; rebuild
@@ -242,26 +242,6 @@ def apply_updates(
         n_docs=staging["n_docs"],
         avgdl=staging["avgdl"],
     )
-
-
-def _reserve_update(index_dir: str, resume: bool) -> int:
-    """The version N of this update's generation ``u{N}``, reserved by
-    creating ``manifests/u{N}`` exclusively before anything stages:
-    two updates staged on the same parent never share a staging dir.
-    The loser of the ``mkdir`` takes the next free N (and its commit,
-    on a stale parent, raises ``CommitConflict``). With ``resume`` the
-    first N is taken even when its dir exists: it is this writer's own
-    interrupted generation."""
-    os.makedirs(f"{index_dir}/manifests", exist_ok=True)
-    n = _next_commit_version(index_dir)
-    while True:
-        try:
-            os.mkdir(f"{index_dir}/manifests/u{n}")
-            return n
-        except FileExistsError:
-            if resume:
-                return n
-            n += 1
 
 
 def _stage_batch(spark, base, gen, add_corpus, delete_keys, assume_unique,
@@ -406,7 +386,6 @@ def _merge(
     index_dir = index.index_dir
     snap = index.snapshot
     mdir = f"{index_dir}/manifests/{gen}"
-    os.makedirs(mdir, exist_ok=True)
     dt_path = f"{index_dir}/data/dt_{gen}"
     resumed = params is not None
     if params is None:
@@ -570,7 +549,7 @@ def compact(
             snapshot_version=None, affected_buckets=[], built_buckets=[],
             skipped_buckets=[], n_layers_merged=0,
         )
-    new_version = _next_commit_version(index_dir)
+    new_version = reserve_generation(index_dir, "c", resume)
     gen = f"c{new_version}"
     params = _resumed_params(f"{index_dir}/manifests/{gen}", resume)
     if params is not None:
@@ -587,10 +566,9 @@ class CompactionPolicy:
     """When to fold delta layers back into one generation.
 
     ``wand_topk`` serves layered snapshots exactly (round 5), so
-    compaction no longer gates servability — but each layer adds
-    pseudo-terms and tombstone work to every query, pruning loses
-    sharpness (stale block bounds keep dead postings' slack), and the
-    tombstone closure shipped to kernels is capped. The policy keeps
+    compaction no longer gates servability — but each layer adds a
+    generation to every postings scan and tombstone work to every
+    query, and the tombstone closure shipped to kernels is capped. The policy keeps
     a continuously upserting pipeline at peak serving speed.
 
     - ``max_layers``: compact when the snapshot holds ≥ this many

@@ -58,14 +58,15 @@ Scale design (the 100 TB story):
   merge order.
 - ``doc_len`` is inlined in the payload and in ``doc_terms``:
   scoring needs no norms join.
-- Two readers: WAND skips blocks, so it decodes the segments'
-  payloads; every other postings read (brute top-k, boolean,
-  positional, compaction's merge) is a JVM scan of the
-  ``doc_terms`` columns, bucket-pruned the same way.
-- Block bounds are stored as raw ints (max_tf, min_dl) so WAND upper
-  bounds stay SAFE when later snapshots change n_docs/avgdl
-  (tfnorm is increasing in tf, decreasing in dl — the bound is
-  recomputed from the current avgdl at query time).
+- One reader: every postings read (WAND, brute top-k, boolean,
+  positional, compaction's merge) is a scan of the ``doc_terms``
+  columns, bucket-pruned the same way. WAND cuts each term's
+  surviving rows into blocks of ``block_size`` and bounds them at
+  query time, under the current snapshot's n_docs/avgdl.
+- The ``segments`` block table (payloads with raw max_tf/min_dl
+  bounds) is still written; the scratch guard
+  (``estimate_brute_materialization``) and the term-dictionary prefix
+  scan (``blocks_for_term_prefixes``) read its block rows.
 """
 
 from __future__ import annotations
@@ -95,11 +96,12 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
     _atomic_write_json,
     _next_commit_version,
-    _read_current,
     _snapshot_versions,
     commit,
+    current_version,
     drop_superseded,
     read_snapshot,
+    reserve_generation,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
     local_rows_df,
@@ -318,22 +320,6 @@ def _encode_partition(avgdl: float, block_size: int):
         yield pd.DataFrame(out)
 
     return fn
-
-
-def _next_build_gen(index_dir: str) -> str:
-    """Name for a fresh REBUILD generation: past any committed
-    snapshot version AND past any crashed rebuild's staged dirs, so a
-    new rebuild never collides with either."""
-    seqs = [1] + _snapshot_versions(index_dir)
-    mdir = f"{index_dir}/manifests"
-    if os.path.isdir(mdir):
-        seqs += [
-            int(g[2:]) for g in os.listdir(mdir)
-            if g.startswith("rb") and g[2:].isdigit()
-        ]
-    if os.path.exists(f"{index_dir}/CURRENT"):
-        seqs.append(_read_current(index_dir))
-    return f"rb{max(seqs) + 1}"
 
 
 def _resumable_build_gen(index_dir: str) -> str | None:
@@ -652,11 +638,14 @@ def build_segment_index(
 
     ATOMIC over a LIVE index (since round 4): a fresh (resume=False)
     build into an ``index_dir`` that already holds a committed
-    snapshot stages everything into a NEW generation (``rbN`` dirs)
-    and commits via the same snapshot-then-CURRENT swap as updates —
-    a crash mid-rebuild leaves the old snapshot serving untouched, a
-    concurrent reader never sees a half-built index, and the old
-    generations remain addressable until ``vacuum``. ``resume=True``
+    snapshot stages everything into a NEW generation (``rbN`` dirs,
+    reserved exclusively like an update's, so two rebuilds never share
+    one) and commits via the same snapshot-then-CURRENT swap as
+    updates; one that another writer's commit overtook raises
+    ``CommitConflict``. A crash mid-rebuild leaves the old snapshot
+    serving untouched, a concurrent reader never sees a half-built
+    index, and the old generations remain addressable until
+    ``vacuum``. ``resume=True``
     resumes the newest staged generation (an interrupted rebuild wins
     over the committed initial build); resuming a fully committed
     build is an idempotent no-op that never rolls CURRENT back.
@@ -664,20 +653,18 @@ def build_segment_index(
     import time as _time
 
     timings: dict[str, float] = {}
-    if resume:
-        gen = _resumable_build_gen(index_dir)
-        if gen is None:
-            gen = (
-                "init" if not os.path.exists(f"{index_dir}/CURRENT")
-                else _next_build_gen(index_dir)
-            )
-    elif os.path.exists(f"{index_dir}/CURRENT"):
-        gen = _next_build_gen(index_dir)  # atomic rebuild-over-live
-    else:
-        gen = "init"
+    # the snapshot this build replaces, read before it stages: a
+    # rebuild that another writer's commit overtakes raises
+    # CommitConflict instead of committing over it
+    already_current = current_version(index_dir)
+    gen = _resumable_build_gen(index_dir) if resume else None
+    if gen is None:
+        # a build over a live index stages into its own reserved
+        # generation: an atomic rebuild
+        gen = ("init" if already_current is None
+               else f"rb{reserve_generation(index_dir, 'rb')}")
     if id_col == "doc_id" and "doc_id" not in corpus.columns:
         corpus = with_doc_id(corpus)
-    os.makedirs(f"{index_dir}/manifests/{gen}", exist_ok=True)
     os.makedirs(f"{index_dir}/snapshots", exist_ok=True)
 
     params_path = f"{index_dir}/manifests/{gen}/params.json"
@@ -694,14 +681,16 @@ def build_segment_index(
         if block_size is None:
             block_size = auto_block_size(n_est)
     if not phase_a_done:
-        # fresh (non-resume) build into a dir holding a previous
-        # attempt: clear this generation's outputs first. The seg
-        # write uses DYNAMIC partition overwrite (only touched buckets
-        # rewrite), so a bucket that is empty in the new corpus would
-        # otherwise keep the OLD corpus's partition and manifest —
-        # committing stale postings into the new snapshot.
-        shutil.rmtree(f"{index_dir}/data/seg_{gen}", ignore_errors=True)
-        shutil.rmtree(f"{index_dir}/manifests/{gen}", ignore_errors=True)
+        if gen == "init":
+            # a fresh initial build into a dir holding a previous
+            # attempt: clear that attempt's outputs first. The seg
+            # write uses DYNAMIC partition overwrite (only touched
+            # buckets rewrite), so a bucket that is empty in the new
+            # corpus would otherwise keep the OLD corpus's partition
+            # and manifest — committing stale postings into the new
+            # snapshot. A rebuild's reserved generation is new.
+            shutil.rmtree(f"{index_dir}/data/seg_{gen}", ignore_errors=True)
+            shutil.rmtree(f"{index_dir}/manifests/{gen}", ignore_errors=True)
         os.makedirs(f"{index_dir}/manifests/{gen}", exist_ok=True)
 
         _t0 = _time.monotonic()
@@ -759,9 +748,6 @@ def build_segment_index(
         n_docs=params["n_docs"], avgdl=params["avgdl"], timings=timings,
     )
 
-    already_current = None
-    if os.path.exists(f"{index_dir}/CURRENT"):
-        already_current = _read_current(index_dir)
     committed = _committed_version_of_gen(index_dir, gen)
     # idempotent re-run guard: a resume re-run that rebuilds NOTHING
     # over an already-committed generation must not re-commit —
@@ -812,14 +798,14 @@ def build_segment_index(
 class SegmentIndex:
     """Reader over a committed snapshot of the index.
 
-    Postings are read two ways. WAND (``wand.py``) decodes the
-    segments' block payloads, because it skips blocks by their bounds.
-    Every other postings read — ``postings_for_query_terms``,
+    Postings are read one way: a JVM scan of the ``doc_terms``
+    columns, bucket-pruned to the query terms. ``postings_for_query_terms``,
     ``postings_for_terms``, ``postings_for_term_prefixes``,
-    ``positions_for_query_terms``, ``merged_doc_terms`` — is one JVM
-    scan of the ``doc_terms`` columns: bucket-pruned to the query
-    terms, tombstone-resolved, with ``df`` counted over the surviving
-    rows. No Python runs on these paths.
+    ``positions_for_query_terms`` and ``merged_doc_terms`` resolve
+    tombstones and count ``df`` over the surviving rows in the JVM, with
+    no Python on the path; WAND (``wand.py``) reads the same rows, with
+    ``gen_seq``, and resolves them in its kernel, where it cuts each
+    term's postings into blocks and bounds them.
 
     A committed snapshot never changes, so its read state is built once
     per instance, on first use, and lives as long as the instance:
@@ -831,8 +817,9 @@ class SegmentIndex:
       generation root); a bucket list narrows it to a static partition
       filter;
     - on layered snapshots, the tombstones as sorted
-      ``(doc_id, tomb_seq)`` arrays, their one Spark broadcast (WAND)
-      and their one local frame (the postings readers).
+      ``(doc_id, tomb_seq)`` arrays (WAND's driver placement), their
+      one Spark broadcast (its grouped placement) and their one local
+      frame (the JVM postings readers).
 
     Reopen (``SegmentIndex.open``) to read a newer snapshot."""
 
@@ -870,6 +857,10 @@ class SegmentIndex:
     @property
     def n_buckets(self) -> int:
         return self.snapshot["n_buckets"]
+
+    @property
+    def block_size(self) -> int:
+        return self.snapshot["block_size"]
 
     @property
     def layers(self) -> list[dict]:

@@ -98,6 +98,28 @@ def _next_commit_version(index_dir: str) -> int:
     return max(vs) + 1
 
 
+def reserve_generation(index_dir: str, prefix: str,
+                       resume: bool = False) -> int:
+    """The number N of a new generation ``{prefix}{N}`` (``u`` update,
+    ``c`` compaction, ``rb`` rebuild), reserved by creating
+    ``manifests/{prefix}{N}`` exclusively before anything stages: two
+    writers staged on the same parent never share a staging dir. N
+    starts at ``_next_commit_version``; the loser of the ``mkdir``
+    takes the next free N (and its commit, on a stale parent, raises
+    ``CommitConflict``). With ``resume`` the first N is taken even when
+    its dir exists: it is this writer's own interrupted generation."""
+    os.makedirs(f"{index_dir}/manifests", exist_ok=True)
+    n = _next_commit_version(index_dir)
+    while True:
+        try:
+            os.mkdir(f"{index_dir}/manifests/{prefix}{n}")
+            return n
+        except FileExistsError:
+            if resume:
+                return n
+            n += 1
+
+
 def read_snapshot(index_dir: str, version: int | None = None) -> dict:
     if version is None:
         version = _read_current(index_dir)

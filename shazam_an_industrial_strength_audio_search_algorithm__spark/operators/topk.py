@@ -39,13 +39,22 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.token
 )
 
 
+def _one_partition_if_local(queries: DataFrame) -> DataFrame:
+    """``queries`` coalesced to one partition when it is a local
+    relation (``local_rows_df``): a scan of one splits into up to
+    ``defaultParallelism`` partitions, and the query side then costs
+    the spine and the decisions an extra job and exchange. Other
+    frames pass through unchanged."""
+    return queries.coalesce(1) if queries.isLocal() else queries
+
+
 def query_terms(queries: DataFrame, id_col: str = "query_id",
                 text_col: str = "text") -> DataFrame:
     """(query_id, term) with distinct terms per query — the reference
     counts each shared key once because LUT values are sets
     (SURVEY §2.4 A3)."""
     return (
-        queries.select(
+        _one_partition_if_local(queries).select(
             F.col(id_col).alias("query_id"),
             F.explode(F.array_distinct(tokens_col(text_col))).alias("term"),
         )
@@ -214,7 +223,8 @@ def decide_compat(scores: DataFrame, queries: DataFrame, threshold,
     n_c = scores.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_candidates")
     )
-    qs = queries.select(F.col(id_col).alias("query_id")).distinct()
+    qs = _one_partition_if_local(queries).select(
+        F.col(id_col).alias("query_id")).distinct()
     return (
         qs.join(F.broadcast(match.drop("_mrank")), "query_id", "left")
         .join(F.broadcast(second), "query_id", "left")
@@ -366,7 +376,8 @@ def decide(topk: DataFrame, queries: DataFrame, threshold,
                     .alias("n_candidates"))),
             "query_id", "left",
         )
-    qs = queries.select(F.col(id_col).alias("query_id")).distinct()
+    qs = _one_partition_if_local(queries).select(
+        F.col(id_col).alias("query_id")).distinct()
     # ranked is one row per query (dimension-sized — the query batch
     # is the small axis): explicit broadcast, not a size-estimate SMJ
     out = qs.join(F.broadcast(ranked), "query_id", "left")

@@ -6,17 +6,20 @@ threshold (``searchLUT_v2`` ordering ``_Shazam_.py:505`` + the
 first-above-threshold break ``Matching.py:122-131``) — i.e.
 upper-bound-ordered evaluation with early exit. This module is the
 principled generalization (SURVEY §4): **interval-at-a-time block-max
-WAND**. Doc-id space is partitioned into atomic intervals by the
-block boundaries of the query's terms; each interval's upper bound is
-the sum of the (single, because blocks of a term are disjoint)
-overlapping block bound per term. Intervals are processed in
-descending upper-bound order, scoring is numpy-vectorized per
-interval, and the loop stops as soon as the running top-k floor
-beats the best remaining interval bound — blocks in skipped
-intervals are never decoded.
+WAND**. Each query term's postings are cut into blocks of the
+snapshot's ``block_size`` consecutive docs; doc-id space is
+partitioned into atomic intervals by the block boundaries of the
+query's terms; each interval's upper bound is the sum of the (single,
+because blocks of a term are disjoint) overlapping block bound per
+term. Intervals are processed in descending upper-bound order,
+scoring is numpy-vectorized per interval, and the loop stops as soon
+as the running top-k floor beats the best remaining interval bound —
+blocks in skipped intervals are never scored.
 
-Execution shape: a request's critical path is the block scan and the
-kernel, nothing else. Two placements run the same kernel (``_kernel``):
+Execution shape: a request's critical path is the postings scan and
+the kernel, nothing else. Both placements read the engine's one
+postings reader — the stored ``doc_terms`` columns, (term, doc_id,
+tf, doc_len[, gen_seq]) rows — and run the same kernel (``_kernel``):
 
 - **driver** — a query frame that already lives on the driver
   (``isLocal()``) and is small enough for the index
@@ -25,7 +28,7 @@ kernel, nothing else. Two placements run the same kernel (``_kernel``):
   reference's one-clip-at-a-time request (``Matching.py:96-131``), and
   a driver-held batch while answering it in one process still beats
   sharing. The queries tokenize in Python (``tokenize_py``), their
-  terms' block rows arrive by ONE bucket-pruned JVM scan whose
+  terms' posting rows arrive by ONE bucket-pruned JVM scan whose
   predicate is one SQL string (``terms_filter``), the kernel runs on
   the driver and the answer is a local relation. One Spark job, no
   exchange, no Python worker.
@@ -33,21 +36,22 @@ kernel, nothing else. Two placements run the same kernel (``_kernel``):
   groups, streaming micro-batches). The query side is ONE broadcast — query
   terms (one partition; queries are the small axis, the reference's
   nj=32 splits) grouped to (bucket, term, group) → query ids without
-  an exchange — which the block scan joins on (bucket, term) and which
-  dynamic partition pruning reuses to skip untouched buckets.
-  Candidate blocks (compressed payloads + bounds, no decoding) then
-  shuffle once, by group, into the ``applyInPandas`` kernel. 3 Spark
-  jobs (broadcast build, scan + shuffle, kernel) and one exchange,
-  whatever the batch size: sharing them pays only past the measured
-  crossover.
+  an exchange — which the postings scan joins on (bucket, term) and
+  which dynamic partition pruning reuses to skip untouched buckets.
+  The posting rows then shuffle once, by group, into the
+  ``applyInPandas`` kernel. 3 Spark jobs (broadcast build, scan +
+  shuffle, kernel) and one exchange, whatever the batch size: sharing
+  them pays only past the measured crossover.
 
-The snapshot's scan, tombstone arrays and tombstone broadcast are
-per-``SegmentIndex`` state, built on first use. The heavy axis —
-posting volume — is touched only through bound-gated decodes.
-
-Bounds are recomputed from stored raw stats (max_tf, min_dl) under
-the CURRENT snapshot's avgdl, so pruning stays safe after incremental
-updates shift global stats (see segments.py).
+The kernel sees each term's rows once: on a layered snapshot it first
+drops the rows a newer tombstone supersedes (the snapshot's tombstone
+arrays, per-``SegmentIndex`` state built on first use; the grouped
+placement ships them as the snapshot's one broadcast). A doc is alive
+in exactly one generation per term, so the surviving rows of a term
+form one doc-id-sorted array whatever the layering: its length is the
+exact df, contributions are computed once (float or micro), and each
+block's bound is the exact maximum contribution of its postings
+(``np.maximum.reduceat``) under the CURRENT snapshot's n_docs/avgdl.
 
 Exactness: returned top-k docs and scores are identical to the
 brute-force path (tests/test_wand.py asserts equality at k=1/3/10);
@@ -69,9 +73,6 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.bm25 
     K1,
     idf_py,
 )
-from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec import (
-    decode_block,
-)
 from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.tokenize import (
     tokenize_py,
 )
@@ -90,17 +91,18 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
 # query mix, default layout, 4 vCPUs):
 #
 #   queries     4          8          16         32         64         128
-#   600 docs  2.95 (8)   2.57 (8)   2.86 (8)   1.72 (8)   1.53 (8)   1.01 (4)
-#   5k docs   1.98 (8)   2.05 (8)   1.19 (6)   1.16 (6)   0.82 (1)   0.58 (0)
-#   20k docs  1.19 (8)   0.96 (3)   0.80 (0)   0.64 (0)   0.66 (0)   0.54 (0)
+#   600 docs  3.22 (8)   3.13 (8)   3.24 (8)   2.61 (8)   2.00 (8)   1.41 (8)
+#   5k docs   2.69 (8)   2.56 (8)   1.71 (8)   1.61 (8)   1.18 (7)   0.82 (1)
+#   20k docs  2.00 (8)   1.39 (8)   1.37 (8)   1.11 (5)   1.03 (4)   0.68 (0)
 #
-# The driver decodes every query's blocks in one process, so its cost
+# The driver scores every query's postings in one process, so its cost
 # grows with batch size × posting volume, while the grouped path's is
 # mostly fixed. 40k query·docs sends 64 queries at 600 docs and 8 at 5k
-# to the driver, each won in 8 of 8 pairs; the first shape it keeps
-# grouped (128 at 600 docs, 16 at 5k) is no longer a clear win. A
-# count cap alone would not do: 32 queries lose on 20k docs. The
-# 4-query floor keeps small batches on the driver on any index.
+# to the driver, and the 4-query floor sends 4 at 20k, each won in 8 of
+# 8 pairs. Some shapes it keeps grouped win on the driver too (up to 32
+# at 5k and 16 at 20k); the limits are set where every shape they send
+# is a clear win. A count cap alone would not do: 64 queries win 8 of 8
+# pairs on 600 docs but only 4 of 8 on 20k.
 DRIVER_MAX_QUERIES = 4
 DRIVER_MAX_QUERY_DOCS = 40_000
 
@@ -118,157 +120,43 @@ RESULT_SCHEMA = T.StructType(
 
 
 class _Term:
-    """One term-generation's blocks: boundary arrays + lazy per-block
-    decode.
+    """One query term's surviving postings: doc-id-sorted ``ids`` and
+    their BM25 ``contribs`` (float, or int64 micro-units), cut into
+    blocks of ``block_size`` consecutive postings. A block's bound is
+    the largest contribution in it, so it is exact, and in micro mode
+    it is the very integer the block's docs add.
 
-    The decode cache lives on the instance, so in batched execution
-    (one ``_Term`` per term shared by every query in the group) a
-    block decodes at most once per group; ``requested`` tracks which
-    blocks the CURRENT query actually needed (reset per query), so
-    per-query pruning counters stay meaningful under sharing.
+    In batched execution one ``_Term`` per term is shared by every
+    query of the group; ``requested`` tracks which blocks the CURRENT
+    query scored (reset per query), so per-query pruning counters stay
+    meaningful under sharing."""
 
-    Layered (merge-on-read) snapshots instantiate one ``_Term`` per
-    (term, generation): within one generation blocks stay doc-range
-    disjoint and sorted (doc-id-range salts, segments.py), so the
-    interval machinery is unchanged — overlap across generations is
-    expressed as extra pseudo-terms, and a doc's postings live in
-    exactly one ALIVE generation per term (upserts tombstone the
-    older generations), so per-doc sums and ``matched_terms`` stay
-    exact. ``tomb`` = (sorted doc_ids, tomb_seq) arrays; a posting at
-    ``gen`` is dead iff its doc has a tombstone with seq > gen.
-    Deletions only SHRINK a block's true max score, so the stored
-    max_tf/min_dl bounds remain safe upper bounds without rewrite."""
+    __slots__ = ("ids", "contribs", "starts", "ends", "los", "his",
+                 "bounds", "requested")
 
-    __slots__ = ("idf", "los", "his", "bounds", "payloads", "cache",
-                 "requested", "micro", "gen", "tomb", "raw_cache",
-                 "_bound_base")
-
-    def __init__(self, idf: float | None, g: pd.DataFrame, avgdl: float,
-                 micro: bool = False, gen: int = 0,
-                 tomb: tuple[np.ndarray, np.ndarray] | None = None):
-        self.micro = micro
-        self.gen = gen
-        self.tomb = tomb
-        self.los = g["doc_id_lo"].to_numpy(np.int64)
-        self.his = g["doc_id_hi"].to_numpy(np.int64)
-        mt = g["max_tf"].to_numpy(np.float64)
-        md = g["min_dl"].to_numpy(np.float64)
-        # idf-free factor; set_idf scales it into the final bounds —
-        # on layered snapshots the exact idf is only known after the
-        # tombstone-dead df prepass ran over every generation
-        self._bound_base = mt / (mt + K1 * (1.0 - B + B * md / avgdl))
-        self.payloads = list(g["payload"])
-        self.cache: dict[int, tuple] = {}
-        self.raw_cache: dict[int, tuple] = {}
+    def __init__(self, ids: np.ndarray, contribs: np.ndarray,
+                 block_size: int):
+        self.ids = ids
+        self.contribs = contribs
+        self.starts = np.arange(0, ids.size, block_size)
+        self.ends = np.append(self.starts[1:], ids.size)
+        self.los, self.his = ids[self.starts], ids[self.ends - 1]
+        self.bounds = np.maximum.reduceat(contribs, self.starts)
         self.requested: set[int] = set()
-        if idf is not None:
-            self.set_idf(idf)
 
-    def set_idf(self, idf: float) -> None:
-        self.idf = idf
-        bounds = idf * self._bound_base
-        if self.micro:
-            # integer micro-unit scoring: the per-posting contribution
-            # is HALF_UP-rounded to micro BEFORE summing (the driver
-            # oracle's order-independent convention); the block bound
-            # over-estimates by 1 micro so pruning stays safe
-            self.bounds = np.floor(bounds * 1e6 + 0.5).astype(np.int64) + 1
-        else:
-            self.bounds = bounds
-
-    def _raw(self, bi: int):
-        if bi not in self.raw_cache:
-            self.raw_cache[bi] = decode_block(bytes(self.payloads[bi]))
-        return self.raw_cache[bi]
-
-    def _alive_mask(self, ids: np.ndarray) -> np.ndarray | None:
-        """Boolean mask of postings NOT superseded by a tombstone, or
-        None when every posting is alive (fast path)."""
-        if self.tomb is None:
-            return None
-        t_ids, t_seqs = self.tomb
-        pos = np.searchsorted(t_ids, ids)
-        pos_c = np.minimum(pos, t_ids.size - 1)
-        hit = (pos < t_ids.size) & (t_ids[pos_c] == ids)
-        dead = hit & (t_seqs[pos_c] > self.gen)
-        if not dead.any():
-            return None
-        return ~dead
-
-    def dead_count(self, bi: int) -> int:
-        """Tombstone-superseded postings in block bi (df prepass)."""
-        ids, _, _ = self._raw(bi)
-        mask = self._alive_mask(ids)
-        return 0 if mask is None else int(ids.size - mask.sum())
-
-    def slice(self, bi: int, start: np.int64, end: np.int64, avgdl: float):
-        """(doc_ids, contribs) of block bi restricted to [start, end],
-        tombstone-resolved on layered snapshots."""
+    def slice(self, bi: int, start: np.int64, end: np.int64):
+        """(doc_ids, contribs) of block bi restricted to [start, end]."""
         self.requested.add(bi)
-        if bi not in self.cache:
-            ids, tfs, dls = self._raw(bi)
-            mask = self._alive_mask(ids)
-            if mask is not None:
-                ids, tfs, dls = ids[mask], tfs[mask], dls[mask]
-            contribs = self.idf * (
-                tfs / (tfs + K1 * (1.0 - B + B * dls.astype(np.float64) / avgdl))
-            )
-            if self.micro:
-                contribs = np.floor(contribs * 1e6 + 0.5).astype(np.int64)
-            self.cache[bi] = (ids, contribs)
-            # the raw decode is only re-read by the df prepass, which
-            # runs before any slicing — don't hold both copies
-            self.raw_cache.pop(bi, None)
-        ids, contribs = self.cache[bi]
-        s = int(np.searchsorted(ids, start, side="left"))
-        e = int(np.searchsorted(ids, end, side="right"))
-        return ids[s:e], contribs[s:e]
+        ids = self.ids[self.starts[bi]:self.ends[bi]]
+        s = np.searchsorted(ids, start, side="left")
+        e = np.searchsorted(ids, end, side="right")
+        return ids[s:e], self.contribs[self.starts[bi]:self.ends[bi]][s:e]
 
 
-def _pseudo_terms(g: pd.DataFrame, n_docs: int, avgdl: float,
-                  micro: bool,
-                  tomb: tuple[np.ndarray, np.ndarray] | None,
-                  ) -> list[_Term]:
-    """One term's block rows (layered: spanning generations) → the
-    list of ``_Term`` pseudo-terms sharing one EXACT idf.
-
-    Exact df on a merge-on-read snapshot = Σ per-generation stored df
-    − tombstone-superseded postings; the dead count decodes ONLY
-    blocks whose doc-id range contains a tombstoned doc (bounded by
-    delta size, and those decodes pre-warm the slice cache's raw
-    side) — the kernel twin of ``SegmentIndex._postings``'s df
-    recompute, without touching the un-tombstoned bulk. A term whose
-    alive df reaches 0 is dropped entirely (all postings dead)."""
-    pts: list[_Term] = []
-    df_total = 0
-    for gen, gg in g.groupby("gen_seq", sort=True):
-        g2 = gg.sort_values(["salt", "block_seq"])
-        df_total += int(g2["df"].iloc[0])
-        pts.append(_Term(None, g2, avgdl, micro=micro, gen=int(gen),
-                         tomb=tomb))
-    dead = 0
-    if tomb is not None:
-        t_ids, t_seqs = tomb
-        for pt in pts:
-            rel = t_ids[t_seqs > pt.gen]
-            if not rel.size:
-                continue
-            bi = np.searchsorted(pt.los, rel, side="right") - 1
-            ok = (bi >= 0) & (pt.his[np.clip(bi, 0, None)] >= rel)
-            for b in np.unique(bi[ok]):
-                dead += pt.dead_count(int(b))
-    df_exact = df_total - dead
-    if df_exact <= 0:
-        return []
-    idf = idf_py(df_exact, n_docs)
-    for pt in pts:
-        pt.set_idf(idf)
-    return pts
-
-
-def _topk_one_query(terms: list[_Term], k: int, avgdl: float):
+def _topk_one_query(terms: list[_Term], k: int):
     """Interval-at-a-time block-max top-k. Returns (doc_ids, scores,
-    matched, decoded, total_blocks), ranked (score DESC, doc_id ASC)."""
+    matched, scored_blocks, total_blocks), ranked (score DESC, doc_id
+    ASC)."""
     # atomic intervals: cut doc space at every block lo and hi+1. The
     # hi+1 cut is clamped to avoid int64 overflow when a block ends at
     # the max doc_id; the widened last interval below restores coverage
@@ -293,7 +181,7 @@ def _topk_one_query(terms: list[_Term], k: int, avgdl: float):
     n_int = starts.size
     if n_int == 0:
         return (np.zeros(0, np.int64), np.zeros(0), np.zeros(0, np.int32),
-                0, sum(len(t.payloads) for t in terms))
+                0, sum(t.los.size for t in terms))
 
     # per (interval, term): overlapping block index (or -1) and bound
     blk = np.full((len(terms), n_int), -1, dtype=np.int64)
@@ -338,13 +226,13 @@ def _topk_one_query(terms: list[_Term], k: int, avgdl: float):
         for ti, t in enumerate(terms):
             bi = int(blk[ti, ii])
             if bi >= 0:
-                ids_p, c_p = t.slice(bi, s, e, avgdl)
+                ids_p, c_p = t.slice(bi, s, e)
                 if ids_p.size:
                     ids_parts.append(ids_p)
                     c_parts.append(c_p)
         if forced and ii == n_int - 1:
             for ti, bi in forced:
-                ids_p, c_p = terms[ti].slice(bi, s, e, avgdl)
+                ids_p, c_p = terms[ti].slice(bi, s, e)
                 if ids_p.size:
                     ids_parts.append(ids_p)
                     c_parts.append(c_p)
@@ -370,9 +258,9 @@ def _topk_one_query(terms: list[_Term], k: int, avgdl: float):
             floor = float(top_scores.min())
 
     sel = np.lexsort((top_docs, -top_scores))[:k]
-    decoded = sum(len(t.requested) for t in terms)
-    total = sum(len(t.payloads) for t in terms)
-    return (top_docs[sel], top_scores[sel], top_matched[sel], decoded, total)
+    scored = sum(len(t.requested) for t in terms)
+    total = sum(t.los.size for t in terms)
+    return (top_docs[sel], top_scores[sel], top_matched[sel], scored, total)
 
 
 # the most tombstoned docs a layered snapshot may ship into the kernel
@@ -398,7 +286,10 @@ def _capped_tombstones(index: SegmentIndex):
     return tomb
 
 
-def _result_schema(micro: bool) -> T.StructType:
+def result_schema(micro: bool) -> T.StructType:
+    """``RESULT_SCHEMA``, with ``score_micro`` (long) in place of
+    ``score`` when ``micro``: the schema of every WAND answer, and of
+    the batch and streamed match outputs written from it."""
     if not micro:
         return RESULT_SCHEMA
     return T.StructType([
@@ -414,39 +305,71 @@ def _duplicate_id_error(qid) -> ValueError:
     )
 
 
-def _kernel(pdf: pd.DataFrame, k: int, n_docs: int, avgdl: float,
-            micro: bool, layered: bool,
+# a posting row as both placements read it from the doc_terms columns
+# (``gen_seq`` is added on a layered snapshot)
+POSTING_COLS = ["term", "doc_id", "tf", "doc_len"]
+
+
+def _alive(ids: np.ndarray, gens: np.ndarray,
+           tomb: tuple[np.ndarray, np.ndarray]) -> np.ndarray:
+    """Boolean mask of the posting rows (doc ``ids`` at generations
+    ``gens``) that no newer tombstone supersedes: ``tomb`` = sorted
+    (doc_id, tomb_seq) arrays, and a row at ``gen`` is dead iff its doc
+    has a tombstone with seq > gen."""
+    t_ids, t_seqs = tomb
+    pos = np.minimum(np.searchsorted(t_ids, ids), t_ids.size - 1)
+    return ~((t_ids[pos] == ids) & (t_seqs[pos] > gens))
+
+
+def _kernel(pdf: pd.DataFrame, t2q: dict, k: int, n_docs: int,
+            avgdl: float, block_size: int, micro: bool,
             tomb: tuple[np.ndarray, np.ndarray] | None) -> pd.DataFrame:
     """The WAND answer for the queries of one placement: ``pdf`` holds
-    the block rows of their terms, each row carrying the ids of the
-    queries that use its term (``qids``). Both placements of
-    ``wand_topk`` call it: the grouped path once per group, in a Python
-    worker, the driver path once, on the driver."""
+    the posting rows (``POSTING_COLS``, plus ``gen_seq`` on a layered
+    snapshot) of their terms, ``t2q`` maps each term to the ids of the
+    queries that use it. Both placements of ``wand_topk`` call it: the
+    grouped path once per group, in a Python worker, the driver path
+    once, on the driver."""
     score_name = "score_micro" if micro else "score"
-    terms: dict[str, list[_Term]] = {}
+    ids = pdf["doc_id"].to_numpy(np.int64)
+    tfs = pdf["tf"].to_numpy(np.float64)
+    dls = pdf["doc_len"].to_numpy(np.float64)
+    codes, names = pd.factorize(pdf["term"], sort=True)
+    if tomb is not None:
+        keep = _alive(ids, pdf["gen_seq"].to_numpy(np.int64), tomb)
+        ids, tfs, dls, codes = ids[keep], tfs[keep], dls[keep], codes[keep]
+    # one run per term (in term order, so every placement sums a doc's
+    # contributions in the same order), doc-id sorted within it
+    order = np.lexsort((ids, codes))
+    ids, tfs, dls, codes = ids[order], tfs[order], dls[order], codes[order]
+    tfnorm = tfs / (tfs + K1 * (1.0 - B + B * dls / avgdl))
+    runs = np.flatnonzero(np.diff(codes)) + 1
+    terms: dict[str, _Term] = {}
     q2t: dict[str, list[str]] = {}
-    for term, g in pdf.groupby("term", sort=True):
-        qids = list(g["qids"].iloc[0])
+    for a, b in zip(np.r_[0, runs], np.r_[runs, ids.size]):
+        if a == b:
+            continue  # no rows at all
+        term = names[codes[a]]
+        qids = list(t2q[term])
         if len(set(qids)) < len(qids):
             raise _duplicate_id_error(
                 next(q for q in qids if qids.count(q) > 1))
-        if layered:
-            pts = _pseudo_terms(g, n_docs, avgdl, micro, tomb)
-        else:
-            g2 = g.sort_values(["salt", "block_seq"])
-            pts = [_Term(idf_py(int(g2["df"].iloc[0]), n_docs), g2,
-                         avgdl, micro=micro)]
-        if not pts:
-            continue  # every posting of the term is tombstoned
-        terms[term] = pts
+        # every surviving row of the term is here, so df is exact
+        contribs = idf_py(int(b - a), n_docs) * tfnorm[a:b]
+        if micro:
+            # integer micro-unit scoring: the per-posting contribution
+            # is HALF_UP-rounded to micro BEFORE summing (the driver
+            # oracle's order-independent convention)
+            contribs = np.floor(contribs * 1e6 + 0.5).astype(np.int64)
+        terms[term] = _Term(ids[a:b], contribs, block_size)
         for qid in qids:
             q2t.setdefault(qid, []).append(term)
     frames = []
     for qid in sorted(q2t):
-        ts = [pt for t in q2t[qid] for pt in terms[t]]
+        ts = [terms[t] for t in q2t[qid]]
         for t in ts:
             t.requested.clear()
-        docs, scores, matched, decoded, total = _topk_one_query(ts, k, avgdl)
+        docs, scores, matched, scored, total = _topk_one_query(ts, k)
         n = docs.size
         frames.append(pd.DataFrame(
             {
@@ -457,13 +380,13 @@ def _kernel(pdf: pd.DataFrame, k: int, n_docs: int, avgdl: float,
                 # (< 2^53), so this cast is lossless
                 score_name: scores.astype(np.int64) if micro else scores,
                 "matched_terms": matched,
-                "blocks_decoded": np.int32(decoded),
+                "blocks_decoded": np.int32(scored),
                 "blocks_total": np.int32(total),
             }
         ))
     if not frames:
         return pd.DataFrame(
-            {f.name: pd.Series(dtype="object") for f in _result_schema(micro)}
+            {f.name: pd.Series(dtype="object") for f in result_schema(micro)}
         )
     return pd.concat(frames, ignore_index=True)
 
@@ -476,18 +399,11 @@ def driver_max_queries(n_docs: int) -> int:
     return max(DRIVER_MAX_QUERIES, DRIVER_MAX_QUERY_DOCS // max(n_docs, 1))
 
 
-def _block_cols(layered: bool) -> list[str]:
-    return [
-        "bucket", "term", "df", "salt", "block_seq", "doc_id_lo",
-        "doc_id_hi", "max_tf", "min_dl", "payload",
-    ] + (["gen_seq"] if layered else [])
-
-
 def _driver_topk(index: SegmentIndex, rows: list, k: int,
                  micro: bool) -> DataFrame:
     """The driver placement over ``rows`` ((query_id, text) tuples
     already on the driver): one bucket-pruned JVM scan of the queries'
-    block rows, the kernel here, the answer as a local relation."""
+    posting rows, the kernel here, the answer as a local relation."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -503,16 +419,16 @@ def _driver_topk(index: SegmentIndex, rows: list, k: int,
             t2q.setdefault(t, []).append(qid)
     layered = index.has_deltas
     tomb = _capped_tombstones(index) if layered else None
-    blocks = pd.DataFrame(columns=["term", "qids"])  # no terms: no scan
+    cols = POSTING_COLS + (["gen_seq"] if layered else [])
+    postings = pd.DataFrame(columns=cols)  # no terms: no scan
     if t2q:
-        blocks = (
-            index.segments().select(*_block_cols(layered))
-            .filter(index.terms_filter(sorted(t2q)))
-            .toPandas()
+        postings = (
+            index.doc_terms().filter(index.terms_filter(sorted(t2q)))
+            .select(*cols).toPandas()
         )
-        blocks["qids"] = blocks["term"].map(t2q)
-    out = _kernel(blocks, k, index.n_docs, index.avgdl, micro, layered, tomb)
-    schema = _result_schema(micro)
+    out = _kernel(postings, t2q, k, index.n_docs, index.avgdl,
+                  index.block_size, micro, tomb)
+    schema = result_schema(micro)
     table = pa.Table.from_pandas(out, schema=to_arrow_schema(schema),
                                  preserve_index=False)
     return index.spark.createDataFrame(table, schema)
@@ -528,24 +444,25 @@ def wand_topk(
     micro: bool = False,
 ) -> DataFrame:
     """Top-k via interval-at-a-time block-max WAND; exact same results
-    as segment_topk, plus per-query decode counters
-    (blocks_decoded / blocks_total) so tests and benches can assert
+    as segment_topk, plus per-query pruning counters (blocks_decoded =
+    blocks scored, blocks_total) so tests and benches can assert
     pruning actually happened. Serves LAYERED (merge-on-read)
-    snapshots exactly too — see the layered block below — so upsert
-    pipelines never need a compaction barrier before querying. Each
-    query needs its own ``query_id``: a repeated id raises
-    ``ValueError`` instead of summing the rows' scores.
+    snapshots exactly too — the kernel drops tombstone-superseded rows
+    before it groups them by term — so upsert pipelines never need a
+    compaction barrier before querying. Each query needs its own
+    ``query_id``: a repeated id raises ``ValueError`` instead of
+    summing the rows' scores.
 
     Driver placement: a frame that already lives on the driver
     (``queries.isLocal()``, e.g. one built by ``local_rows_df``) with
     at most ``driver_max_queries(index.n_docs)`` rows — the larger of
     ``DRIVER_MAX_QUERIES`` and ``DRIVER_MAX_QUERY_DOCS // n_docs``, from
-    the crossover measured above those constants — is answered at call time: the scan of
-    its terms' block rows runs here, eagerly (1 Spark job, no exchange,
-    no Python worker), and the result is a local relation whose
-    ``collect()`` launches no job. Answering eagerly is safe because a
-    ``SegmentIndex`` is a fixed snapshot. ``n_groups`` does not apply
-    on this path.
+    the crossover measured above those constants — is answered at call
+    time: the scan of its terms' posting rows runs here, eagerly (1
+    Spark job, no exchange, no Python worker), and the result is a
+    local relation whose ``collect()`` launches no job. Answering
+    eagerly is safe because a ``SegmentIndex`` is a fixed snapshot.
+    ``n_groups`` does not apply on this path.
 
     Batched execution (every other frame): queries are hashed into
     ``n_groups`` groups
@@ -555,23 +472,19 @@ def wand_topk(
     groups serialized the kernel leg at 1892 ms/q while 128 groups
     served at 962, and at ≤32 buckets the max() leaves the previous
     shuffle-partitions default untouched; see BENCH/BASELINE.md
-    round-4 knob table) and each candidate block shuffles
-    ONCE per group whose queries touch its term — not once per query.
-    With a Q-query batch sharing hot terms this cuts shuffled payload
-    bytes by ~Q/n_groups, and queries inside a group share one decode
-    cache per term, so a hot term's blocks decode once for the whole
-    group. Per-query results are bit-identical to one-query-per-group
-    execution and to the driver placement (the kernel is the same;
-    only placement and caching change).
+    round-4 knob table) and each posting row shuffles ONCE per group
+    whose queries touch its term — not once per query — and queries
+    inside a group share one ``_Term`` per term. Per-query results are
+    bit-identical to one-query-per-group execution and to the driver
+    placement (the kernel is the same; only placement changes).
 
     ``micro=True`` switches the kernel to exact integer micro-unit
     scoring: each per-posting BM25 contribution is HALF_UP-rounded to
     a micro int BEFORE summing (the driver oracle's order-independent
-    hash convention), block bounds over-estimate by 1 micro so the
-    pruning proof still holds, and the result column is
-    ``score_micro`` (long) instead of ``score`` (double) — making the
-    pruned executor directly comparable against the same ANSI-SQL
-    oracle as the brute-force paths."""
+    hash convention), block bounds are maxima of those ints, and the
+    result column is ``score_micro`` (long) instead of ``score``
+    (double) — making the pruned executor directly comparable against
+    the same ANSI-SQL oracle as the brute-force paths."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
         query_terms,
     )
@@ -585,15 +498,8 @@ def wand_topk(
             return _driver_topk(index, rows, k, micro)
 
     # Layered (merge-on-read) snapshots are served EXACTLY without a
-    # compaction barrier: each (term, generation) becomes its own
-    # pseudo-term (within one generation blocks stay doc-range
-    # disjoint — doc-id-range salts), slices resolve tombstones
-    # vectorized, and idf is recomputed exactly from per-generation
-    # stored df minus tombstone-dead postings (see _pseudo_terms).
-    # Stored max_tf/min_dl stay SAFE upper bounds under deletion, so
-    # pruning never changes a result; it just loses sharpness as
-    # layers pile up — CompactionPolicy restores peak speed, it no
-    # longer gates servability. The tombstone set is delta-sized by
+    # compaction barrier: the kernel drops the superseded rows and
+    # counts df over the survivors. The tombstone set is delta-sized by
     # policy and ships to the kernel as the snapshot's one broadcast,
     # capped (``_capped_tombstones``).
     layered = index.has_deltas
@@ -607,7 +513,7 @@ def wand_topk(
     n_part = int(index.spark.conf.get("spark.sql.shuffle.partitions"))
     n_grp = int(n_groups) if n_groups else max(n_part, index.n_buckets)
     # the query side, ONE broadcast: a row per (bucket, term, group)
-    # with that group's query ids — the block join fans out per
+    # with that group's query ids — the postings join fans out per
     # GROUP, never per query. The query terms sit in one partition
     # (queries are the small axis), so the group-by needs no exchange.
     qside = (
@@ -622,14 +528,19 @@ def wand_topk(
         .groupBy("bucket", "term", "grp")
         .agg(F.collect_list("query_id").alias("qids"))
     )
-    per_group = index.segments().select(*_block_cols(layered)).join(
-        F.broadcast(qside), ["bucket", "term"]
+    cols = POSTING_COLS + (["gen_seq"] if layered else [])
+    per_group = (
+        index.doc_terms().select("bucket", *cols)
+        .join(F.broadcast(qside), ["bucket", "term"])
+        .drop("bucket")
     )
-    n_docs, avgdl = index.n_docs, index.avgdl
+    n_docs, avgdl, block_size = index.n_docs, index.avgdl, index.block_size
 
     def run(key, pdf):
         tomb = tomb_bc.value if tomb_bc is not None else None
-        return _kernel(pdf, k, n_docs, avgdl, micro, layered, tomb)
+        first = pdf.drop_duplicates("term")
+        t2q = dict(zip(first["term"], first["qids"]))
+        return _kernel(pdf, t2q, k, n_docs, avgdl, block_size, micro, tomb)
 
     return (
         # repartition width must match the group count: with g groups
@@ -639,5 +550,5 @@ def wand_topk(
         # at 128 groups AND 128 partitions = 962 ms/q)
         per_group.repartition(n_grp, "grp")
         .groupBy("grp")
-        .applyInPandas(run, schema=_result_schema(micro))
+        .applyInPandas(run, schema=result_schema(micro))
     )

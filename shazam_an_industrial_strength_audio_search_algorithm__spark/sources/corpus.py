@@ -200,14 +200,3 @@ def distributed_corpus(spark, n_docs: int, seed: int = 42,
         schema="repo string, path string, commit string, lang string, "
                "content string",
     )
-
-
-def with_sha(corpus: pd.DataFrame) -> pd.DataFrame:
-    """Attach the per-row integrity invariant ``content_sha`` —
-    the analog of the reference's decode-must-succeed check
-    (``Matching.py:113-117``); asserted after every pipeline stage."""
-    out = corpus.copy()
-    out["content_sha"] = out["content"].map(
-        lambda s: hashlib.sha256(s.encode()).hexdigest()
-    )
-    return out

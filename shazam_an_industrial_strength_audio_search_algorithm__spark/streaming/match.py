@@ -128,16 +128,11 @@ def read_match_results(spark: SparkSession, out_dir: str,
     import glob as _glob
 
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
-        RESULT_SCHEMA,
+        result_schema,
     )
 
     if not _glob.glob(f"{out_dir}/batch_id=*"):
-        schema = T.StructType([
-            T.StructField("score_micro", T.LongType())
-            if f.name == "score" else f
-            for f in RESULT_SCHEMA
-        ]) if micro else RESULT_SCHEMA
-        empty = spark.createDataFrame([], schema)
+        empty = spark.createDataFrame([], result_schema(micro))
         return empty.withColumn("batch_id", F.lit(None).cast("long"))
     return (
         spark.read.option("basePath", out_dir)

@@ -12,10 +12,9 @@ Lucene's segment merge):
 - ``compact()`` merges the layers back to one generation whose blocks
   are BIT-IDENTICAL (payload bytes, stats, salts, block boundaries)
   to the from-scratch rebuild — without ever re-reading the corpus;
-- WAND serves layered snapshots EXACTLY (one pseudo-term per
-  (term, generation), tombstone-resolved slices, exact idf from
-  per-generation df minus tombstone-dead postings) and still agrees
-  with brute force after compaction;
+- WAND serves layered snapshots EXACTLY (tombstone-superseded rows
+  dropped in the kernel, exact idf from the surviving rows) and still
+  agrees with brute force after compaction;
 - ``vacuum`` after compaction reclaims the delta generations.
 """
 

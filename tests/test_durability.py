@@ -27,11 +27,13 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maint
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
     SegmentIndex,
-    _read_current,
     build_segment_index,
     drop_index,
     read_snapshot,
     segment_topk,
+)
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
+    _read_current,
 )
 
 

@@ -434,3 +434,46 @@ def test_wand_query_job_counts(spark, corpus_pdf, corpus_df, update_fixtures,
     # a driver-placed request's one job is one scan stage: no exchange
     assert stages["single"] == stages["single_layered"] == \
         stages["batch_32"] == [1], stages
+
+
+def test_local_query_frame_reads_as_one_partition(spark, corpus_pdf,
+                                                  corpus_df, tmp_path):
+    """A 32-row ``local_rows_df`` frame scans as up to
+    ``defaultParallelism`` partitions; the brute spine and ``decide``
+    read it as one, so they launch the same jobs, stages and exchanges
+    as on the frame's ``.coalesce(1)`` and return the same rows."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
+        decide,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.plans.audit import (
+        count_shuffles,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+        local_rows_df,
+    )
+
+    d = str(tmp_path / "idx")
+    build_segment_index(spark, with_doc_id(corpus_df), d, n_buckets=4,
+                        hot_df=8, block_size=16)
+    idx = SegmentIndex.open(spark, d)
+    words = corpus_pdf["content"].str.split()
+    batch = local_rows_df(
+        spark, [(f"b{i}", " ".join(words.iloc[i][:6])) for i in range(32)],
+        "query_id string, text string")
+    assert batch.isLocal()
+    sc = spark.sparkContext
+    shape = {}
+    for name, frame in (("local", batch), ("coalesced", batch.coalesce(1))):
+        top = segment_topk(idx, frame, k=3)
+        dec = decide(top, frame, threshold=0.0)
+        for op, df in (("segment_topk", top), ("decide", dec)):
+            rows, ids = _count_jobs(spark, f"local_frame_{name}_{op}",
+                                    df.collect)
+            shape[name, op] = (
+                sorted(map(tuple, rows)),
+                [len(sc.statusTracker().getJobInfo(j).stageIds) for j in ids],
+                count_shuffles(df),
+            )
+    for op in ("segment_topk", "decide"):
+        assert shape["local", op] == shape["coalesced", op], (
+            op, shape["local", op][1:], shape["coalesced", op][1:])

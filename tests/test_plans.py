@@ -182,10 +182,10 @@ def test_local_peaks_single_exchange(spark):
 
 def _assert_wand_plan(df):
     """Batched WAND's shape: the one query-side broadcast
-    ((bucket, term, grp) → qids) joins the block scan, its bucket
-    partitions prune dynamically from that same broadcast, and the
-    only shuffle is the repartition by group — payload volume scales
-    with groups, not batch size."""
+    ((bucket, term, grp) → qids) joins the doc_terms postings scan, its
+    bucket partitions prune dynamically from that same broadcast, and
+    the only shuffle is the repartition by group — posting volume
+    scales with groups, not batch size."""
     a = audit(df)
     assert a["broadcast_join"], a
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -51,21 +51,29 @@ def test_commit_is_exclusive_and_parent_checked(tmp_path):
     assert sorted(os.listdir(f"{d}/snapshots")) == ["v1.json", "v2.json"]
 
 
-def _race(monkeypatch, module, winner):
-    """Make the next ``commit`` called through ``module`` run ``winner``
-    (another writer, which commits first) before it commits."""
-    real = module.commit
+def _race(monkeypatch, module, winner, name="commit"):
+    """Make the next ``name`` (default ``commit``) called through
+    ``module`` run ``winner`` (another writer, which commits first)
+    before it runs."""
+    real = getattr(module, name)
 
-    def racing(index_dir, version, snapshot):
-        monkeypatch.setattr(module, "commit", real)
+    def racing(*args, **kwargs):
+        monkeypatch.setattr(module, name, real)
         winner()
-        return real(index_dir, version, snapshot)
+        return real(*args, **kwargs)
 
-    monkeypatch.setattr(module, "commit", racing)
+    monkeypatch.setattr(module, name, racing)
 
 
 def _docs(pdf, lo, hi):
     return pdf.iloc[lo:hi].reset_index(drop=True)
+
+
+def _staged_ids(spark, d, gens):
+    """The doc ids each generation in ``gens`` staged (its doc_lens)."""
+    return {gen: {r["doc_id"] for r in spark.read.parquet(f"{d}/data/dl_{gen}")
+                  .select("doc_id").collect()}
+            for gen in gens}
 
 
 @pytest.mark.parametrize("loser", ["compact", "update"])
@@ -139,11 +147,7 @@ def test_text_delta_update_race(spark, tmp_path, monkeypatch):
     assert [layer["gen"] for layer in snap["layers"]] == ["u3"]
     assert sorted(os.listdir(f"{d}/manifests")) == ["init", "u2", "u3"]
     # each staging holds only its own writer's docs
-    staged = {
-        gen: {r["doc_id"] for r in spark.read.parquet(f"{d}/data/dl_{gen}")
-              .select("doc_id").collect()}
-        for gen in ("u2", "u3")
-    }
+    staged = _staged_ids(spark, d, ("u2", "u3"))
     want = {
         gen: {r["doc_id"] for r in with_doc_id(spark.createDataFrame(
             _docs(pdf, lo, hi))).select("doc_id").collect()}
@@ -155,6 +159,94 @@ def test_text_delta_update_race(spark, tmp_path, monkeypatch):
     assert read_snapshot(d)["n_docs"] == 80
     idx = segments.SegmentIndex.open(spark, d)
     assert idx.doc_lens().count() == 80
+
+
+def test_text_compaction_race(spark, tmp_path, monkeypatch):
+    """Two compactions staged on the same snapshot, one re-sharding to
+    2 buckets and one keeping the layout: each reserves its own
+    generation before staging (the winner, finding ``c3`` taken,
+    stages ``c4``), so neither writes into the other's staging; the
+    one that commits second raises, and its retry commits."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.sources.corpus import (
+        make_corpus,
+    )
+
+    pdf = make_corpus(n_docs=80, seed=7, min_len=20, max_len=60)
+    d = str(tmp_path / "idx")
+    segments.build_segment_index(
+        spark, with_doc_id(spark.createDataFrame(_docs(pdf, 0, 50))), d,
+        n_buckets=4, hot_df=8, block_size=16,
+    )
+    apply_updates(spark, d, mode="delta",
+                  add_corpus=spark.createDataFrame(_docs(pdf, 50, 65)))
+    _race(monkeypatch, segments, lambda: compact(spark, d))
+    with pytest.raises(CommitConflict) as e:
+        compact(spark, d, n_buckets=2)
+    assert (e.value.version, e.value.parent, e.value.current) == (3, 2, 4)
+    snap = read_snapshot(d)
+    assert (snap["version"], snap["operation"], snap["n_buckets"]) == \
+        (4, "compact", 4)
+    assert "_c3" not in json.dumps(snap)  # no path into the loser's staging
+    assert sorted(os.listdir(f"{d}/manifests")) == ["c3", "c4", "init", "u2"]
+    # each staging holds only its own writer's layout
+    for gen, n_buckets in (("c3", 2), ("c4", 4)):
+        params = json.load(open(f"{d}/manifests/{gen}/params.json"))
+        assert params["n_buckets"] == n_buckets
+        assert sorted(n for n in os.listdir(f"{d}/data/dt_{gen}")
+                      if n.startswith("bucket=")) == \
+            [f"bucket={b}" for b in params["affected_buckets"]]
+    assert json.load(open(f"{d}/manifests/c3/params.json"))[
+        "affected_buckets"] == [0, 1]
+    idx = segments.SegmentIndex.open(spark, d)
+    assert idx.doc_lens().count() == 65
+    # the loser re-reads and retries: it commits on the winner's snapshot
+    assert compact(spark, d, n_buckets=2).snapshot_version == 5
+    snap = read_snapshot(d)
+    assert (snap["parent"], snap["n_buckets"], snap["n_docs"]) == (4, 2, 65)
+    assert segments.SegmentIndex.open(spark, d).doc_lens().count() == 65
+
+
+def test_text_rebuild_race(spark, tmp_path, monkeypatch):
+    """Two rebuilds over a live index, the other one running after this
+    one named its generation and before it staged (while it derives
+    its doc ids): each reserves its own ``rbN`` (the winner, finding
+    ``rb2`` taken, stages ``rb3``), so neither writes into — or clears
+    — the other's staging; this one, overtaken, raises on commit, and
+    its retry commits."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.sources.corpus import (
+        make_corpus,
+    )
+
+    pdf = make_corpus(n_docs=80, seed=7, min_len=20, max_len=60)
+    d = str(tmp_path / "idx")
+
+    def build(lo, hi):
+        return segments.build_segment_index(
+            spark, spark.createDataFrame(_docs(pdf, lo, hi)), d,
+            n_buckets=4, hot_df=8, block_size=16,
+        )
+
+    build(0, 50)
+    _race(monkeypatch, segments, lambda: build(0, 80), name="with_doc_id")
+    with pytest.raises(CommitConflict) as e:
+        build(0, 65)
+    assert (e.value.version, e.value.parent, e.value.current) == (3, 1, 2)
+    snap = read_snapshot(d)
+    assert (snap["version"], snap["gen"], snap["n_docs"]) == (2, "rb3", 80)
+    assert sorted(os.listdir(f"{d}/manifests")) == ["init", "rb2", "rb3"]
+    # each staging holds only its own writer's docs
+    want = {
+        gen: {r["doc_id"] for r in with_doc_id(spark.createDataFrame(
+            _docs(pdf, lo, hi))).select("doc_id").collect()}
+        for gen, lo, hi in (("rb2", 0, 65), ("rb3", 0, 80))
+    }
+    assert _staged_ids(spark, d, ("rb2", "rb3")) == want
+    assert segments.SegmentIndex.open(spark, d).doc_lens().count() == 80
+    # the loser re-reads and retries: it commits on the winner's snapshot
+    assert build(0, 65).snapshot_version == 3
+    snap = read_snapshot(d)
+    assert (snap["parent"], snap["gen"], snap["n_docs"]) == (2, "rb4", 65)
+    assert segments.SegmentIndex.open(spark, d).doc_lens().count() == 65
 
 
 @pytest.fixture

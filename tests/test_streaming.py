@@ -322,10 +322,9 @@ def test_stream_match_serves_layered_index_wand_pruned(
     spark, corpus_pdf, tmp_path
 ):
     """A delta-layered index must not kill the match stream — and
-    since round 5 it is served WAND-PRUNED (layered pseudo-terms +
-    tombstone resolution), not by the brute fallback: real decode
-    counters, exact results for a doc that exists only in the delta
-    layer."""
+    since round 5 it is served WAND-PRUNED (tombstone resolution in
+    the kernel), not by the brute fallback: real block counters, exact
+    results for a doc that exists only in the delta layer."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
         apply_updates,
     )

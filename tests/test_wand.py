@@ -1,5 +1,6 @@
 """Block-max WAND: exact top-k equality with the brute-force segment
-path, plus evidence that bound-gated block skipping actually skips."""
+path, plus evidence that bound-gated block skipping actually skips,
+on the doc_terms posting rows that every postings read uses."""
 
 from __future__ import annotations
 
@@ -183,17 +184,49 @@ def test_duplicate_query_id_is_rejected(spark, seg, queries_pdf):
         wand_topk(seg, spark.createDataFrame(rows, Q_DDL), k=5).collect()
 
 
+def test_wand_never_reads_the_block_payloads(spark, seg, layered_seg,
+                                            queries_df, monkeypatch):
+    """WAND reads the doc_terms columns, the one postings reader: with
+    ``SegmentIndex.segments`` raising, both placements still equal the
+    brute path, on a fresh and a layered snapshot, in float and micro
+    scoring."""
+    def brute(idx, micro):
+        score = "score_micro" if micro else "score"
+        return [tuple(r) for r in segment_topk(idx, queries_df, k=5, micro=micro)
+                .select("query_id", "rank", "doc_id", score, "matched_terms")
+                .orderBy("query_id", "rank").collect()]
+
+    indexes = {"fresh": seg, "layered": layered_seg}
+    want = {(which, micro): brute(idx, micro)
+            for which, idx in indexes.items() for micro in (False, True)}
+
+    def no_segments(self, buckets=None):
+        raise AssertionError("WAND read the segments table")
+
+    monkeypatch.setattr(SegmentIndex, "segments", no_segments)
+    for which, idx in indexes.items():
+        for micro in (False, True):
+            score = "score_micro" if micro else "score"
+            for frame in (queries_df, queries_df.coalesce(1)):
+                got = [tuple(r) for r in wand_topk(idx, frame, k=5, micro=micro)
+                       .select("query_id", "rank", "doc_id", score,
+                               "matched_terms")
+                       .orderBy("query_id", "rank").collect()]
+                w = want[(which, micro)]
+                assert [g[:3] + g[4:] for g in got] == \
+                    [x[:3] + x[4:] for x in w], (which, micro)
+                for g, x in zip(got, w):
+                    assert math.isclose(g[3], x[3], rel_tol=1e-9,
+                                        abs_tol=1e-12), (which, micro)
+
+
 def test_interval_kernel_covers_max_int64_doc_id():
     """A doc whose id is exactly 2**63-1 (one xxhash64 in 2**64 inputs)
     must not fall out of interval coverage: the hi+1 interval cut is
     clamped against int64 overflow, and the widened last interval has
     to absorb the clamp so WAND stays exactly equal to brute force."""
     import numpy as np
-    import pandas as pd
 
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec import (
-        encode_block,
-    )
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
         _Term,
         _topk_one_query,
@@ -201,22 +234,14 @@ def test_interval_kernel_covers_max_int64_doc_id():
 
     max_id = np.int64(2**63 - 1)
     ids = np.array([5, 100, max_id], dtype=np.int64)
-    tfs = np.array([1, 2, 3], dtype=np.int64)
-    dls = np.array([10, 10, 10], dtype=np.int64)
-    g = pd.DataFrame({
-        "doc_id_lo": [int(ids[0])], "doc_id_hi": [int(ids[-1])],
-        "max_tf": [3], "min_dl": [10],
-        "payload": [encode_block(ids, tfs, dls)],
-    })
-    term = _Term(idf=1.0, g=g, avgdl=10.0)
-    docs, scores, matched, decoded, total = _topk_one_query(
-        [term], k=3, avgdl=10.0
-    )
+    # one block holding all three docs
+    term = _Term(ids, np.array([0.1, 0.2, 0.3]), block_size=8)
+    docs, scores, matched, scored, total = _topk_one_query([term], k=3)
     assert int(max_id) in set(int(d) for d in docs), (
         "doc at int64 max silently dropped by interval construction"
     )
     assert len(docs) == 3
-    # highest tf (the max-id doc) must rank first
+    # highest contribution (the max-id doc) must rank first
     assert int(docs[0]) == int(max_id)
 
 
@@ -227,42 +252,27 @@ def test_interval_kernel_covers_lone_max_block_among_other_cuts():
     lone max block must be force-selected (and its bound added to the
     interval's ub) or its doc silently vanishes."""
     import numpy as np
-    import pandas as pd
 
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec import (
-        encode_block,
-    )
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
         _Term,
         _topk_one_query,
     )
 
     max_id = np.int64(2**63 - 1)
-
-    def blk(ids, tfs):
-        ids = np.array(ids, dtype=np.int64)
-        tfs = np.array(tfs, dtype=np.int64)
-        dls = np.full(ids.size, 10, dtype=np.int64)
-        return {
-            "doc_id_lo": int(ids[0]), "doc_id_hi": int(ids[-1]),
-            "max_tf": int(tfs.max()), "min_dl": 10,
-            "payload": encode_block(ids, tfs, dls),
-        }
-
-    # term A: two blocks — [5,100] and the lone [max,max] block
-    ga = pd.DataFrame([blk([5, 100], [1, 2]), blk([max_id], [3])])
+    # term A, blocks of 2: [5,100] and the lone [max,max] block
+    ta = _Term(np.array([5, 100, max_id], dtype=np.int64),
+               np.array([0.1, 0.2, 0.3]), block_size=2)
+    assert ta.los.tolist() == [5, int(max_id)]
     # term B: one block whose cuts make the last interval start BELOW
     # max (so searchsorted picks B's block, never A's max block)
-    gb = pd.DataFrame([blk([7, 200], [1, 1])])
-    ta = _Term(idf=1.0, g=ga, avgdl=10.0)
-    tb = _Term(idf=1.0, g=gb, avgdl=10.0)
-    docs, scores, matched, decoded, total = _topk_one_query(
-        [ta, tb], k=5, avgdl=10.0
-    )
+    tb = _Term(np.array([7, 200], dtype=np.int64),
+               np.array([0.1, 0.1]), block_size=2)
+    docs, scores, matched, scored, total = _topk_one_query([ta, tb], k=5)
     got = set(int(d) for d in docs)
     assert int(max_id) in got, (
         "lone [max,max] block dropped when coexisting with other cuts"
     )
     assert got == {5, 7, 100, 200, int(max_id)}
-    # highest tf (the max-id doc) must rank first
+    # highest contribution (the max-id doc) must rank first
     assert int(docs[0]) == int(max_id)
+    assert total == 3
