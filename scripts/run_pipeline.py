@@ -147,7 +147,7 @@ def main(argv: list[str]) -> int:
     u.add_argument("--resume", action="store_true")
     u.add_argument("--mode", choices=["rebuild", "delta"], default="rebuild",
                    help="rebuild = copy-on-write (re-encode affected "
-                        "buckets, WAND-ready); delta = merge-on-read "
+                        "buckets); delta = merge-on-read "
                         "(O(delta) layer + tombstones; compact later)")
 
     c = sub.add_parser("compact",
@@ -349,15 +349,7 @@ def main(argv: list[str]) -> int:
 
     idx = SegmentIndex.open(spark, args.index)
     queries = read_input(spark, args.queries)
-    if args.wand and idx.has_deltas:
-        print(
-            f"note: snapshot v{idx.version} has {len(idx.layers)} delta "
-            "layer(s); WAND needs a compacted index — serving this batch "
-            "via the exact brute path (same results). Run "
-            "`run_pipeline.py compact` to restore pruned execution.",
-            file=sys.stderr,
-        )
-    if args.wand and not idx.has_deltas:
+    if args.wand:
         from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
             wand_topk,
         )

@@ -1046,7 +1046,7 @@ def q_batch_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = batch_match_resumable(
         docs_segment_index(spark, sf_dir), queries_df(spark),
         _batch_match_dir(spark, sf_dir),
-        k=TOPK_K, n_groups=4, mode="wand", micro=True,
+        k=TOPK_K, n_groups=4, micro=True,
     )
     return res.select(
         "query_id",
@@ -1343,7 +1343,7 @@ def q_last_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("ingest_seq"),
         F.col("text"),
     )
-    return dedup_last_wins(docs, strict=True).select(
+    return dedup_last_wins(docs).select(
         F.col("path").alias("key"),
         F.col("ingest_seq").alias("winner_doc_id"),
         F.sha2(F.col("text"), 256).alias("winner_sha"),

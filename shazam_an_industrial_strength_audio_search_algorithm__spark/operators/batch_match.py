@@ -12,7 +12,8 @@ over 10^6 queries restarted from zero — this module closes that gap
 Spark-first shape: queries are hashed into deterministic GROUPS
 (``pmod(xxhash64(query_id), n_groups)`` — stable across runs and
 independent of input partitioning); each group runs as one normal
-distributed top-k job (WAND or brute) and commits its results
+distributed WAND top-k job (``wand_topk``, the one pruned executor)
+and commits its results
 parquet + a manifest (rows, an order-independent value digest, wall
 seconds) ATOMICALLY (results first, manifest last — a crash between
 the two re-runs the group idempotently, the dynamic overwrite
@@ -36,12 +37,10 @@ import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
     SegmentIndex,
     _atomic_write_json,
-    segment_topk,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
     result_schema,
@@ -54,34 +53,12 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand 
 GROUPS_IN_FLIGHT = 4
 
 
-def _result_schema(mode: str, micro: bool) -> T.StructType:
-    if mode == "wand":
-        return result_schema(micro)
-    # brute (segment_topk) schema
-    if micro:
-        return T.StructType([
-            T.StructField("query_id", T.StringType()),
-            T.StructField("rank", T.LongType()),
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("score_micro", T.LongType()),
-            T.StructField("matched_terms", T.LongType()),
-        ])
-    return T.StructType([
-        T.StructField("query_id", T.StringType()),
-        T.StructField("rank", T.IntegerType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("score", T.DoubleType()),
-        T.StructField("matched_terms", T.LongType()),
-    ])
-
-
 def batch_match_resumable(
     index: SegmentIndex,
     queries: DataFrame,
     out_dir: str,
     k: int = 10,
     n_groups: int = 8,
-    mode: str = "wand",
     micro: bool = False,
     groups: list[int] | None = None,
 ) -> DataFrame:
@@ -92,9 +69,12 @@ def batch_match_resumable(
     build); a real deployment passes None. Returns the union of every
     COMMITTED group's results — after an un-limited run, that is the
     complete batch.
+
+    A checkpoint resumes only under the parameters it was started with
+    (``manifests/batch.json``). One whose ``mode`` is not ``"wand"``
+    (brute-force groups, written by older releases) is refused too, so
+    its groups never mix with WAND ones.
     """
-    if mode not in ("wand", "brute"):
-        raise ValueError(f"mode must be 'wand' or 'brute', got {mode!r}")
     spark = index.spark
     os.makedirs(f"{out_dir}/manifests", exist_ok=True)
     grp = F.pmod(F.xxhash64(F.col("query_id")), F.lit(n_groups)).cast("int")
@@ -105,16 +85,16 @@ def batch_match_resumable(
     if os.path.exists(meta_path):
         meta = json.load(open(meta_path))
         if (meta["n_groups"] != n_groups or meta["k"] != k
-                or meta["mode"] != mode or meta["micro"] != micro
+                or meta["mode"] != "wand" or meta["micro"] != micro
                 or meta["index_version"] != index.version):
             raise ValueError(
                 "resuming a batch with different parameters than it was "
                 f"started with: {meta} vs n_groups={n_groups} k={k} "
-                f"mode={mode} micro={micro} index_version={index.version}"
+                f"mode=wand micro={micro} index_version={index.version}"
             )
     else:
         _atomic_write_json(meta_path, {
-            "n_groups": n_groups, "k": k, "mode": mode, "micro": micro,
+            "n_groups": n_groups, "k": k, "mode": "wand", "micro": micro,
             "index_version": index.version,
         })
 
@@ -124,10 +104,7 @@ def batch_match_resumable(
             return  # committed — the resume skip (Matching.py:96)
         qs = qg.filter(F.col("_grp") == g).drop("_grp")
         t0 = time.monotonic()
-        res = (
-            wand_topk(index, qs, k=k, micro=micro) if mode == "wand"
-            else segment_topk(index, qs, k=k, micro=micro)
-        )
+        res = wand_topk(index, qs, k=k, micro=micro)
         rpath = f"{out_dir}/results/grp_{g}"
         res.write.mode("overwrite").parquet(rpath)
         # digest from the WRITTEN files (order-independent xor over
@@ -172,7 +149,7 @@ def batch_match_resumable(
         g for g in range(n_groups)
         if os.path.exists(f"{out_dir}/manifests/grp_{g}.json")
     ]
-    schema = _result_schema(mode, micro)
+    schema = result_schema(micro)
     parts = [
         f"{out_dir}/results/grp_{g}" for g in done
         if any(

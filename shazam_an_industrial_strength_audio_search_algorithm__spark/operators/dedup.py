@@ -773,10 +773,9 @@ def near_dup_clusters(pairs: DataFrame, max_iter: int = 50,
     # Size-gated local kernel (the broadcast-join dispatch pattern):
     # a delta-sized edge set pays O(rounds × jobs) of pure scheduling
     # overhead through the distributed loop, while union-find over
-    # the collected edges is one bounded collect — same cap idiom as
-    # the WAND tombstone closure. Components and min-labels are
-    # identical by construction (min-label propagation computes
-    # exactly the per-component minimum); past the cap the
+    # the collected edges is one bounded collect. Components and
+    # min-labels are identical by construction (min-label propagation
+    # computes exactly the per-component minimum); past the cap the
     # distributed propagation below runs unchanged.
     if edges.count() <= LOCAL_CC_CAP:
         from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (

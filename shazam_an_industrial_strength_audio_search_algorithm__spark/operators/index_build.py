@@ -56,7 +56,7 @@ def with_doc_id(corpus: DataFrame) -> DataFrame:
     return corpus.withColumn("doc_id", F.xxhash64(*KEY_COLS))
 
 
-def dedup_last_wins(corpus: DataFrame, strict: bool = True,
+def dedup_last_wins(corpus: DataFrame,
                     assume_unique: bool = False) -> DataFrame:
     """Duplicate (repo,path,commit) keys: last-writer-wins — the dict
     semantics of the reference's ``wav.scp`` parse (``Hashing.py:30``,
@@ -64,47 +64,37 @@ def dedup_last_wins(corpus: DataFrame, strict: bool = True,
     ``ingest_seq`` column is present (the reference's file order made
     explicit).
 
-    Default (``strict=True``, since round 3): deterministic always —
-    with ``ingest_seq`` the true last writer wins; without it the
-    input must carry NO duplicate keys (pass-through), and duplicate
-    keys raise loudly instead of silently resolving to a
-    partition-layout-dependent winner. The uniqueness probe runs one
-    cheap count job over the keys; batches that carry ``ingest_seq``
-    skip it entirely.
+    Deterministic always: with ``ingest_seq`` the true last writer
+    wins; without it the input must carry NO duplicate keys
+    (pass-through), and duplicate keys raise loudly instead of
+    silently resolving to a partition-layout-dependent winner. The
+    uniqueness probe runs one cheap count job over the keys; batches
+    that carry ``ingest_seq`` skip it entirely.
 
-    ``strict=False`` restores the pre-round-3 fallback: pick ONE row
-    per key via ``monotonically_increasing_id`` — fine for
-    dedup-to-single, NOT a stable last-writer (layout-dependent).
-
-    ``assume_unique=True`` skips the strict-mode uniqueness probe
-    entirely (pure pass-through) — for callers that ALREADY
-    deduplicated by key (``stream_ingest`` dedupes every micro-batch
-    before ``apply_updates``; paying a second groupBy/count probe per
-    batch buys nothing). The trust is the caller's: a violated
-    promise yields duplicate postings, not an error."""
+    ``assume_unique=True`` skips the uniqueness probe entirely (pure
+    pass-through) — for callers that ALREADY deduplicated by key
+    (``stream_ingest`` dedupes every micro-batch before
+    ``apply_updates``; paying a second groupBy/count probe per batch
+    buys nothing). The trust is the caller's: a violated promise
+    yields duplicate postings, not an error."""
     from pyspark.sql import Window
 
-    if assume_unique and "ingest_seq" not in corpus.columns:
-        return corpus
-    if "ingest_seq" in corpus.columns:
-        order = F.col("ingest_seq").desc()
-    elif strict:
+    if "ingest_seq" not in corpus.columns:
+        if assume_unique:
+            return corpus
         dup = (
             corpus.groupBy(*KEY_COLS).count()
             .filter(F.col("count") > 1).limit(1).count()
         )
         if dup:
             raise ValueError(
-                "dedup_last_wins(strict=True): duplicate "
-                f"{tuple(KEY_COLS)} keys but no ingest_seq column — "
-                "'last' would be partition-layout-dependent. Add a "
-                "monotonic ingest_seq, or pass strict=False to accept "
-                "an arbitrary (non-reproducible) winner"
+                f"dedup_last_wins: duplicate {tuple(KEY_COLS)} keys but "
+                "no ingest_seq column — 'last' would be "
+                "partition-layout-dependent. Add a monotonic ingest_seq "
+                "column, or deduplicate the keys first"
             )
         return corpus
-    else:
-        order = F.monotonically_increasing_id().desc()
-    w = Window.partitionBy(*KEY_COLS).orderBy(order)
+    w = Window.partitionBy(*KEY_COLS).orderBy(F.col("ingest_seq").desc())
     return (
         corpus.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

@@ -65,7 +65,9 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
     stage_corpus,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (  # noqa: F401 (re-exported)
+    CommitConflict,
     _atomic_write_json,
+    abandon,
     read_snapshot,
     reserve_generation,
     restore,
@@ -125,7 +127,7 @@ def apply_updates(
       memory and never committed, is merged by ``compact()``'s
       ``_merge``: every bucket a staged posting or a removed doc
       touches is re-encoded whole, and one layer-free snapshot
-      commits. Queries stay single-layer (WAND-ready), but a 10-doc
+      commits. Queries stay single-layer, but a 10-doc
       update rewrites multi-GB buckets at 10^12-file scale.
     - ``"delta"`` (merge-on-read): the staging IS the new layer — the
       update's postings are encoded as a small layer beside a doc-id
@@ -530,6 +532,10 @@ def compact(
     ``trigger`` is recorded in the snapshot (``"manual"`` vs
     ``"policy"`` from ``maybe_compact``) so the snapshot log shows
     which compactions the auto-policy fired.
+
+    A compaction that another writer's commit overtook removes its
+    reservation and staging (``snapshot.abandon``) and raises
+    ``CommitConflict``; re-run it on the new snapshot.
     """
     base = SegmentIndex.open(spark, index_dir)
     snap = base.snapshot
@@ -554,11 +560,16 @@ def compact(
     params = _resumed_params(f"{index_dir}/manifests/{gen}", resume)
     if params is not None:
         base = SegmentIndex.open(spark, index_dir, params["base_version"])
-    return _merge(
-        spark, base, gen, new_version,
-        {"operation": "compact", "trigger": trigger},
-        params=params, n_buckets=target_buckets, block_size=target_block,
-    )
+    try:
+        return _merge(
+            spark, base, gen, new_version,
+            {"operation": "compact", "trigger": trigger},
+            params=params, n_buckets=target_buckets, block_size=target_block,
+        )
+    except CommitConflict:
+        # its parent is no longer CURRENT, so ``gen`` can never commit
+        abandon(index_dir, gen)
+        raise
 
 
 @dataclass
@@ -568,8 +579,9 @@ class CompactionPolicy:
     ``wand_topk`` serves layered snapshots exactly (round 5), so
     compaction no longer gates servability — but each layer adds a
     generation to every postings scan and tombstone work to every
-    query, and the tombstone closure shipped to kernels is capped. The policy keeps
-    a continuously upserting pipeline at peak serving speed.
+    query, and every WAND request ships the snapshot's whole tombstone
+    set into its kernel: compaction is what bounds that set. The policy
+    keeps a continuously upserting pipeline at peak serving speed.
 
     - ``max_layers``: compact when the snapshot holds ≥ this many
       delta layers (each layer adds a per-query union + tombstone

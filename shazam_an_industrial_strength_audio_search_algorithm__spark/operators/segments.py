@@ -94,9 +94,11 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index
     with_doc_id,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.snapshot import (
+    CommitConflict,
     _atomic_write_json,
     _next_commit_version,
     _snapshot_versions,
+    abandon,
     commit,
     current_version,
     drop_superseded,
@@ -641,11 +643,11 @@ def build_segment_index(
     snapshot stages everything into a NEW generation (``rbN`` dirs,
     reserved exclusively like an update's, so two rebuilds never share
     one) and commits via the same snapshot-then-CURRENT swap as
-    updates; one that another writer's commit overtook raises
-    ``CommitConflict``. A crash mid-rebuild leaves the old snapshot
-    serving untouched, a concurrent reader never sees a half-built
-    index, and the old generations remain addressable until
-    ``vacuum``. ``resume=True``
+    updates; one that another writer's commit overtook removes its
+    reservation and staging and raises ``CommitConflict``. A crash
+    mid-rebuild leaves the old snapshot serving untouched, a concurrent
+    reader never sees a half-built index, and the old generations
+    remain addressable until ``vacuum``. ``resume=True``
     resumes the newest staged generation (an interrupted rebuild wins
     over the committed initial build); resuming a fully committed
     build is an idempotent no-op that never rolls CURRENT back.
@@ -780,12 +782,20 @@ def build_segment_index(
     # a committed generation re-verified in place (verify_inputs
     # rebuilds) keeps its version; a fresh generation commits past
     # every existing snapshot AND the current pointer
-    built, version = commit_generation(
-        spark, index_dir, gen, range(n_buckets),
-        [b for b in range(n_buckets) if b not in todo or b in skipped],
-        dt_path, snapshot,
-        committed if committed is not None else _next_commit_version(index_dir),
-    )
+    try:
+        built, version = commit_generation(
+            spark, index_dir, gen, range(n_buckets),
+            [b for b in range(n_buckets) if b not in todo or b in skipped],
+            dt_path, snapshot,
+            committed if committed is not None
+            else _next_commit_version(index_dir),
+        )
+    except CommitConflict:
+        # a rebuild whose parent is no longer CURRENT never commits
+        # ``gen``; an initial build shares ``init`` with its rival
+        if gen != "init":
+            abandon(index_dir, gen)
+        raise
     timings["phase_b_segments"] = _time.monotonic() - _t0
     return BuildReport(built_buckets=built, snapshot_version=version,
                        **report)

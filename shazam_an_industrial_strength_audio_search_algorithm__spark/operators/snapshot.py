@@ -36,7 +36,9 @@ from pyspark.sql import functions as F
 
 class CommitConflict(RuntimeError):
     """Another writer moved the index after this writer read its parent.
-    Nothing this writer staged is visible; ``vacuum`` reclaims it."""
+    Nothing this writer staged is visible: a compaction or rebuild
+    removes its staging before it raises (``abandon``), and ``vacuum``
+    keeps a delta update's, as in flight."""
 
     def __init__(self, index_dir: str, version: int, parent: int | None,
                  current: int | None):
@@ -210,6 +212,21 @@ def _data_dirs(snap: dict) -> set[str]:
 def _gen_of(data_dir: str) -> str:
     """The generation that wrote ``data/<kind>_<gen>``."""
     return data_dir.partition("_")[2]
+
+
+def abandon(index_dir: str, gen: str) -> None:
+    """Delete generation ``gen``'s reservation (``manifests/<gen>``) and
+    its staging (every ``data/<kind>_<gen>``): the cleanup of a writer
+    that lost its commit to ``CommitConflict`` and will never commit
+    ``gen``. Nothing a snapshot names is touched, so a generation that
+    did commit (or a dir another snapshot shares) stays."""
+    named = set().union(*(_data_dirs(s) for s in snapshot_log(index_dir)))
+    ddir = f"{index_dir}/data"
+    for name in os.listdir(ddir) if os.path.isdir(ddir) else []:
+        if _gen_of(name) == gen and name not in named:
+            shutil.rmtree(f"{ddir}/{name}", ignore_errors=True)
+    if gen not in {_gen_of(d) for d in named}:
+        shutil.rmtree(f"{index_dir}/manifests/{gen}", ignore_errors=True)
 
 
 def vacuum(index_dir: str, keep_last: int = 2) -> dict:

@@ -7,14 +7,21 @@ first-above-threshold break ``Matching.py:122-131``) — i.e.
 upper-bound-ordered evaluation with early exit. This module is the
 principled generalization (SURVEY §4): **interval-at-a-time block-max
 WAND**. Each query term's postings are cut into blocks of the
-snapshot's ``block_size`` consecutive docs; doc-id space is
-partitioned into atomic intervals by the block boundaries of the
+snapshot's ``block_size`` consecutive docs; doc space (dense doc
+ranks: a placement numbers the distinct doc ids it reads in id order)
+is partitioned into atomic intervals by the block boundaries of the
 query's terms; each interval's upper bound is the sum of the (single,
 because blocks of a term are disjoint) overlapping block bound per
 term. Intervals are processed in descending upper-bound order,
 scoring is numpy-vectorized per interval, and the loop stops as soon
 as the running top-k floor beats the best remaining interval bound —
 blocks in skipped intervals are never scored.
+
+This is the one executor behind every pruned top-k request:
+``wand_topk`` callers, the CLI's ``query --wand``, ``stream_match``
+micro-batches and ``batch_match_resumable`` groups, on compacted and
+layered snapshots alike. ``segments.segment_topk`` stays as the
+brute-force reference the tests compare against.
 
 Execution shape: a request's critical path is the postings scan and
 the kernel, nothing else. Both placements read the engine's one
@@ -46,9 +53,11 @@ tf, doc_len[, gen_seq]) rows — and run the same kernel (``_kernel``):
 The kernel sees each term's rows once: on a layered snapshot it first
 drops the rows a newer tombstone supersedes (the snapshot's tombstone
 arrays, per-``SegmentIndex`` state built on first use; the grouped
-placement ships them as the snapshot's one broadcast). A doc is alive
-in exactly one generation per term, so the surviving rows of a term
-form one doc-id-sorted array whatever the layering: its length is the
+placement ships them as the snapshot's one broadcast). Compaction, not
+the kernel, bounds how many tombstones a snapshot carries
+(``maintenance.CompactionPolicy``). A doc is alive in exactly one
+generation per term, so the surviving rows of a term form one
+rank-sorted array whatever the layering: its length is the
 exact df, contributions are computed once (float or micro), and each
 block's bound is the exact maximum contribution of its postings
 (``np.maximum.reduceat``) under the CURRENT snapshot's n_docs/avgdl.
@@ -120,11 +129,12 @@ RESULT_SCHEMA = T.StructType(
 
 
 class _Term:
-    """One query term's surviving postings: doc-id-sorted ``ids`` and
-    their BM25 ``contribs`` (float, or int64 micro-units), cut into
-    blocks of ``block_size`` consecutive postings. A block's bound is
-    the largest contribution in it, so it is exact, and in micro mode
-    it is the very integer the block's docs add.
+    """One query term's surviving postings: rank-sorted ``ids`` (dense
+    doc ranks, see ``_kernel``) and their BM25 ``contribs`` (float, or
+    int64 micro-units), cut into blocks of ``block_size`` consecutive
+    postings. A block's bound is the largest contribution in it, so it
+    is exact, and in micro mode it is the very integer the block's docs
+    add.
 
     In batched execution one ``_Term`` per term is shared by every
     query of the group; ``requested`` tracks which blocks the CURRENT
@@ -145,7 +155,7 @@ class _Term:
         self.requested: set[int] = set()
 
     def slice(self, bi: int, start: np.int64, end: np.int64):
-        """(doc_ids, contribs) of block bi restricted to [start, end]."""
+        """(ids, contribs) of block bi restricted to [start, end]."""
         self.requested.add(bi)
         ids = self.ids[self.starts[bi]:self.ends[bi]]
         s = np.searchsorted(ids, start, side="left")
@@ -154,34 +164,16 @@ class _Term:
 
 
 def _topk_one_query(terms: list[_Term], k: int):
-    """Interval-at-a-time block-max top-k. Returns (doc_ids, scores,
-    matched, scored_blocks, total_blocks), ranked (score DESC, doc_id
-    ASC)."""
-    # atomic intervals: cut doc space at every block lo and hi+1. The
-    # hi+1 cut is clamped to avoid int64 overflow when a block ends at
-    # the max doc_id; the widened last interval below restores coverage
-    # of that doc (slice() selects by VALUE, so a too-wide interval end
-    # can never pull in docs a block doesn't contain).
-    int64_max = np.int64(2**63 - 1)
-    clamped = any(bool((t.his == int64_max).any()) for t in terms)
-    cuts = np.unique(
-        np.concatenate(
-            [t.los for t in terms]
-            + [np.minimum(t.his, int64_max - 1) + 1 for t in terms]
-        )
-    )
+    """Interval-at-a-time block-max top-k over dense doc ranks. Returns
+    (ranks, scores, matched, scored_blocks, total_blocks), ranked
+    (score DESC, rank ASC)."""
+    # atomic intervals: cut rank space at every block lo and hi+1 (a
+    # rank is below the doc count, so hi+1 cannot overflow)
+    cuts = np.unique(np.concatenate(
+        [t.los for t in terms] + [t.his + 1 for t in terms]))
     starts = cuts[:-1]
     ends = cuts[1:] - 1  # inclusive
-    if clamped:
-        if ends.size:
-            ends[-1] = int64_max
-        else:  # single block with lo == hi == int64_max
-            starts = np.array([int64_max], dtype=np.int64)
-            ends = np.array([int64_max], dtype=np.int64)
     n_int = starts.size
-    if n_int == 0:
-        return (np.zeros(0, np.int64), np.zeros(0), np.zeros(0, np.int32),
-                0, sum(t.los.size for t in terms))
 
     # per (interval, term): overlapping block index (or -1) and bound
     blk = np.full((len(terms), n_int), -1, dtype=np.int64)
@@ -191,21 +183,6 @@ def _topk_one_query(terms: list[_Term], k: int):
         valid = (i >= 0) & (t.his[np.clip(i, 0, None)] >= starts)
         blk[ti] = np.where(valid, i, -1)
         ub += np.where(valid, t.bounds[np.clip(i, 0, None)], 0.0)
-
-    # clamped residual: a block with lo == hi == int64_max that
-    # coexists with earlier cuts is invisible to the searchsorted
-    # selection above (the widened last interval's start resolves to
-    # an earlier block whose hi < start) — force-select it for the
-    # last interval, and add its bound to that interval's ub so the
-    # pruning gate can never skip an interval it could win.
-    forced: list[tuple[int, int]] = []
-    if clamped and n_int > 0:
-        last = n_int - 1
-        for ti, t in enumerate(terms):
-            bi = len(t.los) - 1
-            if t.los[bi] == int64_max and int(blk[ti, last]) != bi:
-                forced.append((ti, bi))
-                ub[last] += t.bounds[bi]
 
     order = np.argsort(-ub, kind="stable")
     top_docs: np.ndarray = np.zeros(0, np.int64)
@@ -227,12 +204,6 @@ def _topk_one_query(terms: list[_Term], k: int):
             bi = int(blk[ti, ii])
             if bi >= 0:
                 ids_p, c_p = t.slice(bi, s, e)
-                if ids_p.size:
-                    ids_parts.append(ids_p)
-                    c_parts.append(c_p)
-        if forced and ii == n_int - 1:
-            for ti, bi in forced:
-                ids_p, c_p = terms[ti].slice(bi, s, e)
                 if ids_p.size:
                     ids_parts.append(ids_p)
                     c_parts.append(c_p)
@@ -261,29 +232,6 @@ def _topk_one_query(terms: list[_Term], k: int):
     scored = sum(len(t.requested) for t in terms)
     total = sum(t.los.size for t in terms)
     return (top_docs[sel], top_scores[sel], top_matched[sel], scored, total)
-
-
-# the most tombstoned docs a layered snapshot may ship into the kernel
-TOMB_CAP = 2_000_000
-
-
-class TombstoneCapError(ValueError):
-    """A layered snapshot carries more tombstoned docs than the kernel
-    takes (``TOMB_CAP``): compact it, or serve the request by the brute
-    merge-on-read path."""
-
-
-def _capped_tombstones(index: SegmentIndex):
-    """``index.tombstone_arrays()``, or ``TombstoneCapError`` when the
-    set outgrew the cap, so an un-compacted pipeline fails loudly
-    instead of shipping an unbounded set into the kernel."""
-    tomb = index.tombstone_arrays()
-    if tomb is not None and tomb[0].size > TOMB_CAP:
-        raise TombstoneCapError(
-            f"layered snapshot carries {tomb[0].size:,} tombstoned "
-            f"docs (> cap {TOMB_CAP:,}) — run maintenance.compact()"
-        )
-    return tomb
 
 
 def result_schema(micro: bool) -> T.StructType:
@@ -342,6 +290,10 @@ def _kernel(pdf: pd.DataFrame, t2q: dict, k: int, n_docs: int,
     # contributions in the same order), doc-id sorted within it
     order = np.lexsort((ids, codes))
     ids, tfs, dls, codes = ids[order], tfs[order], dls[order], codes[order]
+    # the kernel scores dense doc ranks (``uniq[rank]`` is the doc id):
+    # rank order is doc-id order, so ties break as on doc ids, and an
+    # interval cut at a block's hi + 1 cannot overflow
+    uniq, ranks = np.unique(ids, return_inverse=True)
     tfnorm = tfs / (tfs + K1 * (1.0 - B + B * dls / avgdl))
     runs = np.flatnonzero(np.diff(codes)) + 1
     terms: dict[str, _Term] = {}
@@ -361,7 +313,7 @@ def _kernel(pdf: pd.DataFrame, t2q: dict, k: int, n_docs: int,
             # is HALF_UP-rounded to micro BEFORE summing (the driver
             # oracle's order-independent convention)
             contribs = np.floor(contribs * 1e6 + 0.5).astype(np.int64)
-        terms[term] = _Term(ids[a:b], contribs, block_size)
+        terms[term] = _Term(ranks[a:b], contribs, block_size)
         for qid in qids:
             q2t.setdefault(qid, []).append(term)
     frames = []
@@ -375,7 +327,7 @@ def _kernel(pdf: pd.DataFrame, t2q: dict, k: int, n_docs: int,
             {
                 "query_id": qid,
                 "rank": np.arange(1, n + 1, dtype="int32"),
-                "doc_id": docs,
+                "doc_id": uniq[docs],
                 # float64 accumulators are exact for micro ints
                 # (< 2^53), so this cast is lossless
                 score_name: scores.astype(np.int64) if micro else scores,
@@ -418,7 +370,7 @@ def _driver_topk(index: SegmentIndex, rows: list, k: int,
         for t in dict.fromkeys(tokenize_py(text)):
             t2q.setdefault(t, []).append(qid)
     layered = index.has_deltas
-    tomb = _capped_tombstones(index) if layered else None
+    tomb = index.tombstone_arrays() if layered else None
     cols = POSTING_COLS + (["gen_seq"] if layered else [])
     postings = pd.DataFrame(columns=cols)  # no terms: no scan
     if t2q:
@@ -440,7 +392,6 @@ def wand_topk(
     k: int = 10,
     id_col: str = "query_id",
     text_col: str = "text",
-    n_groups: int | None = None,
     micro: bool = False,
 ) -> DataFrame:
     """Top-k via interval-at-a-time block-max WAND; exact same results
@@ -462,21 +413,14 @@ def wand_topk(
     Spark job, no exchange, no Python worker), and the result is a
     local relation whose ``collect()`` launches no job. Answering
     eagerly is safe because a ``SegmentIndex`` is a fixed snapshot.
-    ``n_groups`` does not apply on this path.
 
     Batched execution (every other frame): queries are hashed into
-    ``n_groups`` groups
-    (default = max(shuffle partitions, index.n_buckets) — each group
-    is a single-task kernel, so group count must scale WITH the
-    index's bucket count: measured at 4M docs / 128 buckets, 64
-    groups serialized the kernel leg at 1892 ms/q while 128 groups
-    served at 962, and at ≤32 buckets the max() leaves the previous
-    shuffle-partitions default untouched; see BENCH/BASELINE.md
-    round-4 knob table) and each posting row shuffles ONCE per group
-    whose queries touch its term — not once per query — and queries
-    inside a group share one ``_Term`` per term. Per-query results are
-    bit-identical to one-query-per-group execution and to the driver
-    placement (the kernel is the same; only placement changes).
+    max(shuffle partitions, index.n_buckets) groups and each posting
+    row shuffles ONCE per group whose queries touch its term — not
+    once per query — and queries inside a group share one ``_Term``
+    per term. Per-query results are bit-identical to one-query-per-group
+    execution and to the driver placement (the kernel is the same; only
+    placement changes).
 
     ``micro=True`` switches the kernel to exact integer micro-unit
     scoring: each per-posting BM25 contribution is HALF_UP-rounded to
@@ -499,19 +443,21 @@ def wand_topk(
 
     # Layered (merge-on-read) snapshots are served EXACTLY without a
     # compaction barrier: the kernel drops the superseded rows and
-    # counts df over the survivors. The tombstone set is delta-sized by
-    # policy and ships to the kernel as the snapshot's one broadcast,
-    # capped (``_capped_tombstones``).
+    # counts df over the survivors. The tombstone set ships to the
+    # kernel as the snapshot's one broadcast; compaction bounds its size
+    # (``maintenance.CompactionPolicy``).
     layered = index.has_deltas
-    tomb_bc = None
-    if layered:
-        _capped_tombstones(index)
-        tomb_bc = index.tombstone_broadcast()
+    tomb_bc = index.tombstone_broadcast() if layered else None
     # pin parallelism: the per-query loop is CPU-bound Python/numpy —
     # don't let AQE coalesce the (small-bytes) shuffle under the core
-    # count and serialize it
+    # count and serialize it. Each group is a single-task kernel, so
+    # the group count scales WITH the index's bucket count: measured at
+    # 4M docs / 128 buckets, 64 groups serialized the kernel leg at
+    # 1892 ms/q while 128 groups served at 962, and at ≤32 buckets the
+    # max() leaves the shuffle-partitions default untouched (see
+    # BENCH/BASELINE.md round-4 knob table)
     n_part = int(index.spark.conf.get("spark.sql.shuffle.partitions"))
-    n_grp = int(n_groups) if n_groups else max(n_part, index.n_buckets)
+    n_grp = max(n_part, index.n_buckets)
     # the query side, ONE broadcast: a row per (bucket, term, group)
     # with that group's query ids — the postings join fans out per
     # GROUP, never per query. The query terms sit in one partition

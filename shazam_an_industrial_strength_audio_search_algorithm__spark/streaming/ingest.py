@@ -6,8 +6,8 @@ manual batch step).
 Design: a file-source stream of corpus rows feeds ``foreachBatch``;
 each micro-batch applies the SAME snapshot-committing upsert as batch
 maintenance (``operators/maintenance.apply_updates``), by default as
-a merge-on-read delta layer (O(batch) write cost, optional periodic
-``compact()``). Exactly-once comes from the pairing of (a) Structured
+a merge-on-read delta layer (O(batch) write cost, optional
+policy-driven ``compact()``). Exactly-once comes from the pairing of (a) Structured
 Streaming's checkpointed source offsets and (b) by-key idempotent
 snapshot commits — a replayed batch re-applies the same keys and the
 tombstone-supersession (delta) / overwrite (rebuild) semantics land
@@ -48,7 +48,6 @@ def stream_ingest(
     trigger_available_now: bool = True,
     max_files_per_trigger: int | None = None,
     mode: str = "delta",
-    compact_every: int | None = None,
     compact_policy=None,
 ):
     """Ingest corpus parquet files appearing under ``source_dir`` into
@@ -59,16 +58,14 @@ def stream_ingest(
     micro-batch lands as an O(batch) merge-on-read layer + tombstones
     — per-batch cost tracks BATCH size, not index size, which is what
     keeps a continuous stream viable against a 100 TB index.
-    ``compact_every=N`` folds the accumulated layers back into one
-    generation after every N batches (the Lucene tiered-merge cadence,
-    coarse-grained); ``compact_policy`` (a
-    ``maintenance.CompactionPolicy``) instead compacts by MEASURED
-    state — layer count / accumulated delta volume — after each batch
-    (wand_topk serves layered snapshots exactly since round 5, but
-    pruning sharpness and the tombstone-closure size both degrade as
-    layers pile up — the policy keeps serving at peak). Leave both
-    None and run
-    ``maintenance.compact()`` on your own schedule. ``mode="rebuild"``
+    ``compact_policy`` (a ``maintenance.CompactionPolicy``) folds the
+    accumulated layers back into one generation by MEASURED state —
+    layer count / accumulated delta volume — after each batch
+    (wand_topk serves layered snapshots exactly, but pruning sharpness
+    and the tombstone set both degrade as layers pile up — the policy
+    keeps serving at peak; ``max_layers=1`` compacts after every
+    batch). Leave it None and run ``maintenance.compact()`` on your
+    own schedule. ``mode="rebuild"``
     runs the compaction merge on each staged batch, re-encoding its
     affected buckets (copy-on-write; keeps the index single-layer at
     all times at much higher write amplification).
@@ -84,7 +81,6 @@ def stream_ingest(
     """
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
         apply_updates,
-        compact,
     )
 
     reader = spark.readStream.schema(CORPUS_SCHEMA)
@@ -97,9 +93,9 @@ def stream_ingest(
             return
         # replay-deterministic intra-batch dedup: if one micro-batch
         # carries the same (repo, path, commit) twice with different
-        # content, the winner must not depend on partition layout
-        # (apply_updates' fallback dedup does) — otherwise a crash +
-        # Structured Streaming replay of this batch could commit
+        # content, the winner must not depend on partition layout —
+        # otherwise a crash + Structured Streaming replay of this batch
+        # could commit
         # DIFFERENT postings than the first attempt. Keep the row with
         # the lexicographically greatest content sha: arbitrary but
         # identical on every replay.
@@ -117,8 +113,6 @@ def stream_ingest(
         # apply_updates' per-batch uniqueness probe job
         apply_updates(spark, index_dir, add_corpus=deduped, mode=mode,
                       assume_unique=True, auto_compact=compact_policy)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact(spark, index_dir)
 
     writer = (
         stream.writeStream.foreachBatch(upsert_batch)

@@ -9,7 +9,9 @@ splitting the query file across ``nj=32`` background jobs
 (``/root/reference/path.sh:49-50``, ``README.md:51,58-66``). The
 Spark-first twin is a checkpointed file-source stream: query files
 appearing under a directory are matched per micro-batch with
-block-max WAND, source offsets checkpoint per batch, and a restart
+block-max WAND (``wand_topk``, the one pruned executor, which serves
+compacted and layered snapshots alike, so every batch writes one
+schema), source offsets checkpoint per batch, and a restart
 resumes at the first unprocessed FILE — the milestone granularity the
 reference hand-rolls, provided by the engine.
 
@@ -55,16 +57,13 @@ def stream_match(
 
     ``micro=True`` scores in exact integer micro-units (the
     driver-gate convention): the result column is ``score_micro``
-    (long) instead of ``score`` (double), identical across the WAND
-    and merge-on-read paths, so streamed output hash-matches the
-    batch engines row for row.
+    (long) instead of ``score`` (double), so streamed output
+    hash-matches the batch engines row for row.
     """
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
         SegmentIndex,
-        segment_topk,
     )
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
-        TombstoneCapError,
         wand_topk,
     )
 
@@ -79,31 +78,7 @@ def stream_match(
         # reopen per batch: a concurrent stream_ingest may have
         # committed new snapshots (possibly delta layers) mid-stream
         idx = SegmentIndex.open(spark, index_dir)
-        score_c = "score_micro" if micro else "score"
-        try:
-            # WAND serves layered snapshots exactly too (round 5) —
-            # a concurrent stream_ingest committing delta layers
-            # mid-stream no longer forces the brute path
-            res = wand_topk(idx, batch_df, k=k, micro=micro)
-        except TombstoneCapError:
-            # tombstone set outgrew the kernel's cap (a
-            # long-uncompacted pipeline): serve this batch exactly via
-            # the brute merge-on-read path instead of wedging the
-            # stream, with the decode counters nulled to keep one
-            # output schema across batches
-            res = segment_topk(idx, batch_df, k=k, micro=micro).select(
-                "query_id",
-                # match WAND's widths exactly: mixed INT64/INT32 files
-                # under one out_dir make the later read
-                # listing-order-nondeterministic (schema inferred from
-                # one sampled footer, then the vectorized reader hits
-                # the other width and throws)
-                F.col("rank").cast("int").alias("rank"),
-                "doc_id", score_c,
-                F.col("matched_terms").cast("int").alias("matched_terms"),
-                F.lit(None).cast("int").alias("blocks_decoded"),
-                F.lit(None).cast("int").alias("blocks_total"),
-            )
+        res = wand_topk(idx, batch_df, k=k, micro=micro)
         # idempotent per-batch commit: a replay of batch N rewrites
         # out_dir/batch_id=N with identical content
         res.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")

@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -25,6 +26,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
     SegmentIndex,
     build_segment_index,
+    segment_topk,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.sources.corpus import (
     make_corpus,
@@ -65,14 +67,13 @@ def test_kill_mid_batch_resume_is_identical(spark, setup, tmp_path):
     # control: uninterrupted run
     full = _sorted(
         batch_match_resumable(idx, queries, out_full, k=K,
-                              n_groups=N_GROUPS, mode="wand")
+                              n_groups=N_GROUPS)
     )
 
     # 'kill' after two groups (the groups= limiter stands in for the
     # crash, like buckets= does on the build)
     partial = batch_match_resumable(
-        idx, queries, out_int, k=K, n_groups=N_GROUPS, mode="wand",
-        groups=[0, 1],
+        idx, queries, out_int, k=K, n_groups=N_GROUPS, groups=[0, 1],
     )
     prog = batch_progress(out_int)
     assert sorted(prog["groups"]) == [0, 1]
@@ -85,7 +86,7 @@ def test_kill_mid_batch_resume_is_identical(spark, setup, tmp_path):
     # restart: completes the remaining groups only
     resumed = _sorted(
         batch_match_resumable(idx, queries, out_int, k=K,
-                              n_groups=N_GROUPS, mode="wand")
+                              n_groups=N_GROUPS)
     )
     pd.testing.assert_frame_equal(full, resumed)
     # committed groups were skipped, not recomputed
@@ -125,18 +126,27 @@ def test_param_mismatch_refuses_resume(spark, setup, tmp_path):
     with pytest.raises(ValueError, match="different parameters"):
         batch_match_resumable(idx, queries, out, k=K + 1,
                               n_groups=N_GROUPS)
+    # a checkpoint of brute-force groups never mixes with WAND groups
+    meta_path = f"{out}/manifests/batch.json"
+    meta = json.load(open(meta_path))
+    assert meta["mode"] == "wand"
+    json.dump({**meta, "mode": "brute"}, open(meta_path, "w"))
+    with pytest.raises(ValueError, match="different parameters"):
+        batch_match_resumable(idx, queries, out, k=K, n_groups=N_GROUPS)
 
 
-def test_brute_mode_agrees_with_wand(spark, setup, tmp_path):
+def test_batch_agrees_with_brute(spark, setup, tmp_path):
+    """Every group runs WAND; the committed batch equals the brute-force
+    reference (``segment_topk``) on the same queries."""
     idx, queries = setup
     w = _sorted(
         batch_match_resumable(idx, queries, str(tmp_path / "w"), k=K,
-                              n_groups=2, mode="wand")
+                              n_groups=2)
     )
-    b = _sorted(
-        batch_match_resumable(idx, queries, str(tmp_path / "b"), k=K,
-                              n_groups=2, mode="brute")
-    )
+    b = _sorted(segment_topk(idx, queries, k=K))
     pd.testing.assert_frame_equal(
-        w[["query_id", "rank", "doc_id"]], b[["query_id", "rank", "doc_id"]]
+        w[["query_id", "rank", "doc_id", "matched_terms"]],
+        b[["query_id", "rank", "doc_id", "matched_terms"]],
+        check_dtype=False,
     )
+    assert np.allclose(w["score"], b["score"], rtol=1e-9, atol=1e-12)

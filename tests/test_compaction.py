@@ -282,21 +282,6 @@ def test_wand_layered_tombstone_semantics(spark, layered):
     assert len(by_q["q_readd"]) >= 1 and len(by_q["q_over"]) == 1
 
 
-def test_wand_layered_tombstone_cap(spark, layered, monkeypatch):
-    """An un-compacted pipeline whose tombstone set outgrows the cap
-    fails loudly with a compact() pointer instead of shipping an
-    unbounded set into every kernel task."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators import (
-        wand,
-    )
-
-    d, final = layered
-    idx = SegmentIndex.open(spark, d)
-    monkeypatch.setattr(wand, "TOMB_CAP", 1)
-    with pytest.raises(ValueError, match="compact"):
-        wand_topk(idx, _queries(spark, final), k=K)
-
-
 def test_wand_layered_reuses_one_tombstone_broadcast(spark, layered,
                                                     monkeypatch):
     """The tombstone arrays are per-snapshot state: every WAND call on

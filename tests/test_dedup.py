@@ -71,10 +71,10 @@ def test_exact_dup_groups_bounds_degenerate_membership(spark):
 
 
 def test_last_wins_strict_default_is_deterministic(spark):
-    """strict=True (the default): unique keys pass through untouched;
-    duplicate keys without ingest_seq raise instead of silently
-    picking a partition-layout-dependent winner; with ingest_seq the
-    true last writer wins."""
+    """Unique keys pass through untouched; duplicate keys without
+    ingest_seq raise instead of silently picking a
+    partition-layout-dependent winner; with ingest_seq the true last
+    writer wins."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
         dedup_last_wins,
     )
@@ -90,8 +90,6 @@ def test_last_wins_strict_default_is_deterministic(spark):
     )
     with pytest.raises(ValueError, match="ingest_seq"):
         dedup_last_wins(dup).collect()
-    # layout-dependent fallback is opt-in only
-    assert dedup_last_wins(dup, strict=False).count() == 1
 
     seq = spark.createDataFrame(
         [("r", "a", "c1", "old", 1), ("r", "a", "c1", "new", 2)],

@@ -166,7 +166,8 @@ def test_text_compaction_race(spark, tmp_path, monkeypatch):
     2 buckets and one keeping the layout: each reserves its own
     generation before staging (the winner, finding ``c3`` taken,
     stages ``c4``), so neither writes into the other's staging; the
-    one that commits second raises, and its retry commits."""
+    one that commits second removes its staging and raises, and its
+    retry commits."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.sources.corpus import (
         make_corpus,
     )
@@ -179,7 +180,25 @@ def test_text_compaction_race(spark, tmp_path, monkeypatch):
     )
     apply_updates(spark, d, mode="delta",
                   add_corpus=spark.createDataFrame(_docs(pdf, 50, 65)))
-    _race(monkeypatch, segments, lambda: compact(spark, d))
+    checked = []
+
+    def winner():
+        compact(spark, d)
+        # before the loser's commit: each staging holds only its own
+        # writer's layout
+        checked.append("c3/c4")
+        assert sorted(os.listdir(f"{d}/manifests")) == \
+            ["c3", "c4", "init", "u2"]
+        for gen, n_buckets in (("c3", 2), ("c4", 4)):
+            params = json.load(open(f"{d}/manifests/{gen}/params.json"))
+            assert params["n_buckets"] == n_buckets
+            assert sorted(n for n in os.listdir(f"{d}/data/dt_{gen}")
+                          if n.startswith("bucket=")) == \
+                [f"bucket={b}" for b in params["affected_buckets"]]
+        assert json.load(open(f"{d}/manifests/c3/params.json"))[
+            "affected_buckets"] == [0, 1]
+
+    _race(monkeypatch, segments, winner)
     with pytest.raises(CommitConflict) as e:
         compact(spark, d, n_buckets=2)
     assert (e.value.version, e.value.parent, e.value.current) == (3, 2, 4)
@@ -187,16 +206,10 @@ def test_text_compaction_race(spark, tmp_path, monkeypatch):
     assert (snap["version"], snap["operation"], snap["n_buckets"]) == \
         (4, "compact", 4)
     assert "_c3" not in json.dumps(snap)  # no path into the loser's staging
-    assert sorted(os.listdir(f"{d}/manifests")) == ["c3", "c4", "init", "u2"]
-    # each staging holds only its own writer's layout
-    for gen, n_buckets in (("c3", 2), ("c4", 4)):
-        params = json.load(open(f"{d}/manifests/{gen}/params.json"))
-        assert params["n_buckets"] == n_buckets
-        assert sorted(n for n in os.listdir(f"{d}/data/dt_{gen}")
-                      if n.startswith("bucket=")) == \
-            [f"bucket={b}" for b in params["affected_buckets"]]
-    assert json.load(open(f"{d}/manifests/c3/params.json"))[
-        "affected_buckets"] == [0, 1]
+    assert checked == ["c3/c4"]
+    # the loser removed its reservation and staging
+    assert sorted(os.listdir(f"{d}/manifests")) == ["c4", "init", "u2"]
+    assert not [n for n in os.listdir(f"{d}/data") if n.endswith("_c3")]
     idx = segments.SegmentIndex.open(spark, d)
     assert idx.doc_lens().count() == 65
     # the loser re-reads and retries: it commits on the winner's snapshot
@@ -211,8 +224,8 @@ def test_text_rebuild_race(spark, tmp_path, monkeypatch):
     one named its generation and before it staged (while it derives
     its doc ids): each reserves its own ``rbN`` (the winner, finding
     ``rb2`` taken, stages ``rb3``), so neither writes into — or clears
-    — the other's staging; this one, overtaken, raises on commit, and
-    its retry commits."""
+    — the other's staging; this one, overtaken, removes its staging and
+    raises on commit, and its retry commits."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.sources.corpus import (
         make_corpus,
     )
@@ -226,21 +239,35 @@ def test_text_rebuild_race(spark, tmp_path, monkeypatch):
             n_buckets=4, hot_df=8, block_size=16,
         )
 
+    checked = []
+
+    def staged():
+        # before the loser's commit: each staging holds only its own
+        # writer's docs
+        checked.append("rb2/rb3")
+        assert sorted(os.listdir(f"{d}/manifests")) == ["init", "rb2", "rb3"]
+        want = {
+            gen: {r["doc_id"] for r in with_doc_id(spark.createDataFrame(
+                _docs(pdf, lo, hi))).select("doc_id").collect()}
+            for gen, lo, hi in (("rb2", 0, 65), ("rb3", 0, 80))
+        }
+        assert _staged_ids(spark, d, ("rb2", "rb3")) == want
+
+    def winner():
+        build(0, 80)
+        _race(monkeypatch, segments, staged)
+
     build(0, 50)
-    _race(monkeypatch, segments, lambda: build(0, 80), name="with_doc_id")
+    _race(monkeypatch, segments, winner, name="with_doc_id")
     with pytest.raises(CommitConflict) as e:
         build(0, 65)
     assert (e.value.version, e.value.parent, e.value.current) == (3, 1, 2)
     snap = read_snapshot(d)
     assert (snap["version"], snap["gen"], snap["n_docs"]) == (2, "rb3", 80)
-    assert sorted(os.listdir(f"{d}/manifests")) == ["init", "rb2", "rb3"]
-    # each staging holds only its own writer's docs
-    want = {
-        gen: {r["doc_id"] for r in with_doc_id(spark.createDataFrame(
-            _docs(pdf, lo, hi))).select("doc_id").collect()}
-        for gen, lo, hi in (("rb2", 0, 65), ("rb3", 0, 80))
-    }
-    assert _staged_ids(spark, d, ("rb2", "rb3")) == want
+    assert checked == ["rb2/rb3"]
+    # the loser removed its reservation and staging
+    assert sorted(os.listdir(f"{d}/manifests")) == ["init", "rb3"]
+    assert not [n for n in os.listdir(f"{d}/data") if n.endswith("_rb2")]
     assert segments.SegmentIndex.open(spark, d).doc_lens().count() == 80
     # the loser re-reads and retries: it commits on the winner's snapshot
     assert build(0, 65).snapshot_version == 3

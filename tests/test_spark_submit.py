@@ -209,3 +209,53 @@ def test_ann_cli_lifecycle_matches_library(spark, tmp_path):
     assert rp.main(["ann-query", "--index", idx, "--queries", qdir,
                     "--out", out2, "--k", "5"]) == 0
     assert rows(spark.read.parquet(f"{out2}/topk")) == got
+
+
+def test_query_wand_serves_layered_snapshot(spark, tmp_path, corpus_pdf,
+                                            queries_pdf):
+    """``update --mode delta`` then ``query --wand``: the CLI answers the
+    layered snapshot with WAND itself (its pruning counters are in the
+    output), and its top-k equals the brute-force ``segment_topk``."""
+    import importlib.util
+
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
+        SegmentIndex,
+        segment_topk,
+    )
+
+    spec = importlib.util.spec_from_file_location(
+        "run_pipeline_wand", os.path.join(REPO, "scripts", "run_pipeline.py")
+    )
+    rp = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(rp)
+
+    base, adds = str(tmp_path / "base"), str(tmp_path / "adds")
+    qpath, idx = str(tmp_path / "queries"), str(tmp_path / "idx")
+    out = str(tmp_path / "out")
+    corpus_pdf.iloc[:40].to_parquet(base, index=False)
+    # new docs, plus two overwritten keys (tombstones on the base layer)
+    pd.concat([
+        corpus_pdf.iloc[40:],
+        corpus_pdf.iloc[:2].assign(content=lambda f: f["content"] + " zz"),
+    ]).to_parquet(adds, index=False)
+    queries_pdf[["query_id", "text"]].to_parquet(qpath, index=False)
+
+    assert rp.main(["build", "--corpus", base, "--index", idx,
+                    "--n-buckets", "4", "--block-size", "4"]) == 0
+    assert rp.main(["update", "--index", idx, "--add", adds,
+                    "--mode", "delta"]) == 0
+    assert SegmentIndex.open(spark, idx).has_deltas
+    assert rp.main(["query", "--index", idx, "--queries", qpath,
+                    "--out", out, "--k", "5", "--wand"]) == 0
+
+    got = spark.read.parquet(f"{out}/topk").toPandas()
+    assert "blocks_decoded" in got.columns
+    assert got["blocks_decoded"].notna().all() and len(got) > 0
+    want = segment_topk(SegmentIndex.open(spark, idx),
+                        spark.read.parquet(qpath), k=5).toPandas()
+    cols = ["query_id", "rank", "doc_id", "matched_terms"]
+    got = got.sort_values(["query_id", "rank"], ignore_index=True)
+    want = want.sort_values(["query_id", "rank"], ignore_index=True)
+    pd.testing.assert_frame_equal(got[cols], want[cols], check_dtype=False)
+    for g, w in zip(got["score"], want["score"]):
+        assert abs(g - w) <= 1e-9 * max(1.0, abs(w))

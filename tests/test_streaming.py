@@ -287,9 +287,13 @@ def test_stream_match_resumes_at_unprocessed_files(
 
 
 def test_stream_ingest_with_periodic_compaction(spark, corpus_pdf, tmp_path):
-    """compact_every folds the delta layers back after every N
-    micro-batches: the drained index is single-generation (WAND-ready)
-    and still rank-correct."""
+    """A compaction policy of one layer folds the delta layer back after
+    every micro-batch: the drained index is single-generation and
+    still rank-correct."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
+        CompactionPolicy,
+    )
+
     base = spark.createDataFrame(corpus_pdf.iloc[:30])
     idx_dir = str(tmp_path / "cidx")
     build_segment_index(spark, with_doc_id(base), idx_dir, n_buckets=4,
@@ -300,7 +304,9 @@ def test_stream_ingest_with_periodic_compaction(spark, corpus_pdf, tmp_path):
     spark.createDataFrame(corpus_pdf.iloc[40:50]).write.mode("append").parquet(src)
 
     q = stream_ingest(spark, src, idx_dir, ckpt, trigger_available_now=True,
-                      max_files_per_trigger=2, compact_every=1)
+                      max_files_per_trigger=2,
+                      compact_policy=CompactionPolicy(max_layers=1,
+                                                      rebucket=None))
     q.awaitTermination(300)
 
     snap = read_snapshot(idx_dir)

@@ -220,59 +220,59 @@ def test_wand_never_reads_the_block_payloads(spark, seg, layered_seg,
                                         abs_tol=1e-12), (which, micro)
 
 
-def test_interval_kernel_covers_max_int64_doc_id():
-    """A doc whose id is exactly 2**63-1 (one xxhash64 in 2**64 inputs)
-    must not fall out of interval coverage: the hi+1 interval cut is
-    clamped against int64 overflow, and the widened last interval has
-    to absorb the clamp so WAND stays exactly equal to brute force."""
-    import numpy as np
-
+def _kernel_docs(terms: dict, block_size: int, k: int):
+    """Run the WAND kernel for one query over ``terms`` (term → list of
+    (doc_id, tf) postings, every doc of length 10): its ranked doc ids
+    and the set of its ``blocks_total`` values."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
-        _Term,
-        _topk_one_query,
+        _kernel,
     )
 
-    max_id = np.int64(2**63 - 1)
-    ids = np.array([5, 100, max_id], dtype=np.int64)
+    pdf = pd.DataFrame(
+        [(t, d, tf, 10) for t, rows in terms.items() for d, tf in rows],
+        columns=["term", "doc_id", "tf", "doc_len"],
+    )
+    out = _kernel(pdf, {t: ["q"] for t in terms}, k, n_docs=10, avgdl=10.0,
+                  block_size=block_size, micro=False, tomb=None)
+    return [int(d) for d in out["doc_id"]], set(out["blocks_total"])
+
+
+def test_interval_kernel_covers_max_int64_doc_id():
+    """Docs whose ids are exactly -2**63 and 2**63-1 (the ends of the
+    xxhash64 range) must not fall out of interval coverage: the kernel
+    cuts intervals in dense doc ranks, so WAND stays exactly equal to
+    brute force at the ends of the id range."""
+    min_id, max_id = -2**63, 2**63 - 1
     # one block holding all three docs
-    term = _Term(ids, np.array([0.1, 0.2, 0.3]), block_size=8)
-    docs, scores, matched, scored, total = _topk_one_query([term], k=3)
-    assert int(max_id) in set(int(d) for d in docs), (
+    docs, _ = _kernel_docs({"a": [(min_id, 1), (5, 2), (max_id, 3)]},
+                           block_size=8, k=3)
+    assert max_id in docs, (
         "doc at int64 max silently dropped by interval construction"
     )
-    assert len(docs) == 3
+    assert set(docs) == {min_id, 5, max_id}
     # highest contribution (the max-id doc) must rank first
-    assert int(docs[0]) == int(max_id)
+    assert docs[0] == max_id
 
 
 def test_interval_kernel_covers_lone_max_block_among_other_cuts():
-    """The residual of the clamp fix: a block with lo == hi ==
-    int64_max COEXISTING with other blocks' cuts. searchsorted
-    resolves the widened last interval to an earlier block, so the
-    lone max block must be force-selected (and its bound added to the
-    interval's ub) or its doc silently vanishes."""
-    import numpy as np
-
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
-        _Term,
-        _topk_one_query,
+    """A block with lo == hi == int64_max COEXISTING with other blocks'
+    cuts (and a block starting at int64 min): every doc of every block
+    is scored, and the bound of the lone max block reaches the pruning
+    gate, so its doc cannot silently vanish."""
+    min_id, max_id = -2**63, 2**63 - 1
+    docs, totals = _kernel_docs(
+        {
+            # term a, blocks of 2: [5, 100] and the lone [max, max] block
+            "a": [(5, 1), (100, 2), (max_id, 3)],
+            # term b: one block whose cuts fall between a's blocks
+            "b": [(min_id, 1), (200, 1)],
+        },
+        block_size=2, k=5,
     )
-
-    max_id = np.int64(2**63 - 1)
-    # term A, blocks of 2: [5,100] and the lone [max,max] block
-    ta = _Term(np.array([5, 100, max_id], dtype=np.int64),
-               np.array([0.1, 0.2, 0.3]), block_size=2)
-    assert ta.los.tolist() == [5, int(max_id)]
-    # term B: one block whose cuts make the last interval start BELOW
-    # max (so searchsorted picks B's block, never A's max block)
-    tb = _Term(np.array([7, 200], dtype=np.int64),
-               np.array([0.1, 0.1]), block_size=2)
-    docs, scores, matched, scored, total = _topk_one_query([ta, tb], k=5)
-    got = set(int(d) for d in docs)
-    assert int(max_id) in got, (
+    assert max_id in docs, (
         "lone [max,max] block dropped when coexisting with other cuts"
     )
-    assert got == {5, 7, 100, 200, int(max_id)}
+    assert set(docs) == {min_id, 5, 100, 200, max_id}
     # highest contribution (the max-id doc) must rank first
-    assert int(docs[0]) == int(max_id)
-    assert total == 3
+    assert docs[0] == max_id
+    assert totals == {3}
