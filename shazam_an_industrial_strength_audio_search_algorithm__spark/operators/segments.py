@@ -58,9 +58,10 @@ Scale design (the 100 TB story):
   merge order.
 - ``doc_len`` is inlined in the payload and in ``doc_terms``:
   scoring needs no norms join.
-- One reader: every postings read (WAND, brute top-k, boolean,
-  positional, compaction's merge) is a scan of the ``doc_terms``
-  columns, bucket-pruned the same way. WAND cuts each term's
+- One layout: every postings read (WAND, brute top-k, boolean,
+  positional, compaction's merge) reads the ``doc_terms`` columns,
+  bucket-pruned the same way — a JVM scan, or, for WAND's driver
+  placement, an Arrow read of the same bucket files. WAND cuts each term's
   surviving rows into blocks of ``block_size`` and bounds them at
   query time, under the current snapshot's n_docs/avgdl.
 - The ``segments`` block table (payloads with raw max_tf/min_dl
@@ -78,10 +79,14 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.bm25 import (
     B,
@@ -202,6 +207,10 @@ DOC_LENS_SCHEMA = T.StructType(
 )
 TOMBSTONES_SCHEMA = T.StructType([DOC_TERMS_SCHEMA["doc_id"]])
 
+# a posting row as WAND reads it from the doc_terms columns (both of
+# its placements; ``gen_seq`` is added on a layered snapshot)
+POSTING_COLS = ["term", "doc_id", "tf", "doc_len"]
+
 
 def doc_terms_schema(store_positions: bool) -> T.StructType:
     """``DOC_TERMS_SCHEMA``, without ``positions`` unless stored."""
@@ -222,6 +231,62 @@ def as_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
 # ---------------------------------------------------------------------------
 def bucket_col(term_col, n_buckets: int):
     return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast("int")
+
+
+# XXH64, as Spark's ``xxhash64`` runs it over a string (its UTF-8
+# bytes, seed 42): the driver's twin of ``bucket_col`` (``bucket_py``)
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_SPARK_HASH_SEED = 42
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def xxhash64_py(data: bytes, seed: int = _SPARK_HASH_SEED) -> int:
+    """XXH64 of ``data`` as a signed 64-bit int: Spark's ``xxhash64``
+    of a string column is ``xxhash64_py(s.encode("utf-8"))``."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed & _M64,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            lanes = np.frombuffer(data, "<u8", 4, i).tolist()
+            v = [_xxh64_round(a, lane) for a, lane in zip(v, lanes)]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _xxh64_round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        lane = int.from_bytes(data[i:i + 8], "little")
+        h = (_rotl(h ^ _xxh64_round(0, lane), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        lane = int.from_bytes(data[i:i + 4], "little")
+        h = (_rotl(h ^ (lane * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for byte in data[i:]:
+        h = _rotl(h ^ (byte * _P5 & _M64), 11) * _P1 & _M64
+    h = ((h ^ (h >> 33)) * _P2) & _M64
+    h = ((h ^ (h >> 29)) * _P3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def bucket_py(term: str, n_buckets: int) -> int:
+    """``bucket_col`` of one term, computed on the driver (pinned equal
+    to the JVM expression by tests/test_segments.py)."""
+    return xxhash64_py(term.encode("utf-8")) % n_buckets
 
 
 def _encode_partition(avgdl: float, block_size: int):
@@ -808,14 +873,24 @@ def build_segment_index(
 class SegmentIndex:
     """Reader over a committed snapshot of the index.
 
-    Postings are read one way: a JVM scan of the ``doc_terms``
-    columns, bucket-pruned to the query terms. ``postings_for_query_terms``,
-    ``postings_for_terms``, ``postings_for_term_prefixes``,
-    ``positions_for_query_terms`` and ``merged_doc_terms`` resolve
-    tombstones and count ``df`` over the surviving rows in the JVM, with
-    no Python on the path; WAND (``wand.py``) reads the same rows, with
-    ``gen_seq``, and resolves them in its kernel, where it cuts each
-    term's postings into blocks and bounds them.
+    Postings have one layout, the ``doc_terms`` columns partitioned by
+    term bucket, and two readers of it, pinned equal by
+    tests/test_segments.py:
+
+    - the JVM scan, bucket-pruned to the query terms
+      (``terms_filter`` or a broadcast term side).
+      ``postings_for_query_terms``, ``postings_for_terms``,
+      ``postings_for_term_prefixes``, ``positions_for_query_terms`` and
+      ``merged_doc_terms`` resolve tombstones and count ``df`` over the
+      surviving rows in the JVM, with no Python on the path; WAND's
+      grouped placement joins the same scan;
+    - the driver's Arrow read of the bucket files the snapshot names
+      (``local_postings``; ``bucket_py`` is ``bucket_col``'s twin),
+      with no Spark job: WAND's driver placement.
+
+    WAND (``wand.py``) reads the rows with ``gen_seq`` and resolves
+    them in its kernel, where it cuts each term's postings into blocks
+    and bounds them.
 
     A committed snapshot never changes, so its read state is built once
     per instance, on first use, and lives as long as the instance:
@@ -826,10 +901,13 @@ class SegmentIndex:
       instead of inferring it from parquet footers (a job per
       generation root); a bucket list narrows it to a static partition
       filter;
+    - the data files of each parquet dir the driver reader has read
+      (``_listed``), listed once;
     - on layered snapshots, the tombstones as sorted
-      ``(doc_id, tomb_seq)`` arrays (WAND's driver placement), their
-      one Spark broadcast (its grouped placement) and their one local
-      frame (the JVM postings readers).
+      ``(doc_id, tomb_seq)`` arrays, read by the driver reader (WAND's
+      driver placement), their one Spark broadcast (its grouped
+      placement) and their one local frame (the JVM postings
+      readers).
 
     Reopen (``SegmentIndex.open``) to read a newer snapshot."""
 
@@ -840,6 +918,8 @@ class SegmentIndex:
                          compare=False)
     _tomb: dict = field(default_factory=dict, init=False, repr=False,
                         compare=False)
+    _files: dict = field(default_factory=dict, init=False, repr=False,
+                         compare=False)
 
     @classmethod
     def open(cls, spark: SparkSession, index_dir: str,
@@ -895,6 +975,17 @@ class SegmentIndex:
     def _empty(self, kind: str) -> DataFrame:
         return self.spark.createDataFrame([], self._schema(kind))
 
+    def _check_base_map(self, bmap: dict) -> None:
+        """Raise ``KeyError`` unless the base map ``bmap`` names every
+        bucket: silently skipping one would truncate query results
+        (layer maps are sparse by design)."""
+        for b in range(self.n_buckets):
+            if str(b) not in bmap:
+                raise KeyError(
+                    f"snapshot v{self.version} bucket map is missing "
+                    f"bucket {b} — corrupt or truncated snapshot"
+                )
+
     def _scan_map(self, kind: str, bmap: dict,
                   strict: bool = False) -> DataFrame | None:
         """One generation map's bucket paths → a single DataFrame (or
@@ -910,13 +1001,10 @@ class SegmentIndex:
         the map — a base snapshot must name every bucket, and silently
         skipping one would truncate query results; layer maps are
         sparse by design."""
+        if strict:
+            self._check_base_map(bmap)
         by_root: dict[str, list[str]] = {}
         for b in range(self.n_buckets):
-            if strict and str(b) not in bmap:
-                raise KeyError(
-                    f"snapshot v{self.version} bucket map is missing "
-                    f"bucket {b} — corrupt or truncated snapshot"
-                )
             rel = bmap.get(str(b), {}).get(kind)
             if rel is None:
                 continue
@@ -976,44 +1064,91 @@ class SegmentIndex:
     def doc_terms(self, buckets: list[int] | None = None) -> DataFrame:
         return self._read_buckets("doc_terms", buckets)
 
-    def tombstones(self) -> DataFrame | None:
-        """(doc_id, gen_seq) union of the layers' tombstone sets, or
-        None when no layer carries deletes. A tombstone at gen_seq s
-        supersedes postings with gen_seq < s (re-adds in the SAME
-        update survive their own tombstone)."""
-        parts = []
-        for i, layer in enumerate(self.layers):
-            rel = layer.get("tombstones")
-            if rel:
-                parts.append(
-                    self.spark.read.schema(TOMBSTONES_SCHEMA)
-                    .parquet(f"{self.index_dir}/{rel}")
-                    .select("doc_id", F.lit(i + 1).alias("gen_seq"))
+    def _listed(self, rel: str | None, required: bool = False) -> list[str]:
+        """The data files of the parquet dir ``rel`` (relative to the
+        index dir), listed once per instance and skipped as Spark skips
+        them: names beginning with ``_`` or ``.`` (``_SUCCESS``,
+        ``.crc``, ``_temporary``). An absent dir holds none, unless
+        ``required``."""
+        if rel not in self._files:
+            path = f"{self.index_dir}/{rel}"
+            if rel and os.path.isdir(path):
+                self._files[rel] = sorted(
+                    e.path for e in os.scandir(path)
+                    if e.is_file() and not e.name.startswith(("_", "."))
                 )
-        if not parts:
-            return None
-        out = parts[0]
-        for d in parts[1:]:
-            out = out.unionByName(d)
-        return out
+            elif required:
+                raise FileNotFoundError(f"snapshot v{self.version} names "
+                                        f"{rel}, which does not exist")
+            else:
+                self._files[rel] = []
+        return self._files[rel]
+
+    def _read_local(self, parts: list[tuple[int, list[str]]],
+                    schema: T.StructType, where=None) -> pa.Table:
+        """The ``schema`` columns of the rows matching ``where`` (an
+        Arrow expression) in each (gen_seq, files) part, read on the
+        driver through Arrow: no Spark job. On a layered snapshot each
+        part's rows carry its ``gen_seq`` (base 0, layer i is i+1), as
+        ``_scan`` adds it."""
+        arrow = to_arrow_schema(schema)
+        layered = self.has_deltas
+        tables = []
+        for seq, files in parts:
+            if not files:
+                continue
+            t = ds.dataset(files, schema=arrow, format="parquet").to_table(
+                filter=where)
+            if layered:
+                t = t.append_column("gen_seq", pa.array(
+                    np.full(t.num_rows, seq, np.int32)))
+            tables.append(t)
+        if layered:
+            arrow = arrow.append(pa.field("gen_seq", pa.int32()))
+        return pa.concat_tables(tables) if tables else arrow.empty_table()
+
+    def local_postings(self, terms: list[str]) -> pd.DataFrame:
+        """``doc_terms().filter(terms_filter(terms))`` as a pandas frame
+        of ``POSTING_COLS`` (plus ``gen_seq`` on a layered snapshot),
+        read on the driver from the bucket files the snapshot names
+        (``bucket_py`` picks them): no Spark job, no plan, no Py4J
+        scan. The base map must name every bucket (``KeyError``), and a
+        bucket dir that does not exist holds no rows, as in
+        ``_scan_map``."""
+        base = self.snapshot["buckets"]
+        self._check_base_map(base)
+        maps = [base] + [layer.get("buckets", {}) for layer in self.layers]
+        buckets = sorted({str(bucket_py(t, self.n_buckets)) for t in terms})
+        parts = [
+            (seq, [f for b in buckets
+                   for f in self._listed(bmap.get(b, {}).get("doc_terms"))])
+            for seq, bmap in enumerate(maps)
+        ]
+        schema = T.StructType([DOC_TERMS_SCHEMA[c] for c in POSTING_COLS])
+        return self._read_local(
+            parts, schema, pc.field("term").isin(terms)).to_pandas()
 
     def tombstone_arrays(self) -> tuple[np.ndarray, np.ndarray] | None:
         """The newest tombstone per doc as sorted ``(doc_id, tomb_seq)``
-        int64 arrays, or None when nothing is tombstoned. One job, on
-        first use."""
+        int64 arrays, or None when nothing is tombstoned: the layers'
+        tombstone parquet read on the driver (``_read_local``, no Spark
+        job), on first use. A tombstone at gen_seq s supersedes
+        postings with gen_seq < s (re-adds in the SAME update survive
+        their own tombstone)."""
         if "arrays" not in self._tomb:
+            parts = [(i + 1, self._listed(layer["tombstones"], required=True))
+                     for i, layer in enumerate(self.layers)
+                     if layer.get("tombstones")]
             arrays = None
-            tomb = self.tombstones()
-            if tomb is not None:
-                tp = (
-                    tomb.groupBy("doc_id")
-                    .agg(F.max("gen_seq").alias("tomb_seq"))
-                    .toPandas()
-                )
-                if len(tp):
-                    tp = tp.sort_values("doc_id")
-                    arrays = (tp["doc_id"].to_numpy(np.int64),
-                              tp["tomb_seq"].to_numpy(np.int64))
+            t = self._read_local(parts, TOMBSTONES_SCHEMA) if parts else None
+            if t is not None and t.num_rows:
+                ids = t["doc_id"].to_numpy().astype(np.int64)
+                seqs = t["gen_seq"].to_numpy().astype(np.int64)
+                # each doc's newest tombstone comes first in (doc_id, -seq)
+                order = np.lexsort((-seqs, ids))
+                ids, seqs = ids[order], seqs[order]
+                first = np.r_[True, ids[1:] != ids[:-1]]
+                arrays = (ids[first], seqs[first])
             self._tomb["arrays"] = arrays
         return self._tomb["arrays"]
 
@@ -1153,8 +1288,8 @@ class SegmentIndex:
 
     def terms_filter(self, terms: list[str]) -> Column:
         """The static predicate selecting ``terms``' rows from a
-        segments or doc_terms scan: each term's bucket is a
-        constant-folded ``bucket_col`` of its literal, so the scan
+        segments or doc_terms scan: the terms' buckets are int literals
+        (``bucket_py``, pinned equal to ``bucket_col``), so the scan
         prunes statically to those buckets (``PartitionFilters:
         [bucket IN (…)]``) and the ``term`` predicate reaches parquet —
         no job runs to resolve them.
@@ -1166,13 +1301,11 @@ class SegmentIndex:
         setting can change it."""
         if not terms:
             return F.lit(False)
-        lits = [f"CAST(X'{t.encode('utf-8').hex()}' AS STRING)"
-                for t in terms]
+        lits = ", ".join(f"CAST(X'{t.encode('utf-8').hex()}' AS STRING)"
+                         for t in terms)
         buckets = ", ".join(
-            f"CAST(pmod(xxhash64({lit}), {self.n_buckets}) AS INT)"
-            for lit in lits
-        )
-        return F.expr(f"bucket IN ({buckets}) AND term IN ({', '.join(lits)})")
+            map(str, sorted({bucket_py(t, self.n_buckets) for t in terms})))
+        return F.expr(f"bucket IN ({buckets}) AND term IN ({lits})")
 
     def postings_for_terms(self, terms: list[str],
                            with_positions: bool = False) -> DataFrame:

@@ -23,9 +23,9 @@ micro-batches and ``batch_match_resumable`` groups, on compacted and
 layered snapshots alike. ``segments.segment_topk`` stays as the
 brute-force reference the tests compare against.
 
-Execution shape: a request's critical path is the postings scan and
+Execution shape: a request's critical path is the postings read and
 the kernel, nothing else. Both placements read the engine's one
-postings reader — the stored ``doc_terms`` columns, (term, doc_id,
+postings layout — the stored ``doc_terms`` columns, (term, doc_id,
 tf, doc_len[, gen_seq]) rows — and run the same kernel (``_kernel``):
 
 - **driver** — a query frame that already lives on the driver
@@ -35,10 +35,11 @@ tf, doc_len[, gen_seq]) rows — and run the same kernel (``_kernel``):
   reference's one-clip-at-a-time request (``Matching.py:96-131``), and
   a driver-held batch while answering it in one process still beats
   sharing. The queries tokenize in Python (``tokenize_py``), their
-  terms' posting rows arrive by ONE bucket-pruned JVM scan whose
-  predicate is one SQL string (``terms_filter``), the kernel runs on
-  the driver and the answer is a local relation. One Spark job, no
-  exchange, no Python worker.
+  terms' posting rows (and a layered snapshot's tombstones) are read
+  through Arrow from the bucket files the snapshot names
+  (``SegmentIndex.local_postings``; ``bucket_py`` picks the buckets),
+  the kernel runs on the driver and the answer is a local relation.
+  0 Spark jobs: no plan, no Py4J scan, no Python worker.
 - **grouped** — every other frame (larger local batches, ``batch_match``
   groups, streaming micro-batches). The query side is ONE broadcast — query
   terms (one partition; queries are the small axis, the reference's
@@ -86,6 +87,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.token
     tokenize_py,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
+    POSTING_COLS,
     SegmentIndex,
     bucket_col,
 )
@@ -100,20 +102,26 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
 # query mix, default layout, 4 vCPUs):
 #
 #   queries     4          8          16         32         64         128
-#   600 docs  3.22 (8)   3.13 (8)   3.24 (8)   2.61 (8)   2.00 (8)   1.41 (8)
-#   5k docs   2.69 (8)   2.56 (8)   1.71 (8)   1.61 (8)   1.18 (7)   0.82 (1)
-#   20k docs  2.00 (8)   1.39 (8)   1.37 (8)   1.11 (5)   1.03 (4)   0.68 (0)
+#   600 docs  8.98 (8)   7.57 (8)   8.19 (8)   4.93 (8)   3.80 (8)   2.65 (8)
+#   5k docs   3.69 (8)   3.88 (8)   2.17 (8)   1.96 (8)   1.43 (8)   1.27 (7)
+#   20k docs  2.01 (8)   1.46 (8)   1.49 (8)   1.17 (7)   1.11 (6)   0.97 (4)
+#
+# and at the edges of the 150k query·docs budget (same command, the
+# one batch size each): 250 queries at 600 docs 1.96 (8), 533 at 600
+# docs 1.14 (7), 30 at 5k 2.59 (8), 7 at 20k 1.90 (8).
 #
 # The driver scores every query's postings in one process, so its cost
 # grows with batch size × posting volume, while the grouped path's is
-# mostly fixed. 40k query·docs sends 64 queries at 600 docs and 8 at 5k
-# to the driver, and the 4-query floor sends 4 at 20k, each won in 8 of
-# 8 pairs. Some shapes it keeps grouped win on the driver too (up to 32
-# at 5k and 16 at 20k); the limits are set where every shape they send
-# is a clear win. A count cap alone would not do: 64 queries win 8 of 8
-# pairs on 600 docs but only 4 of 8 on 20k.
+# mostly fixed. 150k query·docs sends 250 queries at 600 docs, 30 at 5k
+# and 7 at 20k to the driver, each won in 8 of 8 pairs; 320k would send
+# 533 at 600 docs, won in only 7. Some shapes it keeps grouped win on
+# the driver too (64 at 5k, 16 at 20k); the limits are set where every
+# shape they send is a clear win. A count cap alone would not do: 64
+# queries win 8 of 8 pairs on 600 docs but only 6 of 8 on 20k. The
+# 4-query floor holds on every index, also on ones larger than any
+# measured here, so the 20k row alone does not raise it.
 DRIVER_MAX_QUERIES = 4
-DRIVER_MAX_QUERY_DOCS = 40_000
+DRIVER_MAX_QUERY_DOCS = 150_000
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -253,11 +261,6 @@ def _duplicate_id_error(qid) -> ValueError:
     )
 
 
-# a posting row as both placements read it from the doc_terms columns
-# (``gen_seq`` is added on a layered snapshot)
-POSTING_COLS = ["term", "doc_id", "tf", "doc_len"]
-
-
 def _alive(ids: np.ndarray, gens: np.ndarray,
            tomb: tuple[np.ndarray, np.ndarray]) -> np.ndarray:
     """Boolean mask of the posting rows (doc ``ids`` at generations
@@ -354,8 +357,10 @@ def driver_max_queries(n_docs: int) -> int:
 def _driver_topk(index: SegmentIndex, rows: list, k: int,
                  micro: bool) -> DataFrame:
     """The driver placement over ``rows`` ((query_id, text) tuples
-    already on the driver): one bucket-pruned JVM scan of the queries'
-    posting rows, the kernel here, the answer as a local relation."""
+    already on the driver), with no Spark job: the queries' posting
+    rows read through Arrow from the bucket files the snapshot names
+    (``SegmentIndex.local_postings``), the kernel here, the answer as a
+    local relation."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -369,17 +374,9 @@ def _driver_topk(index: SegmentIndex, rows: list, k: int,
         seen.add(qid)
         for t in dict.fromkeys(tokenize_py(text)):
             t2q.setdefault(t, []).append(qid)
-    layered = index.has_deltas
-    tomb = index.tombstone_arrays() if layered else None
-    cols = POSTING_COLS + (["gen_seq"] if layered else [])
-    postings = pd.DataFrame(columns=cols)  # no terms: no scan
-    if t2q:
-        postings = (
-            index.doc_terms().filter(index.terms_filter(sorted(t2q)))
-            .select(*cols).toPandas()
-        )
-    out = _kernel(postings, t2q, k, index.n_docs, index.avgdl,
-                  index.block_size, micro, tomb)
+    out = _kernel(index.local_postings(sorted(t2q)), t2q, k, index.n_docs,
+                  index.avgdl, index.block_size, micro,
+                  index.tombstone_arrays())
     schema = result_schema(micro)
     table = pa.Table.from_pandas(out, schema=to_arrow_schema(schema),
                                  preserve_index=False)
@@ -409,10 +406,11 @@ def wand_topk(
     at most ``driver_max_queries(index.n_docs)`` rows — the larger of
     ``DRIVER_MAX_QUERIES`` and ``DRIVER_MAX_QUERY_DOCS // n_docs``, from
     the crossover measured above those constants — is answered at call
-    time: the scan of its terms' posting rows runs here, eagerly (1
-    Spark job, no exchange, no Python worker), and the result is a
-    local relation whose ``collect()`` launches no job. Answering
-    eagerly is safe because a ``SegmentIndex`` is a fixed snapshot.
+    time: its terms' posting rows are read here, eagerly, through Arrow
+    from the snapshot's bucket files (0 Spark jobs), and the result is
+    a local relation whose ``collect()`` launches no job either.
+    Answering eagerly is safe because a ``SegmentIndex`` is a fixed
+    snapshot.
 
     Batched execution (every other frame): queries are hashed into
     max(shuffle partitions, index.n_buckets) groups and each posting

@@ -356,12 +356,15 @@ def _count_jobs(spark, group: str, fn):
 # Spark jobs a WAND request launched on the same fixture, counted the
 # same way (call and collect): one query from a one-row local frame on
 # the fresh build; the same on the layered snapshot after the add and
-# delete batches, once its tombstone arrays exist (a first call builds
-# them); a 32-query batch from a ``local_rows_df`` frame, which the
-# driver still answers (32 × ~60 docs is inside the query·doc budget);
-# and a local frame one row past the placement rule's cap, which keeps
-# the grouped path's broadcast build, scan + shuffle and kernel.
-WAND_QUERY_JOBS = {"single": 1, "single_layered": 1, "batch_32": 1,
+# delete batches, once its tombstone arrays exist (the first call,
+# which builds them, is counted too and launches none either); a
+# 32-query batch from a ``local_rows_df`` frame, which the driver still
+# answers (32 × ~60 docs is inside the query·doc budget); and a local
+# frame one row past the placement rule's cap, which keeps the grouped
+# path's broadcast build, scan + shuffle and kernel. A driver-placed
+# request reads its posting rows and the tombstones through Arrow, so
+# it launches no job.
+WAND_QUERY_JOBS = {"single": 0, "single_layered": 0, "batch_32": 0,
                    "over_limit": 3}
 
 
@@ -407,7 +410,9 @@ def test_wand_query_job_counts(spark, corpus_pdf, corpus_df, update_fixtures,
                   delete_keys=spark.createDataFrame(del_pdf))
     layered = SegmentIndex.open(spark, d)
     assert layered.has_deltas
-    single(layered)
+    _, first_layered = _count_jobs(
+        spark, "wand_jobs_first_layered", lambda: single(layered))
+    assert first_layered == []
     assert layered.tombstone_arrays() is not None
     _, jobs["single_layered"] = _count_jobs(
         spark, "wand_jobs_single_layered", lambda: single(layered))
@@ -431,9 +436,9 @@ def test_wand_query_job_counts(spark, corpus_pdf, corpus_df, update_fixtures,
                      for j in ids] for name, ids in jobs.items()}
     counts = {name: len(ids) for name, ids in jobs.items()}
     assert counts == WAND_QUERY_JOBS, (counts, stages)
-    # a driver-placed request's one job is one scan stage: no exchange
+    # a driver-placed request runs no job at all
     assert stages["single"] == stages["single_layered"] == \
-        stages["batch_32"] == [1], stages
+        stages["batch_32"] == [], stages
 
 
 def test_local_query_frame_reads_as_one_partition(spark, corpus_pdf,

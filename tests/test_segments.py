@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import random
 from collections import Counter
 from decimal import ROUND_HALF_UP, Decimal
 
@@ -22,8 +23,14 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.token
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
     with_doc_id,
 )
+from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
+    apply_updates,
+)
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
+    POSTING_COLS,
     SegmentIndex,
+    bucket_col,
+    bucket_py,
     build_segment_index,
     drop_index,
     segment_topk,
@@ -362,6 +369,113 @@ def test_terms_filter_on_hostile_terms(spark, built, index_dir):
     buckets = {r["bucket"] for r in rows.filter(
         F.col("term").isin(HOSTILE_TERMS)).collect()}
     assert named == buckets, (filters, buckets)
+
+
+def test_bucket_py_equals_bucket_col(spark):
+    """``bucket_py`` (the driver's XXH64) puts every term in the bucket
+    the JVM's ``bucket_col`` does: hostile terms and 2,000 seeded
+    strings of 1- to 4-byte UTF-8 characters, whose byte lengths
+    reach the 32-byte stripe loop and every 8-, 4- and 1-byte tail."""
+    rng = random.Random(1101)
+    chars = "az09_'\\ " + "éß" + "日本€" + "😀𝄞"
+    terms = HOSTILE_TERMS + [
+        "".join(rng.choice(chars) for _ in range(rng.randint(0, 80)))
+        for _ in range(2000)
+    ]
+    sizes = [len(t.encode("utf-8")) for t in terms]
+    assert {n % 8 for n in sizes} == set(range(8)) and max(sizes) >= 64
+    ns = [1, 8, 4096]
+    got = spark.createDataFrame([(t,) for t in terms], "term string").select(
+        "term", *[bucket_col(F.col("term"), n).alias(str(n)) for n in ns]
+    ).collect()
+    assert len(got) == len(terms)
+    bad = [(r["term"], n) for r in got for n in ns
+           if bucket_py(r["term"], n) != r[str(n)]]
+    assert not bad, bad[:5]
+
+
+def _scan_postings(seg, terms) -> list:
+    """The JVM reader's posting rows of ``terms``: the rows
+    ``SegmentIndex.local_postings`` must return."""
+    cols = POSTING_COLS + (["gen_seq"] if seg.has_deltas else [])
+    return sorted(map(tuple, seg.doc_terms().filter(seg.terms_filter(terms))
+                      .select(*cols).collect()))
+
+
+def _local_postings(spark, seg, terms) -> list:
+    """``seg.local_postings(terms)`` as sorted tuples, checked to have
+    the reader's columns and to launch no Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup("local_postings", "local_postings")
+    try:
+        pdf = seg.local_postings(terms)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("local_postings") == []
+    assert list(pdf.columns) == \
+        POSTING_COLS + (["gen_seq"] if seg.has_deltas else [])
+    return sorted(pdf.itertuples(index=False, name=None))
+
+
+def test_local_postings_equal_the_spark_scan(spark, corpus_pdf, tmp_path):
+    """The driver's Arrow reader returns the JVM scan's posting rows,
+    with no job: on a fresh snapshot and on a layered one whose layer
+    map is sparse (a one-doc add and a delete), for hostile terms, an
+    out-of-vocabulary term and no terms; names Spark skips in a bucket
+    dir are skipped; the tombstone arrays come from the same reader;
+    and a base map missing a bucket raises ``KeyError``, as the JVM
+    reader does."""
+    import shutil
+
+    d = str(tmp_path / "idx")
+    build_segment_index(
+        spark, with_doc_id(spark.createDataFrame(corpus_pdf.iloc[:40])), d,
+        n_buckets=16, hot_df=8, block_size=8,
+    )
+    fresh = SegmentIndex.open(spark, d)
+    removed = corpus_pdf.iloc[[3]]
+    added = corpus_pdf.iloc[[40]].assign(content="tok0000 layeronly")
+    apply_updates(spark, d, mode="delta",
+                  add_corpus=spark.createDataFrame(added),
+                  delete_keys=spark.createDataFrame(
+                      removed[["repo", "path", "commit"]]))
+    layered = SegmentIndex.open(spark, d)
+    assert 0 < len(layered.layers[0]["buckets"]) < layered.n_buckets
+    terms = sorted(set(HOSTILE_TERMS + ["layeronly", "zzqabsent"]
+                       + tokenize_py(removed["content"].iloc[0])[:20]))
+    for seg in (fresh, layered):
+        want = _scan_postings(seg, terms)
+        assert want and _local_postings(spark, seg, terms) == want
+        assert _local_postings(spark, seg, ["zzqabsent"]) == []
+        assert _local_postings(spark, seg, []) == []
+    assert {r[-1] for r in _scan_postings(layered, terms)} == {0, 1}
+
+    # the newest tombstone per doc, as the layer's parquet holds it
+    ids, seqs = layered.tombstone_arrays()
+    stored = spark.read.parquet(f"{d}/{layered.layers[0]['tombstones']}")
+    assert ids.tolist() == sorted(r["doc_id"] for r in stored.collect())
+    assert seqs.tolist() == [1] * len(ids)
+    assert fresh.tombstone_arrays() is None
+
+    # Spark's own leftovers and hidden files in a bucket dir hold no rows
+    rel = fresh.snapshot["buckets"][str(bucket_py("tok0000", 16))]["doc_terms"]
+    bdir = f"{d}/{rel}"
+    for name in ("_SUCCESS", ".part-0.parquet.crc", "_temporary/part-0.parquet"):
+        os.makedirs(os.path.dirname(f"{bdir}/{name}"), exist_ok=True)
+        with open(f"{bdir}/{name}", "wb") as f:
+            f.write(b"not parquet")
+    for seg in (SegmentIndex.open(spark, d, 1), SegmentIndex.open(spark, d)):
+        assert _local_postings(spark, seg, terms) == _scan_postings(seg, terms)
+    shutil.rmtree(f"{bdir}/_temporary")
+
+    snap = {**fresh.snapshot, "buckets": {
+        b: m for b, m in fresh.snapshot["buckets"].items() if b != "5"}}
+    truncated = SegmentIndex(spark=spark, index_dir=d, snapshot=snap)
+    with pytest.raises(KeyError, match="missing bucket 5"):
+        truncated.local_postings(["tok0000"])
+    with pytest.raises(KeyError, match="missing bucket 5"):
+        truncated.doc_terms()
 
 
 def test_positions_requested_without_stored_positions_raise(spark, built,
