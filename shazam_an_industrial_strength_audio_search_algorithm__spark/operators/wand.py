@@ -12,10 +12,15 @@ ranks: a placement numbers the distinct doc ids it reads in id order)
 is partitioned into atomic intervals by the block boundaries of the
 query's terms; each interval's upper bound is the sum of the (single,
 because blocks of a term are disjoint) overlapping block bound per
-term. Intervals are processed in descending upper-bound order,
-scoring is numpy-vectorized per interval, and the loop stops as soon
-as the running top-k floor beats the best remaining interval bound —
-blocks in skipped intervals are never scored.
+term. Intervals are scored in descending upper-bound order, in
+rounds: first the ``k`` best-bounded ones, then doubling chunks of the
+rest whose bound still reaches the running top-k floor. A query's
+postings are concatenated once, in term order, and tagged with their
+interval's place in that order, so a round is one contiguous slice
+scored by one ``np.unique`` + ``np.bincount`` — a handful of numpy
+calls per round, not per interval. The rounds stop as soon as the
+floor beats the best remaining interval bound: blocks in skipped
+intervals are never scored.
 
 This is the one executor behind every pruned top-k request:
 ``wand_topk`` callers, the CLI's ``query --wand``, ``stream_match``
@@ -65,9 +70,10 @@ block's bound is the exact maximum contribution of its postings
 
 Exactness: returned top-k docs and scores are identical to the
 brute-force path (tests/test_wand.py asserts equality at k=1/3/10);
-per-doc scores are computed in one vectorized reduction, and the
-deterministic tie-break (score DESC, doc_id ASC) is applied at the
-end.
+a doc's postings all fall in one interval, so its score is one
+``bincount`` sum in term order (bit-identical to summing every posting
+in term order), and the deterministic tie-break (score DESC, doc_id
+ASC) is applied as rounds merge.
 """
 
 from __future__ import annotations
@@ -102,26 +108,26 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
 # query mix, default layout, 4 vCPUs):
 #
 #   queries     4          8          16         32         64         128
-#   600 docs  8.98 (8)   7.57 (8)   8.19 (8)   4.93 (8)   3.80 (8)   2.65 (8)
-#   5k docs   3.69 (8)   3.88 (8)   2.17 (8)   1.96 (8)   1.43 (8)   1.27 (7)
-#   20k docs  2.01 (8)   1.46 (8)   1.49 (8)   1.17 (7)   1.11 (6)   0.97 (4)
+#   600 docs  9.49 (8)   9.59 (8)   9.82 (8)   9.75 (8)   7.82 (8)   6.03 (8)
+#   5k docs   5.13 (8)   5.11 (8)   4.39 (8)   4.97 (8)   3.71 (8)   3.20 (8)
+#   20k docs  3.06 (8)   2.62 (8)   2.82 (8)   2.66 (8)   2.62 (8)   2.29 (8)
 #
-# and at the edges of the 150k query·docs budget (same command, the
-# one batch size each): 250 queries at 600 docs 1.96 (8), 533 at 600
-# docs 1.14 (7), 30 at 5k 2.59 (8), 7 at 20k 1.90 (8).
+# and past it (same command, the one batch size each): 1024 queries at
+# 600 docs 2.26 (8), 2048 1.51 (8), 4096 1.17 (7); 256 at 5k 3.25 (8),
+# 512 2.20 (8); at the edges of the 1.2M query·docs budget, 2000 at 600
+# docs 1.66 (8), 240 at 5k 3.05 (8), 60 at 20k 2.90 (8).
 #
 # The driver scores every query's postings in one process, so its cost
 # grows with batch size × posting volume, while the grouped path's is
-# mostly fixed. 150k query·docs sends 250 queries at 600 docs, 30 at 5k
-# and 7 at 20k to the driver, each won in 8 of 8 pairs; 320k would send
-# 533 at 600 docs, won in only 7. Some shapes it keeps grouped win on
-# the driver too (64 at 5k, 16 at 20k); the limits are set where every
-# shape they send is a clear win. A count cap alone would not do: 64
-# queries win 8 of 8 pairs on 600 docs but only 6 of 8 on 20k. The
-# 4-query floor holds on every index, also on ones larger than any
-# measured here, so the 20k row alone does not raise it.
+# mostly fixed. 1.2M query·docs sends 2000 queries at 600 docs, 240 at
+# 5k and 60 at 20k to the driver, each won in 8 of 8 pairs; 2.4M would
+# send 4096 at 600 docs, won in only 7. Some shapes it keeps grouped
+# win on the driver too (512 at 5k, 128 at 20k); the limit is set where
+# every shape it sends is a clear win. The 4-query floor holds on every
+# index, also on ones larger than any measured here, so the 20k row
+# alone does not raise it.
 DRIVER_MAX_QUERIES = 4
-DRIVER_MAX_QUERY_DOCS = 150_000
+DRIVER_MAX_QUERY_DOCS = 1_200_000
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -142,48 +148,33 @@ class _Term:
     int64 micro-units), cut into blocks of ``block_size`` consecutive
     postings. A block's bound is the largest contribution in it, so it
     is exact, and in micro mode it is the very integer the block's docs
-    add.
+    add. It keeps no per-query state, so in batched execution every
+    query of the group that uses the term shares one ``_Term``."""
 
-    In batched execution one ``_Term`` per term is shared by every
-    query of the group; ``requested`` tracks which blocks the CURRENT
-    query scored (reset per query), so per-query pruning counters stay
-    meaningful under sharing."""
-
-    __slots__ = ("ids", "contribs", "starts", "ends", "los", "his",
-                 "bounds", "requested")
+    __slots__ = ("ids", "contribs", "los", "his", "bounds")
 
     def __init__(self, ids: np.ndarray, contribs: np.ndarray,
                  block_size: int):
         self.ids = ids
         self.contribs = contribs
-        self.starts = np.arange(0, ids.size, block_size)
-        self.ends = np.append(self.starts[1:], ids.size)
-        self.los, self.his = ids[self.starts], ids[self.ends - 1]
-        self.bounds = np.maximum.reduceat(contribs, self.starts)
-        self.requested: set[int] = set()
-
-    def slice(self, bi: int, start: np.int64, end: np.int64):
-        """(ids, contribs) of block bi restricted to [start, end]."""
-        self.requested.add(bi)
-        ids = self.ids[self.starts[bi]:self.ends[bi]]
-        s = np.searchsorted(ids, start, side="left")
-        e = np.searchsorted(ids, end, side="right")
-        return ids[s:e], self.contribs[self.starts[bi]:self.ends[bi]][s:e]
+        starts = np.arange(0, ids.size, block_size)
+        self.los = ids[starts]
+        self.his = ids[np.append(starts[1:], ids.size) - 1]
+        self.bounds = np.maximum.reduceat(contribs, starts)
 
 
 def _topk_one_query(terms: list[_Term], k: int):
-    """Interval-at-a-time block-max top-k over dense doc ranks. Returns
-    (ranks, scores, matched, scored_blocks, total_blocks), ranked
-    (score DESC, rank ASC)."""
+    """Interval-at-a-time block-max top-k over dense doc ranks, scored
+    in rounds of intervals. Returns (ranks, scores, matched,
+    scored_blocks, total_blocks), ranked (score DESC, rank ASC)."""
     # atomic intervals: cut rank space at every block lo and hi+1 (a
     # rank is below the doc count, so hi+1 cannot overflow)
     cuts = np.unique(np.concatenate(
         [t.los for t in terms] + [t.his + 1 for t in terms]))
     starts = cuts[:-1]
-    ends = cuts[1:] - 1  # inclusive
     n_int = starts.size
 
-    # per (interval, term): overlapping block index (or -1) and bound
+    # per (term, interval): overlapping block index (or -1) and bound
     blk = np.full((len(terms), n_int), -1, dtype=np.int64)
     ub = np.zeros(n_int, dtype=np.float64)
     for ti, t in enumerate(terms):
@@ -192,54 +183,60 @@ def _topk_one_query(terms: list[_Term], k: int):
         blk[ti] = np.where(valid, i, -1)
         ub += np.where(valid, t.bounds[np.clip(i, 0, None)], 0.0)
 
+    # intervals in descending-bound order; those with no positive bound
+    # hold no doc worth returning
     order = np.argsort(-ub, kind="stable")
-    top_docs: np.ndarray = np.zeros(0, np.int64)
-    top_scores: np.ndarray = np.zeros(0, np.float64)
-    top_matched: np.ndarray = np.zeros(0, np.int32)
-    floor = -np.inf
+    ub_desc = ub[order]
+    n_live = int(np.count_nonzero(ub_desc > 0))
+    pos = np.empty(n_int, dtype=np.int64)
+    pos[order] = np.arange(n_int)
+    # every posting of the query, in term order, tagged with its
+    # interval's position in bound order; the stable sort keeps term
+    # order within an interval, so a round is one contiguous slice and
+    # each doc's contributions still add in term order
+    ids = np.concatenate([t.ids for t in terms])
+    contribs = np.concatenate([t.contribs for t in terms])
+    at = pos[np.searchsorted(starts, ids, side="right") - 1]
+    perm = np.argsort(at, kind="stable")
+    ids, contribs = ids[perm], contribs[perm]
+    offsets = np.searchsorted(at[perm], np.arange(n_live + 1))
 
-    for ii in order:
-        if ub[ii] <= 0:
-            break
-        if top_docs.size >= k and ub[ii] < floor:
-            # no remaining interval can beat the floor (strict: a doc
-            # achieving EXACTLY the floor could still win the doc_id
-            # tie-break, so ub == floor intervals are processed)
-            break
-        s, e = starts[ii], ends[ii]
-        ids_parts, c_parts = [], []
-        for ti, t in enumerate(terms):
-            bi = int(blk[ti, ii])
-            if bi >= 0:
-                ids_p, c_p = t.slice(bi, s, e)
-                if ids_p.size:
-                    ids_parts.append(ids_p)
-                    c_parts.append(c_p)
-        if not ids_parts:
-            continue
-        ids = np.concatenate(ids_parts)
-        contribs = np.concatenate(c_parts)
-        uniq, inv = np.unique(ids, return_inverse=True)
-        scores = np.zeros(uniq.size)
-        np.add.at(scores, inv, contribs)
-        matched = np.zeros(uniq.size, dtype=np.int32)
-        np.add.at(matched, inv, 1)
-        # merge into running top-k
-        top_docs = np.concatenate([top_docs, uniq])
-        top_scores = np.concatenate([top_scores, scores])
-        top_matched = np.concatenate([top_matched, matched])
-        if top_docs.size > k:
-            sel = np.lexsort((top_docs, -top_scores))[:k]
-            top_docs, top_scores, top_matched = (
-                top_docs[sel], top_scores[sel], top_matched[sel],
-            )
+    top_docs = np.zeros(0, np.int64)
+    top_scores = np.zeros(0, np.float64)
+    top_matched = np.zeros(0, np.int64)
+    done, step = 0, k
+    while done < n_live:
+        end = min(done + step, n_live)
         if top_docs.size >= k:
-            floor = float(top_scores.min())
+            # no interval below the floor can place a doc (strict: a
+            # doc achieving EXACTLY the floor could still win the rank
+            # tie-break, so ub == floor intervals are scored)
+            floor = top_scores[-1]
+            end = min(end, int(np.searchsorted(-ub_desc, -floor, "right")))
+            if end <= done:
+                break
+        a, b = offsets[done], offsets[end]
+        done, step = end, step * 2
+        if a == b:
+            continue
+        # one reduction per round: bincount adds in array order, so a
+        # doc's float (or micro) sum is the term-order sum
+        uniq, inv = np.unique(ids[a:b], return_inverse=True)
+        top_docs = np.concatenate([top_docs, uniq])
+        top_scores = np.concatenate(
+            [top_scores, np.bincount(inv, weights=contribs[a:b])])
+        top_matched = np.concatenate([top_matched, np.bincount(inv)])
+        sel = np.lexsort((top_docs, -top_scores))[:k]
+        top_docs, top_scores, top_matched = (
+            top_docs[sel], top_scores[sel], top_matched[sel])
 
-    sel = np.lexsort((top_docs, -top_scores))[:k]
-    scored = sum(len(t.requested) for t in terms)
-    total = sum(t.los.size for t in terms)
-    return (top_docs[sel], top_scores[sel], top_matched[sel], scored, total)
+    # blocks scored: the distinct (term, block) pairs overlapping a
+    # scored interval
+    n_blocks = np.array([t.los.size for t in terms])
+    hit = blk[:, order[:done]]
+    first = (np.cumsum(n_blocks) - n_blocks)[:, None]
+    scored = np.unique((hit + first)[hit >= 0]).size
+    return top_docs, top_scores, top_matched, scored, int(n_blocks.sum())
 
 
 def result_schema(micro: bool) -> T.StructType:
@@ -319,31 +316,31 @@ def _kernel(pdf: pd.DataFrame, t2q: dict, k: int, n_docs: int,
         terms[term] = _Term(ranks[a:b], contribs, block_size)
         for qid in qids:
             q2t.setdefault(qid, []).append(term)
-    frames = []
-    for qid in sorted(q2t):
-        ts = [terms[t] for t in q2t[qid]]
-        for t in ts:
-            t.requested.clear()
-        docs, scores, matched, scored, total = _topk_one_query(ts, k)
-        n = docs.size
-        frames.append(pd.DataFrame(
-            {
-                "query_id": qid,
-                "rank": np.arange(1, n + 1, dtype="int32"),
-                "doc_id": uniq[docs],
-                # float64 accumulators are exact for micro ints
-                # (< 2^53), so this cast is lossless
-                score_name: scores.astype(np.int64) if micro else scores,
-                "matched_terms": matched,
-                "blocks_decoded": np.int32(scored),
-                "blocks_total": np.int32(total),
-            }
-        ))
-    if not frames:
-        return pd.DataFrame(
-            {f.name: pd.Series(dtype="object") for f in result_schema(micro)}
-        )
-    return pd.concat(frames, ignore_index=True)
+    qids = sorted(q2t)
+    answers = [_topk_one_query([terms[t] for t in q2t[qid]], k)
+               for qid in qids]
+    counts = [a[0].size for a in answers]
+
+    def column(part: int, dtype) -> np.ndarray:
+        return np.concatenate(
+            [np.zeros(0, dtype)] + [a[part] for a in answers]).astype(dtype)
+
+    scores = column(1, np.float64)
+    return pd.DataFrame({
+        "query_id": np.repeat(np.array(qids, dtype=object), counts),
+        "rank": np.concatenate(
+            [np.zeros(0, np.int32)]
+            + [np.arange(1, n + 1, dtype=np.int32) for n in counts]),
+        "doc_id": uniq[column(0, np.int64)],
+        # float64 accumulators are exact for micro ints (< 2^53), so
+        # this cast is lossless
+        score_name: scores.astype(np.int64) if micro else scores,
+        "matched_terms": column(2, np.int32),
+        "blocks_decoded": np.repeat(
+            np.array([a[3] for a in answers], np.int32), counts),
+        "blocks_total": np.repeat(
+            np.array([a[4] for a in answers], np.int32), counts),
+    })
 
 
 def driver_max_queries(n_docs: int) -> int:
@@ -432,12 +429,17 @@ def wand_topk(
     )
 
     if queries.isLocal():
-        # reading a local frame (projection + limit fold into the
+        # reading a local frame (the limit folds into the
         # LocalRelation) launches no job
         cap = driver_max_queries(index.n_docs)
-        rows = queries.select(id_col, text_col).limit(cap + 1).collect()
+        rows = queries.limit(cap + 1).collect()
         if len(rows) <= cap:
-            return _driver_topk(index, rows, k, micro)
+            if not rows:
+                # no Row to look a missing column up in: analyzing the
+                # projection raises as the grouped path does
+                queries.select(id_col, text_col)
+            return _driver_topk(
+                index, [(r[id_col], r[text_col]) for r in rows], k, micro)
 
     # Layered (merge-on-read) snapshots are served EXACTLY without a
     # compaction barrier: the kernel drops the superseded rows and

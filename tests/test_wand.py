@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -22,6 +23,8 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
     DRIVER_MAX_QUERIES,
+    _Term,
+    _topk_one_query,
     driver_max_queries,
     wand_topk,
 )
@@ -276,3 +279,81 @@ def test_interval_kernel_covers_lone_max_block_among_other_cuts():
     # highest contribution (the max-id doc) must rank first
     assert docs[0] == max_id
     assert totals == {3}
+
+
+@pytest.mark.parametrize("missing", ["query_id", "text"])
+def test_missing_query_column_raises(spark, seg, missing):
+    """A query frame without its id or text column raises on both
+    placements, also when the local frame holds no row."""
+    kept = "text" if missing == "query_id" else "query_id"
+    rows = [("q1", "hello")]
+    local = local_rows_df(spark, [r[:1] for r in rows], f"{kept} string")
+    empty = local_rows_df(spark, [], f"{kept} string")
+    shared = spark.createDataFrame([r[:1] for r in rows], f"{kept} string")
+    assert local.isLocal() and empty.isLocal() and not shared.isLocal()
+    for frame in (local, empty, shared):
+        with pytest.raises(Exception, match=missing):
+            wand_topk(seg, frame, k=5).collect()
+
+
+def _random_kernel_cases(n_cases: int = 1000, seed: int = 20261021):
+    """Seeded random kernel inputs: (terms, block_size, k), ``terms`` a
+    list of (rank-sorted doc ranks, contributions) per query term. Doc
+    counts 5–5,000, 1–9 terms, ~30% micro (int64) cases, and some terms
+    with contributions rounded to 0.1 so that docs tie."""
+    rng = np.random.default_rng(seed)
+    for _ in range(n_cases):
+        n = int(rng.integers(5, 5001))
+        block_size = int(rng.choice([2, 8, 128]))
+        micro = bool(rng.random() < 0.3)
+        k = int(rng.choice([1, 3, 10, 50]))
+        terms = []
+        for _ in range(int(rng.integers(1, 10))):
+            df = max(1, int(n * rng.random() ** 2))
+            ids = np.sort(rng.choice(n, size=df, replace=False)).astype(np.int64)
+            c = 0.1 + rng.random(df) * rng.uniform(0.5, 3.0)
+            if rng.random() < 0.3:
+                c = np.round(c, 1)
+            if micro:
+                c = np.floor(c * 1e6 + 0.5).astype(np.int64)
+            terms.append((ids, c))
+        yield terms, block_size, k
+
+
+def _run_kernel(terms, block_size: int, k: int):
+    return _topk_one_query([_Term(i, c, block_size) for i, c in terms], k)
+
+
+def test_round_kernel_equals_exhaustive_scoring():
+    """The round-at-a-time kernel returns exactly what scoring every
+    posting would: one bincount over all postings in term order, ranked
+    (score DESC, rank ASC). Ranks, scores (bit for bit) and matched
+    counts are equal in every case."""
+    for case, (terms, block_size, k) in enumerate(_random_kernel_cases()):
+        docs, scores, matched, scored, total = _run_kernel(terms, block_size, k)
+        uniq, inv = np.unique(np.concatenate([i for i, _ in terms]),
+                              return_inverse=True)
+        want_scores = np.bincount(
+            inv, weights=np.concatenate([c for _, c in terms]))
+        want_matched = np.bincount(inv)
+        sel = np.lexsort((uniq, -want_scores))[:k]
+        assert np.array_equal(docs, uniq[sel]), case
+        assert np.array_equal(scores, want_scores[sel]), case
+        assert np.array_equal(matched, want_matched[sel]), case
+        assert scored <= total, case
+
+
+# Blocks scored over ``_random_kernel_cases()`` by the one-interval-at-
+# a-time loop the round kernel replaced (830,727 blocks in all); scoring
+# in rounds may overshoot the floor's stop by part of a round, by at
+# most 5% of that.
+INTERVAL_LOOP_BLOCKS_SCORED = 483_950
+
+
+def test_round_kernel_prunes_like_interval_loop():
+    scored = total = 0
+    for terms, block_size, k in _random_kernel_cases():
+        out = _run_kernel(terms, block_size, k)
+        scored, total = scored + out[3], total + out[4]
+    assert total == 830_727
+    assert scored <= 1.05 * INTERVAL_LOOP_BLOCKS_SCORED, scored
